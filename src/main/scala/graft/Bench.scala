@@ -50,198 +50,6 @@ object Bench {
                else (math.min(math.min(s1, s2), s3), None))
     }
 
-  /** Round-over-round regression gate: slower than BOTH 1.5x the
-    * previous artifact AND prev + 0.5s absolute (round-8 adjudication:
-    * a pure ratio cries wolf on 80ms -> 130ms noise; a small absolute
-    * floor still flags 0.8 -> 1.3s jitter — half a second of REAL
-    * added wall time keeps the gate for plan changes only). */
-  def isRegression(prev: Double, now: Double): Boolean =
-    prev > 0 && now > math.max(prev * 1.5, prev + 0.5)
-
-  /** Self-adjudication verdict for a flagged query (round-10 verdict
-    * #3): a flag whose end-of-run isolated plateau falls back UNDER
-    * the same gate was box contention during the main sweep; one that
-    * stays over it is a real plan change — but ONLY when the box was
-    * quiet at plateau time (round-11 verdict #2: the plateau reruns
-    * execute inside the SAME session; a still-contended box produced
-    * a false "real" on w10_session_window — fresh-JVM 0.43–0.63 s vs
-    * the claimed 1.2). `loadAtPlateau >= cpus/8` demotes "real" to
-    * "contention-suspect": the number is over the gate but the box
-    * invalidates the measurement (r19 verdict #4: the old cpus/4
-    * gate certified a "real" from a load-7.75 plateau on a 32-cpu
-    * box — residual load of 1.5–8 sits squarely in the noise band
-    * the ~1.5 s queries live in, so the gate now matches the
-    * contended-start signal cpus/8 used for cap sizing). A sub-2 s
-    * plateau must ALSO exceed prev by an absolute +0.75 s before
-    * "real" (same verdict: ratio alone flags JIT/codegen jitter on
-    * short queries — three r19 "real"s on untouched code were still
-    * trending down at run 4). An errored plateau (-1) is its own
-    * verdict, not "contention" (ADVICE r11: folding it in read as
-    * contention-cleared unless the reader noticed the -1). */
-  def adjudicateVerdict(prev: Double, plateau: Double,
-                        loadAtPlateau: Double = 0.0,
-                        cpus: Int = 32,
-                        prevLoad: Double = -1.0): String =
-    if (plateau < 0) "error"
-    else if (!isRegression(prev, plateau)) "contention"
-    else if (plateau < 2.0 && plateau - prev < 0.75) "contention"
-    else if (loadAtPlateau >= cpus / 8.0) "contention-suspect"
-    // load-COMPARABILITY gate (r20 verdict #1): the absolute cpus/8
-    // bound certified a "real" 1.9x regression from a load-2.2 plateau
-    // compared against a prev recorded on a QUIET box (t_jaccard_join,
-    // zero code change on the path). A verdict is only as good as the
-    // comparison, so "real" additionally requires the plateau load to
-    // be within ~1.5x of the prev artifact's recorded start load
-    // (floored at 1.0 — on a 32-core box sub-1 load is noise-free, so
-    // a near-idle prev must not demand an impossible sub-idle
-    // plateau). Unknown prev load (-1: no artifact, old format) keeps
-    // the absolute gate alone — additions-only.
-    else if (prevLoad >= 0 && loadAtPlateau > math.max(prevLoad * 1.5, 1.0))
-      "contention-suspect"
-    else "real"
-
-  /** End-of-run re-measurement of one flagged query: min of `runs`
-    * isolated executions in the now-quiet warm JVM — the same context
-    * the manual BenchOne adjudications measured (three rounds of
-    * driver flags, every one contention, each costing a by-hand
-    * session — see BENCH_ADJUDICATION.md). Errors surface as -1. */
-  def plateau(spark: SparkSession, sfDir: String,
-              fn: (SparkSession, String) => DataFrame,
-              runs: Int = 3): Double = {
-    val times = (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    }
-    if (times.contains(-1.0)) -1.0 else times.min
-  }
-
-  /** [[plateau]] with bounded under-load retries (r19 verdict #4: a
-    * plateau CERTIFIED under residual load is how noise shipped as
-    * "real" — instead of certifying, re-measure until the box is
-    * quiet or retries run out). Each attempt measures the plateau
-    * then reads the load; a quiet attempt (`load < cpus/8`, the
-    * [[adjudicateVerdict]] gate) returns immediately. Returns
-    * (min plateau over attempts, min load over attempts): the min
-    * estimator is right under one-sided noise, and pairing it with
-    * the min load is sound — if ANY attempt ran quiet the verdict
-    * may certify, and the gate still applies to the (smaller or
-    * equal) min plateau. An errored attempt (-1) returns at once:
-    * retrying an error is a different failure, not contention. */
-  def plateauQuiet(spark: SparkSession, sfDir: String,
-                   fn: (SparkSession, String) => DataFrame,
-                   loadavg: () => Double, cpus: Int,
-                   runs: Int = 3, retries: Int = 2,
-                   quietBelow: Double = -1.0): (Double, Double) = {
-    // `quietBelow` >= 0 tightens the retry target to the load-
-    // comparability bound (r20 verdict #1: a plateau must be taken
-    // under load comparable to the prev artifact's, not merely under
-    // the absolute cpus/8 gate, before its verdict can certify) —
-    // retries then wait for a COMPARABLE box, not just a non-slammed
-    // one. Negative keeps the r19 behavior.
-    val target =
-      if (quietBelow >= 0) math.min(cpus / 8.0, quietBelow)
-      else cpus / 8.0
-    var attempts = List.empty[(Double, Double)]
-    var left = retries + 1
-    var quiet = false
-    while (left > 0 && !quiet) {
-      val pl = plateau(spark, sfDir, fn, runs)
-      val ld = loadavg()
-      if (pl < 0) return (pl, ld)
-      attempts ::= (pl, ld)
-      quiet = ld >= 0 && ld < target
-      left -= 1
-    }
-    (attempts.map(_._1).min, attempts.map(_._2).min)
-  }
-
-  /** Parse the previous run's `"queries":{...}` map out of a bench
-    * artifact — either our own BENCH_FULL.json (plain JSON) or the
-    * driver's BENCH_r{N}.json, which embeds the stdout line as an
-    * ESCAPED string field (`\"queries\":{\"a79\":4.96,...}`) BELOW a
-    * captured log tail. Anchoring on the two concrete forms — plain
-    * `"queries":{` first, escaped `\"queries\":{` as the fallback —
-    * rather than the bare word "queries" (r19 ADVICE: a log line like
-    * "343 queries, zero errors" ahead of the metric line would bind a
-    * bare-substring anchor to the wrong brace region and silently
-    * disarm the regression gate, the same failure mode as the r19
-    * backslash bug). Escaped keys carry a trailing backslash before
-    * their closing quote — stripped. Returns empty on no anchor. */
-  def parsePrevQueries(txt: String): Map[String, Double] = {
-    val start = txt.indexOf("\"queries\":{") match {
-      case -1 => txt.indexOf("\\\"queries\\\":{") match {
-        case -1 => -1
-        case i => txt.indexOf('{', i)
-      }
-      case i => txt.indexOf('{', i)
-    }
-    if (start < 0) Map.empty
-    else "\"([^\"]+?)\\\\?\":(-?[0-9]+\\.?[0-9]*)".r
-      .findAllMatchIn(txt.substring(start, txt.indexOf('}', start)))
-      .map(m => m.group(1).stripSuffix("\\") -> m.group(2).toDouble)
-      .toMap
-  }
-
-  /** The previous artifact's recorded START load (the
-    * `"load":{"start":X` field, plain or driver-escaped form — the
-    * parsePrevQueries anchoring discipline). -1 when absent/unparsable:
-    * old artifacts carry no load, and the comparability gate
-    * ([[adjudicateVerdict]]) degrades to the absolute cpus/8 gate. */
-  def parsePrevLoad(txt: String): Double = {
-    val plain = "\"load\":{\"start\":"
-    val esc = "\\\"load\\\":{\\\"start\\\":"
-    val idx = txt.indexOf(plain) match {
-      case -1 => txt.indexOf(esc) match {
-        case -1 => -1
-        case i => i + esc.length
-      }
-      case i => i + plain.length
-    }
-    if (idx < 0) -1.0
-    else "-?[0-9]+\\.?[0-9]*".r
-      .findPrefixOf(txt.substring(idx, math.min(idx + 24, txt.length)))
-      .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .getOrElse(-1.0)
-  }
-
-  /** Fold each flagged query's end-of-run plateau into the
-    * min-over-runs estimator (r17 verdict #3): the plateau runs are
-    * three more executions of the same query in the same warm JVM, so
-    * the bench's own min estimator must see them — a contended main
-    * sweep otherwise publishes a 9x-inflated number with its quiet
-    * plateau sitting beside it (r17: t_bleu 11.13 s published,
-    * plateau 1.23 s). An errored plateau (-1) never overwrites; a
-    * plateau SLOWER than the sweep number never overwrites (min).
-    * Total over its inputs (r18 ADVICE): an adjudicated key absent
-    * from the results map is ignored, not a NoSuchElementException —
-    * unreachable from main() (adjudicated derives from results) but
-    * the helper is public and separately tested. */
-  def foldPlateaus(results: Map[String, (Double, Option[String])],
-      adjudicated: Seq[(String, Double, Double, Double, Double, String)])
-      : Map[String, (Double, Option[String])] =
-    adjudicated.foldLeft(results) { case (acc, (k, _, v, pl, _, _)) =>
-      acc.get(k) match {
-        case Some((_, err)) if pl > 0 && pl < v =>
-          acc.updated(k, (pl, err))
-        case _ => acc
-      }
-    }
-
-  /** Adjudication-slot cap for a run with `flags` regression flags.
-    * Quiet runs keep the 12 cap (flags there are real plan changes;
-    * rerunning half the suite buys nothing). The cap lifts to the
-    * flag count when the run self-identifies as contended, by EITHER
-    * signal: a contended start (`loadStart > cpus/8`, the r18 rule)
-    * or broad flagging itself (`flags > 12` — r20: a quiet-start run
-    * slammed MID-RUN by host-level steal shipped 29 of 41 inflated
-    * entries uncorrected because the start-load signal never fired;
-    * on a genuinely-regressed board the extra plateaus simply
-    * adjudicate "real", so lifting the cap is cheap insurance in
-    * both worlds). */
-  def adjCapFor(loadStart: Double, cpus: Int, flags: Int): Int =
-    if (loadStart > cpus / 8.0 || flags > 12) flags else 12
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -292,22 +100,6 @@ object Bench {
       catch { case scala.util.control.NonFatal(_) => "-1" }
     val loadStart = loadavg()
 
-    // ---- round-over-round regression gate: load the PREVIOUS run's
-    // complete artifact before this run overwrites it (override the
-    // path with SPARK_GRAFT_BENCH_PREV, e.g. a committed BENCH_r{N}).
-    // The queries map is flat numeric JSON of our own writing, so a
-    // scan to its closing brace parses it without a JSON dependency.
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
-      "BENCH_FULL.json")
-    val prevTxt: String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(prevPath)), "UTF-8")
-      catch { case scala.util.control.NonFatal(_) => "" }
-    val prev: Map[String, Double] = parsePrevQueries(prevTxt)
-    // prev's recorded start load: the comparability reference for
-    // plateau verdicts (r20 verdict #1) — recorded in this artifact
-    // so the NEXT run's reader can audit the chain
-    val prevLoadD = parsePrevLoad(prevTxt)
     // a stale artifact must not survive this run: if the write below
     // fails, a dangling queries_full pointer would present the OLD
     // numbers as current results
@@ -334,143 +126,38 @@ object Bench {
       s"\"" + k + "\":\"" + esc(err) + "\""
     }.mkString("{", ",", "}")
     val nErr = results.values.count(_._2.isDefined)
-    // regression gate (see [[isRegression]]). New queries have no prev
-    // entry and are never flagged. The gate exists so a slowdown is a
-    // named fact in the round's artifact, not something a truncated
-    // tail can hide.
-    // flags rank by RELATIVE severity (now/prev): when a cap applies,
-    // the worst proportional inflations adjudicate first — r18's
-    // delta-sorted cap spent all 12 slots and left 3-4x-inflated
-    // small queries (a79/a80, t_dedup_keep_best) uncorrected while
-    // big-absolute-but-mild flags took slots
-    val regressed = results.toSeq.collect {
-      case (k, (v, None)) if prev.get(k).exists(isRegression(_, v)) =>
-        k -> (prev(k), v)
-    }.sortBy { case (_, (p, v)) => -(v / math.max(p, 1e-9)) }
-    // ---- self-adjudication (round-10 verdict #3): re-measure each
-    // flag at the END of the run — warm JVM, nothing else executing,
-    // the context the manual BenchOne sessions reproduced by hand —
-    // and record {plateau, verdict} beside {prev, now} so the
-    // artifact adjudicates itself.
-    // Cap sizing (r18 verdict #3): the flat 12-flag cap truncated a
-    // broadly-contended run's self-correction — all 12 slots resolved
-    // "contention" and ~7 more inflated entries shipped uncorrected,
-    // making totals incomparable round-over-round. A contended START
-    // (load > cpus/8 — the same signal that predicts broad flagging)
-    // now lifts the cap to the flag count: that is exactly when the
-    // flags are cheap contention plateaus and when truncation ships
-    // wrong numbers. A quiet start keeps the 12 cap — flags there are
-    // real plan changes and rerunning half the suite buys nothing.
-    // r20 measurement fix: a QUIET-START run can still be slammed
-    // MID-RUN (host-level steal on a shared box — observed: load 1.3
-    // at start, 41 flags at 3-4x inflation, all 12 adjudicated slots
-    // resolving "contention" and 29 inflated entries shipping
-    // uncorrected). Broad flagging IS the contended-run signal
-    // wherever the load came from, so a flag count past the cap also
-    // lifts it: on a genuinely-regressed board the extra plateaus are
-    // a few minutes of reruns that adjudicate "real" anyway, and on a
-    // stormy run they are exactly the corrections the total needs.
-    // Each plateau row records /proc/loadavg AT MEASUREMENT TIME and
-    // the verdict is load-gated (round-11 verdict #2: a plateau taken
-    // on a still-contended box must not certify "real").
-    val nCpus = try cpus.toInt catch { case _: NumberFormatException => 32 }
-    val loadStartD = try loadStart.toDouble
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    val adjCap = adjCapFor(loadStartD, nCpus, regressed.size)
-    def loadavgD(): Double =
-      try loadavg().toDouble
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    // load-comparability target for plateau retries (r20 verdict #1):
-    // when the prev artifact recorded its load, plateaus re-measure
-    // until the box is COMPARABLE to it (within 1.5x, floored at 1.0),
-    // not merely under the absolute cpus/8 gate
-    val quietTarget =
-      if (prevLoadD >= 0) math.max(prevLoadD * 1.5, 1.0) else -1.0
-    val adjudicated = regressed.take(adjCap).map { case (k, (p, v)) =>
-      // under-load bounded retries (r19 verdict #4): never certify a
-      // verdict from a plateau taken on a still-contended box when a
-      // re-measure can wait out the residual load
-      val (pl, ld) = plateauQuiet(spark, sfDir, SparkEntry.queries(k),
-        loadavgD _, nCpus, quietBelow = quietTarget)
-      (k, p, v, pl, ld,
-        adjudicateVerdict(p, pl, math.max(ld, 0.0), nCpus, prevLoadD))
-    }
-    // ---- quiet-box streaming floor re-measure (r18 verdict #2): the
-    // published streaming_floor_sec sat flat at ~59 s for three
-    // rounds while hand sweeps measured ~49 — because only FLAGGED
-    // stream queries ever earned plateau reruns, and the floor is the
-    // most contention-sensitive line in the artifact (26 queries x
-    // fixed micro-batch overhead, inflation compounds). Re-measure
-    // EVERY healthy s_stream_* query at end of run (the quiet plateau
-    // context; min of 2 isolated executions) and fold min-wise like
-    // any other plateau, so the shipped floor IS the quiet number.
-    // Stream queries already adjudicated above keep their 3-run
-    // plateau and are not re-run.
-    val adjKeys = adjudicated.map(_._1).toSet
-    val streamRemeasured = results.toSeq.collect {
-      case (k, (v, None))
-          if k.startsWith("s_stream_") && !adjKeys.contains(k) =>
-        (k, v)
-    }.sortBy(_._1).map { case (k, v) =>
-      val pl = plateau(spark, sfDir, SparkEntry.queries(k), runs = 2)
-      (k, prev.getOrElse(k, -1.0), v, pl, loadavgD(), "floor-remeasure")
-    }
-    def rmap(rs: Seq[(String, Double, Double, Double, Double, String)])
-        : String =
-      rs.map { case (k, p, v, pl, ld, verd) =>
-        s"\"" + k + "\":{\"prev\":" + ms(p) + ",\"now\":" + ms(v) +
-          ",\"plateau\":" + ms(pl) + ",\"plateau_load\":" + ms(ld) +
-          ",\"verdict\":\"" + verd + "\"}"
-      }.mkString("{", ",", "}")
-    // ---- fold each plateau into the estimator BEFORE the artifact
-    // is written (see [[foldPlateaus]]); totals, slowest-N and the
-    // streaming floor all read the corrected map — including the
-    // streaming re-measure block, so the floor line is quiet-box
-    val corrected = foldPlateaus(results, adjudicated ++ streamRemeasured)
-    // the regressions block keeps only flags still over the gate on
-    // their CORRECTED number ("real", "contention-suspect", "error");
-    // adjudicated-contention entries are resolved, and the full
-    // adjudication trail ships in BENCH_FULL.json beside them
-    val stillRegressed = adjudicated.filter(_._6 != "contention")
-    val bySlowestC = corrected.toSeq.sortBy { case (_, (v, _)) => -v }
-    val totalC = corrected.values.collect { case (v, None) => v }.sum
+    val bySlowest = results.toSeq.sortBy { case (_, (v, _)) => -v }
+    val total = results.values.collect { case (v, None) => v }.sum
     // streaming floor attribution (round-12 verdict #7): the
     // s_stream_* queries each carry a fixed micro-batch + checkpoint
     // overhead that no batch-plan change can move; reporting their
     // aggregate as its own line keeps batch regressions readable
-    val streamTimesC = corrected.collect {
+    val streamTimes = results.collect {
       case (k, (v, None)) if k.startsWith("s_stream_") => v
     }
-    val streamJsonC =
-      s""""streaming_floor_sec":${ms(streamTimesC.sum)},""" +
-        s""""streaming_queries":${streamTimesC.size}"""
+    val streamJson =
+      s""""streaming_floor_sec":${ms(streamTimes.sum)},""" +
+        s""""streaming_queries":${streamTimes.size}"""
     val loadJson =
       s""""load":{"start":$loadStart,"end":${loadavg()}}"""
     val fullJson =
-      s"""{"metric":"total","value":${ms(totalC)},"unit":"sec",""" +
-        s""""queries":${qmap(bySlowestC)},"failures":$failures,""" +
-        s""""regressions":${rmap(stillRegressed)},""" +
-        s""""adjudications":${rmap(adjudicated)},""" +
-        s""""streaming_remeasure":${rmap(streamRemeasured)},""" +
-        s""""adj_cap":$adjCap,"adj_flags":${regressed.size},""" +
-        s""""prev_artifact":"${esc(if (prev.isEmpty) "" else prevPath)}",""" +
-        s""""prev_load":${ms(prevLoadD)},""" +
-        s"""$streamJsonC,$loadJson,"errors":$nErr,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
+        s""""queries":${qmap(bySlowest)},"failures":$failures,""" +
+        s"""$streamJson,$loadJson,"errors":$nErr,"sf":"$sfDir"}"""
     val wroteFull =
       try {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("BENCH_FULL.json"), fullJson + "\n")
         true
       } catch { case scala.util.control.NonFatal(_) => false }
-    // stdout line stays bounded: 40 slowest queries + at most 8
-    // regressions; the complete maps live in BENCH_FULL.json. On a
-    // failed artifact write, advertise null rather than a pointer to
-    // a file that is absent (or worse, stale).
-    println(s"""{"metric":"total","value":${ms(totalC)},"unit":"sec",""" +
-      s""""queries":${qmap(bySlowestC.take(40))},""" +
+    // stdout line stays bounded: the 40 slowest queries; the complete
+    // map lives in BENCH_FULL.json. On a failed artifact write,
+    // advertise null rather than a pointer to a file that is absent
+    // (or worse, stale).
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
+      s""""queries":${qmap(bySlowest.take(40))},""" +
       s""""queries_full":${if (wroteFull) "\"BENCH_FULL.json\"" else "null"},""" +
-      s""""regressions":${rmap(stillRegressed.take(8))},""" +
-      s""""failures":$failures,$streamJsonC,$loadJson,""" +
+      s""""failures":$failures,$streamJson,$loadJson,""" +
       s""""errors":$nErr,"sf":"$sfDir"}""")
     spark.stop()
   }

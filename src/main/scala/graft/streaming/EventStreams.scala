@@ -460,7 +460,10 @@ object EventStreams {
                    keys: Seq[String]): DataFrame =
     events.join(org.apache.spark.sql.functions.broadcast(dim), keys)
 
-  case class SessionUpdate(user_id: Long, session_start: java.sql.Timestamp,
+  /** `user_id` is boxed: a null key is one session group, as in the
+    * batch `PARTITION BY user_id`. */
+  case class SessionUpdate(user_id: java.lang.Long,
+                           session_start: java.sql.Timestamp,
                            session_end: java.sql.Timestamp, n_events: Int)
 
   /** Stateful sessionization with mapGroupsWithState: a session closes
@@ -495,7 +498,7 @@ object EventStreams {
       if (evictIdleAfterMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     events.selectExpr("user_id", "cast(ts as long) as ts_sec")
-      .as[(Long, Long)]
+      .as[(java.lang.Long, Long)]
       .groupByKey(_._1)
       .mapGroupsWithState[SessionState, SessionUpdate](timeoutConf) {
         case (uid, rows, state: GroupState[SessionState]) =>
@@ -571,7 +574,7 @@ object EventStreams {
     // check, so ts stays a timestamp until inside the state function
     events.withWatermark("ts", watermarkDelay)
       .select(col("user_id"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
+      .as[(java.lang.Long, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[SessionBuffer, SessionUpdate](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -1347,8 +1350,8 @@ object EventStreams {
     * early entries from the bounded `recentProgress` ring.
     *
     * Returns (numInputRows, stateRows) per observed batch in batchId
-    * order — the state-growth measurement surface StateSweep and the
-    * eviction spec read. */
+    * order — the state-growth measurement surface the eviction spec
+    * reads. */
   def runBoundedWithTimeouts(transformed: DataFrame, checkpoint: String,
                              expectDataBatches: Int,
                              timeoutMs: Long = 180000L,

@@ -604,7 +604,11 @@ object Dedup {
             coalesce(col("__parent"), col("cluster_id"))).as("cluster_id"),
           col("__prev"))
         .localCheckpoint()
-      // scan of the just-checkpointed blocks — no join, no shuffle
+      // scan of the just-checkpointed blocks — no join, no shuffle.
+      // Invariant: every edge endpoint has a `labels` row, because the
+      // seed above unions BOTH pair sides (id1 and id2). An id reached
+      // only through viaEdges would carry a null __prev, read as
+      // "changed" every round, and end in the non-convergence throw.
       val changed = next.filter(!(col("cluster_id") <=> col("__prev")))
         .count()
       // superseded checkpoint blocks are reclaimed lazily by the

@@ -3,19 +3,15 @@ package graft.tools
 /** Generated operator catalog + the board's structural invariants.
   *
   * The board is deep (300+ oracled queries across a dozen modules),
-  * and its three registries live in DIFFERENT places with no
-  * compiler-checked linkage: `SparkEntry.queries` / `oracleSql` are
-  * Map LITERALS (a duplicate key silently SHADOWS the earlier entry —
-  * later wins, no compile error; round 13 caught three near-dup op
-  * designs and one real shadowing hazard by hand), and the ScaleSweep
-  * roster is a Seq in another file. This tool makes the linkage an
-  * ARTIFACT: it extracts the keys straight from SOURCE (the only
-  * place duplicates are still visible), joins them with the sweep
-  * roster and the latest BENCH_FULL.json timings, and writes
-  * CATALOG.md — one row per query: oracle? sweep row? last bench
-  * seconds. CatalogSpec re-derives everything and fails on:
-  * duplicate keys, a query/oracle set mismatch, a ≥2 s batch query
-  * with no sweep row and no documented exemption, or a stale
+  * and its two registries, `SparkEntry.queries` and `oracleSql`, are
+  * Map LITERALS with no compiler-checked linkage (a duplicate key
+  * silently SHADOWS the earlier entry — later wins, no compile error;
+  * round 13 caught three near-dup op designs and one real shadowing
+  * hazard by hand). This tool makes the linkage an ARTIFACT: it
+  * extracts the keys straight from SOURCE (the only place duplicates
+  * are still visible) and writes CATALOG.md — one row per query:
+  * concept, module, oracle. CatalogSpec re-derives everything and
+  * fails on duplicate keys, a query/oracle set mismatch, or a stale
   * CATALOG.md.
   *
   * Usage: runMain graft.tools.Catalog
@@ -23,28 +19,6 @@ package graft.tools
 object Catalog {
 
   val entrySrc = "src/main/scala/graft/SparkEntry.scala"
-  val sweepSrc = "src/main/scala/graft/tools/ScaleSweep.scala"
-
-  /** Queries whose bench time is harness floor, not plan work — a
-    * sweep ratio would measure the micro-batch/checkpoint machinery.
-    * Their scale posture is measured by the STATE sweeps instead
-    * (DistinctStateSweep; BENCH_SF1 streaming-state sections). */
-  def streamingFloor(name: String): Boolean =
-    name.startsWith("s_stream") || name.startsWith("s7_stream") ||
-      name == "s_two_tier_dedup"
-
-  /** Documented exemptions from the heavy-query sweep gate, with the
-    * reason a ratio row would not be meaningful. (Streaming-floor
-    * queries are exempted by rule, not listed here.) */
-  val sweepExempt: Map[String, String] = Map(
-    "t_decontaminate" -> ("brute cross-corpus twin kept as the " +
-      "correctness baseline; the shipped scale path is " +
-      "t_decontaminate_bloom (swept 0.13 at 100x) — a ratio row for " +
-      "the brute variant would measure the sanctioned anti-pattern"))
-
-  /** Bench seconds at/above which a batch query must carry a sweep
-    * roster row (or an exemption above). */
-  val heavySeconds = 2.0
 
   private def readFile(p: String): String =
     java.nio.file.Files.readString(java.nio.file.Paths.get(p))
@@ -62,12 +36,6 @@ object Catalog {
     val re = """(?m)^    "([a-z0-9_]+)" ->""".r
     (re.findAllMatchIn(src.substring(iq, io)).map(_.group(1)).toSeq,
       re.findAllMatchIn(src.substring(io)).map(_.group(1)).toSeq)
-  }
-
-  /** ScaleSweep roster names (6-space indent entries). */
-  def rosterKeys(src: String = readFile(sweepSrc)): Seq[String] = {
-    val re = """(?m)^      "([^"]+)" ->""".r
-    re.findAllMatchIn(src).map(_.group(1)).toSeq
   }
 
   /** Implementing module per query, derived from each entry's source
@@ -152,65 +120,9 @@ object Catalog {
     }.toMap
   }
 
-  /** A query has a sweep row if any roster entry names it — exact or
-    * as a parenthesized variant (`semDedup(nlist∝n)` covers nothing;
-    * `name` or `name(...)` covers `name`). */
-  def swept(name: String, roster: Seq[String]): Boolean =
-    roster.exists(r => r == name || r.startsWith(name + "("))
-
-  /** The last full bench artifact, parsed with a REAL JSON reader
-    * (jackson rides on the Spark classpath) — the r14 substring scan
-    * silently truncated at the first nested '}' (ADVICE r14). Returns
-    * (raw per-query seconds, adjudicated per-query seconds): for a
-    * query the artifact's own `regressions` block adjudicates as
-    * contention (or contention-suspect — the box invalidated the
-    * plateau too), the adjudicated figure is min(now, plateau) — the
-    * stable number. Gates and humans read the adjudicated column; the
-    * raw column records what the contended run actually measured. The
-    * r14 judge run went red on exactly this: the driver's post-round
-    * bench rerun (load 8.5) wrote t_decontaminate at 2.774s raw with
-    * its own verdict "contention" (plateau 0.943), and the gate read
-    * the raw number. */
-  def benchSeconds(): (Map[String, Double], Map[String, Double]) = {
-    val p = java.nio.file.Paths.get("BENCH_FULL.json")
-    if (!java.nio.file.Files.exists(p)) return (Map.empty, Map.empty)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.readTree(readFile("BENCH_FULL.json"))
-    def fields(n: com.fasterxml.jackson.databind.JsonNode)
-        : Iterator[(String, com.fasterxml.jackson.databind.JsonNode)] = {
-      import scala.jdk.CollectionConverters._
-      Option(n).map(_.properties().iterator().asScala
-        .map(e => e.getKey -> e.getValue)).getOrElse(Iterator.empty)
-    }
-    val raw = fields(root.get("queries"))
-      .map { case (k, v) =>
-        // asDouble() yields 0.0 for non-numeric/nested nodes — a
-        // malformed entry would read as 0 s and silently exempt a
-        // heavy query from the sweep gate (r15 ADVICE); fail loudly
-        require(v.isNumber,
-          s"BENCH_FULL.json: non-numeric seconds for query '$k': $v")
-        k -> v.asDouble()
-      }.toMap
-    // sanity: the flat map must cover every benched query — a parse
-    // that drops entries silently weakens the heavy gate (ADVICE r14)
-    require(raw.nonEmpty, "BENCH_FULL.json: empty queries map")
-    val adjudicated = fields(root.get("regressions")).foldLeft(raw) {
-      case (acc, (q, r)) =>
-        val verdict = Option(r.get("verdict")).map(_.asText()).getOrElse("")
-        val plateau = Option(r.get("plateau")).map(_.asDouble()).getOrElse(-1.0)
-        if (verdict.startsWith("contention") && plateau >= 0 &&
-            acc.contains(q))
-          acc.updated(q, math.min(acc(q), plateau))
-        else acc
-    }
-    (raw, adjudicated)
-  }
-
   def render(): String = {
     val src = readFile(entrySrc) // read ONCE; the extractors share it
     val (qk, ok) = sourceKeys(src)
-    val roster = rosterKeys()
-    val (bench, adj) = benchSeconds()
     val mods = modules(src)
     val cons = concepts(src)
     val sb = new StringBuilder
@@ -218,40 +130,16 @@ object Catalog {
     sb ++= "(runMain graft.tools.Catalog)\n\n"
     sb ++= s"${qk.size} queries; every row spec-enforced by " +
       "CatalogSpec (duplicate keys, query/oracle set equality, " +
-      s"sweep rows for batch queries ≥ ${heavySeconds}s adjudicated, " +
-      "staleness of this file). `adjudicated s` is the stable figure: " +
-      "min(now, plateau) when the bench artifact's own regressions " +
-      "block ruled the raw number contention.\n\n"
-    sb ++= "| query | concept | module | oracle | sweep row | " +
-      "bench s (last full run) | adjudicated s |\n"
-    sb ++= "|---|---|---|---|---|---|---|\n"
+      "staleness of this file).\n\n"
+    sb ++= "| query | concept | module | oracle |\n"
+    sb ++= "|---|---|---|---|\n"
     qk.sorted.foreach { q =>
       val o = if (ok.contains(q)) "y" else "MISSING"
-      val s =
-        if (swept(q, roster)) "y"
-        else if (streamingFloor(q)) "state-sweep (streaming floor)"
-        else sweepExempt.get(q).map(r => s"exempt: $r").getOrElse("-")
-      val b = bench.get(q).map(v => f"$v%.2f").getOrElse("-")
-      val a = adj.get(q).map(v => f"$v%.2f").getOrElse("-")
       sb ++= s"| $q | ${cons.getOrElse(q, "-")} " +
-        s"| ${mods.getOrElse(q, "inline")} | $o | $s | $b | $a |\n"
+        s"| ${mods.getOrElse(q, "inline")} | $o |\n"
     }
     sb.result()
   }
-
-  /** The catalog with the VOLATILE bench columns stripped — what the
-    * staleness gate compares. The driver reruns graft.Bench each
-    * round, which rewrites BENCH_FULL.json after the catalog was
-    * generated; per-query seconds (raw AND adjudicated) therefore must
-    * not participate in the staleness byte-compare, or every
-    * post-bench `sbt test` would see a stale file. The structural
-    * columns (query, module, oracle, sweep) are the gate; the seconds
-    * are advisory. */
-  def stripBench(text: String): String =
-    text.linesIterator.map { l =>
-      if (l.startsWith("|")) l.replaceAll("""\|[^|]*\|[^|]*\|\s*$""", "|")
-      else l
-    }.mkString("\n")
 
   def main(args: Array[String]): Unit = {
     java.nio.file.Files.writeString(

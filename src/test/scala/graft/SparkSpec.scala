@@ -31,6 +31,7 @@ object SparkSpec {
       "org.apache.spark.util.Utils",
       "org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask",
       "org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2Exec",
+      "org.apache.spark.sql.execution.datasources.FileFormatWriter",
       "org.apache.spark.sql.execution.streaming.MicroBatchExecution",
       "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
       "org.apache.spark.broadcast.TorrentBroadcast",

@@ -94,6 +94,36 @@ class EventStreamsSpec extends SparkSpec {
     assert(byUser(2L).n_events == 1)
   }
 
+  test("sessionize and sessionizeRetained: null user_id rows form one " +
+    "session group (batch PARTITION BY user_id), not a decode error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullkey").toString
+    Seq(
+      (0L, ts("2024-01-01 00:10:00"), Option(1L), "view", 1.0, "{}"),
+      (1L, ts("2024-01-01 00:15:00"), None, "view", 1.0, "{}"),
+      (2L, ts("2024-01-01 00:25:00"), None, "view", 1.0, "{}"),
+      // far-future sentinel: flushes every retained session
+      (3L, ts("2024-01-03 00:00:00"), Option(-1L), "flush", 0.0, "{}")
+    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/in")
+    def sessions(ds: org.apache.spark.sql.Dataset[EventStreams.SessionUpdate],
+                 name: String, mode: OutputMode) =
+      EventStreams.runAvailableNow(ds.toDF(), queryName = name,
+        checkpoint = s"$dir/ckpt_$name", outputMode = mode)
+        .as[EventStreams.SessionUpdate].collect()
+        .map(s => (Option(s.user_id).map(_.longValue), s.session_start,
+          s.n_events)).toSet
+    val nullSession = (None, ts("2024-01-01 00:15:00"), 2)
+    val live = sessions(EventStreams.sessionize(
+      EventStreams.readStream(spark, s"$dir/in"), gapSeconds = 1800),
+      "sess_null", OutputMode.Update())
+    assert(live.contains(nullSession), live)
+    val retained = sessions(EventStreams.sessionizeRetained(
+      EventStreams.readStream(spark, s"$dir/in"), gapSeconds = 1800,
+      watermarkDelay = "1 hour"), "sess_null_ooo", OutputMode.Append())
+    assert(retained == Set(
+      (Some(1L), ts("2024-01-01 00:10:00"), 1), nullSession), retained)
+  }
+
   test("dedupStream: first occurrence kept, AvailableNow equals batch") {
     val dir = java.nio.file.Files.createTempDirectory("graft_stream4").toString
     // duplicate event_ids — same ts AND different ts (the content-hash
