@@ -44,11 +44,14 @@ object GraftSession {
     spark
   }
 
-  /** Standalone builder for tests/tools (driver mains build their own).
-    * GraftExtensions makes the native SQL functions part of every
-    * session derived from this one (Thrift per-connection sessions
-    * build fresh state; tune()'s registerAll only covers the host). */
-  def local(cores: Int = 4): SparkSession = {
+  /** The tuned local session of the driver mains (SqlRunner,
+    * JdbcServer, ClifEtl, ClifEtlIncremental) on `cores` cores,
+    * `SPARK_GRAFT_CPUS` by default (4 when unset). GraftExtensions
+    * makes the native SQL functions part of every session derived
+    * from this one (Thrift per-connection sessions build fresh state;
+    * tune()'s registerAll only covers the host). */
+  def local(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+      : SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

@@ -18,13 +18,7 @@ object JdbcServer {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).getOrElse("10000")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     start(spark, dataDir, port)
     println(s"[jdbc] thrift server on port $port; Ctrl-C to stop")
     Thread.currentThread().join() // serve until killed

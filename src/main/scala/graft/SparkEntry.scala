@@ -2064,14 +2064,14 @@ object SparkEntry {
       // times, and HERE that subtree is the extractLinks +
       // canonicalizeUrl expression jungle — JobProfile measured 2.4 s
       // of the query's ~3 s wall as DRIVER gap (planning), vs 0.9 s
-      // for g_pagerank whose edges are plain columns. The checkpoint
+      // for g_pagerank whose edges are plain columns. The pin
       // replaces the jungle with a LogicalRDD of the aggregated edge
       // frame — host×host ≤ 16 rows, the bounded-frame discipline
       // (runtime was already deduped by ReuseExchange; planning walks
       // every copy regardless).
-      val edges = links.groupBy(col("src_host"), col("dst_host"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint()
+      val edges = Iterate.pin(
+        links.groupBy(col("src_host"), col("dst_host"))
+          .agg(count(lit(1)).as("w")))
       Graphs.pageRank(edges, "src_host", "dst_host", col("w"),
         damping = 0.85, iters = 2)
     }),
@@ -4176,10 +4176,8 @@ object SparkEntry {
         stepSeconds = 3600L,
         outcome = col("event_type") === "error" && col("value") > 150,
         rollRows = 4, trainPct = 80, valPct = 10)
-      def r6m(c: org.apache.spark.sql.Column) =
-        (round(c, 6).cast("decimal(18,6)") * lit(1000000L))
-          .cast("long")
-      val feats = bd.groupBy(col("user_id")).agg(
+      // built once: trainer + readout share it
+      val feats = Iterate.pin(bd.groupBy(col("user_id")).agg(
         max(col("label")).as("y"),
         min(col("split")).as("split"),
         avg(when(col("vital_value").isNotNull, 1.0).otherwise(0.0))
@@ -4187,14 +4185,13 @@ object SparkEntry {
         avg(when(col("lab_value").isNotNull, 1.0).otherwise(0.0))
           .as("f_lab"),
         (count(lit(1)).cast("double") /
-          (count(lit(1)) + lit(24L)).cast("double")).as("f_len"))
-        .localCheckpoint() // built once: trainer + readout share it
+          (count(lit(1)) + lit(24L)).cast("double")).as("f_len")))
       val fc = Seq("f_vital", "f_lab", "f_len")
       val beta = ops.Analytics.logisticGdMicros(
         feats.filter(col("split") === "train"), fc, "y", iters = 3)
       val micro = feats.select(col("split") +: col("y") +:
         fc.zipWithIndex.map { case (c, j) =>
-          r6m(col(c).cast("double")).as(s"__x$j")
+          ops.Analytics.r6m(col(c)).as(s"__x$j")
         }: _*)
       val z = ops.Analytics.logisticScorePico(beta.toSeq,
         fc.indices.map(j => s"__x$j"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** SQL entry point: registers every synthetic table as a temp view plus
   * the native function surface (cosine_sim / dot_product /
@@ -23,13 +23,7 @@ object SqlRunner {
           java.nio.file.Paths.get(path)), "UTF-8")
       case None => scala.io.Source.stdin.mkString
     }
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     Tables.registerAll(spark, dataDir)
     SqlRecipes.register(spark) // operator library as SQL table functions
     statements(sql).foreach { st =>

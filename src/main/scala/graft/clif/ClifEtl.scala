@@ -19,13 +19,7 @@ object ClifEtl {
 
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir) = args.take(2)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     run(spark, inDir, outDir).foreach { case (name, rows, note) =>
       println(s"[etl] $name rows=$rows $note")
     }

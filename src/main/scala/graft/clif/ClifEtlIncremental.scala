@@ -21,13 +21,7 @@ object ClifEtlIncremental {
 
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir) = args.take(2)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val rows = runVitals(spark, inDir, outDir)
     println(s"[etl-inc] vitals appended-output rows=$rows")
     spark.stop()

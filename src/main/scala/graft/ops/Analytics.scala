@@ -1171,49 +1171,44 @@ object Analytics {
     val counts = src.groupBy(col("__bin"))
       .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("__ca"),
         sum(when(!col("__a"), 1L).otherwise(0L)).as("__cb"))
-    val tot = counts.agg(coalesce(sum(col("__ca")), lit(0L)).as("__na"),
-      coalesce(sum(col("__cb")), lit(0L)).as("__nb"))
-      .localCheckpoint()
-    val mass = counts.crossJoin(broadcast(tot))
+    val tot = Iterate.pin(counts.agg(
+      coalesce(sum(col("__ca")), lit(0L)).as("__na"),
+      coalesce(sum(col("__cb")), lit(0L)).as("__nb")))
+    val mass = Iterate.pin(counts.crossJoin(broadcast(tot))
       .select(col("__bin"),
         when(col("__na") > 0, mu6(col("__ca").cast("double") /
           col("__na").cast("double"))).as("__pm"),
         when(col("__nb") > 0, mu6(col("__cb").cast("double") /
-          col("__nb").cast("double"))).as("__qm"))
-      .localCheckpoint()
+          col("__nb").cast("double"))).as("__qm")))
     val eps = epsMicros.toDouble / 1e6
-    val kmat = mass.select(col("__bin").as("__i"))
+    val kmat = Iterate.pin(mass.select(col("__bin").as("__i"))
       .crossJoin(mass.select(col("__bin").as("__j")))
       .select(col("__i"), col("__j"),
         abs(col("__i") - col("__j")).as("__c"))
       .withColumn("__km",
-        mu6(exp(-col("__c").cast("double") / lit(eps))))
-      .localCheckpoint()
+        mu6(exp(-col("__c").cast("double") / lit(eps)))))
     // micro-grid iterate from exact pico sums: one division, one round
     def scale(pm: Column, sumPico: Column): Column =
       when(sumPico > 0, (round((pm.cast("double") / lit(1e6)) /
         (sumPico.cast("double") / lit(1e12)), 6)
         .cast("decimal(18,6)") * 1000000L).cast(dec).cast("long"))
-    var v = mass.select(col("__bin").as("__j"),
-      when(col("__qm").isNotNull, lit(1000000L)).as("__vm"))
-      .localCheckpoint()
+    var v = Iterate.pin(mass.select(col("__bin").as("__j"),
+      when(col("__qm").isNotNull, lit(1000000L)).as("__vm")))
     var u = v.limit(0).select(col("__j").as("__i"),
       col("__vm").as("__um"))
     for (_ <- 1 to iters) {
-      u = kmat.join(v, Seq("__j"))
+      u = Iterate.pin(kmat.join(v, Seq("__j"))
         .groupBy(col("__i"))
         .agg(sum(col("__km").cast(dec) * col("__vm")).as("__kv"))
         .join(mass.select(col("__bin").as("__i"), col("__pm")),
           Seq("__i"))
-        .select(col("__i"), scale(col("__pm"), col("__kv")).as("__um"))
-        .localCheckpoint()
-      v = kmat.join(u, Seq("__i"))
+        .select(col("__i"), scale(col("__pm"), col("__kv")).as("__um")))
+      v = Iterate.pin(kmat.join(u, Seq("__i"))
         .groupBy(col("__j"))
         .agg(sum(col("__km").cast(dec) * col("__um")).as("__ku"))
         .join(mass.select(col("__bin").as("__j"), col("__qm")),
           Seq("__j"))
-        .select(col("__j"), scale(col("__qm"), col("__ku")).as("__vm"))
-        .localCheckpoint()
+        .select(col("__j"), scale(col("__qm"), col("__ku")).as("__vm")))
     }
     val plan = kmat.join(u, Seq("__i")).join(v, Seq("__j"))
       .agg(sum(col("__um").cast(dec) * col("__km") * col("__vm") *
@@ -1293,22 +1288,21 @@ object Analytics {
                        labelCol: String, iters: Int): Array[Long] = {
     require(iters >= 1 && iters <= 64, "iters must be in [1, 64]")
     require(featCols.nonEmpty, "need at least one feature")
-    val dec38 = "decimal(38,0)"
-    def r6m(c: Column): Column =
-      (round(c.cast("double"), 6).cast("decimal(18,6)") *
-        lit(1000000L)).cast("long")
     // the micro frame is example-sized (tiny next to whatever built
-    // the features) and is scanned once per iteration — cut its
-    // lineage so the upstream pipeline runs ONCE, not iters times
-    // (the sinkhorn/PCA localCheckpoint discipline)
-    val micro = feats.select(
+    // the features) and is scanned once per iteration — pin it so the
+    // upstream pipeline runs ONCE, not iters times
+    val micro = Iterate.pin(feats.select(
       (col(labelCol).cast("long") * 1000000L).as("__ym") +:
         featCols.zipWithIndex.map { case (c, j) =>
           r6m(col(c)).as(s"__x$j")
-        }: _*)
-      .localCheckpoint()
+        }: _*))
     gdLoop(micro, featCols.length, iters)
   }
+
+  /** A value as round-6 micro-units (exact decimal multiply). */
+  private[graft] def r6m(c: Column): Column =
+    (round(c.cast("double"), 6).cast("decimal(18,6)") *
+      lit(1000000L)).cast("long")
 
   /** The ascent loop over an already-micro frame (`__ym`, `__x0`…):
     * one (d+1)-sum hash-agg scan per iteration. */
@@ -1317,8 +1311,7 @@ object Analytics {
     val dec38 = "decimal(38,0)"
     val xCols = "__one" +: (0 until nFeats).map(j => s"__x$j")
     val beta = Array.fill(nFeats + 1)(0L)
-    var it = 0
-    while (it < iters) {
+    for (_ <- 1 to iters) {
       val z = logisticScorePico(beta.toSeq,
         (0 until nFeats).map(j => s"__x$j"))
       val sigmaMu = (round(
@@ -1347,7 +1340,6 @@ object Analytics {
         beta(j) += (if (s.signum < 0) -g.longValueExact()
                     else g.longValueExact())
       }
-      it += 1
     }
     beta
   }
@@ -1363,18 +1355,14 @@ object Analytics {
   def logisticModelReport(feats: DataFrame, featCols: Seq[String],
                           labelCol: String, splitCol: String,
                           iters: Int): DataFrame = {
-    def r6m(c: Column): Column =
-      (round(c.cast("double"), 6).cast("decimal(18,6)") *
-        lit(1000000L)).cast("long")
-    // build the micro features ONCE (checkpointed, example-sized);
-    // the train slice feeds the ascent loop, the whole frame scores
-    val micro = feats.select(
+    // build the micro features ONCE (pinned, example-sized); the
+    // train slice feeds the ascent loop, the whole frame scores
+    val micro = Iterate.pin(feats.select(
       col(splitCol).as("__split") +:
         col(labelCol).cast("long").as("__y") +:
         featCols.zipWithIndex.map { case (c, j) =>
           r6m(col(c)).as(s"__x$j")
-        }: _*)
-      .localCheckpoint()
+        }: _*))
     val beta = gdLoop(
       micro.filter(col("__split") === "train")
         .withColumn("__ym", col("__y") * 1000000L),
@@ -1427,7 +1415,7 @@ object Analytics {
     * distinct-duration frame (hash agg, map-side combined), the
     * Prefix hierarchy runs there, and the gradient returns as ONE
     * 1-row aggregate (the logisticGdMicros bounded-collect pattern);
-    * `subjects` is localCheckpoint'd once and re-scanned per round.
+    * `subjects` is pinned once and re-scanned per round.
     *
     * @param subjects ONE row per subject
     * @param durationCol long duration (micro-units by convention)
@@ -1443,12 +1431,11 @@ object Analytics {
     require(featCols.nonEmpty, "need at least one covariate")
     def r6(c: Column) = round(c, 6)
     val idx = featCols.indices
-    val base = subjects.select(
+    val base = Iterate.pin(subjects.select(
         col(durationCol).cast("long").as("__dur") +:
         col(observedCol).cast("boolean").as("__e") +:
         idx.map(j => r6(col(featCols(j)).cast("double")).as(s"__x$j")): _*)
-      .filter(col("__dur").isNotNull && col("__e").isNotNull)
-      .localCheckpoint()
+      .filter(col("__dur").isNotNull && col("__e").isNotNull))
 
     /** Distinct-duration frame with suffix-inclusive risk-set sums
       * for the given β (micros): __dt, __sx_j (event-row covariate
@@ -1564,29 +1551,26 @@ object Analytics {
       .agg(count(lit(1)).as("__w"))
     // symmetric games frame: n_ij as (i, j) AND (j, i); per-player
     // wins/games ride along so no second corpus pass is ever needed
-    // pin the cells frame and per-player totals ONCE (r20 opt, guide
-    // §1.2/§3.3): each MM round broadcasts the strengths frame TWICE
-    // (p_i side, p_j side) — two non-identical projections the planner
-    // cannot dedupe — so an unpinned lineage DOUBLES per round and the
-    // final plan re-derives the corpus agg 2^iters times; at iters=3
-    // the optimizer alone cost ~8 s of driver wall (14k-line physical
-    // plan). Checkpointing the dimension-scale strengths each round
-    // keeps every round's plan cells ⋈ broadcast ⋈ broadcast — rounds
-    // cost what the scale-shape doc says they cost.
-    val sym = w.select(col("__a").as("__i"), col("__b").as("__j"),
-        col("__w").as("__wij"), lit(0L).as("__wji"))
-      .unionByName(w.select(col("__b").as("__i"), col("__a").as("__j"),
-        lit(0L).as("__wij"), col("__w").as("__wji")))
-      .groupBy(col("__i"), col("__j"))
-      .agg(sum(col("__wij")).as("__wij"),
-        (sum(col("__wij")) + sum(col("__wji"))).as("__nij"))
-      .localCheckpoint()
-    val totals = sym.groupBy(col("__i"))
+    // pin the cells frame and per-player totals once, and the
+    // strengths every round (r20 opt, guide §1.2/§3.3): each MM round
+    // broadcasts the strengths TWICE (p_i side, p_j side), two
+    // projections the planner cannot dedupe, so an unpinned lineage
+    // doubles per round (at iters=3 the optimizer alone cost ~8 s of
+    // driver wall); pinned, every round plans cells ⋈ broadcast ⋈
+    // broadcast
+    val sym = Iterate.pin(
+      w.select(col("__a").as("__i"), col("__b").as("__j"),
+          col("__w").as("__wij"), lit(0L).as("__wji"))
+        .unionByName(w.select(col("__b").as("__i"), col("__a").as("__j"),
+          lit(0L).as("__wij"), col("__w").as("__wji")))
+        .groupBy(col("__i"), col("__j"))
+        .agg(sum(col("__wij")).as("__wij"),
+          (sum(col("__wij")) + sum(col("__wji"))).as("__nij")))
+    val totals = Iterate.pin(sym.groupBy(col("__i"))
       .agg(sum(col("__wij")).cast("long").as("wins"),
-        sum(col("__nij")).cast("long").as("games"))
-      .localCheckpoint()
+        sum(col("__nij")).cast("long").as("games")))
     val p0 = totals.select(col("__i"), lit(1.0).as("__p"))
-    val pFinal = (1 to iters).foldLeft(p0) { (p, _) =>
+    val (pFinal, _) = Iterate.loop(p0, iters) { (p, _) =>
       val term = sym
         .join(broadcast(p.select(col("__i"), col("__p").as("__pi"))),
           Seq("__i"))
@@ -1597,21 +1581,12 @@ object Analytics {
             (col("__pi") + col("__pj")), 6)
             .cast("decimal(28,6)").as("__t"))
         .groupBy(col("__i")).agg(sum(col("__t")).as("__den"))
-      val next = term
+      Iterate.Next(term
         .join(broadcast(totals.select(col("__i"), col("wins"))),
           Seq("__i"))
         .select(col("__i"),
           round(col("wins").cast("double") /
-            col("__den").cast("double"), 6).as("__p"))
-        .localCheckpoint()
-      // superseded round state: Dataset.unpersist only walks the
-      // CacheManager, which never registered a localCheckpoint's
-      // internal RDD — so this is a no-op and the superseded blocks
-      // are reclaimed LAZILY by the ContextCleaner once the RDD is
-      // unreachable (ADVICE r20). Fine at iters=3 dimension scale;
-      // eager release would need a handle to the checkpointed RDD.
-      p.unpersist(blocking = false)
-      next
+            col("__den").cast("double"), 6).as("__p")))
     }
     // share denominator: round-6 doubles cast to decimal(18,6) are
     // exact, so the players-frame sum is order-invariant
@@ -1707,8 +1682,7 @@ object Analytics {
 
   /** Shared EM core: returns (final posteriors (i, c, post µ), last
     * M-step confusion (k, c, l, π µ), last priors (c, prior µ)) —
-    * each checkpointed, so they stay executable after the big
-    * intermediate state is freed. */
+    * each pinned. */
   private def dawidSkeneCore(labels0: DataFrame, itemCol: String,
       annCol: String, labelCol: String, rounds: Int)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1718,12 +1692,11 @@ object Analytics {
     // pin the judgments once: every round reads them twice (M-step
     // join, E-step fan-out) plus the dim/count probes — an unpinned
     // lineage re-derives the caller's construction ~10× per run
-    val labels = labels0
+    val labels = Iterate.pin(labels0
       .filter(col(itemCol).isNotNull && col(annCol).isNotNull &&
         col(labelCol).isNotNull)
       .select(col(itemCol).as("__i"), col(annCol).as("__k"),
-        col(labelCol).as("__l"))
-      .localCheckpoint()
+        col(labelCol).as("__l")))
     val classDim = labels.select(col("__l").as("__c")).distinct()
     val annDim = labels.select(col("__k")).distinct()
     // dimension-scale scalar (class count) — the sanctioned driver
@@ -1748,14 +1721,12 @@ object Analytics {
     require(maxJ <= 64,
       s"an item carries $maxJ judgments: the staged exact E-step " +
         "product bounds judgments per item at 64")
-    var post = perItem.crossJoin(broadcast(classDim))
+    val post0 = perItem.crossJoin(broadcast(classDim))
       .join(votes, Seq("__i", "__c"), "left")
       .select(col("__i"), col("__c"),
         microR6(coalesce(col("__v"), lit(0L)).cast("double") /
           col("__a").cast("double")).as("__post"))
-    var pi: DataFrame = null
-    var priors: DataFrame = null
-    for (round <- 1 to rounds) {
+    def mStep(post: DataFrame): (DataFrame, DataFrame) = {
       // M-step on the full (k, c, l) grid: absent cells still get
       // their Laplace mass, so the π frame is always A·C·L rows
       // cast INSIDE the sum: a long sum wraps silently at corpus
@@ -1767,14 +1738,13 @@ object Analytics {
       val kclGrid = annDim.crossJoin(broadcast(classDim))
         .crossJoin(broadcast(classDim.select(col("__c").as("__l"))))
       // π and priors are A·C·L- and C-row frames — dimension-scale.
-      // They stay LAZY during the rounds (r20 opt: each per-round
-      // localCheckpoint was an extra action + blocking driver
-      // round-trip; profiled at 69 jobs/run for rounds=2 — the wall
-      // was orchestration, not compute) and are each consumed exactly
+      // They stay LAZY during the rounds (r20 opt: each per-round pin
+      // was an extra action + blocking driver round-trip; profiled at
+      // 69 jobs/run for rounds=2 — the wall was orchestration, not
+      // compute) and are each consumed exactly
       // once per round, by the E-step's broadcast, so laziness costs
-      // no recompute. Only the FINAL round's π/priors are
-      // checkpointed (below) — they are returned, and must stay
-      // executable after `labels` is unpersisted.
+      // no recompute. Only the FINAL round's π/priors are pinned
+      // (after the loop below) — they are returned.
       // __st (the per-(k, c) row total) is a WINDOW sum over the
       // grid-joined frame instead of a second agg + join (r21 opt,
       // guide §2.4 — the M-step fusion): the grid carries EVERY
@@ -1784,7 +1754,7 @@ object Analytics {
       // decimals are visit-order free)
       val wKC = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__k"), col("__c"))
-      pi = kclGrid
+      val pi = kclGrid
         .join(sums, Seq("__k", "__c", "__l"), "left")
         .withColumn("__st",
           sum(coalesce(col("__s"), lit(0).cast("decimal(20,0)")))
@@ -1796,11 +1766,10 @@ object Analytics {
             (col("__st")
               + lit(1000000L) * lit(lCount)).cast("double"))
             .as("__pi"))
-      if (round == rounds) pi = pi.localCheckpoint()
       val pcls = post.groupBy(col("__c"))
         .agg(sum(col("__post").cast("decimal(20,0)"))
           .cast("decimal(20,0)").as("__pc"))
-      priors = pcls
+      val priors = pcls
         .crossJoin(broadcast(
           pcls.agg(sum(col("__pc")).cast("decimal(20,0)").as("__pt"))))
         .select(col("__c"),
@@ -1808,7 +1777,9 @@ object Analytics {
             (col("__pc") + lit(1000000L)).cast("double") /
             (col("__pt") + lit(1000000L) * lit(lCount)).cast("double"))
             .as("__prior"))
-      if (round == rounds) priors = priors.localCheckpoint()
+      (pi, priors)
+    }
+    def eStep(pi: DataFrame, priors: DataFrame): DataFrame = {
       // E-step: every (i, k) judgment fans out to all C classes via
       // the broadcast π grid; the per-(i, c) likelihood is the exact
       // integer product of its ≤ maxJ π factors times the prior.
@@ -1849,11 +1820,7 @@ object Analytics {
         .join(broadcast(priors), Seq("__c"))
       // normalization via windows over the SAME (i, c)-keyed frame
       // (an agg + self-join would recompute the E-step twice per
-      // round); sums are exact decimals — visit order free. The
-      // eager lineage cut per round is the Graphs/ivfCentroids
-      // iterative-op pattern: the posteriors frame is the iteration
-      // state, and an uncut multi-round plan stalls the analyzer
-      // before execution
+      // round); sums are exact decimals — visit order free
       val wDen = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__i"))
       val normalized =
@@ -1904,23 +1871,22 @@ object Analytics {
             .withColumn("__d",
               sum(col("__n")).over(wDen).cast("decimal(38,0)"))
         }
-      val prev = post
-      post = normalized
+      normalized
         .select(col("__i"), col("__c"),
           microR6(col("__n").cast("double") / col("__d").cast("double"))
             .as("__post"))
-        .localCheckpoint()
-      // superseded round state off the block manager eagerly (the
-      // learnBpeMerges swap discipline — orphaned checkpoint blocks
-      // pin executor memory for the rest of the session). The FINAL
-      // round's posteriors are the returned result and stay.
-      // non-blocking (r20 opt): the swap only needs the blocks GONE
-      // eventually — the old blocking=true waited a full driver
-      // round-trip per round for memory this bounded run never misses
-      if (prev ne null) prev.unpersist(blocking = false)
     }
-    labels.unpersist(blocking = false)
-    (post, pi, priors)
+    // the posteriors are the iteration state, pinned every round (an
+    // uncut multi-round plan stalls the analyzer before execution);
+    // π and priors are pinned in the final round only
+    val (postLast, _) = Iterate.loop(post0, rounds - 1) { (post, _) =>
+      val (pi, priors) = mStep(post)
+      Iterate.Next(eStep(pi, priors))
+    }
+    val (piLast, priorsLast) = mStep(postLast)
+    val pi = Iterate.pin(piLast)
+    val priors = Iterate.pin(priorsLast)
+    (Iterate.pin(eStep(pi, priors)), pi, priors)
   }
 
   /** pass@k (Chen et al. 2021, "Evaluating Large Language Models

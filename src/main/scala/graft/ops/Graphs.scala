@@ -25,25 +25,94 @@ object Graphs {
         col("v").isNotNull)
       .distinct()
 
-  /** Per-node triangle counts (node-iterator with DEGREE ORIENTATION
-    * — Schank & Wagner 2005; the MapReduce formulation is Suri &
-    * Vassilvitskii WWW'11): each undirected edge is directed from its
-    * lower-(degree, id) endpoint to the higher, wedges are one
-    * self-join of the oriented list on the middle vertex, and a wedge
-    * a→b→c is a triangle iff the closing edge a→c is oriented too.
-    * The orientation is a total order, so every triangle is
-    * enumerated EXACTLY once (its least corner sees both out-edges) —
-    * no /3 correction, no duplicate pairs.
+  /** k-core decomposition at a FIXED k (Seidman 1983): iteratively
+    * peel nodes of degree < k until the remaining subgraph is a
+    * k-core (every survivor has ≥ k in-core neighbors) — the
+    * community/spam-structure filter (densely-linked boilerplate
+    * clusters survive high k; organic long-tail structure peels
+    * away).
     *
-    * Why orientation matters at scale: wedge count is Σ_v outdeg(v)²,
-    * and directing edges toward higher degree caps every out-degree
-    * at O(√m) on ANY graph — a star's hub gets out-degree ~0 and its
-    * spokes 1, so the skewed-degree corpus graph (stopword-like hub
-    * terms) generates wedges proportional to the answer, not to
-    * hub-degree². Plan: one distinct, one node-sized degree agg
-    * joined back (AQE broadcasts when vocab-sized), two equi-join
-    * shuffles (wedge build + closure probe), one corner explode +
-    * hash agg. Nothing all-pairs, nothing driver-side. */
+    * Bounded iteration contract ([[Iterate.loop]]): at most `rounds`
+    * peel rounds, each ONE degree agg + two anti-joins, stopping
+    * EARLY the round nothing peels (a cheap limit-1 probe, a
+    * [[Iterate.Fixpoint]]). Early stop is observationally identical
+    * to running the full `rounds` — a converged graph peels
+    * nothing — so an oracle that always
+    * replays exactly `rounds` rounds matches regardless of where
+    * convergence lands; if the corpus needs more than `rounds`
+    * rounds, both engines stop at the same partially-peeled graph
+    * (stated contract: `rounds` bounds the worst case, real graphs
+    * converge in a handful).
+    *
+    * @return surviving (node, core_degree) — degree INSIDE the core */
+  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
+            rounds: Int = 8): DataFrame = {
+    require(k >= 1, "k must be >= 1")
+    require(rounds >= 1, "rounds must be >= 1")
+    val e0 = Iterate.pin(canonicalEdges(edges, aCol, bCol))
+    val (e, _) = Iterate.loop(e0, rounds) { (e, _) =>
+      val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
+        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+      val bad = deg.filter(col("deg") < k).select(col("n"))
+      if (bad.limit(1).count() == 0) Iterate.Fixpoint
+      else Iterate.Next(
+        e.join(bad.select(col("n").as("u")), Seq("u"), "left_anti")
+          .join(bad.select(col("n").as("v")), Seq("v"), "left_anti")
+          .select(col("u"), col("v")))
+    }
+    e.select(explode(array(col("u"), col("v"))).as("node"))
+      .groupBy(col("node"))
+      .agg(count(lit(1)).cast("long").as("core_degree"))
+  }
+
+  /** Synchronous label-propagation community detection (Raghavan et
+    * al. 2007, made DETERMINISTIC): every node starts as its own
+    * label; each round, every node adopts the most frequent label
+    * among its neighbors, ties broken by the SMALLEST label — no RNG,
+    * no visit order, so any engine replays it bit-for-bit. Runs a
+    * FIXED round budget with an early stop only at an exact fixpoint:
+    * a fixpoint is invariant under further rounds, so an oracle that
+    * always replays `rounds` rounds still matches (the k-core
+    * early-stop contract). Synchronous LPA can 2-cycle on bipartite
+    * structure — the fixed budget makes even that deterministic
+    * (round parity decides, identically in both engines).
+    *
+    * Scale shape per round: one adjacency join keyed on the neighbor
+    * (labels stay distributed), one (node, label) hash agg, one
+    * argmax window over THAT frame — partitioned by node, so the
+    * window is per-node-degree-sized, never global. Each round's
+    * labels are pinned by [[Iterate.loop]]. Rounds is small by
+    * design: LPA communities form in a handful of sweeps; at 100 TB
+    * you cap rounds, not nodes.
+    *
+    * @return (node, community) — community = the converged (or
+    *         round-budget) label */
+  def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
+                       rounds: Int = 4): DataFrame = {
+    require(rounds >= 1, "rounds must be >= 1")
+    val e = Iterate.pin(canonicalEdges(edges, aCol, bCol))
+    val adj = e.select(col("u").as("__n"), col("v").as("__m"))
+      .union(e.select(col("v").as("__n"), col("u").as("__m")))
+    val lab0 = Iterate.pin(
+      e.select(explode(array(col("u"), col("v"))).as("node"))
+        .distinct().select(col("node"), col("node").as("label")))
+    val (labels, _) = Iterate.loop(lab0, rounds) { (lab, _) =>
+      val nb = adj.join(
+        lab.select(col("node").as("__m"), col("label")), Seq("__m"))
+      val cnt = nb.groupBy(col("__n"), col("label"))
+        .agg(count(lit(1)).as("__c"))
+      val w = Window.partitionBy(col("__n"))
+        .orderBy(col("__c").desc, col("label"))
+      val next = cnt.withColumn("__r", row_number().over(w))
+        .filter(col("__r") === 1)
+        .select(col("__n").as("node"), col("label"))
+      Iterate.Next(next, next =>
+        next.join(lab.withColumnRenamed("label", "__old"), Seq("node"))
+          .filter(col("label") =!= col("__old")).limit(1).count() == 0)
+    }
+    labels.select(col("node"), col("label").as("community"))
+  }
+
   /** Damped PageRank over a directed weighted edge list (Brin & Page
     * 1998) — the generalized-centrality companion to the
     * UNDAMPED event-chain stationary distribution in
@@ -72,145 +141,25 @@ object Graphs {
     * scalars, attached via broadcast crossJoin (never collected).
     * Out-degree normalization is a src-keyed window on the edge list
     * — the same exchange family the join uses. */
-  /** k-core decomposition at a FIXED k (Seidman 1983): iteratively
-    * peel nodes of degree < k until the remaining subgraph is a
-    * k-core (every survivor has ≥ k in-core neighbors) — the
-    * community/spam-structure filter (densely-linked boilerplate
-    * clusters survive high k; organic long-tail structure peels
-    * away).
-    *
-    * Bounded iteration contract (the BPE-merges discipline): at most
-    * `rounds` peel rounds, each ONE degree agg + two anti-joins with
-    * an eager localCheckpoint lineage cut, stopping EARLY the round
-    * nothing peels (a cheap limit-1 probe). Early stop is
-    * observationally identical to running the full `rounds` — a
-    * converged graph peels nothing — so an oracle that always
-    * replays exactly `rounds` rounds matches regardless of where
-    * convergence lands; if the corpus needs more than `rounds`
-    * rounds, both engines stop at the same partially-peeled graph
-    * (stated contract: `rounds` bounds the worst case, real graphs
-    * converge in a handful).
-    *
-    * @return surviving (node, core_degree) — degree INSIDE the core */
-  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-            rounds: Int = 8): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    require(rounds >= 1, "rounds must be >= 1")
-    var e = canonicalEdges(edges, aCol, bCol).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
-      val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      val bad = deg.filter(col("deg") < k).select(col("n"))
-      if (bad.limit(1).count() == 0) converged = true
-      else {
-        e = e.join(bad.select(col("n").as("u")), Seq("u"), "left_anti")
-          .join(bad.select(col("n").as("v")), Seq("v"), "left_anti")
-          .select(col("u"), col("v")).localCheckpoint()
-        i += 1
-      }
-    }
-    e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node"))
-      .agg(count(lit(1)).cast("long").as("core_degree"))
-  }
-
-  /** Synchronous label-propagation community detection (Raghavan et
-    * al. 2007, made DETERMINISTIC): every node starts as its own
-    * label; each round, every node adopts the most frequent label
-    * among its neighbors, ties broken by the SMALLEST label — no RNG,
-    * no visit order, so any engine replays it bit-for-bit. Runs a
-    * FIXED round budget with an early stop only at an exact fixpoint:
-    * a fixpoint is invariant under further rounds, so an oracle that
-    * always replays `rounds` rounds still matches (the k-core
-    * early-stop contract). Synchronous LPA can 2-cycle on bipartite
-    * structure — the fixed budget makes even that deterministic
-    * (round parity decides, identically in both engines).
-    *
-    * Scale shape per round: one adjacency join keyed on the neighbor
-    * (labels stay distributed), one (node, label) hash agg, one
-    * argmax window over THAT frame — partitioned by node, so the
-    * window is per-node-degree-sized, never global.
-    * `localCheckpoint` cuts lineage each round (iterative-op
-    * contract). Rounds is small by design: LPA communities form in a
-    * handful of sweeps; at 100 TB you cap rounds, not nodes.
-    *
-    * @return (node, community) — community = the converged (or
-    *         round-budget) label */
-  def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-                       rounds: Int = 4): DataFrame = {
-    require(rounds >= 1, "rounds must be >= 1")
-    val e = canonicalEdges(edges, aCol, bCol).localCheckpoint()
-    val adj = e.select(col("u").as("__n"), col("v").as("__m"))
-      .union(e.select(col("v").as("__n"), col("u").as("__m")))
-    var lab = e.select(explode(array(col("u"), col("v"))).as("node"))
-      .distinct().select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
-      val nb = adj.join(
-        lab.select(col("node").as("__m"), col("label")), Seq("__m"))
-      val cnt = nb.groupBy(col("__n"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-      val w = Window.partitionBy(col("__n"))
-        .orderBy(col("__c").desc, col("label"))
-      val next = cnt.withColumn("__r", row_number().over(w))
-        .filter(col("__r") === 1)
-        .select(col("__n").as("node"), col("label"))
-        .localCheckpoint()
-      val changed = next.join(lab.withColumnRenamed("label", "__old"),
-          Seq("node"))
-        .filter(col("label") =!= col("__old")).limit(1).count()
-      lab = next
-      if (changed == 0) converged = true
-      i += 1
-    }
-    lab.select(col("node"), col("label").as("community"))
-  }
-
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weight: Column, damping: Double = 0.85,
                iters: Int = 2): DataFrame = {
     require(damping > 0 && damping < 1, "damping in (0,1)")
     require(iters >= 1, "iters must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(18,6)")
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-        weight.cast("long").as("__w"))
-      .filter(col("__src").isNotNull && col("__dst").isNotNull &&
-        col("__w") > 0)
-      .groupBy(col("__src"), col("__dst")).agg(sum(col("__w")).as("__w"))
-    val wOut = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__src"))
-    val p = e.withColumn("__p",
-        dec(round(col("__w").cast("double") /
-          sum(col("__w")).over(wOut).cast("double"), 6)))
-      .select(col("__src"), col("__dst"), col("__p"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
-    val nAgg = nodes.agg(count(lit(1)).as("__n"))
-    val srcs = e.select(col("__src").as("node")).distinct()
-    val r0 = nodes.crossJoin(broadcast(nAgg))
+    val g = rankGraph(edges, srcCol, dstCol, weight)
+    val nAgg = g.nodes.agg(count(lit(1)).as("__n"))
+    val r0 = g.nodes.crossJoin(broadcast(nAgg))
       .select(col("node"),
-        dec(round(lit(1.0) / col("__n").cast("double"), 6)).as("__r"))
+        dec6(round(lit(1.0) / col("__n").cast("double"), 6)).as("__r"))
     val rN = (1 to iters).foldLeft(r0) { (r, _) =>
-      val dangling = r.join(srcs, Seq("node"), "left_anti")
-        .agg(coalesce(sum(col("__r")), lit(0).cast("decimal(18,6)"))
-          .as("__dang"))
-      val contrib = p
-        .join(r.select(col("node").as("__src"), col("__r")), Seq("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(dec(round(col("__r") * col("__p"), 6))).as("__c"))
-      nodes.join(contrib, Seq("node"), "left")
+      val (dangling, contrib) = g.flow(r)
+      g.nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(nAgg)).crossJoin(broadcast(dangling))
-        .select(col("node"), dec(round(
+        .select(col("node"), dec6(round(
           (lit(1.0) - lit(damping)) / col("__n").cast("double") +
-            lit(damping) *
-              (coalesce(col("__c"), lit(0).cast("decimal(18,6)"))
-                .cast("double") +
-               col("__dang").cast("double") /
-                 col("__n").cast("double")), 6)).as("__r"))
+            lit(damping) * (inflow +
+              col("__dang").cast("double") / col("__n").cast("double")),
+          6)).as("__r"))
     }
     rN.select(col("node"), col("__r").cast("double").as("pagerank"))
   }
@@ -234,8 +183,7 @@ object Graphs {
     *
     * Scale shape: identical to [[pageRank]] — per-round one
     * edge-frame join + dst-keyed agg; the seed frame joins once as a
-    * node-frame column. Bounded rounds, lineage cut per round by
-    * the unrolled fold.
+    * node-frame column. Bounded rounds, unrolled and unpinned.
     *
     * @return (node, ppr) for every graph node */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
@@ -245,54 +193,92 @@ object Graphs {
                            iters: Int = 2): DataFrame = {
     require(damping > 0 && damping < 1, "damping in (0,1)")
     require(iters >= 1, "iters must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(18,6)")
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-        weight.cast("long").as("__w"))
-      .filter(col("__src").isNotNull && col("__dst").isNotNull &&
-        col("__w") > 0)
-      .groupBy(col("__src"), col("__dst")).agg(sum(col("__w")).as("__w"))
-    val wOut = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__src"))
-    val p = e.withColumn("__p",
-        dec(round(col("__w").cast("double") /
-          sum(col("__w")).over(wOut).cast("double"), 6)))
-      .select(col("__src"), col("__dst"), col("__p"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
-    val srcs = e.select(col("__src").as("node")).distinct()
+    val g = rankGraph(edges, srcCol, dstCol, weight)
     val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"))
+      .join(g.nodes, Seq("node"))
     val sAgg = seedNodes.agg(count(lit(1)).as("__ns"))
-    val sF = nodes
+    val sF = g.nodes
       .join(seedNodes.withColumn("__isSeed", lit(1)), Seq("node"),
         "left")
       .crossJoin(broadcast(sAgg))
       .select(col("node"),
         when(col("__isSeed").isNotNull,
-          dec(round(lit(1.0) / col("__ns").cast("double"), 6)))
-          .otherwise(dec(lit(0))).as("__s"))
+          dec6(round(lit(1.0) / col("__ns").cast("double"), 6)))
+          .otherwise(dec6(lit(0))).as("__s"))
     val r0 = sF.select(col("node"), col("__s").as("__r"))
     val rN = (1 to iters).foldLeft(r0) { (r, _) =>
-      val dangling = r.join(srcs, Seq("node"), "left_anti")
-        .agg(coalesce(sum(col("__r")), lit(0).cast("decimal(18,6)"))
-          .as("__dang"))
-      val contrib = p
-        .join(r.select(col("node").as("__src"), col("__r")), Seq("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(dec(round(col("__r") * col("__p"), 6))).as("__c"))
+      val (dangling, contrib) = g.flow(r)
       sF.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
-        .select(col("node"), dec(round(
+        .select(col("node"), dec6(round(
           (lit(1.0) - lit(damping)) * col("__s").cast("double") +
-            lit(damping) *
-              (coalesce(col("__c"), lit(0).cast("decimal(18,6)"))
-                .cast("double") +
-               col("__dang").cast("double") *
-                 col("__s").cast("double")), 6)).as("__r"))
+            lit(damping) * (inflow +
+              col("__dang").cast("double") * col("__s").cast("double")),
+          6)).as("__r"))
     }
     rN.select(col("node"), col("__r").cast("double").as("ppr"))
   }
 
+  /** The round-6 decimal of every PageRank probability and iterate. */
+  private def dec6(c: Column): Column = c.cast("decimal(18,6)")
+
+  /** The graph [[pageRank]] and [[personalizedPageRank]] walk: `p` =
+    * (__src, __dst, __p) round-6 transition probabilities of the
+    * summed positive integer weights, `nodes` = every endpoint,
+    * `srcs` = the nodes with an out-edge. */
+  private final case class RankGraph(p: DataFrame, nodes: DataFrame,
+                                     srcs: DataFrame) {
+    /** One round's mass flow from `r` (node, __r): the dangling mass
+      * (one row, __dang) and each reached node's inflow (node, __c). */
+    def flow(r: DataFrame): (DataFrame, DataFrame) = (
+      r.join(srcs, Seq("node"), "left_anti")
+        .agg(coalesce(sum(col("__r")), dec6(lit(0))).as("__dang")),
+      p.join(r.select(col("node").as("__src"), col("__r")), Seq("__src"))
+        .groupBy(col("__dst").as("node"))
+        .agg(sum(dec6(round(col("__r") * col("__p"), 6))).as("__c")))
+  }
+
+  private def rankGraph(edges: DataFrame, srcCol: String, dstCol: String,
+                        weight: Column): RankGraph = {
+    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
+        weight.cast("long").as("__w"))
+      .filter(col("__src").isNotNull && col("__dst").isNotNull &&
+        col("__w") > 0)
+      .groupBy(col("__src"), col("__dst")).agg(sum(col("__w")).as("__w"))
+    val wOut = Window.partitionBy(col("__src"))
+    val p = e.withColumn("__p",
+        dec6(round(col("__w").cast("double") /
+          sum(col("__w")).over(wOut).cast("double"), 6)))
+      .select(col("__src"), col("__dst"), col("__p"))
+    val nodes = e.select(col("__src").as("node"))
+      .union(e.select(col("__dst").as("node"))).distinct()
+    val srcs = e.select(col("__src").as("node")).distinct()
+    RankGraph(p, nodes, srcs)
+  }
+
+  /** A node's inflow as a double; 0 for a node no edge reaches. */
+  private def inflow: Column =
+    coalesce(col("__c"), dec6(lit(0))).cast("double")
+
+  /** Per-node triangle counts (node-iterator with DEGREE ORIENTATION
+    * — Schank & Wagner 2005; the MapReduce formulation is Suri &
+    * Vassilvitskii WWW'11): each undirected edge is directed from its
+    * lower-(degree, id) endpoint to the higher, wedges are one
+    * self-join of the oriented list on the middle vertex, and a wedge
+    * a→b→c is a triangle iff the closing edge a→c is oriented too.
+    * The orientation is a total order, so every triangle is
+    * enumerated EXACTLY once (its least corner sees both out-edges) —
+    * no /3 correction, no duplicate pairs.
+    *
+    * Why orientation matters at scale: wedge count is Σ_v outdeg(v)²,
+    * and directing edges toward higher degree caps every out-degree
+    * at O(√m) on ANY graph — a star's hub gets out-degree ~0 and its
+    * spokes 1, so the skewed-degree corpus graph (stopword-like hub
+    * terms) generates wedges proportional to the answer, not to
+    * hub-degree². Plan: one distinct, one node-sized degree agg
+    * joined back (AQE broadcasts when vocab-sized), two equi-join
+    * shuffles (wedge build + closure probe), one corner explode +
+    * hash agg. Nothing all-pairs, nothing driver-side. */
   def triangleCounts(edges: DataFrame, aCol: String,
                      bCol: String): DataFrame = {
     val e = canonicalEdges(edges, aCol, bCol)

@@ -2322,12 +2322,11 @@ object Quality {
         (col("__s").cast("decimal(18,6)") * 1000000L)
           .cast(dec).cast("long").as("__mu"),
         when(col("__p"), 1L).otherwise(0L).as("__y"))
-    val glob = src.agg(count(lit(1)).as("__n"),
+    val glob = Iterate.pin(src.agg(count(lit(1)).as("__n"),
         coalesce(sum(col("__y")), lit(0L)).as("__pos"),
         coalesce(sum((col("__mu").cast(dec) - col("__y") * 1000000L) *
           (col("__mu").cast(dec) - col("__y") * 1000000L)),
-          lit(0).cast(dec)).as("__sq"))
-      .localCheckpoint()
+          lit(0).cast(dec)).as("__sq")))
     val perBin = src.groupBy(col("bin")).agg(
       count(lit(1)).as("__nk"), sum(col("__mu")).as("__sk"),
       sum(col("__y")).as("__pk"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Iterate
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Baseline: brute-force cosine top-k (exact; one pass, no shuffle for a
@@ -341,8 +343,7 @@ object Similarity {
       rest.select(col(idCol).as("__id"),
           round(cosine(vec, qv), 6).as("__c"))
         .orderBy(col("__c").desc, col("__id")).limit(topK)
-    val full = top(col(vecCol), col("__qv")).select(col("__id"))
-      .localCheckpoint()
+    val full = Iterate.pin(top(col(vecCol), col("__qv")).select(col("__id")))
     dims.map { d =>
       top(slice(col(vecCol), 1, d), slice(col("__qv"), 1, d))
         .join(full, Seq("__id"), "left_semi")
@@ -369,9 +370,9 @@ object Similarity {
     * 1-row TakeOrdered argmax on it, then one pass updating
     * `dmin ← least(dmin, dist-to-newest-center)` — a single-row
     * broadcast attach, O(n) cosines. Total O(n·k) cosines and k
-    * single-center broadcasts instead of k growing crossJoins; an
-    * eager localCheckpoint per round cuts the growing lineage (the
-    * kCore/MMR discipline). Nothing collects to the driver.
+    * single-center broadcasts instead of k growing crossJoins; each
+    * round pins the pick and the updated `dmin`. Nothing collects to
+    * the driver.
     *
     * Determinism unchanged: min over a center set equals the fold of
     * `least` over its members on the SAME round-6 distances, so the
@@ -383,25 +384,23 @@ object Similarity {
                     k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val pts = emb.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val first = pts.orderBy(col("__id")).limit(1)
+    val first = Iterate.pin(pts.orderBy(col("__id")).limit(1)
       .select(lit(1).as("rank"), col("__id"), col("__v"),
-        lit(null).cast("double").as("maximin"))
-      .localCheckpoint()
+        lit(null).cast("double").as("maximin")))
     val all =
       if (k == 1) first
       else {
-        val d0 = kCenterAdvance(
-          pts.withColumn("__dm", lit(null).cast("double")), first)
-          .localCheckpoint()
+        val d0 = Iterate.pin(kCenterAdvance(
+          pts.withColumn("__dm", lit(null).cast("double")), first))
         (2 to k).foldLeft((first, d0)) { case ((sel, dmin), i) =>
-          val next = dmin.orderBy(col("__dm").desc, col("__id")).limit(1)
-            .select(lit(i).as("rank"), col("__id"), col("__v"),
-              col("__dm").as("maximin"))
-            .localCheckpoint()
+          val next = Iterate.pin(
+            dmin.orderBy(col("__dm").desc, col("__id")).limit(1)
+              .select(lit(i).as("rank"), col("__id"), col("__v"),
+                col("__dm").as("maximin")))
           // the last round's state has no consumer — skip its update
           (sel.unionByName(next),
             if (i == k) dmin
-            else kCenterAdvance(dmin, next).localCheckpoint())
+            else Iterate.pin(kCenterAdvance(dmin, next)))
         }._1
       }
     all.select(col("rank"), col("__id").as(idCol), col("maximin"))
@@ -412,7 +411,7 @@ object Similarity {
     * pass over the carried state joined to a ONE-row broadcast
     * (`newest` is always a single selected center). `least` ignores
     * nulls, so the seed round (all __dm null) initializes cleanly.
-    * Split out (and left un-checkpointed — callers checkpoint) so
+    * Split out (and left unpinned — callers pin) so
     * the one-pass-per-round contract is plan-testable. */
   private[graft] def kCenterAdvance(dmin: DataFrame,
                                     newest: DataFrame): DataFrame =
@@ -435,9 +434,8 @@ object Similarity {
     * Scale shape: the corpus is touched ONCE (narrow cosine map into
     * TakeOrdered top-`candidates`); everything after runs on
     * candidate-sized frames — the C² pair-sim matrix and k−1 greedy
-    * rounds (anti-join + max-sim agg + 1-row top) stay distributed
-    * with an eager localCheckpoint per round cutting the growing
-    * lineage (the kCore/BPE bounded-iteration discipline). Nothing
+    * rounds (anti-join + max-sim agg + 1-row top) stay distributed,
+    * the picked set pinned each round by [[Iterate.loop]]. Nothing
     * collects to the driver.
     *
     * Cross-engine determinism: rel and pair sims round once to 6;
@@ -452,26 +450,25 @@ object Similarity {
     require(k >= 1 && candidates >= k, "need candidates >= k >= 1")
     require(lambda > 0 && lambda < 1, "lambda in (0,1)")
     val q = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__qv"))
-    val rel = emb.filter(col(idCol) =!= queryId)
+    val rel = Iterate.pin(emb.filter(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .select(col(idCol).as("__id"),
         round(cosine(col(vecCol), col("__qv")), 6).as("__rel"))
-      .orderBy(col("__rel").desc, col("__id")).limit(candidates)
-      .localCheckpoint()
+      .orderBy(col("__rel").desc, col("__id")).limit(candidates))
     val cv = emb.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .join(broadcast(rel.select(col("__id"))), Seq("__id"))
-    val pairs = cv.select(col("__id").as("__a"), col("__v").as("__va"))
-      .crossJoin(broadcast(
-        cv.select(col("__id").as("__b"), col("__v").as("__vb"))))
-      .filter(col("__a") =!= col("__b"))
-      .select(col("__a"), col("__b"),
-        round(cosine(col("__va"), col("__vb")), 6).as("__sim"))
-      .localCheckpoint()
+    val pairs = Iterate.pin(
+      cv.select(col("__id").as("__a"), col("__v").as("__va"))
+        .crossJoin(broadcast(
+          cv.select(col("__id").as("__b"), col("__v").as("__vb"))))
+        .filter(col("__a") =!= col("__b"))
+        .select(col("__a"), col("__b"),
+          round(cosine(col("__va"), col("__vb")), 6).as("__sim")))
     val lam = lit(lambda)
     val first = rel.orderBy(col("__rel").desc, col("__id")).limit(1)
       .select(lit(1).as("rank"), col("__id"), col("__rel"),
         round(lam * col("__rel"), 6).as("__score"))
-    val all = (2 to k).foldLeft(first) { (sel, i) =>
+    val (all, _) = Iterate.loop(first, k - 1) { (sel, r) =>
       val remaining = rel.join(sel.select(col("__id")), Seq("__id"),
         "left_anti")
       val red = remaining
@@ -485,9 +482,9 @@ object Similarity {
           round(lam * col("__rel") -
             (lit(1.0) - lam) * col("__red"), 6).as("__score"))
         .orderBy(col("__score").desc, col("__id")).limit(1)
-        .select(lit(i).as("rank"), col("__id"), col("__rel"),
+        .select(lit(r + 1).as("rank"), col("__id"), col("__rel"),
           col("__score"))
-      sel.unionByName(next).localCheckpoint()
+      Iterate.Next(sel.unionByName(next))
     }
     all.select(col("rank"), col("__id").as(idCol),
       col("__rel").as("relevance"), col("__score").as("mmr_score"))
@@ -1703,11 +1700,11 @@ object Similarity {
     * covariance from Σxᵢxⱼ (one narrow pass emitting each row's d²
     * products via an indexed HOF — NO self-join — into a (i,j)-keyed
     * agg with map-side combine; the only shuffle is d²-keyed).
-    * Everything after runs on the d²-cell frame: `iters` rounds of
-    * w = C·v (a d²-row join + d-keyed agg), normalize, localCheckpoint
-    * — never touching the corpus again. Corpus cost is n·d² narrow
-    * rows; for very large d use a dim-sampled corpus first (stated
-    * contract, the IVF-nlist discipline).
+    * Everything after runs on the collected d²-cell covariance:
+    * `iters` rounds of w = C·v and normalize, driver-side in
+    * [[pcaIterateLocal]] — never touching the corpus again. Corpus
+    * cost is n·d² narrow rows; for very large d use a dim-sampled
+    * corpus first (stated contract, the IVF-nlist discipline).
     *
     * Determinism (engine-free): corpus products round once to 6 and
     * sum through decimal; the covariance rounds once to 6; the

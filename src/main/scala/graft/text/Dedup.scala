@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Iterate
+
 /** Corpus deduplication at scale: exact, MinHash+LSH, SimHash, and exact
   * n-gram Jaccard verification.
   *
@@ -550,11 +552,11 @@ object Dedup {
     * label depth roughly halves per round, so convergence is
     * O(log diameter) rounds (plain one-hop propagation is O(diameter):
     * a 10k-long chain would need 10k rounds). Each round is two
-    * shuffle joins + a hash agg on id; `localCheckpoint` cuts the
-    * growing lineage so round k does not replan rounds 1..k-1 — the
-    * standard Spark shape for fixpoint algorithms without dragging in
-    * GraphX. The driver only ever sees the convergence COUNT (one
-    * long), never the data.
+    * shuffle joins + a hash agg on id; [[graft.ops.Iterate.loop]]
+    * pins each round's labels so round k does not replan rounds
+    * 1..k-1 — the standard Spark shape for fixpoint algorithms
+    * without dragging in GraphX. The driver only ever sees the
+    * convergence COUNT (one long), never the data.
     *
     * Throws IllegalStateException if `maxIters` rounds don't converge
     * (2^maxIters ≳ component diameter is unreachable in practice) —
@@ -563,17 +565,16 @@ object Dedup {
   def duplicateClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // materialize the (possibly expensive) pair generation ONCE — edges,
     // the label seed, and every propagation round all read it
-    val p = pairs.select(col("id1"), col("id2")).localCheckpoint()
+    val p = Iterate.pin(pairs.select(col("id1"), col("id2")))
     val edges = p.union(p.select(col("id2").as("id1"), col("id1").as("id2")))
-    var labels = p.select(col("id1").as("id"))
+    val labels0 = Iterate.pin(p.select(col("id1").as("id"))
       .union(p.select(col("id2").as("id")))
       .distinct()
-      .withColumn("cluster_id", col("id"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    val idType = labels.schema("cluster_id").dataType
-    while (!converged && i < maxIters) {
+      .withColumn("cluster_id", col("id")))
+    val idType = labels0.schema("cluster_id").dataType
+    // from round 2 on the state also carries __prev, which every
+    // read below ignores (each selects its columns by name)
+    val (labels, converged) = Iterate.loop(labels0, maxIters) { (labels, _) =>
       val viaEdges = edges
         .join(labels.withColumnRenamed("id", "id2"), Seq("id2"))
         .select(col("id1").as("id"), col("cluster_id"),
@@ -581,19 +582,18 @@ object Dedup {
       // the round CARRIES each id's previous label beside the new one
       // (max ignores the edge rows' null __prev; every id has exactly
       // one labels row, so __prev is its old label) — the convergence
-      // test below is then a filter over the already-checkpointed
-      // round result instead of a join+shuffle back against `labels`
+      // test below is then a filter over the already-pinned round
+      // result instead of a join+shuffle back against `labels`
       // (r21 opt, guide §2.4: one exchange pair less per round)
-      // checkpoint: hop is read twice below (as itself and as the
-      // parent map) — without it the join+agg subplan would run twice
-      val hop = labels
+      // pinned: hop is read twice below (as itself and as the parent
+      // map) — without it the join+agg subplan would run twice
+      val hop = Iterate.pin(labels
         .select(col("id"), col("cluster_id"),
           col("cluster_id").as("__prev"))
         .unionByName(viaEdges)
         .groupBy(col("id"))
         .agg(min(col("cluster_id")).as("cluster_id"),
-          max(col("__prev")).as("__prev"))
-        .localCheckpoint()
+          max(col("__prev")).as("__prev")))
       // pointer jump: adopt the label OF my label (always present —
       // labels are ids of the same table; left join defends anyway)
       val parents = hop.select(col("id").as("cluster_id"),
@@ -603,29 +603,18 @@ object Dedup {
           least(col("cluster_id"),
             coalesce(col("__parent"), col("cluster_id"))).as("cluster_id"),
           col("__prev"))
-        .localCheckpoint()
-      // scan of the just-checkpointed blocks — no join, no shuffle.
+      // scan of the just-pinned blocks — no join, no shuffle.
       // Invariant: every edge endpoint has a `labels` row, because the
       // seed above unions BOTH pair sides (id1 and id2). An id reached
       // only through viaEdges would carry a null __prev, read as
       // "changed" every round, and end in the non-convergence throw.
-      val changed = next.filter(!(col("cluster_id") <=> col("__prev")))
-        .count()
-      // superseded checkpoint blocks are reclaimed lazily by the
-      // ContextCleaner once the RDDs are unreachable (Dataset.unpersist
-      // only walks the CacheManager and never sees them — ADVICE r20);
-      // `next` is itself checkpointed, so nothing re-reads them
-      labels = next.drop("__prev")
-      converged = changed == 0
-      i += 1
+      Iterate.Next(next, next =>
+        next.filter(!(col("cluster_id") <=> col("__prev"))).count() == 0)
     }
-    // the edge seed is only read by the rounds above; the returned
-    // labels table is checkpointed and self-contained
-    p.unpersist(blocking = false)
     if (!converged) throw new IllegalStateException(
       s"duplicateClusters did not converge in $maxIters rounds — " +
         "component diameter exceeds 2^maxIters? raise maxIters")
-    labels
+    labels.drop("__prev")
   }
 
   /** EXACT all-pairs n-gram Jaccard similarity join via prefix

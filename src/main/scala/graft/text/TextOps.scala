@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Iterate
+
 /** Text-analysis primitives for large-scale corpus pipelines: tokenization,
   * quality scoring, language-ID heuristics, fingerprinting. All pure Column
   * compositions — narrow, shuffle-free, codegen-friendly where Spark
@@ -1202,17 +1204,17 @@ object TextOps {
     * decision is corpus-global by definition — the paper's algorithm
     * is inherently iterative, `numMerges` bounded jobs, not a
     * per-round unbounded loop). The rewrite is a narrow codegen'd
-    * fold (`aggregate` HOF) — no shuffle. Sequences are cached
-    * between rounds ([[org.apache.spark.sql.Dataset.localCheckpoint]]
-    * cuts the k-deep lineage so round k doesn't replay rounds 1..k−1).
+    * fold (`aggregate` HOF) — no shuffle. Sequences are pinned
+    * between rounds ([[graft.ops.Iterate.pin]] cuts the k-deep lineage
+    * so round k doesn't replay rounds 1..k−1); the state is the
+    * sequences AND the learned-merge buffer, so it keeps its own fold.
     */
-  def learnBpeMerges(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, numMerges: Int)
-      : org.apache.spark.sql.DataFrame = {
+  def learnBpeMerges(docs: DataFrame, idCol: String, textCol: String,
+                     numMerges: Int): DataFrame = {
     require(numMerges >= 1 && numMerges <= 64, "numMerges in [1,64]")
     val spark = docs.sparkSession
     import org.apache.spark.sql.Row
-    // the checkpointed sequences are the ITERATION STATE, re-scanned
+    // the pinned sequences are the ITERATION STATE, re-scanned
     // 2× per round (pair agg + fuse rewrite) for up to 64 rounds —
     // partition them to cluster width up front, not to the input's
     // file/row-group count (a single-row-group table would otherwise
@@ -1224,17 +1226,9 @@ object TextOps {
     val width = scala.util.Try(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    var seqs = docs.select(col(idCol).as("id"),
+    var seqs = Iterate.pin(docs.select(col(idCol).as("id"),
       tokens(lower(col(textCol))).as("w"))
-      .repartition(width).localCheckpoint()
-    // each round's checkpoint supersedes the last: unpersist the prior
-    // one eagerly, and the final one before returning — checkpointed
-    // blocks otherwise pin executor memory for the rest of the session
-    // (measured: a later unrelated bench query slowed 4x)
-    def swap(next: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      seqs.unpersist(blocking = true); next
-    }
+      .repartition(width))
     val learned = scala.collection.mutable.ArrayBuffer.empty[Row]
     for (rank <- 1 to numMerges) {
       // docs under 2 symbols have no adjacent pair — and MUST be
@@ -1274,13 +1268,11 @@ object TextOps {
         // is the pair joined with a space (never a whitespace token),
         // so a just-fused atom only re-fuses when a LATER round
         // learns that pair — exactly the BPE greedy application order.
-        val seqs2 = seqs.select(col("id"),
+        seqs = Iterate.pin(seqs.select(col("id"),
           graft.functions.NativeExpressions.bpe_fuse(col("w"), l, r)
-            .as("w")).localCheckpoint()
-        seqs = swap(seqs2)
+            .as("w")))
       }
     }
-    seqs.unpersist(blocking = true)
     spark.createDataFrame(
       spark.sparkContext.parallelize(learned.toSeq, 1),
       org.apache.spark.sql.types.StructType.fromDDL(
@@ -1420,7 +1412,7 @@ object TextOps {
     * Scale shape — the Pregel-on-DataFrames pattern, new to this
     * inventory: the symmetric edge list with its per-source out-weight
     * (a window over ONE src-keyed exchange) is built once and
-    * localCheckpointed (bounded by DISTINCT co-occurring pairs ≤
+    * pinned (bounded by DISTINCT co-occurring pairs ≤
     * token-instances × window — smaller than the corpus, bigger than
     * the vocab; the blocks are MEMORY_AND_DISK, so a large graph
     * spills instead of OOMing); each round is one join of edges to the
@@ -1444,16 +1436,13 @@ object TextOps {
       .groupBy(col("t1"), col("t2")).agg(count(lit(1)).as("n"))
     val wSrc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src"))
-    val edges = pairs
+    // pinned once, read `iters`+2 times; vocab-sized (edge list), not
+    // corpus-sized, so the retained blocks are small
+    val edges = Iterate.pin(pairs
       .select(col("t1").as("src"), col("t2").as("dst"), col("n"))
       .unionByName(
         pairs.select(col("t2").as("src"), col("t1").as("dst"), col("n")))
-      // materialized once, read `iters`+2 times; vocab-sized (edge
-      // list), not corpus-sized, so the retained blocks are small —
-      // unlike BPE's superseded per-round checkpoints there is exactly
-      // one here and the returned frame's lineage still needs it
-      .withColumn("ow", sum(col("n")).over(wSrc))
-      .localCheckpoint()
+      .withColumn("ow", sum(col("n")).over(wSrc)))
     val nNodes = edges.select(col("src")).distinct().count()
     val base = (1.0 - damping) / nNodes // IEEE double, oracle mirrors
     var ranks = edges.select(col("src").as("term")).distinct()

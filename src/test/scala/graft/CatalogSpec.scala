@@ -86,4 +86,18 @@ class CatalogSpec extends AnyFunSuite {
     assert(unnamed.isEmpty,
       s"mains named in neither README.md nor SKILL.md: $unnamed")
   }
+
+  test("localCheckpoint appears in src/main/scala only in " +
+    "graft/ops/Iterate.scala (one module owns the pinning policy)") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = root.resolve("graft/ops/Iterate.scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.contains(owner), s"$owner moved: update this guard")
+    val offenders = files.filter(f => f != owner &&
+      java.nio.file.Files.readString(f).contains("localCheckpoint"))
+    assert(offenders.isEmpty,
+      s"pin through graft.ops.Iterate.pin instead: ${offenders.mkString(", ")}")
+  }
 }
