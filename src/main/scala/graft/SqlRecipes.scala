@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Fixtures.WarcPage
+
 /** SQL-surface parity for the flagship operator library (round-10
   * verdict #6): the 16 native functions already reach every Thrift
   * session via GraftExtensions, but the operator LIBRARY (sessionize,
@@ -1662,8 +1664,8 @@ v$r AS (
 
     // -- HTML -> main text (r19): HtmlOps.stripHtml + the block
     // text-density filter as one SQL table function, over the
-    // t_html_extract variant-0 page built per doc (SparkEntry
-    // .WarcPage — the same template everywhere). The regex chain is
+    // t_html_extract variant-0 page built per doc (Fixtures.WarcPage
+    // — the same template everywhere). The regex chain is
     // GENERATED from HtmlOps' own TagChain/Entities constants so
     // cookbook and engine cannot drift.
     "graft_html_main_text" ->
@@ -1674,9 +1676,9 @@ v$r AS (
          |RETURN
          |WITH h AS (
          |  SELECT doc_id,
-         |    '${SparkEntry.WarcPage._1}' || CAST(doc_id AS STRING) ||
-         |    '${SparkEntry.WarcPage._2}' || text ||
-         |    '${SparkEntry.WarcPage._3}' AS html
+         |    '${WarcPage._1}' || CAST(doc_id AS STRING) ||
+         |    '${WarcPage._2}' || text ||
+         |    '${WarcPage._3}' AS html
          |  FROM ${prefix}documents
          |  WHERE doc_id IS NOT NULL AND text IS NOT NULL),
          |s AS (SELECT doc_id, ${sparkStripSql("html")} AS stripped

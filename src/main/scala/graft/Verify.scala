@@ -41,14 +41,7 @@ object Verify {
         require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
         SparkEntry.queries.filter(kv => names.contains(kv._1))
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val failed = dump(spark, sfDir, outDir, queries)
     failed.toSeq.sortBy(_._1).foreach { case (name, err) =>

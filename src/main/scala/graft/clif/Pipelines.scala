@@ -14,9 +14,11 @@ import graft.ops.{Joins, Reshape, Scalars, WindowOps}
   * the CSV sink — SURVEY.md §1.2).
   *
   * Scale notes: vocab joins broadcast; every window/join keys on
-  * (patient, encounter) so one upstream repartition serves the chain;
-  * output tables should be written partitioned by event-time date and
-  * bucketed by encounter_id (SURVEY.md §4).
+  * (patient, encounter) so one upstream repartition serves the chain.
+  * [[ClifEtl.run]] writes each output as parquet partitioned by
+  * event-time date where the table has one, neither bucketed nor
+  * sorted; [[ClifEtl.publishBucketed]] is the opt-in encounter-bucketed
+  * copy (SURVEY.md §4).
   */
 object Pipelines {
 

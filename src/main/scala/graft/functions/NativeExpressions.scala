@@ -793,8 +793,8 @@ object NativeExpressions {
     * per-bit ±1 votes, sign of the vote sets the bit. Bits 0..30 come
     * from hash1, bits 31..61 from hash2; bits 62-63 are always 0.
     * Fully reproducible in ANSI-ish SQL (no engine hash builtins), so the
-    * DuckDB oracle recomputes it exactly — see SparkEntry.oracleSql
-    * `t_simhash`. */
+    * DuckDB oracle recomputes it exactly — see `t_simhash` in
+    * graft.queries.TextQueries. */
   case class PortableSimHash(child: Expression)
       extends UnaryExpression with CodegenFallback {
 

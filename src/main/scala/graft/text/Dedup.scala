@@ -899,8 +899,9 @@ object Dedup {
     * polynomial token hashes, sign of the vote sets the bit. Near-dups
     * have small Hamming distance. Native one-pass loop; the polynomial
     * hash is engine-independent (no murmur3/xxhash64), so a SQL oracle
-    * recomputes the identical value — see SparkEntry.oracleSql
-    * `t_simhash`. [[portableSimhashCols]] is the pure-Column twin. */
+    * recomputes the identical value — see `t_simhash` in
+    * graft.queries.TextQueries. [[portableSimhashCols]] is the
+    * pure-Column twin. */
   def simhash(text: Column): Column =
     graft.functions.NativeExpressions.portable_simhash(TextOps.tokens(text))
 

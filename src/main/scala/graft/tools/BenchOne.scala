@@ -1,22 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
-/** Time one SparkEntry query N times in Bench's exact session context:
+/** Time one board query N times in Bench's exact session context:
   * runMain graft.tools.BenchOne <query> [n] */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq // comma-separated: one warm JVM
     val n = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     names.foreach { name =>
       (1 to n).foreach { i =>
         val t0 = System.nanoTime()

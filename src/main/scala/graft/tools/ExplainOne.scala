@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Print the formatted physical plan of one or more SparkEntry queries
   * (comma-separated): runMain graft.tools.ExplainOne <q1[,q2,...]> [sfDir]
@@ -12,11 +11,7 @@ object ExplainOne {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     names.foreach { name =>
       println(s"==== $name ====")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

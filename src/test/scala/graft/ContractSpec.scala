@@ -2,23 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver contract itself, pinned: every `queries` entry must carry
-  * a DuckDB oracle — a missing oracle silently downgrades that query to
-  * a weaker rows-only check in the correctness gate. If an op is ever
-  * genuinely not SQL-expressible, add it to the explicit allowlist here
-  * so the omission is a reviewed decision, not drift. */
+/** The oracles' side of the driver contract: every oracle reads only
+  * tables the driver provides. That every query has an oracle at all is
+  * structural — [[graft.queries.Query]] carries both and rejects a blank
+  * oracle. */
 class ContractSpec extends AnyFunSuite {
-
-  private val rowsOnlyAllowlist: Set[String] = Set.empty
-
-  test("every query has an oracle (or is explicitly allowlisted)") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    val missing = q -- o -- rowsOnlyAllowlist
-    assert(missing.isEmpty, s"queries without oracle SQL: $missing")
-    val orphaned = o -- q
-    assert(orphaned.isEmpty, s"oracles without a query: $orphaned")
-  }
 
   test("oracle SQL references only driver-provided tables") {
     val known = Tables.names.toSet

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.{Fixtures, JoinQueries}
+
 /** The SQL cookbook recipes (SqlRecipes) must be ROW-FOR-ROW twins of
   * the DSL operators they re-express — a JDBC analyst following the
   * README must get the engine's answers, not approximations. */
@@ -161,7 +163,7 @@ class SqlRecipesSpec extends SparkSpec {
         "SELECT * FROM graft_linkage(0.0D, 6.0D)")
       .as[(Long, Long, Boolean, Boolean, Boolean, Boolean, Double,
         String)].collect().toSet
-    val viaDsl = SparkEntry.linkageScored(spark, dir)
+    val viaDsl = JoinQueries.linkageScored(spark, dir)
       .select(col("a_c_custkey"), col("b_c_custkey"), col("name_agree"),
         col("nation_agree"), col("segment_agree"), col("balance_agree"),
         col("score"), col("decision"))
@@ -619,9 +621,9 @@ class SqlRecipesSpec extends SparkSpec {
     ready()
     val viaSql = spark.sql("SELECT * FROM graft_html_main_text(5)")
       .as[(Long, String, String)].collect().toSet
-    val html = concat(lit(SparkEntry.WarcPage._1),
-      col("doc_id").cast("string"), lit(SparkEntry.WarcPage._2),
-      col("text"), lit(SparkEntry.WarcPage._3))
+    val html = concat(lit(Fixtures.WarcPage._1),
+      col("doc_id").cast("string"), lit(Fixtures.WarcPage._2),
+      col("text"), lit(Fixtures.WarcPage._3))
     val viaDsl = Tables.load(spark, dir, "documents")
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .select(col("doc_id"),

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{SparkEntry, SparkSpec, Tables}
+import graft.queries.StorageQueries
 
 /** End-to-end proof of the two-tier dedup contract documented on
   * [[EventStreams.dedupStream]]: the stream tier's state is bounded by
@@ -22,7 +23,7 @@ class TwoTierDedupSpec extends SparkSpec {
     // stream tier alone: the 200 staged re-arrivals carry event times 1h
     // past the corpus max, and their keys' state was evicted when the
     // watermark advanced — they MUST leak through
-    val streamTier = SparkEntry.twoTierStreamTier(spark, dir)
+    val streamTier = StorageQueries.twoTierStreamTier(spark, dir)
     val residue = streamTier.count() - nEvents
     assert(residue > 0,
       s"stream tier caught everything (residue=$residue) — two-tier " +
