@@ -20,6 +20,61 @@ object StorageQueries {
   private val stagedEventsDir =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
+  /** The events table re-staged for the file-stream source (nanos ts ->
+    * micros: the source has no post-read transform hook), staged ONCE
+    * per (JVM, sf dir) so repeated runs measure the streaming query,
+    * not the harness copy. */
+  private def eventsInput(s: SparkSession, dir: String): String =
+    stagedEventsDir.getOrElseUpdate(dir, {
+      val in = tempDir("graft_sw") + "/in"
+      t(s, dir, "events").write.mode("overwrite").parquet(in)
+      in
+    })
+
+  /** Per-JVM cache of the day-chunked events replay input. */
+  private val stagedDayChunksDir =
+    scala.collection.concurrent.TrieMap.empty[String, String]
+
+  /** The events table as day-range chunks of the month — one staged
+    * file (one micro-batch under maxFilesPerTrigger=1) per range, in
+    * the order given. */
+  private def dayChunks(e: DataFrame, days: Seq[(Int, Int)]): Seq[DataFrame] =
+    days.map { case (lo, hi) =>
+      e.filter(dayofmonth(col("ts")) >= lo && dayofmonth(col("ts")) < hi)
+    }
+
+  /** Chunked replay of the seven ordered per-key folds: the events
+    * table as FOUR day-range chunks IN event-time order (the folds'
+    * ordering contract), staged once per (JVM, sf dir) — every replay
+    * only reads it — and drained through one stateful operator `op`
+    * with a fresh checkpoint per run. */
+  private def dayReplay(s: SparkSession, dir: String, name: String)(
+      op: DataFrame => DataFrame): DataFrame = {
+    val in = stagedDayChunksDir.getOrElseUpdate(dir, {
+      val in = tempDir("graft_days") + "/in"
+      graft.streaming.EventStreams.stageDrainBatches(in,
+        dayChunks(t(s, dir, "events"),
+          Seq((1, 8), (8, 15), (15, 22), (22, 32))))
+      in
+    })
+    val ckpt = ckptDir(s"graft_${name}_ck")
+    val stream = graft.streaming.EventStreams.readStream(s, in,
+      options = Map("maxFilesPerTrigger" -> "1"))
+    runDrain(op(stream), queryName = s"${name}_${System.nanoTime()}",
+      checkpoint = s"$ckpt/ckpt")
+  }
+
+  /** Max event time of `e` in epoch ms. `ts` may surface as
+    * java.sql.Timestamp (LTZ) or LocalDateTime (NTZ) depending on the
+    * source parquet's isAdjustedToUTC flag — the engine supports both,
+    * so the staging must too. */
+  private def maxEventMs(e: DataFrame): Long =
+    e.agg(max(col("ts"))).head().get(0) match {
+      case ts: java.sql.Timestamp      => ts.getTime
+      case dt: java.time.LocalDateTime =>
+        java.sql.Timestamp.valueOf(dt).getTime
+    }
+
   /** Per-JVM cache of the DUPLICATED events dir (streaming-dedup input:
     * every row staged twice, so the dedup has real work to undo). */
   private val stagedDupEventsDir =
@@ -88,15 +143,10 @@ object StorageQueries {
     * drain batches (max ts + 30/31 days), so maxFilesPerTrigger=1
     * replays chunk-by-chunk and the two-sentinel watermark advance
     * flushes the last real windows. */
-  private def stageSentinelEvents(s: SparkSession, dir: String): String =
+  private def sentinelEventsInput(s: SparkSession, dir: String): String =
     stagedDistinctEventsDir.getOrElseUpdate(dir, {
-      val tmp = tempDir("graft_sdc")
       val e = t(s, dir, "events")
-      val maxMs = e.agg(max(col("ts"))).head().get(0) match {
-        case ts: java.sql.Timestamp      => ts.getTime
-        case dt: java.time.LocalDateTime =>
-          java.sql.Timestamp.valueOf(dt).getTime
-      }
+      val maxMs = maxEventMs(e)
       val tsType = e.schema("ts").dataType
       def sentinel(offsetDays: Long) = e.limit(1).select(
         lit(-1L).as("event_id"),
@@ -104,10 +154,9 @@ object StorageQueries {
           .cast(tsType).as("ts"),
         lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
         lit(0.0).as("value"), lit("{}").as("props"))
-      val inDir = s"$tmp/in"
-      e.coalesce(1).write.mode("overwrite").parquet(inDir)
+      val inDir = tempDir("graft_sdc") + "/in"
       graft.streaming.EventStreams.stageDrainBatches(inDir,
-        Seq(sentinel(30), sentinel(31)))
+        Seq(e, sentinel(30), sentinel(31)))
       inDir
     })
 
@@ -124,15 +173,10 @@ object StorageQueries {
     * watermark (takes effect next batch), the second triggers the
     * eviction pass that drains the tail's unmatched state — the
     * one-batch watermark lag stageDrainBatches documents. */
-  private def stageOuterEvents(s: SparkSession, dir: String): String =
+  private def outerEventsInput(s: SparkSession, dir: String): String =
     stagedOuterEventsDir.getOrElseUpdate(dir, {
-      val tmp = tempDir("graft_sjo")
       val e = t(s, dir, "events")
-      val maxMs = e.agg(max(col("ts"))).head().get(0) match {
-        case ts: java.sql.Timestamp      => ts.getTime
-        case dt: java.time.LocalDateTime =>
-          java.sql.Timestamp.valueOf(dt).getTime
-      }
+      val maxMs = maxEventMs(e)
       val tsType = e.schema("ts").dataType
       def sentinels(ids: (Long, Long), offsetDays: Long) = {
         def one(id: Long, et: String) = e.limit(1).select(
@@ -143,10 +187,9 @@ object StorageQueries {
           lit(0.0).as("value"), lit("{}").as("props"))
         one(ids._1, "click").unionByName(one(ids._2, "purchase"))
       }
-      val inDir = s"$tmp/in"
-      e.coalesce(1).write.mode("overwrite").parquet(inDir)
+      val inDir = tempDir("graft_sjo") + "/in"
       graft.streaming.EventStreams.stageDrainBatches(inDir,
-        Seq(sentinels((-1L, -2L), 30), sentinels((-3L, -4L), 31)))
+        Seq(e, sentinels((-1L, -2L), 30), sentinels((-3L, -4L), 31)))
       inDir
     })
 
@@ -204,51 +247,18 @@ object StorageQueries {
   private[graft] def twoTierStreamTier(s: SparkSession,
                                        dir: String): DataFrame = {
     val in = stagedTwoTierDir.getOrElseUpdate(dir, {
-      val tmp = tempDir("graft_tt")
       val e = t(s, dir, "events")
-      e.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
-      // ts may surface as java.sql.Timestamp (LTZ) or LocalDateTime
-      // (NTZ) depending on the source parquet's isAdjustedToUTC flag —
-      // the engine supports both, so the staging must too
-      val maxMs = e.agg(max(col("ts"))).head().get(0) match {
-        case ts: java.sql.Timestamp     => ts.getTime
-        case dt: java.time.LocalDateTime =>
-          java.sql.Timestamp.valueOf(dt).getTime
-      }
+      val maxMs = maxEventMs(e)
       // cast shifted literals back to the SOURCE ts type so all three
       // staged files share one schema (identity values under UTC)
       val tsType = e.schema("ts").dataType
-      e.orderBy(col("ts").desc, col("event_id")).limit(1)
-        .withColumn("ts",
-          lit(new java.sql.Timestamp(maxMs + 1800L * 1000)).cast(tsType))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/adv")
-      e.orderBy(col("ts"), col("event_id")).limit(200)
-        .withColumn("ts",
-          lit(new java.sql.Timestamp(maxMs + 3600L * 1000)).cast(tsType))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/late")
-      // merge into one source dir with CONTROLLED mod-time order:
-      // originals oldest, advancer in between, re-arrivals newest
-      val inDir = java.nio.file.Paths.get(tmp, "in")
-      val now = System.currentTimeMillis()
-      val listIn = java.nio.file.Files.list(inDir)
-      try listIn.forEach(p =>
-        p.toFile.setLastModified(now - 600000L))
-      finally listIn.close()
-      def mergeIn(sub: String, prefix: String, mtime: Long): Unit = {
-        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(tmp, sub))
-        try ls.forEach { p =>
-          val n = p.getFileName.toString
-          if (n.endsWith(".parquet") && !n.startsWith("_") &&
-              !n.startsWith(".")) {
-            val dst = inDir.resolve(s"$prefix-$n")
-            java.nio.file.Files.copy(p, dst)
-            dst.toFile.setLastModified(mtime); ()
-          }
-        } finally ls.close()
-      }
-      mergeIn("adv", "adv", now - 300000L)
-      mergeIn("late", "late", now)
-      inDir.toString
+      def shifted(df: DataFrame, bySec: Long) = df.withColumn("ts",
+        lit(new java.sql.Timestamp(maxMs + bySec * 1000)).cast(tsType))
+      val inDir = tempDir("graft_tt") + "/in"
+      graft.streaming.EventStreams.stageDrainBatches(inDir, Seq(e,
+        shifted(e.orderBy(col("ts").desc, col("event_id")).limit(1), 1800L),
+        shifted(e.orderBy(col("ts"), col("event_id")).limit(200), 3600L)))
+      inDir
     })
     val ckpt = ckptDir("graft_tt_ck")
     val stream = graft.streaming.EventStreams.readStream(s, in,
@@ -270,27 +280,11 @@ object StorageQueries {
         val (in, sink) = stagedUpsert.getOrElseUpdate(dir, {
           val tmp = tempDir("graft_upsert")
           val e = t(s, dir, "events")
-          e.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
-          e.filter(col("event_id") % 50 === 0)
-            .withColumn("value", col("value") + 1000.0)
-            .coalesce(1).write.mode("overwrite").parquet(s"$tmp/rev")
           // one source dir, controlled mod-time order: originals oldest
-          val inDir = java.nio.file.Paths.get(tmp, "in")
-          val now = System.currentTimeMillis()
-          val listIn = java.nio.file.Files.list(inDir)
-          try listIn.forEach(p => p.toFile.setLastModified(now - 600000L))
-          finally listIn.close()
-          val ls = java.nio.file.Files.list(java.nio.file.Paths.get(tmp, "rev"))
-          try ls.forEach { p =>
-            val n = p.getFileName.toString
-            if (n.endsWith(".parquet") && !n.startsWith("_") &&
-                !n.startsWith(".")) {
-              val dst = inDir.resolve(s"rev-$n")
-              java.nio.file.Files.copy(p, dst)
-              dst.toFile.setLastModified(now); ()
-            }
-          } finally ls.close()
-          (inDir.toString, s"$tmp/sink")
+          graft.streaming.EventStreams.stageDrainBatches(s"$tmp/in", Seq(e,
+            e.filter(col("event_id") % 50 === 0)
+              .withColumn("value", col("value") + 1000.0)))
+          (s"$tmp/in", s"$tmp/sink")
         })
         val ckpt = ckptDir("graft_upsert_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
@@ -390,22 +384,13 @@ object StorageQueries {
         |  MIN(value) AS min_value, MAX(value) AS max_value
         |FROM events GROUP BY 1, 2""".stripMargin),
 
-    // ---- streaming: watermarked windowed agg, AvailableNow == batch.
-    // The events parquet is re-staged (nanos ts -> micros) because the
-    // file stream source has no post-read transform hook; staged ONCE
-    // per (JVM, sf dir) so repeated runs measure the streaming query,
-    // not the harness copy. ----
     // ---- streaming per-window top-k leaderboard — the custom heap
     // AGGREGATE inside a streaming aggregation: state per (window,
     // type) is k rows forever; a window-sort rank can't stream at
     // all. Oracle == the batch window+rank formulation. ----
     Query("s_stream_topk", "streaming per-window top-k leaderboard",
       (s, dir) => {
-        val in = stagedEventsDir.getOrElseUpdate(dir, {
-          val tmp = tempDir("graft_sw")
-          t(s, dir, "events").write.mode("overwrite").parquet(s"$tmp/in")
-          s"$tmp/in"
-        })
+        val in = eventsInput(s, dir)
         val ckpt = ckptDir("graft_stk_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in)
         runDrain(
@@ -434,7 +419,7 @@ object StorageQueries {
     // oracle is the batch distinct count per hour. ----
     Query("s_stream_distinct", "streaming exact COUNT(DISTINCT) per hour window",
       (s, dir) => {
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_sdc_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -462,7 +447,7 @@ object StorageQueries {
     // partial per window, bit-equal to the batch arithmetic. ----
     Query("s_stream_brier", "per-window Brier score",
       (s, dir) => {
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_sbr_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -500,7 +485,7 @@ object StorageQueries {
     // fingerprint (the reconcile-without-rereading property). ----
     Query("s_stream_fingerprint", "per-window dataset fingerprint",
       (s, dir) => {
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_sfp_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -538,7 +523,7 @@ object StorageQueries {
 
     Query("s_stream_hll", "streaming sliding-window HyperLogLog distinct users",
       (s, dir) => {
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_shll_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -597,7 +582,7 @@ object StorageQueries {
     // to the batch sketch per window, threshold included. ----
     Query("s_stream_kmv", "per-window KMV distinct sketch",
       (s, dir) => {
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_skmv_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -646,7 +631,7 @@ object StorageQueries {
     // chunked replay is bit-equal per window. ----
     Query("s_stream_calibration", "per-window calibration bins",
       (s, dir) => {
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_scal_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -712,7 +697,7 @@ object StorageQueries {
           (bs, (1 to 10).map(i =>
             (refCounts.getOrElse(i, 0L) + 0.5) / (refTot + 5.0)))
         })
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_spsi_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -801,7 +786,7 @@ object StorageQueries {
             (bs, (1 to 10).map(i =>
               refCounts.getOrElse(i, 0L).toDouble / refTot))
           })
-        val in = stageSentinelEvents(s, dir)
+        val in = sentinelEventsInput(s, dir)
         val ckpt = ckptDir("graft_shel_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -868,11 +853,7 @@ object StorageQueries {
 
     Query("s_stream_windowed", "streaming sliding-window event counts",
       (s, dir) => {
-        val in = stagedEventsDir.getOrElseUpdate(dir, {
-          val tmp = tempDir("graft_sw")
-          t(s, dir, "events").write.mode("overwrite").parquet(s"$tmp/in")
-          s"$tmp/in"
-        })
+        val in = eventsInput(s, dir)
         val ckpt = ckptDir("graft_sw_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in)
         runDrain(
@@ -890,11 +871,7 @@ object StorageQueries {
     // AvailableNow == batch contract as s_stream_windowed ----
     Query("s_stream_sliding", "SLIDING windows (1h length / 30min slide)",
       (s, dir) => {
-        val in = stagedEventsDir.getOrElseUpdate(dir, {
-          val tmp = tempDir("graft_sw")
-          t(s, dir, "events").write.mode("overwrite").parquet(s"$tmp/in")
-          s"$tmp/in"
-        })
+        val in = eventsInput(s, dir)
         val ckpt = ckptDir("graft_ss_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in)
         runDrain(
@@ -1016,11 +993,7 @@ object StorageQueries {
     // whole thing as a gaps-and-islands window query. ----
     Query("s_stream_sessionize", "STATEFUL sessionization (mapGroupsWithState) —",
       (s, dir) => {
-        val in = stagedEventsDir.getOrElseUpdate(dir, {
-          val tmp = tempDir("graft_sw")
-          t(s, dir, "events").write.mode("overwrite").parquet(s"$tmp/in")
-          s"$tmp/in"
-        })
+        val in = eventsInput(s, dir)
         val ckpt = ckptDir("graft_ss_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in)
         val updates = runDrain(
@@ -1061,56 +1034,16 @@ object StorageQueries {
         |FROM g
         |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) = 1""".stripMargin),
 
-    // ---- streaming: LATE-DATA sessionization — the whole events
-    // corpus replayed through maxFilesPerTrigger=1 as day-range chunks
-    // staged OUT of event-time order (batch 1 = days 22+, batch 2 =
-    // days 1-7, ...), the arrival pattern of a backfill whose file
-    // listing isn't time-sorted. sessionizeRetained buffers each
-    // user's events inside the watermark horizon and appends each
-    // session exactly once when the watermark seals it; a far-future
-    // sentinel row (its own user) staged last flushes the tail. The
-    // oracle recomputes ALL sessions as batch gaps-and-islands — every
-    // session must come out exact despite the disorder. ----
     // ---- streaming EWMA — the stateful recurrence replayed as FOUR
-    // in-order time-range micro-batches (maxFilesPerTrigger=1): state
+    // in-order day-range micro-batches (the staging [[dayReplay]]
+    // shares with the other six ordered folds): state
     // is ONE scale-6 unscaled long per user, carried across triggers,
     // and the full replay reproduces the batch decimal recurrence
     // bit-for-bit (the oracle IS w16's recursive CTE). O(keys) state
     // forever — no watermark needed for boundedness. ----
     Query("s_stream_ewma", "streaming EWMA",
-      (s, dir) => {
-        val tmp = tempDir("graft_sewma")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        // IN event-time order — the recurrence's ordering contract
-        Seq((1, 8), (8, 15), (15, 22), (22, 32)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        val ckpt = ckptDir("graft_sewma_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        runDrain(
-          graft.streaming.EventStreams.ewmaStream(stream, alpha = 0.3)
-            .toDF(),
-          queryName = s"sewma_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-      },
+      (s, dir) => dayReplay(s, dir, "sewma")(
+        graft.streaming.EventStreams.ewmaStream(_, alpha = 0.3).toDF()),
       // the chunked streaming replay must reproduce the batch decimal
       // recurrence exactly — same recursive CTE as w16_ewma
       """WITH RECURSIVE v AS (
@@ -1137,39 +1070,9 @@ object StorageQueries {
     // decimal recurrence bit-for-bit (the oracle IS w20's recursive
     // CTE). ----
     Query("s_stream_cusum", "streaming CUSUM",
-      (s, dir) => {
-        val tmp = tempDir("graft_scusum")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        // IN event-time order — the recurrence's ordering contract
-        Seq((1, 8), (8, 15), (15, 22), (22, 32)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        val ckpt = ckptDir("graft_scusum_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        runDrain(
-          graft.streaming.EventStreams.cusumStream(stream,
-            target = 50.0, slack = 10.0, threshold = 300.0).toDF(),
-          queryName = s"scusum_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-      },
+      (s, dir) => dayReplay(s, dir, "scusum")(
+        graft.streaming.EventStreams.cusumStream(_,
+          target = 50.0, slack = 10.0, threshold = 300.0).toDF()),
       // the chunked streaming replay must reproduce the batch decimal
       // recurrence exactly — same recursive CTE as w20_cusum
       """WITH RECURSIVE v AS (
@@ -1202,36 +1105,9 @@ object StorageQueries {
     Query("s_stream_funnel", "streaming funnel",
       (s, dir) => {
         import s.implicits._
-        val tmp = tempDir("graft_sfun")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        Seq((1, 8), (8, 15), (15, 22), (22, 32)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        val ckpt = ckptDir("graft_sfun_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.funnelStream(stream,
-            Seq("view", "click", "purchase")).toDF(),
-          queryName = s"sfun_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
+        val sink = dayReplay(s, dir, "sfun")(
+          graft.streaming.EventStreams.funnelStream(_,
+            Seq("view", "click", "purchase")).toDF())
         val stagesDf = Seq((1, "view"), (2, "click"), (3, "purchase"))
           .toDF("stage_idx", "stage")
         val counts = sink.groupBy(col("stage_idx"))
@@ -1256,39 +1132,9 @@ object StorageQueries {
     // longs + squares); chunked in-order replay bit-equal to the
     // batch op (oracle IS w28's SQL). ----
     Query("s_stream_zscore", "streaming rolling z-score",
-      (s, dir) => {
-        val tmp = tempDir("graft_szs")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        // IN event-time order — the recurrence's ordering contract
-        Seq((1, 8), (8, 15), (15, 22), (22, 32)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        val ckpt = ckptDir("graft_szs_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        runDrain(
-          graft.streaming.EventStreams.zscoreStream(stream,
-            lookback = 10, zThreshold = 3.0, minObs = 4).toDF(),
-          queryName = s"szs_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-      },
+      (s, dir) => dayReplay(s, dir, "szs")(
+        graft.streaming.EventStreams.zscoreStream(_,
+          lookback = 10, zThreshold = 3.0, minObs = 4).toDF()),
       // the chunked streaming replay must reproduce the batch rolling
       // z-score exactly — same SQL as w28_roll_zscore
       ZscoreOracle),
@@ -1298,39 +1144,9 @@ object StorageQueries {
     // in-order replay bit-equal to the batch window (oracle IS
     // w31's). ----
     Query("s_stream_mad", "streaming rolling median/MAD anomaly",
-      (s, dir) => {
-        val tmp = tempDir("graft_smad")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        // IN event-time order — the recurrence's ordering contract
-        Seq((1, 8), (8, 15), (15, 22), (22, 32)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        val ckpt = ckptDir("graft_smad_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        runDrain(
-          graft.streaming.EventStreams.madStream(stream,
-            lookback = 25, k = 3).toDF(),
-          queryName = s"smad_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-      },
+      (s, dir) => dayReplay(s, dir, "smad")(
+        graft.streaming.EventStreams.madStream(_,
+          lookback = 25, k = 3).toDF()),
       // the streaming twin replays the identical frames (integer
       // micro-unit arithmetic end to end): oracle IS w31's
       RollingMadOracle),
@@ -1340,39 +1156,9 @@ object StorageQueries {
     // bit-equal to the batch recurrence (oracle IS w27's recursive
     // CTE). ----
     Query("s_stream_holt", "streaming Holt trend",
-      (s, dir) => {
-        val tmp = tempDir("graft_sholt")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        // IN event-time order — the recurrence's ordering contract
-        Seq((1, 8), (8, 15), (15, 22), (22, 32)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        val ckpt = ckptDir("graft_sholt_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        runDrain(
-          graft.streaming.EventStreams.holtStream(stream,
-            alpha = 0.5, beta = 0.3).toDF(),
-          queryName = s"sholt_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-      },
+      (s, dir) => dayReplay(s, dir, "sholt")(
+        graft.streaming.EventStreams.holtStream(_,
+          alpha = 0.5, beta = 0.3).toDF()),
       // the chunked streaming replay must reproduce the batch Holt
       // recurrence exactly — same recursive CTE as w27_holt
       HoltOracle),
@@ -1382,78 +1168,39 @@ object StorageQueries {
     // scale-6 long of state per user; chunked in-order replay is
     // bit-equal to the batch audit (oracle IS w26's recursive CTE). ----
     Query("s_stream_rate", "streaming token-bucket rate limiter",
-      (s, dir) => {
-        val tmp = tempDir("graft_srate")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        // IN event-time order — the recurrence's ordering contract
-        Seq((1, 8), (8, 15), (15, 22), (22, 32)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        val ckpt = ckptDir("graft_srate_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        runDrain(
-          graft.streaming.EventStreams.rateLimitStream(stream,
-            capacity = 2, refillPerSec = 0.0001).toDF(),
-          queryName = s"srate_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-      },
+      (s, dir) => dayReplay(s, dir, "srate")(
+        graft.streaming.EventStreams.rateLimitStream(_,
+          capacity = 2, refillPerSec = 0.0001).toDF()),
       // the chunked streaming replay must reproduce the batch token
       // bucket exactly — same recursive CTE as w26_rate_limit
       RateLimitOracle),
 
+    // ---- streaming: LATE-DATA sessionization — the whole events
+    // corpus replayed through maxFilesPerTrigger=1 as day-range chunks
+    // staged OUT of event-time order (batch 1 = days 22+, batch 2 =
+    // days 1-7, ...), the arrival pattern of a backfill whose file
+    // listing isn't time-sorted. sessionizeRetained buffers each
+    // user's events inside the watermark horizon and appends each
+    // session exactly once when the watermark seals it; a far-future
+    // sentinel row (its own user) staged last flushes the tail. The
+    // oracle recomputes ALL sessions as batch gaps-and-islands — every
+    // session must come out exact despite the disorder. ----
     Query("s_stream_sessionize_ooo", "streaming sessionization of out-of-order input",
       (s, dir) => {
-        val tmp = tempDir("graft_sso")
-        val in = s"$tmp/in"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
+        val in = tempDir("graft_sso") + "/in"
         val ev = t(s, dir, "events")
-        def stage(df: org.apache.spark.sql.DataFrame, seq: Int): Unit = {
-          val chunk = s"$tmp/chunk$seq"
-          df.coalesce(1).write.mode("overwrite").parquet(chunk)
-          val part = new java.io.File(chunk).listFiles()
-            .filter(_.getName.startsWith("part-")).head
-          val dest = java.nio.file.Paths.get(in, s"f$seq.parquet")
-          java.nio.file.Files.copy(part.toPath, dest)
-          // the file source processes oldest-mtime first: pin the order
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L +
-              seq * 10000L))
-          ()
-        }
-        Seq((22, 32), (1, 8), (15, 22), (8, 15)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            stage(ev.filter(dayofmonth(col("ts")) >= lo &&
-              dayofmonth(col("ts")) < hi), i)
-        }
-        // ONE drain batch suffices here (timeout-based drain — the
-        // trailing no-data batch fires the timeouts; stageDrainBatches
-        // scaladoc): the sentinel flushes every real user's tail, while
-        // its OWN never-sealed session stays in state and never emits,
-        // so no sink-side filter is needed
+        // day chunks staged OUT of event-time order, then ONE drain
+        // batch (timeout-based drain — the trailing no-data batch fires
+        // the timeouts; stageDrainBatches scaladoc): the sentinel flushes
+        // every real user's tail, while its OWN never-sealed session
+        // stays in state and never emits, so no sink-side filter is
+        // needed
         graft.streaming.EventStreams.stageDrainBatches(in,
-          Seq(ev.sparkSession.range(1)
-            .select(lit(-1L).as("event_id"),
+          dayChunks(ev, Seq((22, 32), (1, 8), (15, 22), (8, 15))) :+
+            s.range(1).select(lit(-1L).as("event_id"),
               lit(java.sql.Timestamp.valueOf("2024-06-01 00:00:00")).as("ts"),
               lit(-1L).as("user_id"), lit("flush").as("event_type"),
-              lit(0.0).as("value"), lit("{}").as("props"))))
+              lit(0.0).as("value"), lit("{}").as("props")))
         val ckpt = ckptDir("graft_sso_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in,
           options = Map("maxFilesPerTrigger" -> "1"))
@@ -1496,11 +1243,7 @@ object StorageQueries {
     // over the enriched stream must equal the batch join+agg. ----
     Query("s_stream_enrich", "stream–STATIC broadcast enrichment",
       (s, dir) => {
-        val in = stagedEventsDir.getOrElseUpdate(dir, {
-          val tmp = tempDir("graft_sw")
-          t(s, dir, "events").write.mode("overwrite").parquet(s"$tmp/in")
-          s"$tmp/in"
-        })
+        val in = eventsInput(s, dir)
         val ckpt = ckptDir("graft_se_ck")
         val stream = graft.streaming.EventStreams.readStream(s, in)
           .withColumn("nk", pmod(col("user_id"), lit(25)).cast("int"))
@@ -1529,11 +1272,7 @@ object StorageQueries {
     // join, which is exactly what the oracle computes. ----
     Query("s_stream_join", "watermarked STREAM-STREAM interval join",
       (s, dir) => {
-        val in = stagedEventsDir.getOrElseUpdate(dir, {
-          val tmp = tempDir("graft_sw")
-          t(s, dir, "events").write.mode("overwrite").parquet(s"$tmp/in")
-          s"$tmp/in"
-        })
+        val in = eventsInput(s, dir)
         val ckpt = ckptDir("graft_sj_ck")
         val clicks = graft.streaming.EventStreams.readStream(s, in)
           .filter(col("event_type") === "click")
@@ -1563,7 +1302,7 @@ object StorageQueries {
     // output) to flush the tail. Oracle == the batch LEFT JOIN. ----
     Query("s_stream_join_outer", "LEFT OUTER stream-stream interval join",
       (s, dir) => {
-        val in = stageOuterEvents(s, dir)
+        val in = outerEventsInput(s, dir)
         val ckpt = ckptDir("graft_sjo_ck")
         val opts = Map("maxFilesPerTrigger" -> "1")
         val clicks = graft.streaming.EventStreams
@@ -1605,7 +1344,7 @@ object StorageQueries {
     // either side null-safely. Oracle == the batch FULL JOIN. ----
     Query("s_stream_join_full", "FULL OUTER stream-stream interval join",
       (s, dir) => {
-        val in = stageOuterEvents(s, dir)
+        val in = outerEventsInput(s, dir)
         val ckpt = ckptDir("graft_sjf_ck")
         val opts = Map("maxFilesPerTrigger" -> "1")
         val clicks = graft.streaming.EventStreams

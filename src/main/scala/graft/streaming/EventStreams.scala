@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
@@ -18,22 +20,30 @@ case class SessionBuffer(pending: Array[Long])
   * signature) members accumulated in one LSH band-bucket. Top-level for
   * the state Encoder. */
 case class BucketMembers(ids: Array[Long], sigs: Array[Array[Int]])
-/** EWMA recurrence state: last event's (micros, id) for the ordering
-  * guard + the smoothed value as an EXACT scale-6 unscaled long (a
-  * double in state would re-round every step and drift off the batch
-  * decimal recurrence). */
+
+/** What the ordered per-key fold chassis ([[EventStreams]]'
+  * `orderedFold`) reads from every fold state: the (event-time µs,
+  * event_id) of the last event folded in, for the ordering guard. The
+  * state's stored fields are its constructor's alone. */
+trait FoldState { def lastTus: Long; def lastId: Long }
+
+/** EWMA recurrence state (also CUSUM's and the rate limiter's): the
+  * smoothed value as an EXACT scale-6 unscaled long (a double in state
+  * would re-round every step and drift off the batch decimal
+  * recurrence). */
 case class EwmaState(lastTus: Long, lastId: Long, sMicros: Long)
+  extends FoldState
 case class EwmaOut(user_id: Long, event_id: Long, ewma: Double)
 case class CusumOut(user_id: Long, event_id: Long, cusum: Double,
                     alarm: Boolean)
 case class RateOut(user_id: Long, event_id: Long, tokens: Double,
                    admitted: Boolean)
 case class HoltState(lastTus: Long, lastId: Long, lMicros: Long,
-                     bMicros: Long)
+                     bMicros: Long) extends FoldState
 case class HoltOut(user_id: Long, event_id: Long, level: Double,
                    trend: Double, forecast: Double)
 case class ZscoreState(lastTus: Long, lastId: Long, vs: Array[Long],
-                       v2s: Array[Long])
+                       v2s: Array[Long]) extends FoldState
 /** State for [[EventStreams.kmvDistinctStream]]: the ≤k smallest
   * distinct hashes of one live window, sorted ascending — the whole
   * KMV sketch, O(k) longs per window forever. Top-level for the state
@@ -43,13 +53,14 @@ case class KmvWindow(window_start: java.sql.Timestamp,
                      hashes_kept: Long, threshold: Long,
                      estimate: Double)
 case class FunnelState(lastTus: Long, lastId: Long,
-                       reached: Array[Boolean])
+                       reached: Array[Boolean]) extends FoldState
 case class FunnelReach(user_id: Long, stage_idx: Int, stage: String)
 case class ZscoreOut(user_id: Long, event_id: Long, n_window: Long,
                      roll_mean: Option[Double],
                      roll_std: Option[Double], zscore: Option[Double],
                      anomaly: Boolean)
 case class MadState(lastTus: Long, lastId: Long, vs: Array[Long])
+  extends FoldState
 case class MadOut(user_id: Long, event_id: Long, value: Double,
                   med: Double, mad: Double, is_anomaly: Boolean)
 
@@ -517,11 +528,8 @@ object EventStreams {
               SessionState(sorted.head, sorted.head, 0))
             sorted.foreach { t =>
               if (t < latest.last)
-                throw new IllegalStateException(
-                  s"sessionize: event time $t for user $uid precedes " +
-                    s"carried session end ${latest.last} — out-of-order " +
-                    "arrival across triggers; feed micro-batches in " +
-                    "event-time order (see scaladoc)")
+                outOfOrder("sessionize", s"event time $t for user $uid " +
+                  s"precedes carried session end ${latest.last}")
               latest =
                 if (t - latest.last > gapSeconds) SessionState(t, t, 1)
                 else latest.copy(last = t, n = latest.n + 1)
@@ -642,396 +650,304 @@ object EventStreams {
     * then evicted, so a duplicate arriving later than the horizon is
     * NOT caught (that residue is the batch dedup's job downstream —
     * the standard two-tier design). */
+  def dedupStream(events: DataFrame, keyCols: Seq[String],
+                  tsCol: String = "ts",
+                  watermark: String = "2 hours"): DataFrame =
+    events.withWatermark(tsCol, watermark)
+      .dropDuplicatesWithinWatermark(keyCols)
+
+  /** The one ordering guard of the per-key stream folds: a row that
+    * arrives in a later trigger but precedes the state carried from an
+    * earlier one cannot be folded incrementally. */
+  private def outOfOrder(op: String, detail: String): Nothing =
+    throw new IllegalStateException(s"$op: $detail — " +
+      "out-of-order arrival across triggers; feed micro-batches in " +
+      "event-time order (see scaladoc)")
+
+  /** The chassis of the seven ordered per-key folds ([[ewmaStream]],
+    * [[cusumStream]], [[rateLimitStream]], [[holtStream]],
+    * [[zscoreStream]], [[madStream]], [[funnelStream]]): ONE
+    * flatMapGroupsWithState (Append, no timeout) keyed by user over
+    * `(user_id, unix_micros(ts), event_id, payload)`. Per trigger, a
+    * key's rows arrive sorted by (event-time µs, event_id) and `fold`
+    * maps them and the carried state (None before the key's first
+    * event) to the rows to emit and the state to carry on. State is
+    * whatever the operator keeps per key — O(keys) or O(keys·lookback)
+    * forever, no watermark needed for boundedness.
+    *
+    * Ordering contract: rows fold in (µs, id) order within a trigger,
+    * and a trigger whose first row precedes the carried state's
+    * (lastTus, lastId) throws an IllegalStateException naming `op`
+    * (the [[sessionize]] convention) — a recurrence can't absorb a
+    * late event without replaying everything after it; feed
+    * micro-batches in event-time order or buffer upstream like
+    * [[sessionizeRetained]]. */
+  private def orderedFold[P: TypeTag, S <: FoldState with Product : TypeTag,
+                          O <: Product : TypeTag](
+      events: DataFrame, op: String, payload: Column)(
+      fold: (Long, Option[S], Seq[(Long, Long, P)]) => (Seq[O], S))
+      : Dataset[O] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(col("user_id"),
+        expr("unix_micros(cast(ts as timestamp_ltz))").as("tus"),
+        col("event_id"), payload)
+      .as[(Long, Long, Long, P)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[S, O](OutputMode.Append,
+        GroupStateTimeout.NoTimeout) {
+        (uid: Long, rows: Iterator[(Long, Long, Long, P)],
+         state: GroupState[S]) =>
+          val sorted = rows.map(r => (r._2, r._3, r._4)).toVector
+            .sortBy(r => (r._1, r._2))
+          val carried = state.getOption
+          carried.foreach { st =>
+            val (tus, id, _) = sorted.head
+            if (tus < st.lastTus || (tus == st.lastTus && id < st.lastId))
+              outOfOrder(op, s"event $id for user $uid at $tus precedes " +
+                s"carried state (${st.lastTus}, ${st.lastId})")
+          }
+          val (out, next) = fold(uid, carried, sorted)
+          state.update(next)
+          out.iterator
+      }
+  }
+
+  /** An [[orderedFold]] `fold` that steps once per event: `step` maps
+    * (user, state so far, event µs, event_id, payload) to the event's
+    * output row and the state after it. */
+  private def eachEvent[P, S, O](
+      step: (Long, Option[S], Long, Long, P) => (O, S))
+      : (Long, Option[S], Seq[(Long, Long, P)]) => (Seq[O], S) =
+    (uid, carried, rows) => {
+      var st = carried
+      val out = rows.map { case (tus, id, p) =>
+        val (o, next) = step(uid, st, tus, id, p)
+        st = Some(next)
+        o
+      }
+      (out, st.get)
+    }
+
+  private val HalfUp = java.math.RoundingMode.HALF_UP
+
+  /** A double input rounded once to scale 6 — every fold's first step. */
+  private def dec6(d: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(d).setScale(6, HalfUp)
+
+  private def r6(d: Double): Double = dec6(d).doubleValue()
+
+  /** A scale-6 value from its unscaled state long, and back. */
+  private def ofMicros(l: Long): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(l, 6)
+
+  private def micros(b: java.math.BigDecimal): Long =
+    b.movePointRight(6).longValueExact()
+
   /** Streaming per-key EWMA — the stateful twin of
-    * [[graft.ops.WindowOps.ewma]]: one flatMapGroupsWithState keeps
-    * exactly ONE smoothed value per key (not a window of events), so
-    * state is O(keys) forever — the recurrence is the rare stateful
-    * op whose state does NOT grow with the horizon, no watermark
-    * eviction needed for boundedness. Each event emits its smoothed
-    * value once (Append).
+    * [[graft.ops.WindowOps.ewma]] on the [[orderedFold]] chassis: the
+    * state is exactly ONE smoothed value per key (not a window of
+    * events) — the recurrence is the rare stateful op whose state does
+    * NOT grow with the horizon. Each event emits its smoothed value
+    * once (Append).
     *
     * Arithmetic contract: identical EXACT-decimal steps as the batch
     * op — input rounded once to scale 6, s' = round6(α·v + (1−α)·s)
     * with α and 1−α as exact BigDecimals, state carrying the scale-6
     * unscaled long — so a chunked replay reproduces the batch answer
-    * BIT-for-bit (the s_stream_ewma oracle is w16's recursive CTE).
-    *
-    * Ordering contract: rows fold in (event-time µs, id) order within
-    * a trigger, and the fold GUARDS out-of-order arrivals across
-    * triggers loudly (the [[sessionize]] convention) — a recurrence
-    * can't absorb a late event without replaying everything after it;
-    * feed micro-batches in event-time order or buffer upstream like
-    * [[sessionizeRetained]]. */
+    * BIT-for-bit (the s_stream_ewma oracle is w16's recursive CTE). */
   def ewmaStream(events: DataFrame, alpha: Double = 0.3)
-      : org.apache.spark.sql.Dataset[EwmaOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+      : Dataset[EwmaOut] = {
     require(alpha > 0 && alpha < 1, "alpha in (0,1)")
     val aBD = new java.math.BigDecimal(alpha.toString)
     val bBD = java.math.BigDecimal.ONE.subtract(aBD)
-    events.selectExpr("user_id", "unix_micros(cast(ts as timestamp_ltz)) as tus",
-        "event_id", "value")
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[EwmaState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[EwmaOut]
-          sorted.foreach { case (_, tus, id, value) =>
-            if (st != null && (tus < st.lastTus ||
-                (tus == st.lastTus && id < st.lastId)))
-              throw new IllegalStateException(
-                s"ewmaStream: event $id for user $uid at $tus precedes " +
-                  s"carried state (${st.lastTus}, ${st.lastId}) — " +
-                  "out-of-order arrival across triggers; feed " +
-                  "micro-batches in event-time order (see scaladoc)")
-            val v = java.math.BigDecimal.valueOf(value)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-            val s2 =
-              if (st == null) v
-              else aBD.multiply(v)
-                .add(bBD.multiply(new java.math.BigDecimal(
-                  java.math.BigInteger.valueOf(st.sMicros), 6)))
-                .setScale(6, java.math.RoundingMode.HALF_UP)
-            out += EwmaOut(uid, id, s2.doubleValue())
-            st = EwmaState(tus, id, s2.movePointRight(6).longValueExact())
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
-      }
+    orderedFold[Double, EwmaState, EwmaOut](events, "ewmaStream",
+      col("value"))(eachEvent { (uid, st, tus, id, value) =>
+      val v = dec6(value)
+      val s2 = st.fold(v)(s => aBD.multiply(v)
+        .add(bBD.multiply(ofMicros(s.sMicros))).setScale(6, HalfUp))
+      (EwmaOut(uid, id, s2.doubleValue()), EwmaState(tus, id, micros(s2)))
+    })
   }
 
   /** Streaming per-key one-sided CUSUM — the stateful twin of
-    * [[graft.ops.WindowOps.cusum]], on the [[ewmaStream]] chassis: one
-    * flatMapGroupsWithState carries exactly ONE scale-6 unscaled long
-    * per key (the CUSUM statistic), so state is O(keys) forever with no
-    * watermark needed for boundedness — the online drift detector that
-    * raises the alarm IN the micro-batch where the threshold is
-    * crossed, instead of a day later in batch.
+    * [[graft.ops.WindowOps.cusum]] on the [[orderedFold]] chassis: ONE
+    * scale-6 unscaled long per key (the CUSUM statistic) — the online
+    * drift detector that raises the alarm IN the micro-batch where the
+    * threshold is crossed, instead of a day later in batch.
     *
     * Arithmetic contract: identical EXACT-decimal steps as the batch
     * op — input rounded once to scale 6, s' = max(0, s + v − drift)
     * with drift = target + slack as an exact BigDecimal — so a chunked
     * in-event-time-order replay reproduces the batch answer
-    * bit-for-bit (the s_stream_cusum oracle IS w20's recursive CTE).
-    * Same out-of-order-across-triggers guard as [[ewmaStream]]. */
+    * bit-for-bit (the s_stream_cusum oracle IS w20's recursive CTE). */
   def cusumStream(events: DataFrame, target: Double, slack: Double,
-                  threshold: Double)
-      : org.apache.spark.sql.Dataset[CusumOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+                  threshold: Double): Dataset[CusumOut] = {
     require(threshold > 0, "threshold must be > 0")
     val driftBD = new java.math.BigDecimal(target.toString)
       .add(new java.math.BigDecimal(slack.toString))
     val hBD = new java.math.BigDecimal(threshold.toString)
     val zero = java.math.BigDecimal.ZERO.setScale(6)
-    events.selectExpr("user_id",
-        "unix_micros(cast(ts as timestamp_ltz)) as tus",
-        "event_id", "value")
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, CusumOut](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[EwmaState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[CusumOut]
-          sorted.foreach { case (_, tus, id, value) =>
-            if (st != null && (tus < st.lastTus ||
-                (tus == st.lastTus && id < st.lastId)))
-              throw new IllegalStateException(
-                s"cusumStream: event $id for user $uid at $tus precedes " +
-                  s"carried state (${st.lastTus}, ${st.lastId}) — " +
-                  "out-of-order arrival across triggers; feed " +
-                  "micro-batches in event-time order (see scaladoc)")
-            val v = java.math.BigDecimal.valueOf(value)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-            val prev =
-              if (st == null) zero
-              else new java.math.BigDecimal(
-                java.math.BigInteger.valueOf(st.sMicros), 6)
-            val s2 = prev.add(v).subtract(driftBD)
-              .max(zero).setScale(6, java.math.RoundingMode.HALF_UP)
-            out += CusumOut(uid, id, s2.doubleValue(),
-              s2.compareTo(hBD) > 0)
-            st = EwmaState(tus, id, s2.movePointRight(6).longValueExact())
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
-      }
+    orderedFold[Double, EwmaState, CusumOut](events, "cusumStream",
+      col("value"))(eachEvent { (uid, st, tus, id, value) =>
+      val prev = st.fold(zero)(s => ofMicros(s.sMicros))
+      val s2 = prev.add(dec6(value)).subtract(driftBD)
+        .max(zero).setScale(6, HalfUp)
+      (CusumOut(uid, id, s2.doubleValue(), s2.compareTo(hBD) > 0),
+        EwmaState(tus, id, micros(s2)))
+    })
   }
 
   /** Streaming per-key token-bucket admission control — the online
-    * twin of [[graft.ops.WindowOps.rateLimit]] and the op that
-    * actually BELONGS in the stream (a limiter that answers a day
-    * later is an audit, not a limiter): one scale-6 long of state per
-    * key (current tokens) plus the last event time, O(keys) forever.
-    * Exact decimal refill arithmetic identical to the batch op —
-    * (Δt µs)·ratePerµs rounded once per step — so a chunked in-order
-    * replay is bit-equal to the batch answer (the s_stream_rate
-    * oracle IS w26's recursive CTE). Bucket starts FULL. Same
-    * out-of-order-across-triggers guard as [[ewmaStream]]. */
+    * twin of [[graft.ops.WindowOps.rateLimit]] on the [[orderedFold]]
+    * chassis, and the op that actually BELONGS in the stream (a
+    * limiter that answers a day later is an audit, not a limiter): one
+    * scale-6 long of state per key (current tokens) plus the last
+    * event time. Exact decimal refill arithmetic identical to the
+    * batch op — (Δt µs)·ratePerµs rounded once per step — so a chunked
+    * in-order replay is bit-equal to the batch answer (the
+    * s_stream_rate oracle IS w26's recursive CTE). Bucket starts FULL.
+    * The fold reads no payload column. */
   def rateLimitStream(events: DataFrame, capacity: Int,
-                      refillPerSec: Double)
-      : org.apache.spark.sql.Dataset[RateOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+                      refillPerSec: Double): Dataset[RateOut] = {
     require(capacity >= 1, "capacity must be >= 1")
     require(refillPerSec > 0, "refillPerSec must be > 0")
     val rBD = new java.math.BigDecimal(refillPerSec.toString)
       .movePointLeft(6)
     val capBD = java.math.BigDecimal.valueOf(capacity.toLong).setScale(6)
     val oneBD = java.math.BigDecimal.ONE.setScale(6)
-    events.selectExpr("user_id",
-        "unix_micros(cast(ts as timestamp_ltz)) as tus",
-        "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, RateOut](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[EwmaState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[RateOut]
-          sorted.foreach { case (_, tus, id) =>
-            if (st != null && (tus < st.lastTus ||
-                (tus == st.lastTus && id < st.lastId)))
-              throw new IllegalStateException(
-                s"rateLimitStream: event $id for user $uid at $tus " +
-                  s"precedes carried state (${st.lastTus}, ${st.lastId}) " +
-                  "— out-of-order arrival across triggers; feed " +
-                  "micro-batches in event-time order (see scaladoc)")
-            val avail =
-              if (st == null) capBD
-              else {
-                val prev = new java.math.BigDecimal(
-                  java.math.BigInteger.valueOf(st.sMicros), 6)
-                val refill = java.math.BigDecimal
-                  .valueOf(tus - st.lastTus).multiply(rBD)
-                  .setScale(6, java.math.RoundingMode.HALF_UP)
-                capBD.min(prev.add(refill))
-              }
-            val adm = avail.compareTo(oneBD) >= 0
-            val tok = (if (adm) avail.subtract(oneBD) else avail)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-            out += RateOut(uid, id, tok.doubleValue(), adm)
-            st = EwmaState(tus, id, tok.movePointRight(6).longValueExact())
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
+    orderedFold[Int, EwmaState, RateOut](events, "rateLimitStream",
+      lit(0))(eachEvent { (uid, st, tus, id, _) =>
+      val avail = st.fold(capBD) { s =>
+        val refill = java.math.BigDecimal.valueOf(tus - s.lastTus)
+          .multiply(rBD).setScale(6, HalfUp)
+        capBD.min(ofMicros(s.sMicros).add(refill))
       }
+      val adm = avail.compareTo(oneBD) >= 0
+      val tok = (if (adm) avail.subtract(oneBD) else avail)
+        .setScale(6, HalfUp)
+      (RateOut(uid, id, tok.doubleValue(), adm),
+        EwmaState(tus, id, micros(tok)))
+    })
   }
 
   /** Streaming Holt linear-trend smoothing — the stateful twin of
-    * [[graft.ops.WindowOps.holt]] on the [[ewmaStream]] chassis: TWO
+    * [[graft.ops.WindowOps.holt]] on the [[orderedFold]] chassis: TWO
     * scale-6 longs of state per key (level and trend), each event
     * emitting its one-step-ahead forecast in its own micro-batch —
     * the live "expected next value" feed. Identical exact-decimal
     * steps as the batch op (l = α·v + (1−α)(l₀+b₀), b = β(l−l₀) +
     * (1−β)b₀, init (v₁, 0), every assignment rounded once to 6), so a
     * chunked in-order replay is bit-equal (the s_stream_holt oracle
-    * IS w27's recursive CTE). Same out-of-order guard as
-    * [[ewmaStream]]. */
+    * IS w27's recursive CTE). */
   def holtStream(events: DataFrame, alpha: Double, beta: Double)
-      : org.apache.spark.sql.Dataset[HoltOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+      : Dataset[HoltOut] = {
     require(alpha > 0 && alpha < 1, "alpha in (0,1)")
     require(beta > 0 && beta < 1, "beta in (0,1)")
     val aBD = new java.math.BigDecimal(alpha.toString)
     val iaBD = java.math.BigDecimal.ONE.subtract(aBD)
     val bBD = new java.math.BigDecimal(beta.toString)
     val ibBD = java.math.BigDecimal.ONE.subtract(bBD)
-    def dec6(l: Long) =
-      new java.math.BigDecimal(java.math.BigInteger.valueOf(l), 6)
-    events.selectExpr("user_id",
-        "unix_micros(cast(ts as timestamp_ltz)) as tus",
-        "event_id", "value")
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[HoltState, HoltOut](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[HoltState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[HoltOut]
-          sorted.foreach { case (_, tus, id, value) =>
-            if (st != null && (tus < st.lastTus ||
-                (tus == st.lastTus && id < st.lastId)))
-              throw new IllegalStateException(
-                s"holtStream: event $id for user $uid at $tus precedes " +
-                  s"carried state (${st.lastTus}, ${st.lastId}) — " +
-                  "out-of-order arrival across triggers; feed " +
-                  "micro-batches in event-time order (see scaladoc)")
-            val v = java.math.BigDecimal.valueOf(value)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-            val (l2, b2) =
-              if (st == null) (v, java.math.BigDecimal.ZERO.setScale(6))
-              else {
-                val l0 = dec6(st.lMicros); val b0 = dec6(st.bMicros)
-                val nl = aBD.multiply(v)
-                  .add(iaBD.multiply(l0.add(b0)))
-                  .setScale(6, java.math.RoundingMode.HALF_UP)
-                val nb = bBD.multiply(nl.subtract(l0))
-                  .add(ibBD.multiply(b0))
-                  .setScale(6, java.math.RoundingMode.HALF_UP)
-                (nl, nb)
-              }
-            out += HoltOut(uid, id, l2.doubleValue(), b2.doubleValue(),
-              l2.add(b2).doubleValue())
-            st = HoltState(tus, id, l2.movePointRight(6).longValueExact(),
-              b2.movePointRight(6).longValueExact())
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
+    orderedFold[Double, HoltState, HoltOut](events, "holtStream",
+      col("value"))(eachEvent { (uid, st, tus, id, value) =>
+      val v = dec6(value)
+      val (l2, b2) = st.fold((v, java.math.BigDecimal.ZERO.setScale(6))) {
+        s =>
+          val l0 = ofMicros(s.lMicros); val b0 = ofMicros(s.bMicros)
+          val nl = aBD.multiply(v).add(iaBD.multiply(l0.add(b0)))
+            .setScale(6, HalfUp)
+          val nb = bBD.multiply(nl.subtract(l0)).add(ibBD.multiply(b0))
+            .setScale(6, HalfUp)
+          (nl, nb)
       }
+      (HoltOut(uid, id, l2.doubleValue(), b2.doubleValue(),
+        l2.add(b2).doubleValue()),
+        HoltState(tus, id, micros(l2), micros(b2)))
+    })
   }
 
   /** Streaming rolling z-score anomaly detection — the online twin of
-    * [[graft.ops.WindowOps.rollingZscore]]: each event is scored
-    * against its key's TRAILING `lookback` values (the frame excludes
-    * the event itself) and flagged IN its own micro-batch. State is a
-    * bounded ring per key — `lookback` scale-6 longs for the values
-    * and their squares — O(keys·lookback) forever, no watermark
-    * needed. Arithmetic is step-identical to the batch op (exact
-    * integer sums over the ring, the same rounded-double mean/E[v²],
-    * clamped variance, IEEE sqrt), so a chunked in-order replay is
-    * bit-equal (the s_stream_zscore oracle IS w28's). Same
-    * out-of-order guard as [[ewmaStream]]. */
+    * [[graft.ops.WindowOps.rollingZscore]] on the [[orderedFold]]
+    * chassis: each event is scored against its key's TRAILING
+    * `lookback` values (the frame excludes the event itself) and
+    * flagged IN its own micro-batch. State is a bounded ring per key —
+    * `lookback` scale-6 longs for the values and their squares.
+    * Arithmetic is step-identical to the batch op (exact integer sums
+    * over the ring, the same rounded-double mean/E[v²], clamped
+    * variance, IEEE sqrt), so a chunked in-order replay is bit-equal
+    * (the s_stream_zscore oracle IS w28's). */
   def zscoreStream(events: DataFrame, lookback: Int = 10,
                    zThreshold: Double = 3.0, minObs: Int = 4)
-      : org.apache.spark.sql.Dataset[ZscoreOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+      : Dataset[ZscoreOut] = {
     require(lookback >= 2 && minObs >= 2 && minObs <= lookback,
       "need 2 <= minObs <= lookback")
     require(zThreshold > 0, "zThreshold must be > 0")
-    def r6(d: Double): Double = java.math.BigDecimal.valueOf(d)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    events.selectExpr("user_id",
-        "unix_micros(cast(ts as timestamp_ltz)) as tus",
-        "event_id", "value")
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[ZscoreState, ZscoreOut](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[ZscoreState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption
-            .getOrElse(ZscoreState(Long.MinValue, Long.MinValue,
-              Array.empty, Array.empty))
-          val out = Seq.newBuilder[ZscoreOut]
-          sorted.foreach { case (_, tus, id, value) =>
-            if (st.vs.nonEmpty && (tus < st.lastTus ||
-                (tus == st.lastTus && id < st.lastId)))
-              throw new IllegalStateException(
-                s"zscoreStream: event $id for user $uid at $tus " +
-                  s"precedes carried state (${st.lastTus}, ${st.lastId})" +
-                  " — out-of-order arrival across triggers; feed " +
-                  "micro-batches in event-time order (see scaladoc)")
-            val n = st.vs.length
-            val vBD = java.math.BigDecimal.valueOf(value)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-            val (mean, std) =
-              if (n == 0) (None: Option[Double], None: Option[Double])
-              else {
-                val s1 = new java.math.BigDecimal(
-                  java.math.BigInteger.valueOf(st.vs.sum), 6)
-                val s2 = new java.math.BigDecimal(
-                  java.math.BigInteger.valueOf(st.v2s.sum), 6)
-                val m = r6(s1.doubleValue() / n)
-                val ev2 = r6(s2.doubleValue() / n)
-                val variance = r6(math.max(0.0, ev2 - m * m))
-                (Some(m), Some(math.sqrt(variance)))
-              }
-            val ok = n >= minObs
-            val z = (mean, std) match {
-              case (Some(m), Some(s)) if ok && s > 0 =>
-                Some(r6((vBD.doubleValue() - m) / s))
-              case _ => None
-            }
-            out += ZscoreOut(uid, id, n.toLong,
-              if (ok) mean else None,
-              if (ok) std.map(r6) else None,
-              z, z.exists(v => math.abs(v) > zThreshold))
-            val vm = vBD.movePointRight(6).longValueExact()
-            val v2m = vBD.multiply(vBD)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-              .movePointRight(6).longValueExact()
-            val nvs = (st.vs :+ vm).takeRight(lookback)
-            val nv2 = (st.v2s :+ v2m).takeRight(lookback)
-            st = ZscoreState(tus, id, nvs, nv2)
-          }
-          if (st.vs.nonEmpty) state.update(st)
-          out.result().iterator
+    orderedFold[Double, ZscoreState, ZscoreOut](events, "zscoreStream",
+      col("value"))(eachEvent { (uid, st, tus, id, value) =>
+      val vs = st.fold(Array.empty[Long])(_.vs)
+      val v2s = st.fold(Array.empty[Long])(_.v2s)
+      val n = vs.length
+      val vBD = dec6(value)
+      val (mean, std) =
+        if (n == 0) (None: Option[Double], None: Option[Double])
+        else {
+          val m = r6(ofMicros(vs.sum).doubleValue() / n)
+          val ev2 = r6(ofMicros(v2s.sum).doubleValue() / n)
+          val variance = r6(math.max(0.0, ev2 - m * m))
+          (Some(m), Some(math.sqrt(variance)))
+        }
+      val ok = n >= minObs
+      val z = (mean, std) match {
+        case (Some(m), Some(s)) if ok && s > 0 =>
+          Some(r6((vBD.doubleValue() - m) / s))
+        case _ => None
       }
+      val v2m = micros(vBD.multiply(vBD).setScale(6, HalfUp))
+      (ZscoreOut(uid, id, n.toLong, if (ok) mean else None,
+        if (ok) std.map(r6) else None, z,
+        z.exists(v => math.abs(v) > zThreshold)),
+        ZscoreState(tus, id, (vs :+ micros(vBD)).takeRight(lookback),
+          (v2s :+ v2m).takeRight(lookback)))
+    })
   }
 
   /** Streaming rolling median/MAD anomaly — the online twin of
-    * [[graft.ops.WindowOps.rollingMadAnomaly]]: each event judged
-    * against the lower median and MAD of its key's trailing
-    * `lookback`-row frame INCLUDING itself (the batch frame
-    * contract). State is the frame ring — `lookback` scale-6 longs
-    * per key, O(keys·lookback) forever, no watermark needed — and
-    * every step is INTEGER arithmetic on micro-units (sort, index,
-    * abs, k·mad compare): nothing to round differently, so a chunked
-    * in-order replay is bit-equal to the batch window and the
-    * s_stream_mad oracle IS w31's. Same out-of-order guard as
-    * [[ewmaStream]]. */
+    * [[graft.ops.WindowOps.rollingMadAnomaly]] on the [[orderedFold]]
+    * chassis: each event judged against the lower median and MAD of
+    * its key's trailing `lookback`-row frame INCLUDING itself (the
+    * batch frame contract). State is the frame ring — `lookback`
+    * scale-6 longs per key — and every step is INTEGER arithmetic on
+    * micro-units (sort, index, abs, k·mad compare): nothing to round
+    * differently, so a chunked in-order replay is bit-equal to the
+    * batch window and the s_stream_mad oracle IS w31's. */
   def madStream(events: DataFrame, lookback: Int = 25, k: Int = 3)
-      : org.apache.spark.sql.Dataset[MadOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+      : Dataset[MadOut] = {
     require(lookback >= 2, "lookback must be >= 2")
     require(k >= 1, "k must be >= 1")
-    def toD(micros: Long): Double = new java.math.BigDecimal(
-      java.math.BigInteger.valueOf(micros), 6).doubleValue()
-    events.selectExpr("user_id",
-        "unix_micros(cast(ts as timestamp_ltz)) as tus",
-        "event_id", "value")
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MadState, MadOut](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[MadState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption
-            .getOrElse(MadState(Long.MinValue, Long.MinValue, Array.empty))
-          val out = Seq.newBuilder[MadOut]
-          sorted.foreach { case (_, tus, id, value) =>
-            if (st.vs.nonEmpty && (tus < st.lastTus ||
-                (tus == st.lastTus && id < st.lastId)))
-              throw new IllegalStateException(
-                s"madStream: event $id for user $uid at $tus precedes " +
-                  s"carried state (${st.lastTus}, ${st.lastId}) — " +
-                  "out-of-order arrival across triggers; feed " +
-                  "micro-batches in event-time order (see scaladoc)")
-            val vm = java.math.BigDecimal.valueOf(value)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-              .movePointRight(6).longValueExact()
-            val frame = (st.vs :+ vm).takeRight(lookback)
-            val sortedF = frame.sorted
-            val med = sortedF((sortedF.length + 1) / 2 - 1)
-            val devs = frame.map(x => math.abs(x - med)).sorted
-            val mad = devs((devs.length + 1) / 2 - 1)
-            out += MadOut(uid, id, toD(vm), toD(med), toD(mad),
-              math.abs(vm - med) > k.toLong * mad)
-            st = MadState(tus, id, frame)
-          }
-          if (st.vs.nonEmpty) state.update(st)
-          out.result().iterator
-      }
+    orderedFold[Double, MadState, MadOut](events, "madStream",
+      col("value"))(eachEvent { (uid, st, tus, id, value) =>
+      val vm = micros(dec6(value))
+      val frame = (st.fold(Array.empty[Long])(_.vs) :+ vm)
+        .takeRight(lookback)
+      val sortedF = frame.sorted
+      val med = sortedF((sortedF.length + 1) / 2 - 1)
+      val devs = frame.map(x => math.abs(x - med)).sorted
+      val mad = devs((devs.length + 1) / 2 - 1)
+      (MadOut(uid, id, ofMicros(vm).doubleValue(),
+        ofMicros(med).doubleValue(), ofMicros(mad).doubleValue(),
+        math.abs(vm - med) > k.toLong * mad),
+        MadState(tus, id, frame))
+    })
   }
 
   /** Streaming funnel: each user's stage-reach events emitted the
     * moment they happen — the online twin of
-    * [[graft.ops.Analytics.funnel]]'s greedy earliest-match cascade,
-    * whose semantics are NATURALLY online (stage i's time is the
-    * first s_i event at-or-after stage i−1's; processing in event-time
-    * order, that is simply "the first qualifying event seen"). State
-    * is `stages.length` booleans per key — O(keys) forever.
+    * [[graft.ops.Analytics.funnel]]'s greedy earliest-match cascade on
+    * the [[orderedFold]] chassis, whose semantics are NATURALLY online
+    * (stage i's time is the first s_i event at-or-after stage i−1's;
+    * processing in event-time order, that is simply "the first
+    * qualifying event seen"). State is `stages.length` booleans per
+    * key.
     *
     * Equal-timestamp semantics: the batch cascade admits a stage-i
     * event AT stage i−1's exact time, regardless of intra-instant
@@ -1042,63 +958,33 @@ object EventStreams {
     * guarantees it; a tie split across triggers has no correct online
     * resolution). Emits each (user, stage) at most once. */
   def funnelStream(events: DataFrame, stages: Seq[String])
-      : org.apache.spark.sql.Dataset[FunnelReach] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+      : Dataset[FunnelReach] = {
     require(stages.nonEmpty, "stages must be non-empty")
     val stageIdx = stages.zipWithIndex.toMap
-    events.selectExpr("user_id",
-        "unix_micros(cast(ts as timestamp_ltz)) as tus",
-        "event_id", "event_type")
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelState, FunnelReach](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[FunnelState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var st = state.getOption.getOrElse(
-            FunnelState(Long.MinValue, Long.MinValue,
-              Array.fill(stages.length)(false)))
-          val reached = st.reached.clone()
-          val out = Seq.newBuilder[FunnelReach]
-          sorted.headOption.foreach { case (_, tus, id, _) =>
-            if (st.lastTus != Long.MinValue && (tus < st.lastTus ||
-                (tus == st.lastTus && id < st.lastId)))
-              throw new IllegalStateException(
-                s"funnelStream: event $id for user $uid at $tus " +
-                  s"precedes carried state (${st.lastTus}, ${st.lastId})" +
-                  " — out-of-order arrival across triggers")
-          }
-          // process same-instant groups to a fixpoint
-          sorted.groupBy(_._2).toSeq.sortBy(_._1).foreach {
-            case (_, group) =>
-              var changed = true
-              while (changed) {
-                changed = false
-                group.foreach { case (_, _, _, tpe) =>
-                  stageIdx.get(tpe).foreach { i =>
-                    if (!reached(i) && (i == 0 || reached(i - 1))) {
-                      reached(i) = true
-                      changed = true
-                      out += FunnelReach(uid, i + 1, stages(i))
-                    }
-                  }
-                }
+    orderedFold[String, FunnelState, FunnelReach](events, "funnelStream",
+      col("event_type")) { (uid, st, rows) =>
+      val reached = st.fold(Array.fill(stages.length)(false))(
+        _.reached.clone())
+      val out = Seq.newBuilder[FunnelReach]
+      rows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, group) =>
+        var changed = true
+        while (changed) {
+          changed = false
+          group.foreach { case (_, _, tpe) =>
+            stageIdx.get(tpe).foreach { i =>
+              if (!reached(i) && (i == 0 || reached(i - 1))) {
+                reached(i) = true
+                changed = true
+                out += FunnelReach(uid, i + 1, stages(i))
               }
+            }
           }
-          val last = sorted.lastOption
-          state.update(FunnelState(
-            last.map(_._2).getOrElse(st.lastTus),
-            last.map(_._3).getOrElse(st.lastId), reached))
-          out.result().iterator
+        }
       }
+      val (tus, id, _) = rows.last
+      (out.result(), FunnelState(tus, id, reached))
+    }
   }
-
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-                  tsCol: String = "ts",
-                  watermark: String = "2 hours"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Watermarked stream-stream INNER interval join: right-side events
     * match left-side events of the same `key` whose event time falls in
@@ -1285,24 +1171,30 @@ object EventStreams {
       }
   }
 
-  /** Append watermark-drain sentinel batches to an AvailableNow
-    * file-stream input directory — each batch lands as ONE parquet file
-    * whose mtime is strictly newer than every file already there (and
-    * than the previous batch), so the file source (oldest-mtime-first)
-    * processes them LAST, in order, each as its own micro-batch under
-    * `maxFilesPerTrigger=1`. Existing files keep their mtimes: a staging
-    * that deliberately ordered its chunks (the out-of-order replay
-    * tests) is not disturbed.
+  /** THE stager of every chunked file-stream replay: append each batch
+    * to the stream input directory `inDir` (created if absent) as ONE
+    * parquet file whose mtime is strictly newer than every file already
+    * there (and than the previous batch), so the file source
+    * (oldest-mtime-first) processes them in the order given, each as
+    * its own micro-batch under `maxFilesPerTrigger=1`. Existing files
+    * keep their mtimes: a staging that deliberately ordered its chunks
+    * is not disturbed. The batches are written through one `graft_drain`
+    * scratch dir, deleted before this returns.
     *
-    * Why stateful drains need TWO batches (the one-batch watermark lag):
-    * the watermark computed from batch N's max event time only takes
-    * effect in batch N+1. The first far-future sentinel batch ADVANCES
-    * the watermark; the second runs the eviction/emit pass under it —
-    * with a single batch the last `watermark + range` of state never
-    * flushes. Operators that drain on event-time TIMEOUTS
-    * ([[sessionizeRetained]]) need only one batch: AvailableNow executes
-    * a trailing no-data batch after its last file, which fires timeouts
-    * under the advanced watermark.
+    * Uses: day-range chunks replayed in (or deliberately out of)
+    * event-time order, the upsert stream's originals-then-revisions,
+    * the two-tier dedup's corpus / watermark advancer / late
+    * re-arrivals — and the watermark-drain sentinel batches below.
+    *
+    * Why stateful drains need TWO sentinel batches (the one-batch
+    * watermark lag): the watermark computed from batch N's max event
+    * time only takes effect in batch N+1. The first far-future sentinel
+    * batch ADVANCES the watermark; the second runs the eviction/emit
+    * pass under it — with a single batch the last `watermark + range`
+    * of state never flushes. Operators that drain on event-time
+    * TIMEOUTS ([[sessionizeRetained]]) need only one batch: AvailableNow
+    * executes a trailing no-data batch after its last file, which fires
+    * timeouts under the advanced watermark.
     *
     * The sentinel rows re-emerge from stateless/outer operators: remove
     * them with [[drainTail]] on the SINK table, never with a filter
@@ -1313,21 +1205,20 @@ object EventStreams {
   def stageDrainBatches(inDir: String,
                         batches: Seq[DataFrame]): Unit = {
     val dir = new java.io.File(inDir)
+    dir.mkdirs()
     val existing = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
     val base = if (existing.isEmpty) System.currentTimeMillis()
                else existing.map(_.lastModified()).max
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_drain").toString
-      b.coalesce(1).write.mode("overwrite").parquet(scratch)
-      val part = new java.io.File(scratch).listFiles()
-        .filter(_.getName.startsWith("part-")).head
+    val scratch = java.nio.file.Files.createTempDirectory("graft_drain")
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      val out = scratch.resolve(s"b$i").toFile
+      b.coalesce(1).write.parquet(out.toString)
+      val part = out.listFiles().filter(_.getName.startsWith("part-")).head
       val dst = new java.io.File(dir, s"drain${i}_${part.getName}")
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
+      java.nio.file.Files.move(part.toPath, dst.toPath)
       dst.setLastModified(base + (i + 1) * 10000L)
-      ()
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
   }
 
   /** Batch-side sentinel removal after an AvailableNow drain: keeps
@@ -1349,12 +1240,16 @@ object EventStreams {
     * batchId during the poll because the no-data-batch flood evicts
     * early entries from the bounded `recentProgress` ring.
     *
+    * A short drain fails loudly: if the query terminates on its own
+    * before `expectDataBatches` data batches, or the poll outlives
+    * [[BoundedDrainTimeoutMs]], this stops the query and throws an
+    * IllegalStateException naming it and the batch counts it saw.
+    *
     * Returns (numInputRows, stateRows) per observed batch in batchId
     * order — the state-growth measurement surface the eviction spec
     * reads. */
   def runBoundedWithTimeouts(transformed: DataFrame, checkpoint: String,
                              expectDataBatches: Int,
-                             timeoutMs: Long = 180000L,
                              statePartitions: Option[Int] = None)
       : Seq[(Long, Long)] = {
     val byBatch = scala.collection.mutable.SortedMap.empty[Long, (Long, Long)]
@@ -1370,20 +1265,34 @@ object EventStreams {
         byBatch(p.batchId) =
           (p.numInputRows, p.stateOperators(0).numRowsTotal)
     }
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var done = false
-    while (!done && System.currentTimeMillis() < deadline) {
-      done = q.awaitTermination(250)
+    def dataBatches = byBatch.valuesIterator.count(_._1 > 0)
+    val deadline = System.currentTimeMillis() + BoundedDrainTimeoutMs
+    var terminated = false
+    var stopped = false
+    while (!terminated && !stopped &&
+           System.currentTimeMillis() < deadline) {
+      terminated = q.awaitTermination(250)
       snapshot()
-      val dataBatches = byBatch.valuesIterator.count(_._1 > 0)
-      val sawIdle = byBatch.valuesIterator.exists(_._1 == 0)
-      if (!done && dataBatches >= expectDataBatches && sawIdle) {
-        q.stop(); q.awaitTermination(); snapshot(); done = true
+      if (!terminated && dataBatches >= expectDataBatches &&
+          byBatch.valuesIterator.exists(_._1 == 0)) {
+        q.stop(); q.awaitTermination(); snapshot(); stopped = true
       }
     }
     if (q.isActive) { q.stop(); q.awaitTermination() }
+    if (!stopped && (!terminated || dataBatches < expectDataBatches)) {
+      val why =
+        if (terminated) "terminated before its expected data batches"
+        else s"did not finish within $BoundedDrainTimeoutMs ms"
+      throw new IllegalStateException(
+        s"runBoundedWithTimeouts: query ${Option(q.name).getOrElse(q.id)} " +
+          s"$why: saw $dataBatches of $expectDataBatches data batches " +
+          s"(${byBatch.size} batches in all, checkpoint $checkpoint)")
+    }
     byBatch.values.toSeq
   }
+
+  /** How long [[runBoundedWithTimeouts]] polls before it fails. */
+  private val BoundedDrainTimeoutMs = 180000L
 
   /** Run a streaming transform over a static directory incrementally and
     * collect the result into a memory table (AvailableNow: process what

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.Catalog
 
 /** Repository-level invariants: CATALOG.md is fresh, every main is
-  * documented, and two policies each live in exactly one main file. The
-  * query board's own invariants (unique names, an oracle and a concept
+  * documented, and a few policies each live in exactly one place in
+  * src/main. The query board's own invariants (unique names, an oracle and a concept
   * per query) are enforced by [[graft.queries.Registry]] at load; see
   * RegistrySpec. */
 class CatalogSpec extends AnyFunSuite {
@@ -48,15 +48,20 @@ class CatalogSpec extends AnyFunSuite {
       s"mains named in neither README.md nor SKILL.md: $unnamed")
   }
 
+  private val mainRoot = java.nio.file.Paths.get("src/main/scala")
+
+  private def mainFiles: Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(mainRoot).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+  }
+
   /** Files under src/main/scala other than `owner` whose text matches
     * `needle`; fails if `owner` itself has moved. */
   private def usedOutside(needle: String, owner: String)
       : Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val own = root.resolve(owner)
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val own = mainRoot.resolve(owner)
+    val files = mainFiles
     assert(files.contains(own), s"$own moved: update this guard")
     files.filter(f => f != own &&
       needle.r.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
@@ -75,5 +80,33 @@ class CatalogSpec extends AnyFunSuite {
       usedOutside("""SparkSession\s*\.builder""", "graft/GraftSession.scala")
     assert(offenders.isEmpty,
       s"build sessions with GraftSession.local instead: ${offenders.mkString(", ")}")
+  }
+
+  test("the out-of-order guard text appears once in src/main/scala " +
+    "(one ordering guard for the per-key stream folds)") {
+    val needle = "out-of-order arrival across triggers"
+    val hits = mainFiles.flatMap(f => java.util.regex.Pattern.quote(needle)
+      .r.findAllIn(java.nio.file.Files.readString(f)).map(_ => f))
+    assert(hits == Seq(mainRoot.resolve("graft/streaming/EventStreams.scala")),
+      s"raise through EventStreams.outOfOrder instead: $hits")
+  }
+
+  test("setLastModified appears in src/main/scala only inside " +
+    "EventStreams.stageDrainBatches (one file stager)") {
+    val offenders =
+      usedOutside("setLastModified", "graft/streaming/EventStreams.scala")
+    assert(offenders.isEmpty,
+      s"stage through EventStreams.stageDrainBatches: ${offenders.mkString(", ")}")
+    val src = java.nio.file.Files.readString(
+      mainRoot.resolve("graft/streaming/EventStreams.scala"))
+    val start = src.indexOf("def stageDrainBatches(")
+    assert(start >= 0, "stageDrainBatches moved: update this guard")
+    // the stager's body ends at the next member at object indentation
+    val end = """\n  \S""".r.findFirstMatchIn(src.substring(start))
+      .map(start + _.start).getOrElse(src.length)
+    val outside = "setLastModified".r.findAllMatchIn(src)
+      .map(_.start).filter(i => i < start || i >= end).toSeq
+    assert(outside.isEmpty,
+      s"setLastModified outside stageDrainBatches at offsets $outside")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.Fixtures.tempDir
 
 /** The scale-adaptive scan fan-out (Tables.scanParallelism /
   * fanOutScan / loadFanned): the r20 optimization that un-pins
@@ -10,7 +11,7 @@ class FanOutSpec extends SparkSpec {
 
   private def writeParquet(df: org.apache.spark.sql.DataFrame,
                            parts: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fan").toString
+    val dir = tempDir("graft_fan")
     df.repartition(parts).write.mode("overwrite").parquet(dir)
     dir
   }

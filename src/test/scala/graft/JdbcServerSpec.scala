@@ -2,6 +2,7 @@ package graft
 
 import java.sql.DriverManager
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** End-to-end JDBC: start the Thrift server on the shared session,
   * connect with the bundled hive-jdbc driver, run the flagship
@@ -11,7 +12,7 @@ class JdbcServerSpec extends SparkSpec {
   test("hive-jdbc client queries registered tables over the wire") {
     // keep derby/metastore scratch out of the repo tree
     System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("graft_derby").toString)
+      tempDir("graft_derby"))
     // Hive metastore init PROBES the in-memory Derby db (create →
     // "already exists" → retry) by design: ~1600 ERROR/stack-trace
     // lines per run that carry zero signal and bury real failures.

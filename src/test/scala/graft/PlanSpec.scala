@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** Physical-plan assertions: the scale behaviors SURVEY.md §4 promises —
   * filter/column pushdown to the parquet scan, broadcast only for true
@@ -253,8 +254,7 @@ class PlanSpec extends SparkSpec {
     val emb = Tables.load(spark, dir, "embeddings")
     val cbs = graft.sim.Similarity.pqCodebooks(emb, "vec_id",
       "embedding", m = 4, k = 8)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pqplan")
-      .toString
+    val tmp = tempDir("graft_pqplan")
     graft.sim.Similarity.pqEncode(emb, "vec_id", "embedding", cbs)
       .write.mode("overwrite").parquet(s"$tmp/codes")
     val q = emb.filter(col("vec_id") === 0)
@@ -347,8 +347,7 @@ class PlanSpec extends SparkSpec {
 
   test("dynamic partition pruning: a filtered dim prunes the " +
     "partitioned fact's scan at runtime") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp")
-      .toString
+    val tmp = tempDir("graft_dpp")
     Tables.load(spark, dir, "lineitem")
       .withColumn("flag_part", col("l_returnflag"))
       .write.mode("overwrite").partitionBy("flag_part")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Fixtures.tempDir
 
 /** Shared local session for operator specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -54,7 +55,7 @@ object SparkSpec {
       // bucketed-table specs use saveAsTable; keep the warehouse out of
       // the repo working tree
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        tempDir("graft_wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     GraftSession.tune(s)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.Fixtures.tempDir
 
 /** The correctness dump must report a query that fails to run, and a
   * failure must not cost the queries beside it their output. */
@@ -11,8 +12,7 @@ class VerifySpec extends SparkSpec {
 
   test("dump reports a broken query as failed and still writes the " +
     "healthy query beside it") {
-    val out = java.nio.file.Files.createTempDirectory("graft_verify")
-      .toString
+    val out = tempDir("graft_verify")
     val qs: Map[String, (SparkSession, String) => DataFrame] = Map(
       "ok_query" -> ((s, d) => Tables.load(s, d, "region")),
       // BenchSpec's probe: raise_error in the FILTER is load-bearing,

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** The incremental capstone materialization's two contracts, proven
   * across real AvailableNow invocations:
@@ -50,7 +51,7 @@ class BlockedDatasetIncrementalSpec extends SparkSpec {
 
   test("two AvailableNow invocations fold two waves exactly-once and " +
     "land on the batch build; a no-new-files invocation is a no-op") {
-    val tmp = Files.createTempDirectory("graft_bdi_spec")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_bdi_spec"))
     val in = s"$tmp/in"; val work = s"$tmp/work"
     val wave1 = events(Seq(1L, 2L, 3L, 4L, 5L))
     val wave2 = events(Seq(6L, 7L, 8L, 9L))
@@ -103,7 +104,7 @@ class BlockedDatasetIncrementalSpec extends SparkSpec {
 
   test("the bucket count is immutable layout: a second invocation " +
     "with a different count is refused instead of corrupting the grid") {
-    val tmp = Files.createTempDirectory("graft_bdi_layout")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_bdi_layout"))
     val in = s"$tmp/in"; val work = s"$tmp/work"
     events(Seq(1L, 2L, 3L)).coalesce(1).write
       .mode("overwrite").parquet(in)
@@ -119,7 +120,7 @@ class BlockedDatasetIncrementalSpec extends SparkSpec {
 
   test("raw-store append is idempotent under batch replay: " +
     "re-applying the same wave's files overwrites, never duplicates") {
-    val tmp = Files.createTempDirectory("graft_bdi_replay")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_bdi_replay"))
     val in = s"$tmp/in"; val work = s"$tmp/work"
     val wave1 = events(Seq(1L, 2L, 3L, 4L, 5L))
     wave1.coalesce(1).write.mode("overwrite").parquet(in)
@@ -150,7 +151,7 @@ class BlockedDatasetIncrementalSpec extends SparkSpec {
   test("raw-store compaction folds closed batches into one bounded " +
     "per-bucket generation; recomputes read the compacted base " +
     "bit-identically and exactly-once survives compact-then-append") {
-    val tmp = Files.createTempDirectory("graft_bdi_compact")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_bdi_compact"))
     val in = s"$tmp/in"; val work = s"$tmp/work"
     def rawBatchDirs(): Set[String] =
       new java.io.File(s"$work/raw").listFiles().toSeq
@@ -218,7 +219,7 @@ class BlockedDatasetIncrementalSpec extends SparkSpec {
     "copy (pre-rename crash) and a half-built generation dir " +
     "(pre-flip crash) are cleared, and the live raw store still " +
     "holds every event exactly once") {
-    val tmp = Files.createTempDirectory("graft_bdi_crash")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_bdi_crash"))
     val in = s"$tmp/in"; val work = s"$tmp/work"
     val all = events((1L to 9L).toSeq)
     all.coalesce(1).write.mode("overwrite").parquet(in)

@@ -2,6 +2,7 @@ package graft.clif
 
 import java.nio.file.{Files, Path}
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** The incremental vitals ETL: exactly-once file processing across
   * invocations, same transform as batch. */
@@ -16,8 +17,8 @@ class ClifEtlIncrementalSpec extends SparkSpec {
     s"1|10|${1583020920L + base}|NOT A VITAL|9|")
 
   test("AvailableNow runs process each landed file exactly once") {
-    val in = Files.createTempDirectory("graft_inc_in")
-    val out = Files.createTempDirectory("graft_inc_out").toString
+    val in = java.nio.file.Paths.get(tempDir("graft_inc_in"))
+    val out = tempDir("graft_inc_out")
     // batch-shaped extract pins the schema snapshot
     Files.writeString(in.resolve("C19_FLOW_LDS.txt"),
       (header +: rows(0)).mkString("\n"))

@@ -2,6 +2,7 @@ package graft.clif
 
 import java.nio.file.{Files, Path}
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** End-to-end drive of the ETL entry point over a generated raw extract:
   * every contract table is produced, contract-conform, and non-empty
@@ -21,7 +22,7 @@ class ClifEtlSpec extends SparkSpec {
   private val T2 = T0 + 7200
 
   private lazy val inDir: Path = {
-    val dir = Files.createTempDirectory("graft_etl_in")
+    val dir = java.nio.file.Paths.get(tempDir("graft_etl_in"))
     write(dir, "C19_FLOW_LDS",
       "C19_PATIENT_ID|C19_HAR_ID|recorded_time|flo_meas_name|meas_value|meas_site_name",
       Seq(
@@ -97,7 +98,7 @@ class ClifEtlSpec extends SparkSpec {
   }
 
   test("ClifEtl produces all 15 contract tables, contract-ok, expected rows") {
-    val outDir = Files.createTempDirectory("graft_etl_out").toString
+    val outDir = tempDir("graft_etl_out")
     val results = ClifEtl.run(spark, inDir.toString, outDir)
     val byName = results.map(r => r._1 -> ((r._2, r._3))).toMap
 

@@ -2,6 +2,7 @@ package graft.media
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -142,7 +143,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("ingestBinaryDir: binaryFile source -> media rows, glob filter, " +
        "stable ids across re-ingest, payload bytes intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bin").toString
+    val dir = tempDir("graft_bin")
     val a = Array[Byte](1, 2, 3, 4)
     val b = Array[Byte](9, 8, 7)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "x.jpg"), a)
@@ -169,7 +170,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("ingestBinaryDir: repeated basenames across subdirs get DISTINCT " +
        "ids (relative-path keying), and ids survive root relocation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bin2").toString
+    val dir = tempDir("graft_bin2")
     for (shard <- Seq("s0", "s1", "s2")) {
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(dir, shard))
@@ -184,7 +185,7 @@ class MultimodalSpec extends SparkSpec {
       "s2/part-00000.jpg"))
     assert(got.values.toSet.size == 3) // basename keying would give 1
     // relocate the tree: relative paths (hence ids) are unchanged
-    val moved = java.nio.file.Files.createTempDirectory("graft_bin3")
+    val moved = java.nio.file.Paths.get(tempDir("graft_bin3"))
       .resolve("deeper").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(moved))
     for (shard <- Seq("s0", "s1", "s2")) {

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class MergeUpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -19,8 +20,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("mergeUpsert: updates replace, inserts add, untouched " +
     "partitions' files are byte-identical (never rewritten)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrg").toString +
-      "/tbl"
+    val dir = tempDir("graft_mrg") + "/tbl"
     Seq((1L, "a", "v1"), (2L, "a", "v2"), (3L, "b", "v3"),
         (4L, "b", "v4"), (5L, "c", "v5"))
       .toDF("id", "p", "payload")
@@ -48,8 +48,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("mergeUpsert: idempotent — re-merging the same updates is a " +
     "no-op on the final state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrg2").toString +
-      "/tbl"
+    val dir = tempDir("graft_mrg2") + "/tbl"
     Seq((1L, "a", "v1"), (2L, "b", "v2")).toDF("id", "p", "payload")
       .write.partitionBy("p").parquet(dir)
     val updates = Seq((2L, "b", "v2-NEW")).toDF("id", "p", "payload")
@@ -67,8 +66,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("mergeUpsert: empty updates touch nothing; partCol as key is " +
     "rejected (stranded-row hazard)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrg3").toString +
-      "/tbl"
+    val dir = tempDir("graft_mrg3") + "/tbl"
     Seq((1L, "a", "v1")).toDF("id", "p", "payload")
       .write.partitionBy("p").parquet(dir)
     val before = listFiles(dir)
@@ -99,8 +97,7 @@ class MergeUpsertSpec extends SparkSpec {
     val params = SCTest.Parameters.default
       .withMinSuccessfulTests(6).withWorkers(1)
     val prop = Prop.forAll(batchGen) { batches =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_mrg_prop").toString + "/tbl"
+      val dir = tempDir("graft_mrg_prop") + "/tbl"
       Seq((100L, "p1", "base")).toDF("id", "p", "payload")
         .write.partitionBy("p").parquet(dir)
       val model = scala.collection.mutable.Map(100L -> ("p1", "base"))
@@ -136,8 +133,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("incrementalAggMv: three loads == one-shot aggregation; count " +
     "merges by sum; schema stays pinned across loads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv").toString +
-      "/mv"
+    val dir = tempDir("graft_mv") + "/mv"
     val all = Seq(
       (1L, "d1", "a", 1.5), (2L, "d1", "a", 2.5), (3L, "d1", "b", 10.0),
       (4L, "d2", "a", 4.0), (5L, "d2", "b", 5.0), (6L, "d2", "b", 6.0),
@@ -164,8 +160,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("incrementalAggMv: untouched partitions' files never rewritten; " +
     "per-load cost is O(touched)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv2").toString +
-      "/mv"
+    val dir = tempDir("graft_mv2") + "/mv"
     Merge.incrementalAggMv(spark, dir,
       mvBatch(Seq((1L, "d1", "a", 1.0), (2L, "d2", "a", 2.0))),
       "d", Seq("k"), mvAggs)
@@ -187,8 +182,7 @@ class MergeUpsertSpec extends SparkSpec {
   test("scd2Upsert: change closes + opens, unchanged no-op, insert " +
     "opens; idempotent on final state; untouched buckets not rewritten") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_scd2s")
-      .toString + "/t"
+    val dir = tempDir("graft_scd2s") + "/t"
     val t0 = ts("2024-01-01 00:00:00"); val t1 = ts("2024-02-01 00:00:00")
     val base = Seq((1L, "a", t0), (2L, "b", t0), (3L, "c", t0))
       .toDF("k", "v", "ts")

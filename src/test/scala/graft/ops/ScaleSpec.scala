@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
@@ -58,10 +59,7 @@ class ScaleSpec extends SparkSpec {
 
   test("compactParquet: sizes output files from input bytes, " +
     "content-identical") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact")
-      .toString
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+    val base = tempDir("graft_compact")
     val in = s"$base/in"
     val out = s"$base/out"
     val df = (1 to 5000).map(i => (i.toLong, s"payload_$i")).toDF("id", "v")
@@ -98,9 +96,7 @@ class ScaleSpec extends SparkSpec {
   test("zorderWrite: per-file spans narrow on BOTH dims vs single-column" +
     " sorts; rows survive byte-identical") {
     import org.apache.spark.sql.functions.{col, rand, floor => ffloor}
-    val base = java.nio.file.Files.createTempDirectory("graft_z").toString
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+    val base = tempDir("graft_z")
     // two independent uniform dims — the adversarial case for any
     // single-column sort
     val df = spark.range(20000).select(col("id"),
@@ -135,7 +131,7 @@ class ScaleSpec extends SparkSpec {
   test("zorderWrite: empty input / all-null layout column fails with a " +
     "meaningful message, not an unboxing NPE") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
+    val base = tempDir("zorder")
     val empty = Seq.empty[(Long, Long)].toDF("x", "y")
     val e1 = intercept[IllegalArgumentException] {
       Scale.zorderWrite(empty, "x", "y", s"$base/e1")

@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -346,8 +347,7 @@ class SimilaritySpec extends SparkSpec {
   test("ivfKnnJoinIndexed == ivfKnnJoin on the same corpus and " +
     "centroids (the index is layout, not semantics)") {
     val df = clustered.toDF("vec_id", "embedding")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_kj").toString + "/idx"
+    val path = tempDir("graft_ivf_kj") + "/idx"
     val cents = Similarity.buildIvfIndex(df, "vec_id", "embedding", 8, path)
     val queries = df.filter(col("vec_id") % 5 === 0)
     val direct = Similarity.ivfKnnJoin(queries, df, "vec_id", "embedding",
@@ -363,7 +363,7 @@ class SimilaritySpec extends SparkSpec {
     "== unindexed query") {
     val df = clustered.toDF("vec_id", "embedding")
     val path =
-      java.nio.file.Files.createTempDirectory("graft_ivf_t").toString + "/idx"
+      tempDir("graft_ivf_t") + "/idx"
     val cents = Similarity.buildIvfIndex(df, "vec_id", "embedding", 8, path)
     assert(Similarity.loadIvfCentroids(spark, path).toSeq.map(_.toSeq) ==
       cents.toSeq.map(_.toSeq))
@@ -387,7 +387,7 @@ class SimilaritySpec extends SparkSpec {
     // repartition(cell) in buildIvfIndex must bound it to 1 per cell
     val df = clustered.toDF("vec_id", "embedding").repartition(6)
     val path =
-      java.nio.file.Files.createTempDirectory("graft_ivf_f").toString + "/idx"
+      tempDir("graft_ivf_f") + "/idx"
     Similarity.buildIvfIndex(df, "vec_id", "embedding", 8, path)
     val cellDirs = new java.io.File(path).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
@@ -403,7 +403,7 @@ class SimilaritySpec extends SparkSpec {
     "files-per-cell stay bounded") {
     val all = clustered.toDF("vec_id", "embedding")
     val path =
-      java.nio.file.Files.createTempDirectory("graft_ivf_a").toString + "/idx"
+      tempDir("graft_ivf_a") + "/idx"
     // build on the first half; append the second half (multi-partition)
     val cents = Similarity.buildIvfIndex(
       all.filter(col("vec_id") < 16), "vec_id", "embedding", 4, path)
@@ -666,8 +666,7 @@ class SimilaritySpec extends SparkSpec {
 
     // persisted index: load == built books; indexed query == in-memory;
     // frozen-books append == fresh encode of the same rows
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqidx")
-      .toString + "/idx"
+    val dir = tempDir("graft_pqidx") + "/idx"
     val first = df.filter(col("vec_id") < 8)
     val rest = df.filter(col("vec_id") >= 8)
     val built = Similarity.buildPqIndex(first, "vec_id", "embedding",

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** [[CdxSource]] + [[graft.text.UrlOps.surtKey]] contract: the SURT
   * canonicalization cases, the CDXJ line scan (typed columns, junk
@@ -35,7 +36,7 @@ class CdxSpec extends SparkSpec {
   }
 
   private def stageLines(name: String, lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdx")
+    val dir = java.nio.file.Paths.get(tempDir("graft_cdx"))
     val p = dir.resolve(name)
     java.nio.file.Files.write(p,
       lines.mkString("\n").getBytes("UTF-8"))
@@ -96,7 +97,7 @@ class CdxSpec extends SparkSpec {
       gzOne(rec(1, "https://x/1", "one")),
       gzOne(rec(2, "https://x/2", "two")))
     val offsets = members.scanLeft(0L)(_ + _.length).init
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdxf")
+    val dir = java.nio.file.Paths.get(tempDir("graft_cdxf"))
     val p = dir.resolve("s.warc.gz")
     java.nio.file.Files.write(p, members.flatten.toArray)
     // fetch records 0 and 2 only (skip 1 — that is the point),
@@ -125,7 +126,7 @@ class CdxSpec extends SparkSpec {
     "negative) quarantines BEFORE allocating — a drifted index " +
     "cannot OOM the task") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdxb")
+    val dir = java.nio.file.Paths.get(tempDir("graft_cdxb"))
     val p = dir.resolve("b.warc.gz")
     java.nio.file.Files.write(p, gzOne(rec(0, "https://x/0", "ok")))
     val out = CdxSource.readRecordsAt(spark,

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class FixedWidthSpec extends SparkSpec {
   import spark.implicits._
@@ -13,8 +14,7 @@ class FixedWidthSpec extends SparkSpec {
       (42L, "X", 0, 0.0, "AUTOMOBILE"),          // shortest name
       (999999999L, "Customer#999999999", 24, 9997.41, "MACHINERY")
     ).toDF("k", "name", "nk", "bal", "seg")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fw_spec")
-      .toString + "/data"
+    val dir = tempDir("graft_fw_spec") + "/data"
     FixedWidth.write(rows,
       Seq("%09d", "%-25s", "%03d", "%12.2f", "%-10s"), dir)
     val back = FixedWidth.read(spark, dir, Seq(
@@ -33,8 +33,7 @@ class FixedWidthSpec extends SparkSpec {
   }
 
   test("malformed numeric slices become null (cast-to-null), not errors") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fw_bad")
-      .toString + "/data"
+    val dir = tempDir("graft_fw_bad") + "/data"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "part-0.txt"),

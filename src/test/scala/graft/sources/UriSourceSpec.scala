@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** URI-scheme reader smoke: `file://` proves the scheme-dispatch path the
   * object-store schemes (s3a://, gs://) share — same reader, connector
@@ -19,7 +20,7 @@ class UriSourceSpec extends SparkSpec {
   }
 
   test("delimited flavor matches ClifEtl read defaults over a URI") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_uri")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_uri"))
     val f = tmp.resolve("x.txt")
     java.nio.file.Files.writeString(f, "a|b\n1|one\n2|two")
     val df = UriSource.delimited(spark, "file://" + f.toString)
@@ -133,7 +134,7 @@ class UriSourceSpec extends SparkSpec {
       "graftmock:///root/testdata/sf0.001/region.parquet")
     assert(pq.count() == 5 && pq.columns.contains("r_name"))
     // delimited through the same scheme
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mock")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_mock"))
     val f = tmp.resolve("x.txt")
     java.nio.file.Files.writeString(f, "a|b\n1|one\n2|two")
     val csv = UriSource.delimited(spark, "graftmock://" + f.toString)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** [[WarcSource.withHttpMessage]] contract: chunked transfer
   * decoding (extensions, trailers, upper/lower hex, bare-LF ends),
@@ -162,7 +163,7 @@ class WarcHttpSpec extends SparkSpec {
           "Content-Type" -> "application/http; msgtype=response"),
           payload)
       }
-    val dir = java.nio.file.Files.createTempDirectory("graft_http")
+    val dir = java.nio.file.Paths.get(tempDir("graft_http"))
     val p = dir.resolve("h.warc")
     java.nio.file.Files.write(p, WarcSource.writeWarc(recs))
     val df = WarcSource.withHttpMessage(

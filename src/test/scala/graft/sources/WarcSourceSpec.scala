@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 /** [[WarcSource]] contract: record roundtrip (headers + payload),
   * WET conversion records through the same reader, the quarantine
@@ -25,7 +26,7 @@ class WarcSourceSpec extends SparkSpec {
       payload)
 
   private def stage(name: String, bytes: Array[Byte]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc")
+    val dir = java.nio.file.Paths.get(tempDir("graft_warc"))
     val p = dir.resolve(name)
     java.nio.file.Files.write(p, bytes)
     p.toString
@@ -280,8 +281,7 @@ class WarcSourceSpec extends SparkSpec {
       (s"https://x/$i", s"text body $i with é"))
     val df = rows.toDF("uri", "txt").repartition(4)
     for (gz <- Seq(false, true)) {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_wet").toString
+      val dir = tempDir("graft_wet")
       WarcSource.writeWet(df, "uri", "txt", dir,
         warcDate = "2026-08-16T00:00:00Z", gzip = gz)
       val back = WarcSource.readRecords(spark, dir + "/*")

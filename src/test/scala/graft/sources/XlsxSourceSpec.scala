@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class XlsxSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -12,7 +13,7 @@ class XlsxSourceSpec extends SparkSpec {
       Seq("sodium", null, "x"), // gap cell -> null
       Seq("ph", "VBG", null))
     val bytes = XlsxSource.writeXlsx(rows, "vocab")
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx").toString
+    val dir = tempDir("graft_xlsx")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "v.xlsx"), bytes)
     assert(XlsxSource.sheetNames(bytes) == Seq("vocab"))
@@ -63,7 +64,7 @@ class XlsxSourceSpec extends SparkSpec {
 
   test("readDistributed: a tree of workbooks, columns aligned by " +
     "header name per file, reordered columns still align") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx2").toString
+    val dir = tempDir("graft_xlsx2")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(dir, "shard0"))
     java.nio.file.Files.createDirectories(

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class EventStreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +20,7 @@ class EventStreamsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir)
 
   test("windowedCounts over AvailableNow matches batch aggregation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     writeEvents(s"$dir/in")
     val stream = EventStreams.readStream(spark, s"$dir/in")
     // complete mode: append would hold back windows the final watermark
@@ -43,7 +44,7 @@ class EventStreamsSpec extends SparkSpec {
     // local disk instead of living in executor heap — a week-long
     // sessionization window at corpus scale does not fit in memory.
     // The engine must be provider-agnostic; results must be identical.
-    val dir = java.nio.file.Files.createTempDirectory("graft_rocks").toString
+    val dir = tempDir("graft_rocks")
     writeEvents(s"$dir/in")
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
@@ -79,7 +80,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("stateful sessionize: gap splits sessions, state carries counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream2").toString
+    val dir = tempDir("graft_stream2")
     writeEvents(s"$dir/in")
     val stream = EventStreams.readStream(spark, s"$dir/in")
     val out = EventStreams.runAvailableNow(
@@ -96,7 +97,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("sessionize and sessionizeRetained: null user_id rows form one " +
     "session group (batch PARTITION BY user_id), not a decode error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nullkey").toString
+    val dir = tempDir("graft_nullkey")
     Seq(
       (0L, ts("2024-01-01 00:10:00"), Option(1L), "view", 1.0, "{}"),
       (1L, ts("2024-01-01 00:15:00"), None, "view", 1.0, "{}"),
@@ -125,7 +126,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("dedupStream: first occurrence kept, AvailableNow equals batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream4").toString
+    val dir = tempDir("graft_stream4")
     // duplicate event_ids — same ts AND different ts (the content-hash
     // re-ingest case): key-only dedup must drop both kinds
     Seq(
@@ -146,38 +147,19 @@ class EventStreamsSpec extends SparkSpec {
 
   test("upsertStream: per-batch merge — create, revise, insert; " +
        "in-batch duplicate keys keep the latest; replay converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ups").toString
+    val dir = tempDir("graft_ups")
     val in = s"$dir/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    // batch 1: creates the table (incl. an in-batch duplicate of key 1 —
-    // the later-ts row must win)
-    Seq(
-      (1L, ts("2024-01-01 00:10:00"), 1L, "view", 1.0, "{}"),
-      (1L, ts("2024-01-01 00:20:00"), 1L, "view", 1.5, "{}"),
-      (2L, ts("2024-01-01 00:30:00"), 2L, "click", 2.0, "{}")
-    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/b1")
-    // batch 2: revises key 2, inserts key 3 (new partition value)
-    Seq(
-      (2L, ts("2024-01-01 01:00:00"), 2L, "click", 20.0, "{}"),
-      (3L, ts("2024-01-01 01:10:00"), 3L, "buy", 3.0, "{}")
-    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/b2")
-    val now = System.currentTimeMillis()
-    def stage(sub: String, prefix: String, mtime: Long): Unit = {
-      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir, sub))
-      try ls.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.endsWith(".parquet") && !n.startsWith("_") &&
-            !n.startsWith(".")) {
-          val dst = java.nio.file.Paths.get(in, s"$prefix-$n")
-          java.nio.file.Files.copy(p, dst)
-          dst.toFile.setLastModified(mtime); ()
-        }
-      } finally ls.close()
-    }
-    stage("b1", "b1", now - 60000L)
-    stage("b2", "b2", now)
+    EventStreams.stageDrainBatches(in, Seq(
+      // batch 1: creates the table (incl. an in-batch duplicate of key
+      // 1 — the later-ts row must win)
+      events(Seq(
+        (1L, ts("2024-01-01 00:10:00"), 1L, "view", 1.0, "{}"),
+        (1L, ts("2024-01-01 00:20:00"), 1L, "view", 1.5, "{}"),
+        (2L, ts("2024-01-01 00:30:00"), 2L, "click", 2.0, "{}"))),
+      // batch 2: revises key 2, inserts key 3 (new partition value)
+      events(Seq(
+        (2L, ts("2024-01-01 01:00:00"), 2L, "click", 20.0, "{}"),
+        (3L, ts("2024-01-01 01:10:00"), 3L, "buy", 3.0, "{}")))))
     val sink = s"$dir/sink"
     def run(ck: String): Set[(Long, String, Double)] = {
       EventStreams.upsertStream(
@@ -196,44 +178,28 @@ class EventStreamsSpec extends SparkSpec {
     assert(run(s"$dir/ck2") == expected)
   }
 
-  /** Stage rows as ONE parquet file with a controlled modification time
-    * so the file source (oldest-mtime-first) replays staged files in
-    * exactly the order given — the harness for out-of-order arrival. */
-  private def stageFile(dir: String, mtimeMs: Long,
-                        rows: Seq[(Long, java.sql.Timestamp, Long, String,
-                          Double, String)]): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stage").toString
+  private def events(rows: Seq[(Long, java.sql.Timestamp, Long, String,
+                     Double, String)]) =
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.startsWith("part-")).head
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val dest = java.nio.file.Paths.get(dir, s"f$mtimeMs.parquet")
-    java.nio.file.Files.copy(part.toPath, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    ()
-  }
 
   test("sessionizeRetained: out-of-event-time-order micro-batches " +
     "(maxFilesPerTrigger=1) still produce exact sessions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ooo").toString
-    val base = 1700000000000L
+    val dir = tempDir("graft_ooo")
     // batch 1 jumps ahead to 20:00; batch 2 delivers a 10:20 event that
     // belongs INSIDE batch 1's first session — the cross-trigger
     // disorder sessionize's guard rejects. 12h watermark covers it.
-    stageFile(s"$dir/in", base, Seq(
-      (0L, ts("2024-01-01 10:00:00"), 1L, "view", 1.0, "{}"),
-      (1L, ts("2024-01-01 10:10:00"), 1L, "view", 1.0, "{}"),
-      (2L, ts("2024-01-01 20:00:00"), 1L, "view", 1.0, "{}"),
-      (3L, ts("2024-01-01 09:55:00"), 2L, "view", 1.0, "{}")))
-    stageFile(s"$dir/in", base + 10000, Seq(
-      (4L, ts("2024-01-01 10:20:00"), 1L, "view", 1.0, "{}")))
-    // far-future sentinel on its OWN user: advances the watermark past
-    // every real session's end + gap, so the trailing no-data batch
-    // fires each user's event-time timeout and flushes final sessions
-    stageFile(s"$dir/in", base + 20000, Seq(
-      (5L, ts("2024-01-02 23:00:00"), -1L, "flush", 0.0, "{}")))
+    // Batch 3 is a far-future sentinel on its OWN user: it advances the
+    // watermark past every real session's end + gap, so the trailing
+    // no-data batch fires each user's event-time timeout and flushes
+    // final sessions.
+    EventStreams.stageDrainBatches(s"$dir/in", Seq(
+      events(Seq(
+        (0L, ts("2024-01-01 10:00:00"), 1L, "view", 1.0, "{}"),
+        (1L, ts("2024-01-01 10:10:00"), 1L, "view", 1.0, "{}"),
+        (2L, ts("2024-01-01 20:00:00"), 1L, "view", 1.0, "{}"),
+        (3L, ts("2024-01-01 09:55:00"), 2L, "view", 1.0, "{}"))),
+      events(Seq((4L, ts("2024-01-01 10:20:00"), 1L, "view", 1.0, "{}"))),
+      events(Seq((5L, ts("2024-01-02 23:00:00"), -1L, "flush", 0.0, "{}")))))
     val stream = EventStreams.readStream(spark, s"$dir/in",
       options = Map("maxFilesPerTrigger" -> "1"))
     val out = EventStreams.runAvailableNow(
@@ -254,16 +220,14 @@ class EventStreamsSpec extends SparkSpec {
 
   test("sessionizeRetained: watermark finalizes early sessions " +
     "incrementally (no sentinel), later sessions stay pending") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ooo2").toString
-    val base = 1700000000000L
-    stageFile(s"$dir/in", base, Seq(
-      (0L, ts("2024-01-01 01:00:00"), 7L, "view", 1.0, "{}")))
+    val dir = tempDir("graft_ooo2")
     // same user goes quiet, then reappears 23h later: the new max event
     // time pulls the watermark (12h delay) past 01:00 + gap, so the
     // trailing batch's timeout flushes the first session while the
     // 23:50 session is still open in state
-    stageFile(s"$dir/in", base + 10000, Seq(
-      (1L, ts("2024-01-01 23:50:00"), 7L, "view", 1.0, "{}")))
+    EventStreams.stageDrainBatches(s"$dir/in", Seq(
+      events(Seq((0L, ts("2024-01-01 01:00:00"), 7L, "view", 1.0, "{}"))),
+      events(Seq((1L, ts("2024-01-01 23:50:00"), 7L, "view", 1.0, "{}")))))
     val stream = EventStreams.readStream(spark, s"$dir/in",
       options = Map("maxFilesPerTrigger" -> "1"))
     val out = EventStreams.runAvailableNow(
@@ -283,7 +247,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("user_id", "ts")
       .selectExpr("cast(null as long) as event_id", "ts", "user_id",
         "'x' as event_type", "1.0 as value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream3").toString
+    val dir = tempDir("graft_stream3")
     val q = EventStreams.sessionize(events, gapSeconds = 1800,
         evictIdleAfterMs = Some(500L)).toDF()
       .writeStream.format("memory").queryName("sess_live")
@@ -324,7 +288,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "ts", "value")
       .selectExpr("event_id", "ts", "1L as user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stk").toString
+    val dir = tempDir("graft_stk")
     val q = EventStreams.windowedTopK(events, "1 hour", k = 2)
       .writeStream.format("memory").queryName("stk_live")
       .outputMode(OutputMode.Complete())
@@ -345,15 +309,14 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("ewmaStream: exact decimal recurrence carried across triggers; " +
-    "out-of-order arrival across triggers throws") {
+  test("ewmaStream: exact decimal recurrence carried across triggers") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sewma").toString
+    val dir = tempDir("graft_sewma")
     val q = EventStreams.ewmaStream(events, alpha = 0.3).toDF()
       .writeStream.format("memory").queryName("ewma_live")
       .outputMode(OutputMode.Append())
@@ -372,31 +335,49 @@ class EventStreamsSpec extends SparkSpec {
         .map(o => o.event_id -> o.ewma).toMap
       assert(got == Map(1L -> 10.0, 2L -> 13.0, 3L -> 21.1), got.toString)
     } finally q.stop()
+  }
 
-    // a later trigger with an earlier event time must fail loudly
-    val ms2 = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-    val ev2 = ms2.toDF().toDF("event_id", "user_id", "ts", "value")
-      .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
-        "value", "'{}' as props")
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_sewma2").toString
-    val q2 = EventStreams.ewmaStream(ev2, alpha = 0.3).toDF()
-      .writeStream.format("memory").queryName("ewma_ooo")
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$dir2/ckpt")
-      .start()
-    try {
-      ms2.addData((1L, 1L, ts("2024-01-01 00:10:00"), 1.0))
-      q2.processAllAvailable()
-      ms2.addData((2L, 1L, ts("2024-01-01 00:05:00"), 2.0))
-      val ex = graft.SparkSpec.withExpectedTaskFailures {
-        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          q2.processAllAvailable()
+  test("every ordered per-key fold throws, naming itself, when a later " +
+    "trigger carries an earlier event than its carried state") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val folds: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "ewmaStream" -> (EventStreams.ewmaStream(_, alpha = 0.3).toDF()),
+      "cusumStream" -> (EventStreams.cusumStream(_, target = 1.0,
+        slack = 0.5, threshold = 10.0).toDF()),
+      "rateLimitStream" -> (EventStreams.rateLimitStream(_, capacity = 2,
+        refillPerSec = 1.0).toDF()),
+      "holtStream" -> (EventStreams.holtStream(_, alpha = 0.5,
+        beta = 0.3).toDF()),
+      "zscoreStream" -> (EventStreams.zscoreStream(_).toDF()),
+      "madStream" -> (EventStreams.madStream(_).toDF()),
+      "funnelStream" -> (EventStreams.funnelStream(_,
+        Seq("view", "click")).toDF()))
+    for ((op, fold) <- folds) {
+      val ms = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
+      val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
+        .selectExpr("event_id", "ts", "user_id", "'view' as event_type",
+          "value", "'{}' as props")
+      val q = fold(events).writeStream.format("memory")
+        .queryName(s"ooo_$op").outputMode(OutputMode.Append())
+        .option("checkpointLocation", s"${tempDir("graft_sooo")}/ckpt")
+        .start()
+      try {
+        ms.addData((1L, 1L, ts("2024-01-01 00:10:00"), 1.0))
+        q.processAllAvailable()
+        ms.addData((2L, 1L, ts("2024-01-01 00:05:00"), 2.0))
+        val ex = graft.SparkSpec.withExpectedTaskFailures {
+          intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+            q.processAllAvailable()
+          }
         }
-      }
-      assert(ex.getMessage.contains("ewmaStream") ||
-        Option(ex.getCause).exists(_.toString.contains("ewmaStream")),
-        ex.toString)
-    } finally q2.stop()
+        val chain = Iterator.iterate[Throwable](ex)(_.getCause)
+          .takeWhile(_ != null).map(_.toString).mkString(" | ")
+        assert(chain.contains(s"$op: event 2 for user 1") &&
+          chain.contains("out-of-order arrival across triggers"), chain)
+      } finally q.stop()
+    }
   }
 
   test("cusumStream: state carried across triggers equals the batch " +
@@ -407,7 +388,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_scus").toString
+    val dir = tempDir("graft_scus")
     // target+slack = 10, threshold 15
     val q = EventStreams.cusumStream(events, target = 8.0, slack = 2.0,
         threshold = 15.0).toDF()
@@ -456,7 +437,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "0.0 as value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdc").toString
+    val dir = tempDir("graft_sdc")
     val q = EventStreams.windowedDistinctUsers(events, "1 hour",
         "30 minutes")
       .writeStream.format("memory").queryName("sdc_live")
@@ -492,7 +473,7 @@ class EventStreamsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, java.sql.Timestamp, Option[Double])]
     val events = ms.toDF().toDF("event_id", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_spsi").toString
+    val dir = tempDir("graft_spsi")
     val q = EventStreams.psiStream(events, "value",
         boundaries = Seq(5.0), refShares = Seq(0.5, 0.5),
         windowLen = "1 day", watermark = "30 minutes")
@@ -538,8 +519,7 @@ class EventStreamsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, java.sql.Timestamp, Option[Double])]
     val events = ms.toDF().toDF("event_id", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shel")
-      .toString
+    val dir = tempDir("graft_shel")
     // 3 bins; the reference NEVER saw the top bin (share 0) — the
     // psi twin would need a Laplace guard, this scores it 0
     val q = EventStreams.hellingerStream(events, "value",
@@ -580,7 +560,7 @@ class EventStreamsSpec extends SparkSpec {
     "restores recurrence state and continues without reprocessing") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckr").toString
+    val dir = tempDir("graft_ckr")
     // FILE sink, not memory: the memory sink refuses checkpoint
     // recovery (no durable commit log) — the restart contract only
     // exists for transactional sinks
@@ -638,7 +618,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "event_type")
       .selectExpr("event_id", "ts", "user_id", "event_type",
         "0.0 as value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sfn").toString
+    val dir = tempDir("graft_sfn")
     val q = EventStreams.funnelStream(events,
         Seq("view", "click", "purchase")).toDF()
       .writeStream.format("memory").queryName("fun_live")
@@ -678,7 +658,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_szsp").toString
+    val dir = tempDir("graft_szsp")
     val q = EventStreams.zscoreStream(events, lookback = 10,
         zThreshold = 3.0, minObs = 4).toDF()
       .writeStream.format("memory").queryName("zs_live")
@@ -720,8 +700,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shllp")
-      .toString
+    val dir = tempDir("graft_shllp")
     val q = EventStreams.hllDistinctStream(events, "1 hour", "1 hour")
       .writeStream.format("memory").queryName("hll_live")
       .outputMode(OutputMode.Append())
@@ -778,8 +757,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_skmvp")
-      .toString
+    val dir = tempDir("graft_skmvp")
     val q = EventStreams.kmvDistinctStream(events, k = 8,
         windowLenSec = 3600L, watermark = "1 hour").toDF()
       .writeStream.format("memory").queryName("kmv_live")
@@ -830,8 +808,7 @@ class EventStreamsSpec extends SparkSpec {
       .selectExpr("event_id", "ts", "user_id",
         "CASE WHEN event_id % 3 = 0 THEN 'purchase' ELSE 'view' END " +
           "AS event_type", "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sbrp")
-      .toString
+    val dir = tempDir("graft_sbrp")
     val q = EventStreams.brierStream(events,
         least(greatest(col("value") / lit(100.0), lit(0.0)), lit(1.0)),
         col("event_type") === "purchase", "1 hour", "1 hour")
@@ -881,8 +858,7 @@ class EventStreamsSpec extends SparkSpec {
       .selectExpr("event_id", "ts", "user_id",
         "concat('t', event_id % 3) as event_type", "value",
         "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sfpp")
-      .toString
+    val dir = tempDir("graft_sfpp")
     val q = EventStreams.fingerprintStream(events,
         Seq("event_id", "event_type"), "1 hour", "1 hour")
       .writeStream.format("memory").queryName("fp_live")
@@ -936,8 +912,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_scalp")
-      .toString
+    val dir = tempDir("graft_scalp")
     val q = EventStreams.calibrationStream(events, col("value"),
         col("user_id") % 2 === 0, bins = 5)
       .writeStream.format("memory").queryName("cal_live")
@@ -996,8 +971,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_smadp")
-      .toString
+    val dir = tempDir("graft_smadp")
     val q = EventStreams.madStream(events, lookback = 3, k = 3).toDF()
       .writeStream.format("memory").queryName("mad_live")
       .outputMode(OutputMode.Append())
@@ -1040,7 +1014,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts", "value")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sh").toString
+    val dir = tempDir("graft_sh")
     val q = EventStreams.holtStream(events, alpha = 0.5, beta = 0.3)
       .toDF()
       .writeStream.format("memory").queryName("holt_live")
@@ -1081,7 +1055,7 @@ class EventStreamsSpec extends SparkSpec {
     val events = ms.toDF().toDF("event_id", "user_id", "ts")
       .selectExpr("event_id", "ts", "user_id", "'x' as event_type",
         "0.0 as value", "'{}' as props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_srl").toString
+    val dir = tempDir("graft_srl")
     val q = EventStreams.rateLimitStream(events, capacity = 2,
         refillPerSec = 0.1).toDF()
       .writeStream.format("memory").queryName("rate_live")
@@ -1117,9 +1091,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("intervalJoinStreamsOuter: unmatched lefts emit with nulls once " +
     "the watermark passes; stageDrainBatches + drainTail flush the tail") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sjo").toString
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+    val base = tempDir("graft_sjo")
     def mk(rows: Seq[(Long, java.sql.Timestamp, Long, String)]) =
       rows.toDF("event_id", "ts", "user_id", "event_type")
         .withColumn("value", lit(0.0)).withColumn("props", lit("{}"))
@@ -1176,9 +1148,7 @@ class EventStreamsSpec extends SparkSpec {
   test("intervalJoinStreamsFull: unmatched rows from BOTH sides emit " +
     "with nulls once the watermark passes — the join matrix's last " +
     "cell next to inner and left-outer") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sjf").toString
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+    val base = tempDir("graft_sjf")
     def mk(rows: Seq[(Long, java.sql.Timestamp, Long, String)]) =
       rows.toDF("event_id", "ts", "user_id", "event_type")
         .withColumn("value", lit(0.0)).withColumn("props", lit("{}"))
@@ -1236,32 +1206,15 @@ class EventStreamsSpec extends SparkSpec {
       (5L, "lorem ipsum dolor sit amet consectetur adipiscing elit"),
       (6L, "spark shuffle partition broadcast join window agg scan")
     ).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_snd").toString
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+    val base = tempDir("graft_snd")
     // three controlled files -> three micro-batches (mod-time ordered)
-    val now = System.currentTimeMillis()
-    Seq(Seq(1L, 2L), Seq(4L, 5L), Seq(3L, 6L)).zipWithIndex.foreach {
-      case (ids, i) =>
-        val d = s"$base/in/b$i"
-        docs.filter(col("doc_id").isin(ids: _*)).coalesce(1)
-          .write.parquet(d)
-        new java.io.File(d).listFiles.foreach(f =>
-          f.setLastModified(now - (10 - i) * 60000L))
-    }
-    // flatten the parquet files into one source dir
-    val inDir = new java.io.File(s"$base/src"); inDir.mkdirs()
-    (0 to 2).foreach { i =>
-      new java.io.File(s"$base/in/b$i").listFiles
-        .filter(_.getName.endsWith(".parquet")).foreach { f =>
-          val dst = new java.io.File(inDir, f"b$i%s_${f.getName}%s")
-          java.nio.file.Files.copy(f.toPath, dst.toPath)
-          dst.setLastModified(f.lastModified)
-        }
-    }
+    val inDir = s"$base/src"
+    EventStreams.stageDrainBatches(inDir,
+      Seq(Seq(1L, 2L), Seq(4L, 5L), Seq(3L, 6L))
+        .map(ids => docs.filter(col("doc_id").isin(ids: _*))))
     val stream = spark.readStream
       .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(inDir)
     val cands = EventStreams.nearDupCandidatesStream(stream, "doc_id",
       "text", shingleN = 3, numHashes = 32, bands = 16)
     val out = EventStreams.runAvailableNow(cands.toDF(),
@@ -1286,9 +1239,7 @@ class EventStreamsSpec extends SparkSpec {
     // arbitrary batch boundary, restart with the same checkpoint, and
     // the parquet sink (whose _spark_metadata commit log spark.read
     // honors) holds every result exactly once.
-    val base = java.nio.file.Files.createTempDirectory("graft_rst").toString
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+    val base = tempDir("graft_rst")
     def mk(rows: Seq[(Long, java.sql.Timestamp, Long, String)]) =
       rows.toDF("event_id", "ts", "user_id", "event_type")
         .withColumn("value", lit(0.0)).withColumn("props", lit("{}"))
@@ -1354,9 +1305,7 @@ class EventStreamsSpec extends SparkSpec {
       (i, s"chunk${i % 3} unique$i words$i tokens$i content$i more$i " +
         s"text$i here$i body$i tail$i"))
       .toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_sev").toString
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+    val base = tempDir("graft_sev")
     val inDir = new java.io.File(s"$base/in")
     docs.filter(col("doc_id") % 3 === 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir.toString)
@@ -1392,5 +1341,25 @@ class EventStreamsSpec extends SparkSpec {
     // unbounded final state
     assert(evicted.last < unbounded.last,
       s"evicted=$evicted unbounded=$unbounded")
+  }
+
+  test("runBoundedWithTimeouts fails loudly when the query terminates " +
+    "before its expected data batches") {
+    // a stateful no-timeout query over two staged files self-terminates
+    // after two data batches; expecting three must throw, not return
+    // the partial progress
+    val dir = tempDir("graft_short")
+    EventStreams.stageDrainBatches(s"$dir/in", Seq(
+      events(Seq((0L, ts("2024-01-01 00:10:00"), 1L, "view", 1.0, "{}"))),
+      events(Seq((1L, ts("2024-01-01 00:20:00"), 1L, "view", 2.0, "{}")))))
+    val stream = EventStreams.readStream(spark, s"$dir/in",
+      options = Map("maxFilesPerTrigger" -> "1"))
+    val ex = intercept[IllegalStateException] {
+      EventStreams.runBoundedWithTimeouts(
+        EventStreams.ewmaStream(stream).toDF(),
+        checkpoint = s"$dir/ckpt", expectDataBatches = 3)
+    }
+    assert(ex.getMessage.contains("terminated before") &&
+      ex.getMessage.contains("saw 2 of 3 data batches"), ex.getMessage)
   }
 }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures.tempDir
 
 class LshIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -43,8 +44,7 @@ class LshIndexSpec extends SparkSpec {
   test("build + probe == brute-force portable-hash jaccard; corpus text " +
     "never re-read at probe time (state only)") {
     val docs = fixture
-    val path = java.nio.file.Files
-      .createTempDirectory("lshidx").toString + "/idx"
+    val path = tempDir("lshidx") + "/idx"
     LshIndex.build(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
       path, shingleN = 3, numHashes = 32, bands = 16)
     val got = LshIndex.probe(docs.filter(col("doc_id") % 2 === 1),
@@ -76,12 +76,10 @@ class LshIndexSpec extends SparkSpec {
     val a = docs.filter(col("doc_id") % 2 === 0 && col("doc_id") < 4)
     val b = docs.filter(col("doc_id") % 2 === 0 && col("doc_id") >= 4)
     val batch = docs.filter(col("doc_id") % 2 === 1)
-    val p1 = java.nio.file.Files
-      .createTempDirectory("lshidx_inc").toString + "/idx"
+    val p1 = tempDir("lshidx_inc") + "/idx"
     LshIndex.build(a, "doc_id", "text", p1)
     LshIndex.append(b, "doc_id", "text", p1)
-    val p2 = java.nio.file.Files
-      .createTempDirectory("lshidx_full").toString + "/idx"
+    val p2 = tempDir("lshidx_full") + "/idx"
     LshIndex.build(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", p2)
     val inc = LshIndex.probe(batch, "doc_id", "text", p1, 0.5)
       .as[(Long, Long, Double)].collect().toSet
@@ -93,8 +91,7 @@ class LshIndexSpec extends SparkSpec {
   test("probe uses the index's OWN frozen params (meta roundtrip): an " +
     "index built at shingleN=2 probes with 2-gram shingles") {
     val docs = fixture
-    val path = java.nio.file.Files
-      .createTempDirectory("lshidx_meta").toString + "/idx"
+    val path = tempDir("lshidx_meta") + "/idx"
     LshIndex.build(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
       path, shingleN = 2, numHashes = 32, bands = 16)
     assert(LshIndex.readMeta(spark, path) == ((2, 32, 16, 1000)))
