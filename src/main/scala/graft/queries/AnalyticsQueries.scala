@@ -143,6 +143,112 @@ object AnalyticsQueries {
        |$finalSelect""".stripMargin
   }
 
+  /** The drift oracles' shared binning (a29 PSI, a68 Hellinger): event
+    * values of days <= 15 (reference, CTE `r0`) and > 15 (current, `c0`),
+    * binned by the reference deciles into per-bin counts `r` (ref_n) and
+    * `c` (cur_n). */
+  private val DriftBinCtes: String =
+    """r0 AS (
+      |  SELECT CAST(value AS DOUBLE) AS v FROM events
+      |  WHERE value IS NOT NULL AND day(ts) <= 15),
+      |c0 AS (
+      |  SELECT CAST(value AS DOUBLE) AS v FROM events
+      |  WHERE value IS NOT NULL AND day(ts) > 15),
+      |q AS (SELECT quantile_cont(v, 0.1) AS q1,
+      |  quantile_cont(v, 0.2) AS q2, quantile_cont(v, 0.3) AS q3,
+      |  quantile_cont(v, 0.4) AS q4, quantile_cont(v, 0.5) AS q5,
+      |  quantile_cont(v, 0.6) AS q6, quantile_cont(v, 0.7) AS q7,
+      |  quantile_cont(v, 0.8) AS q8, quantile_cont(v, 0.9) AS q9
+      |  FROM r0),
+      |rb AS (SELECT 1 + CAST(v > q1 AS INT) + CAST(v > q2 AS INT)
+      |  + CAST(v > q3 AS INT) + CAST(v > q4 AS INT)
+      |  + CAST(v > q5 AS INT) + CAST(v > q6 AS INT)
+      |  + CAST(v > q7 AS INT) + CAST(v > q8 AS INT)
+      |  + CAST(v > q9 AS INT) AS bin FROM r0, q),
+      |cb AS (SELECT 1 + CAST(v > q1 AS INT) + CAST(v > q2 AS INT)
+      |  + CAST(v > q3 AS INT) + CAST(v > q4 AS INT)
+      |  + CAST(v > q5 AS INT) + CAST(v > q6 AS INT)
+      |  + CAST(v > q7 AS INT) + CAST(v > q8 AS INT)
+      |  + CAST(v > q9 AS INT) AS bin FROM c0, q),
+      |r AS (SELECT bin, COUNT(*) AS ref_n FROM rb GROUP BY 1),
+      |c AS (SELECT bin, COUNT(*) AS cur_n FROM cb GROUP BY 1)""".stripMargin
+
+  /** The agreement oracles' rater frame (a77 Krippendorff, a73
+    * Fleiss): three length "raters" (chars, non-space chars, tokens)
+    * rate each doc short/mid/long, stacked as CTE `r` (doc_id,
+    * rating). Ends inside `r`, so a caller may still filter the third
+    * rater before closing it. */
+  private val RaterStackCtes: String =
+    """d AS (
+      |  SELECT doc_id, n_chars,
+      |    length(replace(text, ' ', '')) AS ns,
+      |    len(list_filter(string_split_regex(trim(text), '\s+'),
+      |      x -> x <> '')) AS tc
+      |  FROM documents
+      |  WHERE text IS NOT NULL AND n_chars IS NOT NULL),
+      |r AS (
+      |  SELECT doc_id, CASE WHEN n_chars < 300 THEN 'short'
+      |    WHEN n_chars < 500 THEN 'mid' ELSE 'long' END AS rating
+      |  FROM d
+      |  UNION ALL
+      |  SELECT doc_id, CASE WHEN ns < 250 THEN 'short'
+      |    WHEN ns < 420 THEN 'mid' ELSE 'long' END FROM d
+      |  UNION ALL
+      |  SELECT doc_id, CASE WHEN tc < 50 THEN 'short'
+      |    WHEN tc < 80 THEN 'mid' ELSE 'long' END FROM d""".stripMargin
+
+  /** The a30 contingency over orders (priority × status): observed counts,
+    * then CTE `cells`, the full grid with empty cells as 0. */
+  private val ContingencyCells: String =
+    """observed AS (
+      |  SELECT o_orderpriority, o_orderstatus, count(*) AS obs
+      |  FROM orders
+      |  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
+      |  GROUP BY 1, 2),
+      |cells AS (
+      |  SELECT g.o_orderpriority, g.o_orderstatus,
+      |    COALESCE(o.obs, 0) AS obs
+      |  FROM (SELECT a.o_orderpriority, b.o_orderstatus
+      |        FROM (SELECT DISTINCT o_orderpriority FROM observed) a,
+      |             (SELECT DISTINCT o_orderstatus FROM observed) b) g
+      |  LEFT JOIN observed o
+      |    ON o.o_orderpriority = g.o_orderpriority
+      |   AND o.o_orderstatus = g.o_orderstatus)""".stripMargin
+
+  /** Mutual-information fragment over contingency CTE `c` (columns
+    * `a`, `b`, count nab): exact-decimal MI numerator, both marginal
+    * entropy sums, and CTE `f` with mi, h_a and h_b (round-6). */
+  private[queries] def mutualInfoCtes(a: String, b: String): String =
+    s"""w AS (
+      |  SELECT nab,
+      |    SUM(nab) OVER (PARTITION BY $a) AS na,
+      |    SUM(nab) OVER (PARTITION BY $b) AS nb,
+      |    SUM(nab) OVER () AS n
+      |  FROM c),
+      |agg AS (
+      |  SELECT CAST(SUM(nab) AS BIGINT) AS n,
+      |    CAST(COUNT(*) AS BIGINT) AS cells,
+      |    SUM(CAST(nab * ROUND(ln(CAST(nab AS DOUBLE) * CAST(n AS DOUBLE)
+      |      / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))), 6)
+      |      AS DECIMAL(28,6))) AS minum
+      |  FROM w),
+      |ma AS (
+      |  SELECT SUM(CAST(na * ROUND(ln(CAST(na AS DOUBLE)), 6)
+      |    AS DECIMAL(28,6))) AS sa
+      |  FROM (SELECT $a, SUM(nab) AS na FROM c GROUP BY $a)),
+      |mb AS (
+      |  SELECT SUM(CAST(nb * ROUND(ln(CAST(nb AS DOUBLE)), 6)
+      |    AS DECIMAL(28,6))) AS sb
+      |  FROM (SELECT $b, SUM(nab) AS nb FROM c GROUP BY $b)),
+      |f AS (
+      |  SELECT n, cells,
+      |    ROUND(CAST(minum AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mi,
+      |    ROUND(ln(CAST(n AS DOUBLE))
+      |      - CAST(sa AS DOUBLE) / CAST(n AS DOUBLE), 6) AS h_a,
+      |    ROUND(ln(CAST(n AS DOUBLE))
+      |      - CAST(sb AS DOUBLE) / CAST(n AS DOUBLE), 6) AS h_b
+      |  FROM agg, ma, mb)""".stripMargin
+
   val queries: Seq[Query] = Seq(
     Query("a1_group_count", "§2.4 A1 group count",
       (s, dir) =>
@@ -651,30 +757,7 @@ object AnalyticsQueries {
       },
       // reference deciles bin both halves; Laplace-guarded shares;
       // full outer keeps bins empty on either side
-      """WITH r0 AS (
-        |  SELECT CAST(value AS DOUBLE) AS v FROM events
-        |  WHERE value IS NOT NULL AND day(ts) <= 15),
-        |c0 AS (
-        |  SELECT CAST(value AS DOUBLE) AS v FROM events
-        |  WHERE value IS NOT NULL AND day(ts) > 15),
-        |q AS (SELECT quantile_cont(v, 0.1) AS q1,
-        |  quantile_cont(v, 0.2) AS q2, quantile_cont(v, 0.3) AS q3,
-        |  quantile_cont(v, 0.4) AS q4, quantile_cont(v, 0.5) AS q5,
-        |  quantile_cont(v, 0.6) AS q6, quantile_cont(v, 0.7) AS q7,
-        |  quantile_cont(v, 0.8) AS q8, quantile_cont(v, 0.9) AS q9
-        |  FROM r0),
-        |rb AS (SELECT 1 + CAST(v > q1 AS INT) + CAST(v > q2 AS INT)
-        |  + CAST(v > q3 AS INT) + CAST(v > q4 AS INT)
-        |  + CAST(v > q5 AS INT) + CAST(v > q6 AS INT)
-        |  + CAST(v > q7 AS INT) + CAST(v > q8 AS INT)
-        |  + CAST(v > q9 AS INT) AS bin FROM r0, q),
-        |cb AS (SELECT 1 + CAST(v > q1 AS INT) + CAST(v > q2 AS INT)
-        |  + CAST(v > q3 AS INT) + CAST(v > q4 AS INT)
-        |  + CAST(v > q5 AS INT) + CAST(v > q6 AS INT)
-        |  + CAST(v > q7 AS INT) + CAST(v > q8 AS INT)
-        |  + CAST(v > q9 AS INT) AS bin FROM c0, q),
-        |r AS (SELECT bin, COUNT(*) AS ref_n FROM rb GROUP BY 1),
-        |c AS (SELECT bin, COUNT(*) AS cur_n FROM cb GROUP BY 1),
+      s"""WITH $DriftBinCtes,
         |t AS (SELECT (SELECT CAST(SUM(ref_n) AS BIGINT) FROM r) AS tr,
         |             (SELECT CAST(SUM(cur_n) AS BIGINT) FROM c) AS tc),
         |f AS (SELECT COALESCE(r.bin, c.bin) AS bin,
@@ -708,20 +791,7 @@ object AnalyticsQueries {
       // same accumulation discipline as the Spark side: marginal
       // products through double BEFORE multiplying, per-cell
       // contributions rounded to 6 then summed exact-decimal
-      """WITH observed AS (
-        |  SELECT o_orderpriority, o_orderstatus, count(*) AS obs
-        |  FROM orders
-        |  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-        |  GROUP BY 1, 2),
-        |cells AS (
-        |  SELECT g.o_orderpriority, g.o_orderstatus,
-        |    COALESCE(o.obs, 0) AS obs
-        |  FROM (SELECT a.o_orderpriority, b.o_orderstatus
-        |        FROM (SELECT DISTINCT o_orderpriority FROM observed) a,
-        |             (SELECT DISTINCT o_orderstatus FROM observed) b) g
-        |  LEFT JOIN observed o
-        |    ON o.o_orderpriority = g.o_orderpriority
-        |   AND o.o_orderstatus = g.o_orderstatus),
+      s"""WITH $ContingencyCells,
         |dims AS (
         |  SELECT CAST(count(DISTINCT o_orderpriority) AS INT) AS na,
         |         CAST(count(DISTINCT o_orderstatus) AS INT) AS nb,
@@ -805,20 +875,7 @@ object AnalyticsQueries {
           "o_orderstatus"),
       // the a30 chi2 suite statistic folded into V; same round-6
       // contribution sum, one fixed-order sqrt at the end
-      """WITH observed AS (
-        |  SELECT o_orderpriority, o_orderstatus, count(*) AS obs
-        |  FROM orders
-        |  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-        |  GROUP BY 1, 2),
-        |cells AS (
-        |  SELECT g.o_orderpriority, g.o_orderstatus,
-        |    COALESCE(o.obs, 0) AS obs
-        |  FROM (SELECT a.o_orderpriority, b.o_orderstatus
-        |        FROM (SELECT DISTINCT o_orderpriority FROM observed) a,
-        |             (SELECT DISTINCT o_orderstatus FROM observed) b) g
-        |  LEFT JOIN observed o
-        |    ON o.o_orderpriority = g.o_orderpriority
-        |   AND o.o_orderstatus = g.o_orderstatus),
+      s"""WITH $ContingencyCells,
         |m AS (
         |  SELECT o_orderpriority, o_orderstatus, obs,
         |    CAST(SUM(obs) OVER (PARTITION BY o_orderpriority) AS DOUBLE)
@@ -1020,30 +1077,7 @@ object AnalyticsQueries {
       },
       // a29's reference-percentile bins; per-bin √(p·q) rounded once,
       // BC an exact decimal sum, H and −ln BC one double step each
-      """WITH r0 AS (
-        |  SELECT CAST(value AS DOUBLE) AS v FROM events
-        |  WHERE value IS NOT NULL AND day(ts) <= 15),
-        |c0 AS (
-        |  SELECT CAST(value AS DOUBLE) AS v FROM events
-        |  WHERE value IS NOT NULL AND day(ts) > 15),
-        |q AS (SELECT quantile_cont(v, 0.1) AS q1,
-        |  quantile_cont(v, 0.2) AS q2, quantile_cont(v, 0.3) AS q3,
-        |  quantile_cont(v, 0.4) AS q4, quantile_cont(v, 0.5) AS q5,
-        |  quantile_cont(v, 0.6) AS q6, quantile_cont(v, 0.7) AS q7,
-        |  quantile_cont(v, 0.8) AS q8, quantile_cont(v, 0.9) AS q9
-        |  FROM r0),
-        |rb AS (SELECT 1 + CAST(v > q1 AS INT) + CAST(v > q2 AS INT)
-        |  + CAST(v > q3 AS INT) + CAST(v > q4 AS INT)
-        |  + CAST(v > q5 AS INT) + CAST(v > q6 AS INT)
-        |  + CAST(v > q7 AS INT) + CAST(v > q8 AS INT)
-        |  + CAST(v > q9 AS INT) AS bin FROM r0, q),
-        |cb AS (SELECT 1 + CAST(v > q1 AS INT) + CAST(v > q2 AS INT)
-        |  + CAST(v > q3 AS INT) + CAST(v > q4 AS INT)
-        |  + CAST(v > q5 AS INT) + CAST(v > q6 AS INT)
-        |  + CAST(v > q7 AS INT) + CAST(v > q8 AS INT)
-        |  + CAST(v > q9 AS INT) AS bin FROM c0, q),
-        |r AS (SELECT bin, COUNT(*) AS ref_n FROM rb GROUP BY 1),
-        |c AS (SELECT bin, COUNT(*) AS cur_n FROM cb GROUP BY 1),
+      s"""WITH $DriftBinCtes,
         |t AS (SELECT (SELECT CAST(COALESCE(SUM(ref_n), 0) AS BIGINT)
         |                FROM r) AS tr,
         |             (SELECT CAST(COALESCE(SUM(cur_n), 0) AS BIGINT)
@@ -1464,23 +1498,7 @@ object AnalyticsQueries {
       },
       // pairable units only (m ≥ 2); per-unit disagreement one rounded
       // chain summed exactly; D_o/D_e/α one fixed chain each
-      """WITH d AS (
-        |  SELECT doc_id, n_chars,
-        |    length(replace(text, ' ', '')) AS ns,
-        |    len(list_filter(string_split_regex(trim(text), '\s+'),
-        |      x -> x <> '')) AS tc
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-        |r AS (
-        |  SELECT doc_id, CASE WHEN n_chars < 300 THEN 'short'
-        |    WHEN n_chars < 500 THEN 'mid' ELSE 'long' END AS rating
-        |  FROM d
-        |  UNION ALL
-        |  SELECT doc_id, CASE WHEN ns < 250 THEN 'short'
-        |    WHEN ns < 420 THEN 'mid' ELSE 'long' END FROM d
-        |  UNION ALL
-        |  SELECT doc_id, CASE WHEN tc < 50 THEN 'short'
-        |    WHEN tc < 80 THEN 'mid' ELSE 'long' END FROM d
+      s"""WITH $RaterStackCtes
         |  WHERE doc_id % 3 = 0),
         |cells AS (
         |  SELECT doc_id, rating, COUNT(*) AS n FROM r GROUP BY 1, 2),
@@ -1653,23 +1671,7 @@ object AnalyticsQueries {
       },
       // exact HUGEINT Σn²/Σc² moments off the stacked rater frame;
       // P̄/P̄e/κ one fixed double chain each
-      """WITH d AS (
-        |  SELECT doc_id, n_chars,
-        |    length(replace(text, ' ', '')) AS ns,
-        |    len(list_filter(string_split_regex(trim(text), '\s+'),
-        |      x -> x <> '')) AS tc
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-        |r AS (
-        |  SELECT doc_id, CASE WHEN n_chars < 300 THEN 'short'
-        |    WHEN n_chars < 500 THEN 'mid' ELSE 'long' END AS rating
-        |  FROM d
-        |  UNION ALL
-        |  SELECT doc_id, CASE WHEN ns < 250 THEN 'short'
-        |    WHEN ns < 420 THEN 'mid' ELSE 'long' END FROM d
-        |  UNION ALL
-        |  SELECT doc_id, CASE WHEN tc < 50 THEN 'short'
-        |    WHEN tc < 80 THEN 'mid' ELSE 'long' END FROM d),
+      s"""WITH $RaterStackCtes),
         |cells AS (
         |  SELECT doc_id, rating, COUNT(*) AS n FROM r GROUP BY 1, 2),
         |it AS (
@@ -3062,41 +3064,13 @@ v$r AS MATERIALIZED (
       // contingency MI: each ln rounded once to 6, per-cell/margin
       // products exact decimal, one double cast + round at the end;
       // nmi uses the ROUNDED mi/h values (the Spark column exprs)
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT event_type AS a, EXTRACT(hour FROM ts) AS b,
         |    COUNT(*) AS nab
         |  FROM events
         |  WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
-        |w AS (
-        |  SELECT nab,
-        |    SUM(nab) OVER (PARTITION BY a) AS na,
-        |    SUM(nab) OVER (PARTITION BY b) AS nb,
-        |    SUM(nab) OVER () AS n
-        |  FROM c),
-        |agg AS (
-        |  SELECT CAST(SUM(nab) AS BIGINT) AS n,
-        |    CAST(COUNT(*) AS BIGINT) AS cells,
-        |    SUM(CAST(nab * ROUND(ln(CAST(nab AS DOUBLE) * CAST(n AS DOUBLE)
-        |      / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))), 6)
-        |      AS DECIMAL(28,6))) AS minum
-        |  FROM w),
-        |ma AS (
-        |  SELECT SUM(CAST(na * ROUND(ln(CAST(na AS DOUBLE)), 6)
-        |    AS DECIMAL(28,6))) AS sa
-        |  FROM (SELECT a, SUM(nab) AS na FROM c GROUP BY a)),
-        |mb AS (
-        |  SELECT SUM(CAST(nb * ROUND(ln(CAST(nb AS DOUBLE)), 6)
-        |    AS DECIMAL(28,6))) AS sb
-        |  FROM (SELECT b, SUM(nab) AS nb FROM c GROUP BY b)),
-        |f AS (
-        |  SELECT n, cells,
-        |    ROUND(CAST(minum AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mi,
-        |    ROUND(ln(CAST(n AS DOUBLE))
-        |      - CAST(sa AS DOUBLE) / CAST(n AS DOUBLE), 6) AS h_a,
-        |    ROUND(ln(CAST(n AS DOUBLE))
-        |      - CAST(sb AS DOUBLE) / CAST(n AS DOUBLE), 6) AS h_b
-        |  FROM agg, ma, mb)
+        |${mutualInfoCtes("a", "b")}
         |SELECT n, cells, mi, h_a, h_b,
         |  CASE WHEN LEAST(h_a, h_b) > 0
         |       THEN ROUND(mi / LEAST(h_a, h_b), 6) END AS nmi

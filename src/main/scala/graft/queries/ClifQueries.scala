@@ -1,8 +1,10 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.clif.{BlockedDataset, BlockedDatasetIncremental}
 import graft.ops._
 
 import Fixtures._
@@ -11,12 +13,45 @@ import Fixtures._
   * incremental twin and the mortality model built on it. */
 object ClifQueries {
 
-  /** The blocked-dataset replay shared VERBATIM by the batch
-    * capstone and its incremental materialization — the
-    * incremental path's contract IS "equals the batch build on
-    * the union of all arrival waves", so binding one string to
-    * both keys makes drift impossible. */
-  private val blockedDatasetReplay: String =
+  /** The capstone's `BlockedDataset` arguments over the events table:
+    * only the channels and the outcome differ between queries. */
+  private def capstone(channels: Seq[BlockedDataset.Channel],
+                       outcome: Column): BlockedDatasetIncremental.Params =
+    BlockedDatasetIncremental.Params(
+      encCol = "user_id", tsCol = "ts", channelCol = "event_type",
+      valueCol = "value", tiebreak = "event_id", channels = channels,
+      stepSeconds = 3600L, outcome = outcome, rollRows = 4,
+      trainPct = 80, valPct = 10)
+
+  /** Vitals fresh for 2 h, labs for 24 h. */
+  private val vitalAndLab = Seq(
+    BlockedDataset.Channel("click", "vital_value", toleranceSeconds = 7200L),
+    BlockedDataset.Channel("purchase", "lab_value",
+      toleranceSeconds = 86400L))
+
+  /** The batch blocked dataset over the events table. */
+  private def blocked(s: SparkSession, dir: String,
+                      p: BlockedDatasetIncremental.Params): DataFrame =
+    BlockedDataset.build(t(s, dir, "events"), p.encCol,
+      p.tsCol, p.channelCol, p.valueCol, p.tiebreak, p.channels,
+      p.stepSeconds, p.outcome, p.rollRows, p.trainPct, p.valPct)
+
+  /** The mortality model's per-encounter features: outcome, split,
+    * vital and lab coverage, and normalized length of stay. */
+  private def modelFeatures(bd: DataFrame): DataFrame =
+    bd.groupBy(col("user_id")).agg(
+      max(col("label")).as("y"),
+      min(col("split")).as("split"), // constant per encounter
+      avg(when(col("vital_value").isNotNull, 1.0).otherwise(0.0))
+        .as("f_vital"),
+      avg(when(col("lab_value").isNotNull, 1.0).otherwise(0.0))
+        .as("f_lab"),
+      (count(lit(1)).cast("double") /
+        (count(lit(1)) + lit(24L)).cast("double")).as("f_len"))
+
+  /** Oracle fragment: keep-last events per (encounter, ts), then each
+    * encounter's hourly grid — the start of every capstone replay. */
+  private val gridCtes: String =
     """WITH e AS (
         |  SELECT user_id, ts, value FROM (
         |    SELECT user_id, ts, value,
@@ -31,17 +66,187 @@ object ClifQueries {
         |  SELECT user_id,
         |    unnest(generate_series(t0, t1, INTERVAL 3600 SECOND))
         |      AS grid_ts
-        |  FROM b),
+        |  FROM b)""".stripMargin
+
+  /** Oracle fragment: CTE `name`, one channel's keep-last events per
+    * (encounter, ts). */
+  private def channelCte(name: String, eventType: String): String =
+    s"""$name AS (
+      |  SELECT user_id, ts, value FROM (
+      |    SELECT user_id, ts, value,
+      |      row_number() OVER (PARTITION BY user_id, ts
+      |                         ORDER BY event_id DESC) AS rn
+      |    FROM events WHERE event_type = '$eventType') WHERE rn = 1)"""
+      .stripMargin
+
+  /** Oracle fragment: the encounter-level outcome label CTE `lab`. */
+  private val labelCte: String =
+    """lab AS (
+        |  SELECT user_id,
+        |    CAST(MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS label
+        |  FROM events GROUP BY user_id)""".stripMargin
+
+  /** Oracle fragment: the t_hash_split portable-hash split of CTE
+    * `cte`'s encounters, as output column `split`. */
+  private def splitColumn(cte: String): String =
+    s"""  CASE WHEN (((((($cte.user_id % 2147483647) * 2654435761)
+        |         % 2147483647) + 2147483647) % 2147483647) % 100 + 100)
+        |         % 100 < 80 THEN 'train'
+        |       WHEN (((((($cte.user_id % 2147483647) * 2654435761)
+        |         % 2147483647) + 2147483647) % 2147483647) % 100 + 100)
+        |         % 100 < 90 THEN 'val'
+        |       ELSE 'test' END AS split""".stripMargin
+
+  /** Oracle fragment: CTE `g`, one gradient-ascent round's sums over
+    * the train rows, scored by CTE `beta`'s coefficients. */
+  private def gdSums(g: String, beta: String): String =
+    s"""$g AS (
+      |  SELECT b.n,
+      |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
+      |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
+      |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
+      |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
+      |  FROM (
+      |    SELECT t.y, t.xv, t.xl, t.xh, b.n, t.y * 1000000 -
+      |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
+      |        + EXP(-(CAST(b.bi*1000000 + b.bv*t.xv + b.bl*t.xl
+      |          + b.bh*t.xh AS DOUBLE) / 1000000000000.0))), 6)
+      |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
+      |    FROM train t, $beta b) b
+      |  GROUP BY b.n)""".stripMargin
+
+  /** Oracle fragment: one round's four coefficient updates, each the
+    * previous coefficient in `b` plus the gradient sum in `g` over
+    * g.n micro-units (sign-explicit half-away integer division). */
+  private val gdUpdates: String =
+    """    b.bi + CASE WHEN s0 >= 0
+      |      THEN (2*CAST(s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bi,
+      |    b.bv + CASE WHEN s1 >= 0
+      |      THEN (2*CAST(s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bv,
+      |    b.bl + CASE WHEN s2 >= 0
+      |      THEN (2*CAST(s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bl,
+      |    b.bh + CASE WHEN s3 >= 0
+      |      THEN (2*CAST(s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
+      |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bh""".stripMargin
+
+  /** The mortality model's training replay, shared by the model and
+    * calibration oracles: the capstone grid and channels, micro-unit
+    * features per encounter, then THREE unrolled gradient-ascent
+    * rounds (sigma the only float, round-6; beta updates exact integer
+    * adds) ending in CTE `b3`. */
+  private val modelGdReplay: String =
+    s"""$gridCtes,
+      |${channelCte("vit", "click")},
+      |v AS (
+      |  SELECT g.user_id, g.grid_ts,
+      |    CASE WHEN w.ts IS NULL OR
+      |      floor(epoch(g.grid_ts)) - floor(epoch(w.ts)) > 7200
+      |      THEN NULL ELSE w.value END AS vital_value
+      |  FROM grid g ASOF LEFT JOIN vit w
+      |    ON g.user_id = w.user_id AND g.grid_ts >= w.ts),
+      |${channelCte("lb", "purchase")},
+      |l AS (
+      |  SELECT v.user_id, v.grid_ts, v.vital_value,
+      |    CASE WHEN w.ts IS NULL OR
+      |      floor(epoch(v.grid_ts)) - floor(epoch(w.ts)) > 86400
+      |      THEN NULL ELSE w.value END AS lab_value
+      |  FROM v ASOF LEFT JOIN lb w
+      |    ON v.user_id = w.user_id AND v.grid_ts >= w.ts),
+      |lbl AS (
+      |  SELECT user_id,
+      |    CAST(MAX(CASE WHEN event_type = 'error' AND value > 150
+      |      THEN 1 ELSE 0 END) AS BIGINT) AS y
+      |  FROM events GROUP BY user_id),
+      |feats AS MATERIALIZED (
+      |  SELECT f.user_id, lbl.y,
+      |    CASE WHEN ((f.user_id % 2147483647) * 2654435761)
+      |           % 2147483647 % 100 < 80 THEN 'train'
+      |         WHEN ((f.user_id % 2147483647) * 2654435761)
+      |           % 2147483647 % 100 < 90 THEN 'val'
+      |         ELSE 'test' END AS split,
+      |    CAST(CAST(ROUND(AVG(CASE WHEN f.vital_value IS NOT NULL
+      |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6)
+      |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xv,
+      |    CAST(CAST(ROUND(AVG(CASE WHEN f.lab_value IS NOT NULL
+      |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6)
+      |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xl,
+      |    CAST(CAST(ROUND(CAST(COUNT(*) AS DOUBLE) /
+      |        CAST(COUNT(*) + 24 AS DOUBLE), 6)
+      |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xh
+      |  FROM l f JOIN lbl USING (user_id)
+      |  GROUP BY f.user_id, lbl.y),
+      |train AS MATERIALIZED (
+      |  SELECT * FROM feats WHERE split = 'train'),
+      |g1 AS (
+      |  SELECT COUNT(*) AS n,
+      |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
+      |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
+      |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
+      |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
+      |  FROM (
+      |    SELECT t.*, t.y * 1000000 -
+      |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
+      |        + EXP(-(CAST(0 AS DOUBLE) / 1000000000000.0))), 6)
+      |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
+      |    FROM train t) z),
+      |b1 AS (
+      |  SELECT n,
+      |    CASE WHEN s0 >= 0
+      |      THEN (2*CAST(s0 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bi,
+      |    CASE WHEN s1 >= 0
+      |      THEN (2*CAST(s1 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bv,
+      |    CASE WHEN s2 >= 0
+      |      THEN (2*CAST(s2 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bl,
+      |    CASE WHEN s3 >= 0
+      |      THEN (2*CAST(s3 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)
+      |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
+      |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bh
+      |  FROM g1),
+      |${gdSums("g2", "b1")},
+      |b2 AS (
+      |  SELECT g.n,
+      |$gdUpdates
+      |  FROM g2 g, b1 b),
+      |${gdSums("g3", "b2")},
+      |b3 AS (
+      |  SELECT
+      |$gdUpdates
+      |  FROM g3 g, b2 b)""".stripMargin
+
+  /** The blocked-dataset replay shared VERBATIM by the batch
+    * capstone and its incremental materialization — the
+    * incremental path's contract IS "equals the batch build on
+    * the union of all arrival waves", so binding one string to
+    * both keys makes drift impossible. */
+  private val blockedDatasetReplay: String =
+    s"""$gridCtes,
         |base AS (
         |  SELECT g.user_id, g.grid_ts, e.value AS last_value
         |  FROM grid g ASOF LEFT JOIN e
         |    ON g.user_id = e.user_id AND g.grid_ts >= e.ts),
-        |vit AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'click') WHERE rn = 1),
+        |${channelCte("vit", "click")},
         |v AS (
         |  SELECT b.user_id, b.grid_ts, b.last_value,
         |    CASE WHEN w.ts IS NULL OR
@@ -49,12 +254,7 @@ object ClifQueries {
         |      THEN NULL ELSE w.value END AS vital_value
         |  FROM base b ASOF LEFT JOIN vit w
         |    ON b.user_id = w.user_id AND b.grid_ts >= w.ts),
-        |lb AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'purchase') WHERE rn = 1),
+        |${channelCte("lb", "purchase")},
         |l AS (
         |  SELECT v.user_id, v.grid_ts, v.last_value, v.vital_value,
         |    CASE WHEN w.ts IS NULL OR
@@ -69,20 +269,10 @@ object ClifQueries {
         |  FROM l
         |  WINDOW w AS (PARTITION BY user_id ORDER BY grid_ts
         |               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)),
-        |lab AS (
-        |  SELECT user_id,
-        |    CAST(MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS label
-        |  FROM events GROUP BY user_id)
+        |$labelCte
         |SELECT r.user_id, r.grid_ts, r.last_value, r.vital_value,
         |  r.lab_value, r.roll_avg, lab.label,
-        |  CASE WHEN ((((((r.user_id % 2147483647) * 2654435761)
-        |         % 2147483647) + 2147483647) % 2147483647) % 100 + 100)
-        |         % 100 < 80 THEN 'train'
-        |       WHEN ((((((r.user_id % 2147483647) * 2654435761)
-        |         % 2147483647) + 2147483647) % 2147483647) % 100 + 100)
-        |         % 100 < 90 THEN 'val'
-        |       ELSE 'test' END AS split
+        |${splitColumn("r")}
         |FROM r JOIN lab USING (user_id)""".stripMargin
 
   val queries: Seq[Query] = Seq(
@@ -96,17 +286,7 @@ object ClifQueries {
     // exchange family. ----
     Query("clif_blocked_dataset", "the reference README's promised \"blocked",
       (s, dir) =>
-        graft.clif.BlockedDataset.build(t(s, dir, "events"),
-          encCol = "user_id", tsCol = "ts", channelCol = "event_type",
-          valueCol = "value", tiebreak = "event_id",
-          channels = Seq(
-            graft.clif.BlockedDataset.Channel("click", "vital_value",
-              toleranceSeconds = 7200L),
-            graft.clif.BlockedDataset.Channel("purchase", "lab_value",
-              toleranceSeconds = 86400L)),
-          stepSeconds = 3600L,
-          outcome = col("event_type") === "error", rollRows = 4,
-          trainPct = 80, valPct = 10),
+        blocked(s, dir, capstone(vitalAndLab, col("event_type") === "error")),
       // the capstone replayed stage by stage: the w6 grid + ASOF LOCF,
       // two j10 staleness-bounded ASOF channel joins, the w7 rolling
       // numerics (decimal sum, one rounded double division), the
@@ -129,17 +309,7 @@ object ClifQueries {
         // ckptDir rationale); production stores live on durable DFS
         val tmp = ckptDir("graft_bdi")
         val in = s"$tmp/in"; val work = s"$tmp/work"
-        val params = graft.clif.BlockedDatasetIncremental.Params(
-          encCol = "user_id", tsCol = "ts", channelCol = "event_type",
-          valueCol = "value", tiebreak = "event_id",
-          channels = Seq(
-            graft.clif.BlockedDataset.Channel("click", "vital_value",
-              toleranceSeconds = 7200L),
-            graft.clif.BlockedDataset.Channel("purchase", "lab_value",
-              toleranceSeconds = 86400L)),
-          stepSeconds = 3600L,
-          outcome = col("event_type") === "error", rollRows = 4,
-          trainPct = 80, valPct = 10)
+        val params = capstone(vitalAndLab, col("event_type") === "error")
         // wave 2 is a bucket-local late cohort (one shard's encounters
         // arriving after the rest — the open-encounter locality the
         // bucket layout exists for), so the second invocation PROVES
@@ -154,18 +324,18 @@ object ClifQueries {
             lit(8L)), lit(0L)) === 0
         e.filter(!lateCohort).write.mode("overwrite").parquet(in)
         val schema = s.read.parquet(in).schema
-        graft.clif.BlockedDatasetIncremental.runOnce(s, in, work,
+        BlockedDatasetIncremental.runOnce(s, in, work,
           schema, params, buckets = 8)
         // fold wave 1's closed batch into the compacted layer BETWEEN
         // the waves: the oracle (the batch capstone's replay) then
         // proves at hash level that a recompute reading the compacted
         // base + a live batch equals the one-shot build
-        graft.clif.BlockedDatasetIncremental.compactRaw(s, work, params)
+        BlockedDatasetIncremental.compactRaw(s, work, params)
         // the late cohort lands; invocation 2 processes ONLY its files
         e.filter(lateCohort).write.mode("append").parquet(in)
-        graft.clif.BlockedDatasetIncremental.runOnce(s, in, work,
+        BlockedDatasetIncremental.runOnce(s, in, work,
           schema, params, buckets = 8)
-        graft.clif.BlockedDatasetIncremental.grid(s, work)
+        BlockedDatasetIncremental.grid(s, work)
       },
       // the incrementally-maintained grid must equal the one-shot
       // batch build on the union of all arrival waves — the SAME
@@ -183,27 +353,9 @@ object ClifQueries {
     // is the EXACT integer sign test on z_pico. ----
     Query("clif_mortality_model", "CAPSTONE part 2: \"…to develop a model to predict the",
       (s, dir) => {
-        val bd = graft.clif.BlockedDataset.build(t(s, dir, "events"),
-          encCol = "user_id", tsCol = "ts", channelCol = "event_type",
-          valueCol = "value", tiebreak = "event_id",
-          channels = Seq(
-            graft.clif.BlockedDataset.Channel("click", "vital_value",
-              toleranceSeconds = 7200L),
-            graft.clif.BlockedDataset.Channel("purchase", "lab_value",
-              toleranceSeconds = 86400L)),
-          stepSeconds = 3600L,
-          outcome = col("event_type") === "error" && col("value") > 150,
-          rollRows = 4, trainPct = 80, valPct = 10)
-        val feats = bd.groupBy(col("user_id")).agg(
-          max(col("label")).as("y"),
-          min(col("split")).as("split"), // constant per encounter
-          avg(when(col("vital_value").isNotNull, 1.0).otherwise(0.0))
-            .as("f_vital"),
-          avg(when(col("lab_value").isNotNull, 1.0).otherwise(0.0))
-            .as("f_lab"),
-          (count(lit(1)).cast("double") /
-            (count(lit(1)) + lit(24L)).cast("double")).as("f_len"))
-        ops.Analytics.logisticModelReport(feats,
+        val bd = blocked(s, dir, capstone(vitalAndLab,
+          col("event_type") === "error" && col("value") > 150))
+        ops.Analytics.logisticModelReport(modelFeatures(bd),
           Seq("f_vital", "f_lab", "f_len"), "y", "split", iters = 3)
       },
       // the whole training loop replayed: the capstone grid + channel
@@ -212,181 +364,7 @@ object ClifQueries {
       // division by the sign-explicit half-away integer pattern; beta
       // updates exact integer adds) and the exact z>=0 sign-test
       // accuracies
-      """WITH e AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events) WHERE rn = 1),
-        |b AS (
-        |  SELECT user_id, date_trunc('hour', MIN(ts)) AS t0,
-        |    MAX(ts) AS t1
-        |  FROM e GROUP BY user_id),
-        |grid AS (
-        |  SELECT user_id,
-        |    unnest(generate_series(t0, t1, INTERVAL 3600 SECOND))
-        |      AS grid_ts
-        |  FROM b),
-        |vit AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'click') WHERE rn = 1),
-        |v AS (
-        |  SELECT g.user_id, g.grid_ts,
-        |    CASE WHEN w.ts IS NULL OR
-        |      floor(epoch(g.grid_ts)) - floor(epoch(w.ts)) > 7200
-        |      THEN NULL ELSE w.value END AS vital_value
-        |  FROM grid g ASOF LEFT JOIN vit w
-        |    ON g.user_id = w.user_id AND g.grid_ts >= w.ts),
-        |lb AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'purchase') WHERE rn = 1),
-        |l AS (
-        |  SELECT v.user_id, v.grid_ts, v.vital_value,
-        |    CASE WHEN w.ts IS NULL OR
-        |      floor(epoch(v.grid_ts)) - floor(epoch(w.ts)) > 86400
-        |      THEN NULL ELSE w.value END AS lab_value
-        |  FROM v ASOF LEFT JOIN lb w
-        |    ON v.user_id = w.user_id AND v.grid_ts >= w.ts),
-        |lbl AS (
-        |  SELECT user_id,
-        |    CAST(MAX(CASE WHEN event_type = 'error' AND value > 150
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS y
-        |  FROM events GROUP BY user_id),
-        |feats AS MATERIALIZED (
-        |  SELECT f.user_id, lbl.y,
-        |    CASE WHEN ((f.user_id % 2147483647) * 2654435761)
-        |           % 2147483647 % 100 < 80 THEN 'train'
-        |         WHEN ((f.user_id % 2147483647) * 2654435761)
-        |           % 2147483647 % 100 < 90 THEN 'val'
-        |         ELSE 'test' END AS split,
-        |    CAST(CAST(ROUND(AVG(CASE WHEN f.vital_value IS NOT NULL
-        |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6)
-        |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xv,
-        |    CAST(CAST(ROUND(AVG(CASE WHEN f.lab_value IS NOT NULL
-        |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6)
-        |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xl,
-        |    CAST(CAST(ROUND(CAST(COUNT(*) AS DOUBLE) /
-        |        CAST(COUNT(*) + 24 AS DOUBLE), 6)
-        |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xh
-        |  FROM l f JOIN lbl USING (user_id)
-        |  GROUP BY f.user_id, lbl.y),
-        |train AS MATERIALIZED (
-        |  SELECT * FROM feats WHERE split = 'train'),
-        |g1 AS (
-        |  SELECT COUNT(*) AS n,
-        |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
-        |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
-        |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
-        |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
-        |  FROM (
-        |    SELECT t.*, t.y * 1000000 -
-        |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-        |        + EXP(-(CAST(0 AS DOUBLE) / 1000000000000.0))), 6)
-        |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
-        |    FROM train t) z),
-        |b1 AS (
-        |  SELECT n,
-        |    CASE WHEN s0 >= 0
-        |      THEN (2*CAST(s0 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bi,
-        |    CASE WHEN s1 >= 0
-        |      THEN (2*CAST(s1 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bv,
-        |    CASE WHEN s2 >= 0
-        |      THEN (2*CAST(s2 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bl,
-        |    CASE WHEN s3 >= 0
-        |      THEN (2*CAST(s3 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bh
-        |  FROM g1),
-        |g2 AS (
-        |  SELECT b.n,
-        |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
-        |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
-        |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
-        |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
-        |  FROM (
-        |    SELECT t.y, t.xv, t.xl, t.xh, b.n, t.y * 1000000 -
-        |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-        |        + EXP(-(CAST(b.bi*1000000 + b.bv*t.xv + b.bl*t.xl
-        |          + b.bh*t.xh AS DOUBLE) / 1000000000000.0))), 6)
-        |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
-        |    FROM train t, b1 b) b
-        |  GROUP BY b.n),
-        |b2 AS (
-        |  SELECT g.n,
-        |    b.bi + CASE WHEN s0 >= 0
-        |      THEN (2*CAST(s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bi,
-        |    b.bv + CASE WHEN s1 >= 0
-        |      THEN (2*CAST(s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bv,
-        |    b.bl + CASE WHEN s2 >= 0
-        |      THEN (2*CAST(s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bl,
-        |    b.bh + CASE WHEN s3 >= 0
-        |      THEN (2*CAST(s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bh
-        |  FROM g2 g, b1 b),
-        |g3 AS (
-        |  SELECT b.n,
-        |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
-        |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
-        |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
-        |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
-        |  FROM (
-        |    SELECT t.y, t.xv, t.xl, t.xh, b.n, t.y * 1000000 -
-        |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-        |        + EXP(-(CAST(b.bi*1000000 + b.bv*t.xv + b.bl*t.xl
-        |          + b.bh*t.xh AS DOUBLE) / 1000000000000.0))), 6)
-        |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
-        |    FROM train t, b2 b) b
-        |  GROUP BY b.n),
-        |b3 AS (
-        |  SELECT
-        |    b.bi + CASE WHEN s0 >= 0
-        |      THEN (2*CAST(s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bi,
-        |    b.bv + CASE WHEN s1 >= 0
-        |      THEN (2*CAST(s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bv,
-        |    b.bl + CASE WHEN s2 >= 0
-        |      THEN (2*CAST(s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bl,
-        |    b.bh + CASE WHEN s3 >= 0
-        |      THEN (2*CAST(s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bh
-        |  FROM g3 g, b2 b),
+      s"""$modelGdReplay,
         |ev AS (
         |  SELECT f.split,
         |    CASE WHEN (CASE WHEN b.bi*1000000 + b.bv*f.xv + b.bl*f.xl
@@ -426,27 +404,10 @@ object ClifQueries {
     // integers, each output ratio rounds once. ----
     Query("clif_model_calibration", "CAPSTONE part 3: the PROBABILITY readout",
       (s, dir) => {
-        val bd = graft.clif.BlockedDataset.build(t(s, dir, "events"),
-          encCol = "user_id", tsCol = "ts", channelCol = "event_type",
-          valueCol = "value", tiebreak = "event_id",
-          channels = Seq(
-            graft.clif.BlockedDataset.Channel("click", "vital_value",
-              toleranceSeconds = 7200L),
-            graft.clif.BlockedDataset.Channel("purchase", "lab_value",
-              toleranceSeconds = 86400L)),
-          stepSeconds = 3600L,
-          outcome = col("event_type") === "error" && col("value") > 150,
-          rollRows = 4, trainPct = 80, valPct = 10)
+        val bd = blocked(s, dir, capstone(vitalAndLab,
+          col("event_type") === "error" && col("value") > 150))
         // built once: trainer + readout share it
-        val feats = Iterate.pin(bd.groupBy(col("user_id")).agg(
-          max(col("label")).as("y"),
-          min(col("split")).as("split"),
-          avg(when(col("vital_value").isNotNull, 1.0).otherwise(0.0))
-            .as("f_vital"),
-          avg(when(col("lab_value").isNotNull, 1.0).otherwise(0.0))
-            .as("f_lab"),
-          (count(lit(1)).cast("double") /
-            (count(lit(1)) + lit(24L)).cast("double")).as("f_len")))
+        val feats = Iterate.pin(modelFeatures(bd))
         val fc = Seq("f_vital", "f_lab", "f_len")
         val beta = ops.Analytics.logisticGdMicros(
           feats.filter(col("split") === "train"), fc, "y", iters = 3)
@@ -484,181 +445,7 @@ object ClifQueries {
       // encounter (the one float, round-6), quartile boundaries via
       // quantile_cont (== Spark percentile exactly), exact count/sum
       // ratios rounded once
-      """WITH e AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events) WHERE rn = 1),
-        |b AS (
-        |  SELECT user_id, date_trunc('hour', MIN(ts)) AS t0,
-        |    MAX(ts) AS t1
-        |  FROM e GROUP BY user_id),
-        |grid AS (
-        |  SELECT user_id,
-        |    unnest(generate_series(t0, t1, INTERVAL 3600 SECOND))
-        |      AS grid_ts
-        |  FROM b),
-        |vit AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'click') WHERE rn = 1),
-        |v AS (
-        |  SELECT g.user_id, g.grid_ts,
-        |    CASE WHEN w.ts IS NULL OR
-        |      floor(epoch(g.grid_ts)) - floor(epoch(w.ts)) > 7200
-        |      THEN NULL ELSE w.value END AS vital_value
-        |  FROM grid g ASOF LEFT JOIN vit w
-        |    ON g.user_id = w.user_id AND g.grid_ts >= w.ts),
-        |lb AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'purchase') WHERE rn = 1),
-        |l AS (
-        |  SELECT v.user_id, v.grid_ts, v.vital_value,
-        |    CASE WHEN w.ts IS NULL OR
-        |      floor(epoch(v.grid_ts)) - floor(epoch(w.ts)) > 86400
-        |      THEN NULL ELSE w.value END AS lab_value
-        |  FROM v ASOF LEFT JOIN lb w
-        |    ON v.user_id = w.user_id AND v.grid_ts >= w.ts),
-        |lbl AS (
-        |  SELECT user_id,
-        |    CAST(MAX(CASE WHEN event_type = 'error' AND value > 150
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS y
-        |  FROM events GROUP BY user_id),
-        |feats AS MATERIALIZED (
-        |  SELECT f.user_id, lbl.y,
-        |    CASE WHEN ((f.user_id % 2147483647) * 2654435761)
-        |           % 2147483647 % 100 < 80 THEN 'train'
-        |         WHEN ((f.user_id % 2147483647) * 2654435761)
-        |           % 2147483647 % 100 < 90 THEN 'val'
-        |         ELSE 'test' END AS split,
-        |    CAST(CAST(ROUND(AVG(CASE WHEN f.vital_value IS NOT NULL
-        |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6)
-        |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xv,
-        |    CAST(CAST(ROUND(AVG(CASE WHEN f.lab_value IS NOT NULL
-        |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 6)
-        |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xl,
-        |    CAST(CAST(ROUND(CAST(COUNT(*) AS DOUBLE) /
-        |        CAST(COUNT(*) + 24 AS DOUBLE), 6)
-        |      AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xh
-        |  FROM l f JOIN lbl USING (user_id)
-        |  GROUP BY f.user_id, lbl.y),
-        |train AS MATERIALIZED (
-        |  SELECT * FROM feats WHERE split = 'train'),
-        |g1 AS (
-        |  SELECT COUNT(*) AS n,
-        |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
-        |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
-        |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
-        |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
-        |  FROM (
-        |    SELECT t.*, t.y * 1000000 -
-        |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-        |        + EXP(-(CAST(0 AS DOUBLE) / 1000000000000.0))), 6)
-        |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
-        |    FROM train t) z),
-        |b1 AS (
-        |  SELECT n,
-        |    CASE WHEN s0 >= 0
-        |      THEN (2*CAST(s0 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bi,
-        |    CASE WHEN s1 >= 0
-        |      THEN (2*CAST(s1 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bv,
-        |    CASE WHEN s2 >= 0
-        |      THEN (2*CAST(s2 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bl,
-        |    CASE WHEN s3 >= 0
-        |      THEN (2*CAST(s3 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(n AS HUGEINT)*1000000)
-        |        // (2*CAST(n AS HUGEINT)*1000000)) END AS bh
-        |  FROM g1),
-        |g2 AS (
-        |  SELECT b.n,
-        |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
-        |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
-        |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
-        |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
-        |  FROM (
-        |    SELECT t.y, t.xv, t.xl, t.xh, b.n, t.y * 1000000 -
-        |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-        |        + EXP(-(CAST(b.bi*1000000 + b.bv*t.xv + b.bl*t.xl
-        |          + b.bh*t.xh AS DOUBLE) / 1000000000000.0))), 6)
-        |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
-        |    FROM train t, b1 b) b
-        |  GROUP BY b.n),
-        |b2 AS (
-        |  SELECT g.n,
-        |    b.bi + CASE WHEN s0 >= 0
-        |      THEN (2*CAST(s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bi,
-        |    b.bv + CASE WHEN s1 >= 0
-        |      THEN (2*CAST(s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bv,
-        |    b.bl + CASE WHEN s2 >= 0
-        |      THEN (2*CAST(s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bl,
-        |    b.bh + CASE WHEN s3 >= 0
-        |      THEN (2*CAST(s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bh
-        |  FROM g2 g, b1 b),
-        |g3 AS (
-        |  SELECT b.n,
-        |    SUM(CAST(1000000 AS DECIMAL(38,0)) * r) AS s0,
-        |    SUM(CAST(xv AS DECIMAL(38,0)) * r) AS s1,
-        |    SUM(CAST(xl AS DECIMAL(38,0)) * r) AS s2,
-        |    SUM(CAST(xh AS DECIMAL(38,0)) * r) AS s3
-        |  FROM (
-        |    SELECT t.y, t.xv, t.xl, t.xh, b.n, t.y * 1000000 -
-        |      CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-        |        + EXP(-(CAST(b.bi*1000000 + b.bv*t.xv + b.bl*t.xl
-        |          + b.bh*t.xh AS DOUBLE) / 1000000000000.0))), 6)
-        |        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS r
-        |    FROM train t, b2 b) b
-        |  GROUP BY b.n),
-        |b3 AS (
-        |  SELECT
-        |    b.bi + CASE WHEN s0 >= 0
-        |      THEN (2*CAST(s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s0 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bi,
-        |    b.bv + CASE WHEN s1 >= 0
-        |      THEN (2*CAST(s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s1 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bv,
-        |    b.bl + CASE WHEN s2 >= 0
-        |      THEN (2*CAST(s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s2 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bl,
-        |    b.bh + CASE WHEN s3 >= 0
-        |      THEN (2*CAST(s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)
-        |      ELSE -((2*CAST(-s3 AS HUGEINT) + CAST(g.n AS HUGEINT)*1000000)
-        |        // (2*CAST(g.n AS HUGEINT)*1000000)) END AS bh
-        |  FROM g3 g, b2 b),
+      s"""$modelGdReplay,
         |pm AS MATERIALIZED (
         |  SELECT f.y,
         |    CAST(CAST(ROUND(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
@@ -693,19 +480,14 @@ object ClifQueries {
     // shuffles beyond the capstone's one exchange family. ----
     Query("clif_sofa_hourly", "CAPSTONE part 4: hourly SOFA over the blocked dataset —",
       (s, dir) => {
-        val bd = graft.clif.BlockedDataset.build(t(s, dir, "events"),
-          encCol = "user_id", tsCol = "ts", channelCol = "event_type",
-          valueCol = "value", tiebreak = "event_id",
-          channels = Seq(
-            graft.clif.BlockedDataset.Channel("click", "neuro_vital",
+        val bd = blocked(s, dir, capstone(Seq(
+            BlockedDataset.Channel("click", "neuro_vital",
               toleranceSeconds = 7200L),
-            graft.clif.BlockedDataset.Channel("view", "resp_vital",
+            BlockedDataset.Channel("view", "resp_vital",
               toleranceSeconds = 7200L),
-            graft.clif.BlockedDataset.Channel("purchase", "renal_lab",
+            BlockedDataset.Channel("purchase", "renal_lab",
               toleranceSeconds = 86400L)),
-          stepSeconds = 3600L,
-          outcome = col("event_type") === "error", rollRows = 4,
-          trainPct = 80, valPct = 10)
+          col("event_type") === "error"))
         graft.clif.Pipelines.sofaHourly(bd,
             "neuro_vital", "resp_vital", "renal_lab")
           .select("user_id", "grid_ts", "sofa_neuro", "sofa_resp",
@@ -719,39 +501,10 @@ object ClifQueries {
       // for ANY sign, not just the non-negative corpus), the declared
       // resp/renal bands with an explicit IS NULL arm (stale organ →
       // NULL, never 0), and the present-organs composite
-      """WITH e AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events) WHERE rn = 1),
-        |b AS (
-        |  SELECT user_id, date_trunc('hour', MIN(ts)) AS t0,
-        |    MAX(ts) AS t1
-        |  FROM e GROUP BY user_id),
-        |grid AS (
-        |  SELECT user_id,
-        |    unnest(generate_series(t0, t1, INTERVAL 3600 SECOND))
-        |      AS grid_ts
-        |  FROM b),
-        |c1 AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'click') WHERE rn = 1),
-        |c2 AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'view') WHERE rn = 1),
-        |c3 AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |      row_number() OVER (PARTITION BY user_id, ts
-        |                         ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'purchase') WHERE rn = 1),
+      s"""$gridCtes,
+        |${channelCte("c1", "click")},
+        |${channelCte("c2", "view")},
+        |${channelCte("c3", "purchase")},
         |v1 AS (
         |  SELECT g.user_id, g.grid_ts,
         |    CASE WHEN w.ts IS NULL OR
@@ -793,11 +546,7 @@ object ClifQueries {
         |      3 + ((CAST(CAST(neuro_vital AS DECIMAL(18,6)) * 1000000
         |           AS BIGINT) % 13) + 13) % 13 AS g
         |    FROM v3)),
-        |lab AS (
-        |  SELECT user_id,
-        |    CAST(MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS label
-        |  FROM events GROUP BY user_id)
+        |$labelCte
         |SELECT sc.user_id, sc.grid_ts, sc.sofa_neuro, sc.sofa_resp,
         |  sc.sofa_renal,
         |  CAST(sc.sofa_neuro IS NOT NULL AS INTEGER) +
@@ -810,13 +559,7 @@ object ClifQueries {
         |         COALESCE(sc.sofa_resp, 0) +
         |         COALESCE(sc.sofa_renal, 0) END AS sofa_total,
         |  lab.label,
-        |  CASE WHEN ((((((sc.user_id % 2147483647) * 2654435761)
-        |         % 2147483647) + 2147483647) % 2147483647) % 100 + 100)
-        |         % 100 < 80 THEN 'train'
-        |       WHEN ((((((sc.user_id % 2147483647) * 2654435761)
-        |         % 2147483647) + 2147483647) % 2147483647) % 100 + 100)
-        |         % 100 < 90 THEN 'val'
-        |       ELSE 'test' END AS split
+        |${splitColumn("sc")}
         |FROM sc JOIN lab USING (user_id)""".stripMargin)
   )
 }

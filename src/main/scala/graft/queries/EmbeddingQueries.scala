@@ -20,10 +20,55 @@ object EmbeddingQueries {
   private val stagedPqIndex =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** The full PQ train+encode+ADC replay (shared by e_pq_topk
-    * and the e_pq_recall audit, which embeds it as a subquery). */
-  private val PqTopKOracle: String =
-    """WITH init AS (
+  /** IVF oracle fragment: portable-hash centroid init (CTE `ic`,
+    * nlist 16), query 17 (`qv`) and every vector's round-6 cosine
+    * argmax cell (`cells`). */
+  private val IvfCellCtes: String =
+    """ic AS (
+      |  SELECT row_number() OVER (
+      |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
+      |        vec_id) - 1 AS cell,
+      |    embedding AS ce
+      |  FROM embeddings
+      |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
+      |  LIMIT 16),
+      |qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 17),
+      |cells AS (
+      |  SELECT e.vec_id,
+      |    (SELECT cell FROM ic
+      |     ORDER BY ROUND(
+      |       list_sum(list_transform(list_zip(ic.ce, e.embedding),
+      |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |       / (sqrt(list_sum(list_transform(ic.ce,
+      |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+      |        * sqrt(list_sum(list_transform(e.embedding,
+      |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
+      |       DESC, cell
+      |     LIMIT 1) AS cell
+      |  FROM embeddings e)""".stripMargin
+
+  /** IVF oracle fragment: CTE `probed`, the nprobe = 4 cells nearest
+    * query 17. */
+  private val IvfProbedCte: String =
+    """probed AS (
+      |  SELECT ic.cell FROM ic, qv
+      |  ORDER BY ROUND(
+      |      list_sum(list_transform(list_zip(ic.ce, qv.qe),
+      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(ic.ce,
+      |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+      |       * sqrt(list_sum(list_transform(qv.qe,
+      |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
+      |    DESC, ic.cell
+      |  LIMIT 4)""".stripMargin
+
+  /** The PQ codebook training replay, shared by every PQ oracle:
+    * portable-hash init slices, one Lloyd round (round-6 L2 argmin,
+    * lowest code ties; exact-decimal per-dim means narrowed to REAL),
+    * then CTE `a2`, every vector's codes against the trained books
+    * `cb1`. */
+  private val PqTrainCtes: String =
+    """init AS (
       |  SELECT row_number() OVER (
       |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
       |        vec_id) - 1 AS code,
@@ -69,7 +114,13 @@ object EmbeddingQueries {
       |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
       |       code
       |     LIMIT 1) AS code
-      |  FROM embeddings e, subs s),
+      |  FROM embeddings e, subs s)""".stripMargin
+
+  /** The full PQ train+encode+ADC replay (shared by e_pq_topk,
+    * e_pq_indexed and the e_pq_recall audit, which embeds it as a
+    * subquery). */
+  private val PqTopKOracle: String =
+    s"""WITH $PqTrainCtes,
       |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 17),
       |tbl AS (
       |  SELECT cb1.sub, cb1.code,
@@ -244,6 +295,278 @@ cov${c + 1} AS MATERIALIZED (
     s"$base,\n${(1 to k).map(comp).mkString(",\n")}"
   }
 
+  /** The margin-mining tail shared by e_mutual_margin and its IVF twin:
+    * id-tiebreak ranks in both directions, TRUNCATING (sign-explicit)
+    * micro neighborhood means, and the mutual top-1 pairs over candidate
+    * pair CTE `p`. */
+  private val MarginTail: String =
+    """r AS (
+      |  SELECT a_id, b_id, cos,
+      |    CAST(cos * 1000000 AS BIGINT) AS mu,
+      |    ROW_NUMBER() OVER (PARTITION BY a_id
+      |      ORDER BY cos DESC, b_id) AS ra,
+      |    ROW_NUMBER() OVER (PARTITION BY b_id
+      |      ORDER BY cos DESC, a_id) AS rb
+      |  FROM p),
+      |ma AS (
+      |  SELECT a_id, CASE WHEN SUM(mu) >= 0
+      |    THEN SUM(mu) // COUNT(*)
+      |    ELSE -((-SUM(mu)) // COUNT(*)) END AS ma
+      |  FROM r WHERE ra <= 4 GROUP BY 1),
+      |mb AS (
+      |  SELECT b_id, CASE WHEN SUM(mu) >= 0
+      |    THEN SUM(mu) // COUNT(*)
+      |    ELSE -((-SUM(mu)) // COUNT(*)) END AS mb
+      |  FROM r WHERE rb <= 4 GROUP BY 1)
+      |SELECT r.a_id, r.b_id, CAST(r.cos AS DOUBLE) AS cosine,
+      |  CASE WHEN ma.ma + mb.mb > 0 THEN
+      |    ROUND(2.0 * CAST(r.mu AS DOUBLE)
+      |      / CAST(ma.ma + mb.mb AS DOUBLE), 6) END AS margin
+      |FROM r JOIN ma ON ma.a_id = r.a_id
+      |  JOIN mb ON mb.b_id = r.b_id
+      |WHERE r.ra = 1 AND r.rb = 1""".stripMargin
+
+  /** The batch IVF k-NN join replay (nlist 64, every 100th vector a
+    * query probing its top-8 cells, top-5 neighbours), over the
+    * centroid source `centsFrom` and the assigned corpus `assignFrom`.
+    */
+  private def ivfKnnJoinOracle(centsFrom: String, assignFrom: String)
+      : String =
+    s"""WITH cents AS (
+      |  SELECT row_number() OVER (
+      |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id) - 1 AS cell,
+      |    embedding AS ce
+      |  FROM $centsFrom
+      |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
+      |  LIMIT 64),
+      |q AS (SELECT vec_id AS query_id, embedding AS qe
+      |      FROM embeddings WHERE vec_id % 100 = 0),
+      |probed AS (
+      |  SELECT query_id, cell FROM (
+      |    SELECT q.query_id, cents.cell,
+      |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
+      |        list_sum(list_transform(list_zip(ce, qe),
+      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |        / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |        DESC, cents.cell) AS pr
+      |    FROM cents, q)
+      |  WHERE pr <= 8),
+      |assign AS (
+      |  SELECT e.vec_id, e.embedding,
+      |    (SELECT cell FROM cents
+      |     ORDER BY ROUND(
+      |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
+      |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |       DESC, cell
+      |     LIMIT 1) AS cell
+      |  FROM $assignFrom),
+      |scored AS (
+      |  SELECT p.query_id, a.vec_id AS neighbor_id,
+      |    ROUND(
+      |      list_sum(list_transform(list_zip(a.embedding, q.qe),
+      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |       * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |      AS cos_sim
+      |  FROM probed p JOIN assign a USING (cell) JOIN q USING (query_id)
+      |  WHERE a.vec_id <> p.query_id)
+      |SELECT query_id, neighbor_id, cos_sim,
+      |  CAST(row_number() OVER (PARTITION BY query_id
+      |       ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rnk
+      |FROM scored QUALIFY rnk <= 5""".stripMargin
+
+  /** The nDCG@10 tail shared by e_ndcg and e_ndcg_ivf over relevance
+    * CTE `rel` (query_id, rank r, 0/1 rel): gain terms one rounded chain
+    * each, DCG and IDCG exact decimal sums. */
+  private val NdcgTail: String =
+    """ir AS (SELECT query_id, r, rel,
+      |    row_number() OVER (PARTITION BY query_id
+      |      ORDER BY rel DESC, r ASC) AS irk
+      |  FROM rel),
+      |t AS (SELECT query_id,
+      |    CAST(ROUND(CAST(rel AS DOUBLE) *
+      |      (ln(2) / ln(CAST(r AS DOUBLE) + 1.0)), 6)
+      |      AS DECIMAL(18,6)) AS g,
+      |    CAST(ROUND(CAST(rel AS DOUBLE) *
+      |      (ln(2) / ln(CAST(irk AS DOUBLE) + 1.0)), 6)
+      |      AS DECIMAL(18,6)) AS ig,
+      |    CASE WHEN rel > 0 THEN 1 ELSE 0 END AS isrel
+      |  FROM ir),
+      |agg AS (SELECT query_id AS query,
+      |    CAST(COUNT(*) AS BIGINT) AS n_ranked,
+      |    CAST(SUM(isrel) AS BIGINT) AS n_rel,
+      |    CAST(SUM(g) AS DECIMAL(28,6)) AS dcg,
+      |    CAST(SUM(ig) AS DECIMAL(28,6)) AS idcg
+      |  FROM t GROUP BY 1)
+      |SELECT query, n_ranked, n_rel,
+      |  CAST(dcg AS DOUBLE) AS dcg, CAST(idcg AS DOUBLE) AS idcg,
+      |  CASE WHEN idcg > 0 THEN
+      |    ROUND(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6)
+      |  END AS ndcg
+      |FROM agg""".stripMargin
+
+  /** The IVF top-10 replay for query vector 0 over the corpus without
+    * it: `nlist` portable-hash centroids drawn from `centsFrom`, the
+    * query's `nprobe` nearest cells, round-6 cosine argmax cells. */
+  private def ivfTopKOracle(centsFrom: String, nlist: Int, nprobe: Int)
+      : String =
+    s"""WITH cents AS (
+      |  SELECT row_number() OVER (
+      |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id) - 1 AS cell,
+      |    embedding AS ce
+      |  FROM $centsFrom
+      |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
+      |  LIMIT $nlist),
+      |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+      |probed AS (
+      |  SELECT cell FROM cents, q
+      |  ORDER BY ROUND(
+      |    list_sum(list_transform(list_zip(ce, qe),
+      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |    / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |     * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |    DESC, cell
+      |  LIMIT $nprobe),
+      |assign AS (
+      |  SELECT e.vec_id, e.embedding,
+      |    (SELECT cell FROM cents
+      |     ORDER BY ROUND(
+      |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
+      |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |       DESC, cell
+      |     LIMIT 1) AS cell
+      |  FROM embeddings e WHERE e.vec_id <> 0)
+      |SELECT a.vec_id AS neighbor_id,
+      |  ROUND(
+      |    list_sum(list_transform(list_zip(a.embedding, q.qe),
+      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |     * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |    AS cos_sim
+      |FROM assign a, q
+      |WHERE a.cell IN (SELECT cell FROM probed)
+      |ORDER BY cos_sim DESC, neighbor_id LIMIT 10""".stripMargin
+
+  /** The 1-bit sign index replayed for the binary oracles: 32 MSB-first
+    * sign bits per word via 1::BIGINT << (31 - offset) (bit 63 never set,
+    * so no engine sign wrap), packed into CTE `codes` (vec_id, w, word). */
+  private val BinaryCodeCtes: String =
+    """bits AS (
+      |  SELECT vec_id, CAST(u['i'] AS INT) // 32 AS w,
+      |    CASE WHEN CAST(u['x'] AS DOUBLE) > 0
+      |      THEN CAST(1 AS BIGINT) << (31 - (CAST(u['i'] AS INT) % 32))
+      |      ELSE CAST(0 AS BIGINT) END AS b
+      |  FROM (
+      |    SELECT vec_id,
+      |      unnest(list_transform(range(1, len(embedding) + 1),
+      |        k -> {'i': k - 1, 'x': embedding[CAST(k AS INT)]})) AS u
+      |    FROM embeddings
+      |    WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)),
+      |codes AS (
+      |  SELECT vec_id, w, CAST(SUM(b) AS BIGINT) AS word
+      |  FROM bits GROUP BY vec_id, w)""".stripMargin
+
+  /** CTE `ham`: every vector's Hamming distance to query 17, the sum of
+    * bit_count(xor) over the word-aligned join of `codes`. */
+  private val HammingCte: String =
+    """ham AS (
+      |  SELECT c.vec_id,
+      |    CAST(SUM(bit_count(xor(c.word, q.word))) AS BIGINT)
+      |      AS hamming
+      |  FROM codes c JOIN codes q ON q.vec_id = 17 AND q.w = c.w
+      |  WHERE c.vec_id <> 17
+      |  GROUP BY c.vec_id)""".stripMargin
+
+  /** The brute-force k-NN side of the IVF audits: every 100th non-null
+    * vector a query (CTE `q`), its exact round-6 cosine top-10 with id
+    * tiebreak in CTE `brute` (query_id, neighbor_id, rank ra). */
+  private val BruteKnnCtes: String =
+    """src AS MATERIALIZED (
+      |  SELECT vec_id, embedding FROM embeddings
+      |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
+      |q AS MATERIALIZED (
+      |  SELECT vec_id AS query_id, embedding AS qe
+      |  FROM src WHERE vec_id % 100 = 0),
+      |brute AS MATERIALIZED (
+      |  SELECT query_id, neighbor_id, ra FROM (
+      |    SELECT q.query_id, e.vec_id AS neighbor_id,
+      |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
+      |        list_sum(list_transform(list_zip(e.embedding, q.qe),
+      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |        / (sqrt(list_sum(list_transform(e.embedding,
+      |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(q.qe,
+      |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |        DESC, e.vec_id) AS ra
+      |    FROM q, src e WHERE e.vec_id <> q.query_id)
+      |  WHERE ra <= 10)""".stripMargin
+
+  /** The two-level IVF corpus assignment (the hierAssign deployment
+    * contract) over centroid CTE `cents` and corpus CTE `src`:
+    * ceil(sqrt(nlist)) supers, each cell pinned to its nearest super,
+    * each vector to its nearest super then to its nearest cell in
+    * that super's group. CTE `assign` carries vec_id, embedding,
+    * column `carry` and cell. */
+  private def ivfTwoLevelAssign(carry: String): String =
+    s"""nsup AS (
+      |  SELECT CAST(CEIL(SQRT(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)
+      |    AS ns FROM cents),
+      |sup AS MATERIALIZED (
+      |  SELECT cell, ce FROM cents
+      |  WHERE cell < (SELECT ns FROM nsup)),
+      |so0 AS (
+      |  SELECT c.cell, s.cell AS sup,
+      |    row_number() OVER (PARTITION BY c.cell ORDER BY ROUND(
+      |      list_sum(list_transform(list_zip(c.ce, s.ce),
+      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |       * sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |      DESC, s.cell) AS pr
+      |  FROM cents c, sup s),
+      |superof AS MATERIALIZED (
+      |  SELECT cell, CASE WHEN cell < (SELECT ns FROM nsup)
+      |    THEN cell ELSE sup END AS sup
+      |  FROM so0 WHERE pr = 1),
+      |a1 AS MATERIALIZED (
+      |  SELECT vec_id, embedding, $carry, sup FROM (
+      |    SELECT e.vec_id, e.embedding, e.$carry, s.cell AS sup,
+      |      row_number() OVER (PARTITION BY e.vec_id ORDER BY ROUND(
+      |        list_sum(list_transform(list_zip(s.ce, e.embedding),
+      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |        / (sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |        DESC, s.cell) AS pr
+      |    FROM src e, sup s)
+      |  WHERE pr = 1),
+      |assign AS MATERIALIZED (
+      |  SELECT vec_id, embedding, $carry, cell FROM (
+      |    SELECT a.vec_id, a.embedding, a.$carry, so.cell,
+      |      row_number() OVER (PARTITION BY a.vec_id ORDER BY ROUND(
+      |        list_sum(list_transform(list_zip(c.ce, a.embedding),
+      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |        / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |        DESC, so.cell) AS rn
+      |    FROM a1 a JOIN superof so ON so.sup = a.sup
+      |      JOIN cents c ON c.cell = so.cell)
+      |  WHERE rn = 1)""".stripMargin
+
+  /** Oracle fragment: round-6 cosine between list expressions `a`
+    * and `b`. */
+  private def cos(a: String, b: String): String =
+    s"""ROUND(list_sum(list_transform(list_zip($a, $b),
+       |  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+       |  / (sqrt(list_sum(list_transform($a,
+       |       x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+       |   * sqrt(list_sum(list_transform($b,
+       |       x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)"""
+      .stripMargin
+
   val queries: Seq[Query] = Seq(
     // ---- E: margin-scored mutual k-NN matching across labels 0/1 —
     // the bitext-mining criterion: mutual top-1 pairs only, margin =
@@ -257,7 +580,7 @@ cov${c + 1} AS MATERIALIZED (
           "vec_id", "embedding", col("label") === 0, k = 4),
       // the full mining pipeline replayed: round-6 cosines, id-tiebreak
       // ranks, TRUNCATING (sign-explicit) micro neighborhood means
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT vec_id AS a_id, embedding AS va FROM embeddings
         |  WHERE label = 0 AND vec_id IS NOT NULL
         |    AND embedding IS NOT NULL),
@@ -276,31 +599,7 @@ cov${c + 1} AS MATERIALIZED (
         |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
         |      AS DECIMAL(18,6)) AS cos
         |  FROM a, b),
-        |r AS (
-        |  SELECT a_id, b_id, cos,
-        |    CAST(cos * 1000000 AS BIGINT) AS mu,
-        |    ROW_NUMBER() OVER (PARTITION BY a_id
-        |      ORDER BY cos DESC, b_id) AS ra,
-        |    ROW_NUMBER() OVER (PARTITION BY b_id
-        |      ORDER BY cos DESC, a_id) AS rb
-        |  FROM p),
-        |ma AS (
-        |  SELECT a_id, CASE WHEN SUM(mu) >= 0
-        |    THEN SUM(mu) // COUNT(*)
-        |    ELSE -((-SUM(mu)) // COUNT(*)) END AS ma
-        |  FROM r WHERE ra <= 4 GROUP BY 1),
-        |mb AS (
-        |  SELECT b_id, CASE WHEN SUM(mu) >= 0
-        |    THEN SUM(mu) // COUNT(*)
-        |    ELSE -((-SUM(mu)) // COUNT(*)) END AS mb
-        |  FROM r WHERE rb <= 4 GROUP BY 1)
-        |SELECT r.a_id, r.b_id, CAST(r.cos AS DOUBLE) AS cosine,
-        |  CASE WHEN ma.ma + mb.mb > 0 THEN
-        |    ROUND(2.0 * CAST(r.mu AS DOUBLE)
-        |      / CAST(ma.ma + mb.mb AS DOUBLE), 6) END AS margin
-        |FROM r JOIN ma ON ma.a_id = r.a_id
-        |  JOIN mb ON mb.b_id = r.b_id
-        |WHERE r.ra = 1 AND r.rb = 1""".stripMargin),
+        |$MarginTail""".stripMargin),
 
     // ---- E: SHORTLIST-FED margin mining — the serving-scale twin of
     // e_mutual_margin: candidate pairs are the union of two directed
@@ -330,7 +629,7 @@ cov${c + 1} AS MATERIALIZED (
       // per-query top-8 shortlist, union-distinct across the two
       // directions), then the identical margin tail over the shortlist
       // pair frame instead of the |A|·|B| product.
-      """WITH src AS MATERIALIZED (
+      s"""WITH src AS MATERIALIZED (
         |  SELECT vec_id, embedding, label = 0 AS ina
         |  FROM embeddings
         |  WHERE label IN (0, 1) AND vec_id IS NOT NULL
@@ -345,48 +644,7 @@ cov${c + 1} AS MATERIALIZED (
         |    vec_id
         |  LIMIT (SELECT GREATEST(16,
         |    CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)) FROM src)),
-        |nsup AS (
-        |  SELECT CAST(CEIL(SQRT(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)
-        |    AS ns FROM cents),
-        |sup AS MATERIALIZED (
-        |  SELECT cell, ce FROM cents
-        |  WHERE cell < (SELECT ns FROM nsup)),
-        |so0 AS (
-        |  SELECT c.cell, s.cell AS sup,
-        |    row_number() OVER (PARTITION BY c.cell ORDER BY ROUND(
-        |      list_sum(list_transform(list_zip(c.ce, s.ce),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |      DESC, s.cell) AS pr
-        |  FROM cents c, sup s),
-        |superof AS MATERIALIZED (
-        |  SELECT cell, CASE WHEN cell < (SELECT ns FROM nsup)
-        |    THEN cell ELSE sup END AS sup
-        |  FROM so0 WHERE pr = 1),
-        |a1 AS MATERIALIZED (
-        |  SELECT vec_id, embedding, ina, sup FROM (
-        |    SELECT e.vec_id, e.embedding, e.ina, s.cell AS sup,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(s.ce, e.embedding),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, s.cell) AS pr
-        |    FROM src e, sup s)
-        |  WHERE pr = 1),
-        |assign AS MATERIALIZED (
-        |  SELECT vec_id, embedding, ina, cell FROM (
-        |    SELECT a.vec_id, a.embedding, a.ina, so.cell,
-        |      row_number() OVER (PARTITION BY a.vec_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(c.ce, a.embedding),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, so.cell) AS rn
-        |    FROM a1 a JOIN superof so ON so.sup = a.sup
-        |      JOIN cents c ON c.cell = so.cell)
-        |  WHERE rn = 1),
+        |${ivfTwoLevelAssign("ina")},
         |probed AS MATERIALIZED (
         |  SELECT vec_id, ina, qe, cell FROM (
         |    SELECT s.vec_id, s.ina, s.embedding AS qe, c.cell,
@@ -425,31 +683,7 @@ cov${c + 1} AS MATERIALIZED (
         |    CASE WHEN ina THEN nid ELSE qid END AS b_id,
         |    cos
         |  FROM sl),
-        |r AS (
-        |  SELECT a_id, b_id, cos,
-        |    CAST(cos * 1000000 AS BIGINT) AS mu,
-        |    ROW_NUMBER() OVER (PARTITION BY a_id
-        |      ORDER BY cos DESC, b_id) AS ra,
-        |    ROW_NUMBER() OVER (PARTITION BY b_id
-        |      ORDER BY cos DESC, a_id) AS rb
-        |  FROM p),
-        |ma AS (
-        |  SELECT a_id, CASE WHEN SUM(mu) >= 0
-        |    THEN SUM(mu) // COUNT(*)
-        |    ELSE -((-SUM(mu)) // COUNT(*)) END AS ma
-        |  FROM r WHERE ra <= 4 GROUP BY 1),
-        |mb AS (
-        |  SELECT b_id, CASE WHEN SUM(mu) >= 0
-        |    THEN SUM(mu) // COUNT(*)
-        |    ELSE -((-SUM(mu)) // COUNT(*)) END AS mb
-        |  FROM r WHERE rb <= 4 GROUP BY 1)
-        |SELECT r.a_id, r.b_id, CAST(r.cos AS DOUBLE) AS cosine,
-        |  CASE WHEN ma.ma + mb.mb > 0 THEN
-        |    ROUND(2.0 * CAST(r.mu AS DOUBLE)
-        |      / CAST(ma.ma + mb.mb AS DOUBLE), 6) END AS margin
-        |FROM r JOIN ma ON ma.a_id = r.a_id
-        |  JOIN mb ON mb.b_id = r.b_id
-        |WHERE r.ra = 1 AND r.rb = 1""".stripMargin),
+        |$MarginTail""".stripMargin),
 
     // ---- E: embedding centroid drift — per-label cosine between the
     // even-id and odd-id slice centroids; compares exact micro-unit
@@ -609,14 +843,6 @@ cov${c + 1} AS MATERIALIZED (
       // per-prefix cosine top-10 vs the full-dim top-10, same rounded
       // ordering and id tiebreaks
       {
-        def cos(a: String, b: String): String =
-          s"""ROUND(list_sum(list_transform(list_zip($a, $b),
-             |  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-             |  / (sqrt(list_sum(list_transform($a,
-             |       x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-             |   * sqrt(list_sum(list_transform($b,
-             |       x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)"""
-            .stripMargin
         val pres = Seq(8, 16, 32).map { d =>
           s"""p$d AS MATERIALIZED (
              |  SELECT e.vec_id AS id
@@ -656,7 +882,7 @@ cov${c + 1} AS MATERIALIZED (
       // all k-center rounds unrolled; MATERIALIZED (each round
       // references the cumulative selection twice)
       {
-        def cos(a: String, b: String): String =
+        def cosDist(a: String, b: String): String =
           s"""ROUND(1.0 - list_sum(list_transform(list_zip($a, $b),
              |  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
              |  / (sqrt(list_sum(list_transform($a,
@@ -673,7 +899,7 @@ cov${c + 1} AS MATERIALIZED (
         val steps = (2 to 6).map { i =>
           s"""d$i AS MATERIALIZED (
              |  SELECT e.vec_id AS id,
-             |    MIN(${cos("e.embedding", "c.embedding")}) AS dm
+             |    MIN(${cosDist("e.embedding", "c.embedding")}) AS dm
              |  FROM embeddings e, embeddings c
              |  WHERE c.vec_id IN (SELECT id FROM sel${i - 1})
              |    AND e.vec_id NOT IN (SELECT id FROM sel${i - 1})
@@ -701,14 +927,6 @@ cov${c + 1} AS MATERIALIZED (
           "embedding", queryId = 17L, candidates = 20, k = 10,
           lambda = 0.7),
       {
-        def cos(a: String, b: String): String =
-          s"""ROUND(list_sum(list_transform(list_zip($a, $b),
-             |  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-             |  / (sqrt(list_sum(list_transform($a,
-             |       x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-             |   * sqrt(list_sum(list_transform($b,
-             |       x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)"""
-            .stripMargin
         val base =
           s"""WITH qv AS MATERIALIZED (
              |  SELECT embedding AS q FROM embeddings WHERE vec_id = 17),
@@ -852,44 +1070,7 @@ FROM proj"""
         Similarity.ivfTopKForVector(emb.filter(col("vec_id") =!= 0),
           "vec_id", "embedding", q, 10, cents, nprobe = 16)
       },
-      """WITH cents AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id) - 1 AS cell,
-        |    embedding AS ce
-        |  FROM embeddings
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 256),
-        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |probed AS (
-        |  SELECT cell FROM cents, q
-        |  ORDER BY ROUND(
-        |    list_sum(list_transform(list_zip(ce, qe),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |    DESC, cell
-        |  LIMIT 16),
-        |assign AS (
-        |  SELECT e.vec_id, e.embedding,
-        |    (SELECT cell FROM cents
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
-        |  FROM embeddings e WHERE e.vec_id <> 0)
-        |SELECT a.vec_id AS neighbor_id,
-        |  ROUND(
-        |    list_sum(list_transform(list_zip(a.embedding, q.qe),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |    AS cos_sim
-        |FROM assign a, q
-        |WHERE a.cell IN (SELECT cell FROM probed)
-        |ORDER BY cos_sim DESC, neighbor_id LIMIT 10""".stripMargin),
+      ivfTopKOracle("embeddings", nlist = 256, nprobe = 16)),
 
     // ---- similarity: PERSISTED IVF index (build once, query many) —
     // the repeated-query ANN path. The index is (id, vec) hive-
@@ -915,44 +1096,8 @@ FROM proj"""
       // corpus (vec_id <> 0 — the query vector is not indexed) at the
       // indexed query's knobs (nlist=64, nprobe=8). Bucketing by cell is
       // layout, not semantics, so the SQL recomputes assignment directly.
-      """WITH cents AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id) - 1 AS cell,
-        |    embedding AS ce
-        |  FROM embeddings WHERE vec_id <> 0
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 64),
-        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |probed AS (
-        |  SELECT cell FROM cents, q
-        |  ORDER BY ROUND(
-        |    list_sum(list_transform(list_zip(ce, qe),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |    DESC, cell
-        |  LIMIT 8),
-        |assign AS (
-        |  SELECT e.vec_id, e.embedding,
-        |    (SELECT cell FROM cents
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
-        |  FROM embeddings e WHERE e.vec_id <> 0)
-        |SELECT a.vec_id AS neighbor_id,
-        |  ROUND(
-        |    list_sum(list_transform(list_zip(a.embedding, q.qe),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |    AS cos_sim
-        |FROM assign a, q
-        |WHERE a.cell IN (SELECT cell FROM probed)
-        |ORDER BY cos_sim DESC, neighbor_id LIMIT 10""".stripMargin),
+      ivfTopKOracle("embeddings WHERE vec_id <> 0", nlist = 64,
+        nprobe = 8)),
 
     // ---- similarity: deterministic spherical k-means (TWO Lloyd
     // rounds from the portable-hash init): native broadcast-argmax
@@ -1074,35 +1219,7 @@ FROM proj"""
            |      SELECT ca, MAX(nab) AS mx FROM c GROUP BY ca)) AS DOUBLE)
            |    / CAST(nt AS DOUBLE), 6) AS purity
            |  FROM tots),
-           |w AS (
-           |  SELECT nab,
-           |    SUM(nab) OVER (PARTITION BY ca) AS na,
-           |    SUM(nab) OVER (PARTITION BY lb) AS nb,
-           |    SUM(nab) OVER () AS n
-           |  FROM c),
-           |agg AS (
-           |  SELECT CAST(SUM(nab) AS BIGINT) AS n,
-           |    CAST(COUNT(*) AS BIGINT) AS cells,
-           |    SUM(CAST(nab * ROUND(ln(CAST(nab AS DOUBLE) * CAST(n AS DOUBLE)
-           |      / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))), 6)
-           |      AS DECIMAL(28,6))) AS minum
-           |  FROM w),
-           |ma AS (
-           |  SELECT SUM(CAST(na * ROUND(ln(CAST(na AS DOUBLE)), 6)
-           |    AS DECIMAL(28,6))) AS sa
-           |  FROM (SELECT ca, SUM(nab) AS na FROM c GROUP BY ca)),
-           |mb AS (
-           |  SELECT SUM(CAST(nb * ROUND(ln(CAST(nb AS DOUBLE)), 6)
-           |    AS DECIMAL(28,6))) AS sb
-           |  FROM (SELECT lb, SUM(nab) AS nb FROM c GROUP BY lb)),
-           |f AS (
-           |  SELECT n, cells,
-           |    ROUND(CAST(minum AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mi,
-           |    ROUND(ln(CAST(n AS DOUBLE))
-           |      - CAST(sa AS DOUBLE) / CAST(n AS DOUBLE), 6) AS h_a,
-           |    ROUND(ln(CAST(n AS DOUBLE))
-           |      - CAST(sb AS DOUBLE) / CAST(n AS DOUBLE), 6) AS h_b
-           |  FROM agg, ma, mb)
+           |${AnalyticsQueries.mutualInfoCtes("ca", "lb")}
            |SELECT n, cells, purity, mi, h_a, h_b,
            |  CASE WHEN LEAST(h_a, h_b) > 0
            |       THEN ROUND(mi / LEAST(h_a, h_b), 6) END AS nmi
@@ -1127,53 +1244,7 @@ FROM proj"""
       // the whole PQ training run replayed per subspace: portable-hash
       // init slices, round-6 L2 argmin (lowest code ties), exact-decimal
       // per-dim means narrowed to REAL, final encode vs the trained books
-      """WITH init AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
-        |        vec_id) - 1 AS code,
-        |    embedding AS e
-        |  FROM embeddings
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 8),
-        |subs AS (SELECT unnest(range(4)) AS sub),
-        |cb0 AS (
-        |  SELECT subs.sub, init.code,
-        |    init.e[subs.sub*16 + 1 : subs.sub*16 + 16] AS ce
-        |  FROM init, subs),
-        |a1 AS (
-        |  SELECT e.vec_id, s.sub,
-        |    (SELECT code FROM cb0 WHERE cb0.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb0.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM embeddings e, subs s),
-        |m1 AS (
-        |  SELECT a.sub, a.code, d.sd,
-        |    CAST(CAST(SUM(CAST(ROUND(
-        |        CAST(e.embedding[a.sub*16 + d.sd + 1] AS DOUBLE), 6)
-        |        AS DECIMAL(20,6))) AS DOUBLE) / COUNT(*) AS REAL) AS mn
-        |  FROM a1 a JOIN embeddings e USING (vec_id),
-        |    (SELECT unnest(range(16)) AS sd) d
-        |  GROUP BY 1, 2, 3),
-        |cb1 AS (
-        |  SELECT cb0.sub, cb0.code, COALESCE(l.ml, cb0.ce) AS ce
-        |  FROM cb0 LEFT JOIN (
-        |    SELECT sub, code, list(mn ORDER BY sd) AS ml
-        |    FROM m1 GROUP BY 1, 2) l
-        |  USING (sub, code)),
-        |a2 AS (
-        |  SELECT e.vec_id, s.sub,
-        |    (SELECT code FROM cb1 WHERE cb1.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb1.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM embeddings e, subs s)
+      s"""WITH $PqTrainCtes
         |SELECT vec_id,
         |  array_to_string(list(CAST(code AS INT) ORDER BY sub), ',')
         |    AS codes
@@ -1193,86 +1264,9 @@ FROM proj"""
       // cells, top-nprobe probe) composed with the full PQ replay; the
       // probed-cell filter gates the ADC scoring exactly as the engine's
       // isin does
-      """WITH ic AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
-        |        vec_id) - 1 AS cell,
-        |    embedding AS ce
-        |  FROM embeddings
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 16),
-        |qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 17),
-        |cells AS (
-        |  SELECT e.vec_id,
-        |    (SELECT cell FROM ic
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(ic.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(ic.ce,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
-        |  FROM embeddings e),
-        |probed AS (
-        |  SELECT ic.cell FROM ic, qv
-        |  ORDER BY ROUND(
-        |      list_sum(list_transform(list_zip(ic.ce, qv.qe),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(ic.ce,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(qv.qe,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-        |    DESC, ic.cell
-        |  LIMIT 4),
-        |init AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
-        |        vec_id) - 1 AS code,
-        |    embedding AS e
-        |  FROM embeddings
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 8),
-        |subs AS (SELECT unnest(range(4)) AS sub),
-        |cb0 AS (
-        |  SELECT subs.sub, init.code,
-        |    init.e[subs.sub*16 + 1 : subs.sub*16 + 16] AS ce
-        |  FROM init, subs),
-        |a1 AS (
-        |  SELECT e.vec_id, s.sub,
-        |    (SELECT code FROM cb0 WHERE cb0.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb0.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM embeddings e, subs s),
-        |m1 AS (
-        |  SELECT a.sub, a.code, d.sd,
-        |    CAST(CAST(SUM(CAST(ROUND(
-        |        CAST(e.embedding[a.sub*16 + d.sd + 1] AS DOUBLE), 6)
-        |        AS DECIMAL(20,6))) AS DOUBLE) / COUNT(*) AS REAL) AS mn
-        |  FROM a1 a JOIN embeddings e USING (vec_id),
-        |    (SELECT unnest(range(16)) AS sd) d
-        |  GROUP BY 1, 2, 3),
-        |cb1 AS (
-        |  SELECT cb0.sub, cb0.code, COALESCE(l.ml, cb0.ce) AS ce
-        |  FROM cb0 LEFT JOIN (
-        |    SELECT sub, code, list(mn ORDER BY sd) AS ml
-        |    FROM m1 GROUP BY 1, 2) l
-        |  USING (sub, code)),
-        |a2 AS (
-        |  SELECT e.vec_id, s.sub,
-        |    (SELECT code FROM cb1 WHERE cb1.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb1.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM embeddings e, subs s),
+      s"""WITH $IvfCellCtes,
+        |$IvfProbedCte,
+        |$PqTrainCtes,
         |tbl AS (
         |  SELECT cb1.sub, cb1.code,
         |    ROUND(list_sum(list_transform(
@@ -1305,28 +1299,7 @@ FROM proj"""
       // the full IVFADC replay: coarse cells, EXACT-FLOAT residuals
       // (x[1]-x[2] on FLOAT lists = Spark's float zip_with), codebooks
       // trained on residuals, per-probed-cell query-residual tables
-      """WITH ic AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
-        |        vec_id) - 1 AS cell,
-        |    embedding AS ce
-        |  FROM embeddings
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 16),
-        |qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 17),
-        |cells AS (
-        |  SELECT e.vec_id,
-        |    (SELECT cell FROM ic
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(ic.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(ic.ce,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
-        |  FROM embeddings e),
+      s"""WITH $IvfCellCtes,
         |r AS (
         |  SELECT e.vec_id,
         |    list_transform(list_zip(e.embedding, ic.ce),
@@ -1381,17 +1354,7 @@ FROM proj"""
         |       code
         |     LIMIT 1) AS code
         |  FROM r, subs s),
-        |probed AS (
-        |  SELECT ic.cell FROM ic, qv
-        |  ORDER BY ROUND(
-        |      list_sum(list_transform(list_zip(ic.ce, qv.qe),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(ic.ce,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(qv.qe,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-        |    DESC, ic.cell
-        |  LIMIT 4),
+        |$IvfProbedCte,
         |qres AS (
         |  SELECT ic.cell,
         |    list_transform(list_zip(qv.qe, ic.ce), x -> x[1] - x[2]) AS qr
@@ -1434,68 +1397,7 @@ FROM proj"""
       // the persisted-index query must equal the end-to-end run: the
       // SAME SQL as e_pq_topk is the contract that persistence never
       // changes the answer
-      """WITH init AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
-        |        vec_id) - 1 AS code,
-        |    embedding AS e
-        |  FROM embeddings
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 8),
-        |subs AS (SELECT unnest(range(4)) AS sub),
-        |cb0 AS (
-        |  SELECT subs.sub, init.code,
-        |    init.e[subs.sub*16 + 1 : subs.sub*16 + 16] AS ce
-        |  FROM init, subs),
-        |a1 AS (
-        |  SELECT e.vec_id, s.sub,
-        |    (SELECT code FROM cb0 WHERE cb0.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb0.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM embeddings e, subs s),
-        |m1 AS (
-        |  SELECT a.sub, a.code, d.sd,
-        |    CAST(CAST(SUM(CAST(ROUND(
-        |        CAST(e.embedding[a.sub*16 + d.sd + 1] AS DOUBLE), 6)
-        |        AS DECIMAL(20,6))) AS DOUBLE) / COUNT(*) AS REAL) AS mn
-        |  FROM a1 a JOIN embeddings e USING (vec_id),
-        |    (SELECT unnest(range(16)) AS sd) d
-        |  GROUP BY 1, 2, 3),
-        |cb1 AS (
-        |  SELECT cb0.sub, cb0.code, COALESCE(l.ml, cb0.ce) AS ce
-        |  FROM cb0 LEFT JOIN (
-        |    SELECT sub, code, list(mn ORDER BY sd) AS ml
-        |    FROM m1 GROUP BY 1, 2) l
-        |  USING (sub, code)),
-        |a2 AS (
-        |  SELECT e.vec_id, s.sub,
-        |    (SELECT code FROM cb1 WHERE cb1.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb1.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM embeddings e, subs s),
-        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 17),
-        |tbl AS (
-        |  SELECT cb1.sub, cb1.code,
-        |    ROUND(list_sum(list_transform(
-        |      list_zip(cb1.ce,
-        |        (SELECT qe FROM q)[cb1.sub*16+1 : cb1.sub*16+16]),
-        |      x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |         * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6) AS d
-        |  FROM cb1)
-        |SELECT a.vec_id,
-        |  CAST(SUM(CAST(t.d AS DECIMAL(18,6))) AS DOUBLE) AS adc_dist
-        |FROM a2 a JOIN tbl t ON t.sub = a.sub AND t.code = a.code
-        |GROUP BY a.vec_id
-        |ORDER BY adc_dist, a.vec_id
-        |LIMIT 10""".stripMargin),
+      PqTopKOracle),
 
     // ---- similarity: PQ top-k by asymmetric distance — query 17's
     // per-subspace distance table (4×8, driver-side) + m table
@@ -1553,27 +1455,8 @@ FROM proj"""
       // per word via 1::BIGINT << (31 - offset) — bit 63 never set, so
       // no engine sign wrap — then Hamming = SUM bit_count(xor) over
       // the word-aligned join
-      """WITH bits AS (
-        |  SELECT vec_id, CAST(u['i'] AS INT) // 32 AS w,
-        |    CASE WHEN CAST(u['x'] AS DOUBLE) > 0
-        |      THEN CAST(1 AS BIGINT) << (31 - (CAST(u['i'] AS INT) % 32))
-        |      ELSE CAST(0 AS BIGINT) END AS b
-        |  FROM (
-        |    SELECT vec_id,
-        |      unnest(list_transform(range(1, len(embedding) + 1),
-        |        k -> {'i': k - 1, 'x': embedding[CAST(k AS INT)]})) AS u
-        |    FROM embeddings
-        |    WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)),
-        |codes AS (
-        |  SELECT vec_id, w, CAST(SUM(b) AS BIGINT) AS word
-        |  FROM bits GROUP BY vec_id, w),
-        |ham AS (
-        |  SELECT c.vec_id,
-        |    CAST(SUM(bit_count(xor(c.word, q.word))) AS BIGINT)
-        |      AS hamming
-        |  FROM codes c JOIN codes q ON q.vec_id = 17 AND q.w = c.w
-        |  WHERE c.vec_id <> 17
-        |  GROUP BY c.vec_id),
+      s"""WITH $BinaryCodeCtes,
+        |$HammingCte,
         |top AS (
         |  SELECT vec_id, hamming FROM ham
         |  ORDER BY hamming, vec_id LIMIT 10)
@@ -1592,20 +1475,7 @@ FROM proj"""
           "embedding", queryId = 17L, topK = 10, d = 64),
       // the binary serve + the exact round-6 cosine top-10, hits via
       // the k-row join (the e_pq_recall audit shape)
-      """WITH bits AS (
-        |  SELECT vec_id, CAST(u['i'] AS INT) // 32 AS w,
-        |    CASE WHEN CAST(u['x'] AS DOUBLE) > 0
-        |      THEN CAST(1 AS BIGINT) << (31 - (CAST(u['i'] AS INT) % 32))
-        |      ELSE CAST(0 AS BIGINT) END AS b
-        |  FROM (
-        |    SELECT vec_id,
-        |      unnest(list_transform(range(1, len(embedding) + 1),
-        |        k -> {'i': k - 1, 'x': embedding[CAST(k AS INT)]})) AS u
-        |    FROM embeddings
-        |    WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)),
-        |codes AS (
-        |  SELECT vec_id, w, CAST(SUM(b) AS BIGINT) AS word
-        |  FROM bits GROUP BY vec_id, w),
+      s"""WITH $BinaryCodeCtes,
         |approx AS (
         |  SELECT c.vec_id,
         |    CAST(SUM(bit_count(xor(c.word, q.word))) AS BIGINT)
@@ -1646,27 +1516,8 @@ FROM proj"""
       // stage 1 = the e_binary_topk replay at shortlist width; stage 2
       // = exact round-6 cosine over ONLY the shortlist, id tiebreak in
       // both stages
-      """WITH bits AS (
-        |  SELECT vec_id, CAST(u['i'] AS INT) // 32 AS w,
-        |    CASE WHEN CAST(u['x'] AS DOUBLE) > 0
-        |      THEN CAST(1 AS BIGINT) << (31 - (CAST(u['i'] AS INT) % 32))
-        |      ELSE CAST(0 AS BIGINT) END AS b
-        |  FROM (
-        |    SELECT vec_id,
-        |      unnest(list_transform(range(1, len(embedding) + 1),
-        |        k -> {'i': k - 1, 'x': embedding[CAST(k AS INT)]})) AS u
-        |    FROM embeddings
-        |    WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)),
-        |codes AS (
-        |  SELECT vec_id, w, CAST(SUM(b) AS BIGINT) AS word
-        |  FROM bits GROUP BY vec_id, w),
-        |ham AS (
-        |  SELECT c.vec_id,
-        |    CAST(SUM(bit_count(xor(c.word, q.word))) AS BIGINT)
-        |      AS hamming
-        |  FROM codes c JOIN codes q ON q.vec_id = 17 AND q.w = c.w
-        |  WHERE c.vec_id <> 17
-        |  GROUP BY c.vec_id),
+      s"""WITH $BinaryCodeCtes,
+        |$HammingCte,
         |short AS (
         |  SELECT vec_id FROM ham ORDER BY hamming, vec_id LIMIT 50),
         |q AS (SELECT embedding AS qe FROM embeddings
@@ -1706,51 +1557,7 @@ FROM proj"""
       },
       // Same index arithmetic as e_ivf_topk generalized to a BATCH of
       // queries (every 100th vector), each probing its own top-8 cells.
-      """WITH cents AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id) - 1 AS cell,
-        |    embedding AS ce
-        |  FROM embeddings
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 64),
-        |q AS (SELECT vec_id AS query_id, embedding AS qe
-        |      FROM embeddings WHERE vec_id % 100 = 0),
-        |probed AS (
-        |  SELECT query_id, cell FROM (
-        |    SELECT q.query_id, cents.cell,
-        |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(ce, qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, cents.cell) AS pr
-        |    FROM cents, q)
-        |  WHERE pr <= 8),
-        |assign AS (
-        |  SELECT e.vec_id, e.embedding,
-        |    (SELECT cell FROM cents
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
-        |  FROM embeddings e),
-        |scored AS (
-        |  SELECT p.query_id, a.vec_id AS neighbor_id,
-        |    ROUND(
-        |      list_sum(list_transform(list_zip(a.embedding, q.qe),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |      AS cos_sim
-        |  FROM probed p JOIN assign a USING (cell) JOIN q USING (query_id)
-        |  WHERE a.vec_id <> p.query_id)
-        |SELECT query_id, neighbor_id, cos_sim,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |       ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rnk
-        |FROM scored QUALIFY rnk <= 5""".stripMargin),
+      ivfKnnJoinOracle("embeddings", "embeddings e")),
 
     // ---- similarity: linear CKA between the full 64-d embedding and
     // its 16-d Matryoshka prefix — the representation-agreement audit
@@ -1837,25 +1644,11 @@ FROM n, vxy, vxx, vyy"""
         ops.Analytics.rankBiasedOverlap(brute, approx, "query_id",
           "neighbor_id", "rank", depth = 10)
       },
-      """WITH src AS MATERIALIZED (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
-        |q AS MATERIALIZED (
-        |  SELECT vec_id AS query_id, embedding AS qe
-        |  FROM src WHERE vec_id % 100 = 0),
-        |brute AS MATERIALIZED (
-        |  SELECT query_id, neighbor_id, ra FROM (
-        |    SELECT q.query_id, e.vec_id AS neighbor_id,
-        |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(e.embedding, q.qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(e.embedding,
-        |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(q.qe,
-        |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, e.vec_id) AS ra
-        |    FROM q, src e WHERE e.vec_id <> q.query_id)
-        |  WHERE ra <= 10),
+      // brute top-10 + the e_ivf_knn_join IVF replay (nlist=64,
+      // nprobe=8) + the RBO tail: per-item W(max(ra,rb)) weights as
+      // term-wise round-6 decimals (the a58 POWER discipline), exact
+      // decimal sum, one x0.1 product, one double round
+      s"""WITH $BruteKnnCtes,
         |cents AS MATERIALIZED (
         |  SELECT row_number() OVER (
         |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id) - 1 AS cell,
@@ -1940,56 +1733,14 @@ FROM n, vxy, vxx, vyy"""
       },
       // the e_rbo brute top-10 replay + same-label relevance; gain
       // terms one rounded chain each, DCG/IDCG exact decimal sums
-      """WITH src AS MATERIALIZED (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
-        |q AS MATERIALIZED (
-        |  SELECT vec_id AS query_id, embedding AS qe
-        |  FROM src WHERE vec_id % 100 = 0),
-        |brute AS MATERIALIZED (
-        |  SELECT query_id, neighbor_id, ra FROM (
-        |    SELECT q.query_id, e.vec_id AS neighbor_id,
-        |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(e.embedding, q.qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(e.embedding,
-        |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(q.qe,
-        |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, e.vec_id) AS ra
-        |    FROM q, src e WHERE e.vec_id <> q.query_id)
-        |  WHERE ra <= 10),
+      s"""WITH $BruteKnnCtes,
         |rel AS (
         |  SELECT b.query_id, b.ra AS r,
         |    CASE WHEN ql.label = nl.label THEN 1 ELSE 0 END AS rel
         |  FROM brute b
         |  JOIN embeddings ql ON ql.vec_id = b.query_id
         |  JOIN embeddings nl ON nl.vec_id = b.neighbor_id),
-        |ir AS (SELECT query_id, r, rel,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY rel DESC, r ASC) AS irk
-        |  FROM rel),
-        |t AS (SELECT query_id,
-        |    CAST(ROUND(CAST(rel AS DOUBLE) *
-        |      (ln(2) / ln(CAST(r AS DOUBLE) + 1.0)), 6)
-        |      AS DECIMAL(18,6)) AS g,
-        |    CAST(ROUND(CAST(rel AS DOUBLE) *
-        |      (ln(2) / ln(CAST(irk AS DOUBLE) + 1.0)), 6)
-        |      AS DECIMAL(18,6)) AS ig,
-        |    CASE WHEN rel > 0 THEN 1 ELSE 0 END AS isrel
-        |  FROM ir),
-        |agg AS (SELECT query_id AS query,
-        |    CAST(COUNT(*) AS BIGINT) AS n_ranked,
-        |    CAST(SUM(isrel) AS BIGINT) AS n_rel,
-        |    CAST(SUM(g) AS DECIMAL(28,6)) AS dcg,
-        |    CAST(SUM(ig) AS DECIMAL(28,6)) AS idcg
-        |  FROM t GROUP BY 1)
-        |SELECT query, n_ranked, n_rel,
-        |  CAST(dcg AS DOUBLE) AS dcg, CAST(idcg AS DOUBLE) AS idcg,
-        |  CASE WHEN idcg > 0 THEN
-        |    ROUND(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6)
-        |  END AS ndcg
-        |FROM agg""".stripMargin),
+        |$NdcgTail""".stripMargin),
 
     // ---- similarity eval: nDCG@10 over the IVF shortlist — the
     // SAME k-bounded tail fed by ivfKnnJoin (nlist = nlistFor(n) —
@@ -2019,17 +1770,13 @@ FROM n, vxy, vxx, vyy"""
               .as("rel"))
         Quality.ndcgAtK(withRel, "query_id", "rank", "rel", k = 10)
       },
-      // brute top-10 + the e_ivf_knn_join IVF replay (derived nlist,
-      // nprobe=8) + the RBO tail: per-item W(max(ra,rb)) weights as
-      // term-wise round-6 decimals (the a58 POWER discipline), exact
-      // decimal sum, one x0.1 product, one double round
       // the WHOLE IVF structure (derived nlist, centroid pick, probe
       // ranks, TWO-LEVEL cell assignment: ⌈√nlist⌉ supers → member→
       // super groups with supers self-pinned → per-vector super argmax
       // then within-group argmax, per-query top-10) + same-label
       // relevance + the nDCG tail — the e_rbo replay feeding the
       // e_ndcg chains
-      """WITH src AS MATERIALIZED (
+      s"""WITH src AS MATERIALIZED (
         |  SELECT vec_id, embedding, label FROM embeddings
         |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
         |q AS MATERIALIZED (
@@ -2054,48 +1801,7 @@ FROM n, vxy, vxx, vyy"""
         |        DESC, cents.cell) AS pr
         |    FROM cents, q)
         |  WHERE pr <= 8),
-        |nsup AS (
-        |  SELECT CAST(CEIL(SQRT(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)
-        |    AS ns FROM cents),
-        |sup AS MATERIALIZED (
-        |  SELECT cell, ce FROM cents
-        |  WHERE cell < (SELECT ns FROM nsup)),
-        |so0 AS (
-        |  SELECT c.cell, s.cell AS sup,
-        |    row_number() OVER (PARTITION BY c.cell ORDER BY ROUND(
-        |      list_sum(list_transform(list_zip(c.ce, s.ce),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |      DESC, s.cell) AS pr
-        |  FROM cents c, sup s),
-        |superof AS MATERIALIZED (
-        |  SELECT cell, CASE WHEN cell < (SELECT ns FROM nsup)
-        |    THEN cell ELSE sup END AS sup
-        |  FROM so0 WHERE pr = 1),
-        |a1 AS MATERIALIZED (
-        |  SELECT vec_id, embedding, label, sup FROM (
-        |    SELECT e.vec_id, e.embedding, e.label, s.cell AS sup,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(s.ce, e.embedding),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, s.cell) AS pr
-        |    FROM src e, sup s)
-        |  WHERE pr = 1),
-        |assign AS MATERIALIZED (
-        |  SELECT vec_id, embedding, label, cell FROM (
-        |    SELECT a.vec_id, a.embedding, a.label, so.cell,
-        |      row_number() OVER (PARTITION BY a.vec_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(c.ce, a.embedding),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, so.cell) AS rn
-        |    FROM a1 a JOIN superof so ON so.sup = a.sup
-        |      JOIN cents c ON c.cell = so.cell)
-        |  WHERE rn = 1),
+        |${ivfTwoLevelAssign("label")},
         |ivf AS MATERIALIZED (
         |  SELECT query_id, ql, nl, rb FROM (
         |    SELECT p.query_id, q.ql, a.label AS nl,
@@ -2112,31 +1818,7 @@ FROM n, vxy, vxx, vyy"""
         |  SELECT query_id, rb AS r,
         |    CASE WHEN ql = nl THEN 1 ELSE 0 END AS rel
         |  FROM ivf),
-        |ir AS (SELECT query_id, r, rel,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY rel DESC, r ASC) AS irk
-        |  FROM rel),
-        |t AS (SELECT query_id,
-        |    CAST(ROUND(CAST(rel AS DOUBLE) *
-        |      (ln(2) / ln(CAST(r AS DOUBLE) + 1.0)), 6)
-        |      AS DECIMAL(18,6)) AS g,
-        |    CAST(ROUND(CAST(rel AS DOUBLE) *
-        |      (ln(2) / ln(CAST(irk AS DOUBLE) + 1.0)), 6)
-        |      AS DECIMAL(18,6)) AS ig,
-        |    CASE WHEN rel > 0 THEN 1 ELSE 0 END AS isrel
-        |  FROM ir),
-        |agg AS (SELECT query_id AS query,
-        |    CAST(COUNT(*) AS BIGINT) AS n_ranked,
-        |    CAST(SUM(isrel) AS BIGINT) AS n_rel,
-        |    CAST(SUM(g) AS DECIMAL(28,6)) AS dcg,
-        |    CAST(SUM(ig) AS DECIMAL(28,6)) AS idcg
-        |  FROM t GROUP BY 1)
-        |SELECT query, n_ranked, n_rel,
-        |  CAST(dcg AS DOUBLE) AS dcg, CAST(idcg AS DOUBLE) AS idcg,
-        |  CASE WHEN idcg > 0 THEN
-        |    ROUND(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6)
-        |  END AS ndcg
-        |FROM agg""".stripMargin),
+        |$NdcgTail""".stripMargin),
 
     // ---- similarity: per-label embedding centroids as MERGEABLE
     // PARTIALS (label, dim, exact sum, n) — posexplode to (label, dim),
@@ -2225,51 +1907,8 @@ FROM n, vxy, vxx, vyy"""
       },
       // The e_ivf_knn_join arithmetic over the PERSISTED-index corpus
       // (vec_id <> 0, nlist=64 — e_ivf_indexed's staging knobs).
-      """WITH cents AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id) - 1 AS cell,
-        |    embedding AS ce
-        |  FROM embeddings WHERE vec_id <> 0
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 64),
-        |q AS (SELECT vec_id AS query_id, embedding AS qe
-        |      FROM embeddings WHERE vec_id % 100 = 0),
-        |probed AS (
-        |  SELECT query_id, cell FROM (
-        |    SELECT q.query_id, cents.cell,
-        |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(ce, qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |        DESC, cents.cell) AS pr
-        |    FROM cents, q)
-        |  WHERE pr <= 8),
-        |assign AS (
-        |  SELECT e.vec_id, e.embedding,
-        |    (SELECT cell FROM cents
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
-        |  FROM embeddings e WHERE e.vec_id <> 0),
-        |scored AS (
-        |  SELECT p.query_id, a.vec_id AS neighbor_id,
-        |    ROUND(
-        |      list_sum(list_transform(list_zip(a.embedding, q.qe),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |      AS cos_sim
-        |  FROM probed p JOIN assign a USING (cell) JOIN q USING (query_id)
-        |  WHERE a.vec_id <> p.query_id)
-        |SELECT query_id, neighbor_id, cos_sim,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |       ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rnk
-        |FROM scored QUALIFY rnk <= 5""".stripMargin),
+      ivfKnnJoinOracle("embeddings WHERE vec_id <> 0",
+        "embeddings e WHERE e.vec_id <> 0")),
 
     Query("e_sim_pairs", "threshold pairs blocked by label",
       (s, dir) =>

@@ -73,6 +73,23 @@ object GraphQueries {
       |  FROM nodes LEFT JOIN c2 ON c2.node = nodes.node, nn, d2)
       |SELECT node, CAST(r AS DOUBLE) AS pagerank FROM r2""".stripMargin
 
+  /** The term co-occurrence edges every graph oracle starts from: lower-cased
+    * tokens per doc, then CTE `cooc`, token pairs (t1 <= t2) within a
+    * 2-token window seen at least 5 times. */
+  private val CooccurCtes: String =
+    """tk AS (
+      |  SELECT doc_id, list_filter(
+      |    string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS w
+      |  FROM documents),
+      |t0 AS (
+      |  SELECT doc_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS tok
+      |  FROM tk),
+      |cooc AS (
+      |  SELECT LEAST(a.tok, b.tok) AS t1, GREATEST(a.tok, b.tok) AS t2
+      |  FROM t0 a JOIN t0 b
+      |    ON a.doc_id = b.doc_id AND b.i > a.i AND b.i <= a.i + 2
+      |  GROUP BY 1, 2 HAVING COUNT(*) >= 5)""".stripMargin
+
   val queries: Seq[Query] = Seq(
     // ---- G1: per-node triangle counts over the term co-occurrence
     // graph — node-iterator with DEGREE ORIENTATION (edges directed
@@ -89,18 +106,7 @@ object GraphQueries {
           "t1", "t2"),
       // independent enumeration: canonical-order (x<y<z) triangle join,
       // not the engine's degree orientation — same triangles exactly once
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS w
-        |  FROM documents),
-        |t0 AS (
-        |  SELECT doc_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS tok
-        |  FROM tk),
-        |cooc AS (
-        |  SELECT LEAST(a.tok, b.tok) AS t1, GREATEST(a.tok, b.tok) AS t2
-        |  FROM t0 a JOIN t0 b
-        |    ON a.doc_id = b.doc_id AND b.i > a.i AND b.i <= a.i + 2
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 5),
+      s"""WITH $CooccurCtes,
         |ed AS (SELECT DISTINCT t1 AS u, t2 AS v FROM cooc WHERE t1 <> t2),
         |tri AS (
         |  SELECT a.u AS x, a.v AS y, b.v AS z
@@ -128,18 +134,7 @@ object GraphQueries {
       // converged graph peels nothing) over the g_triangles edge CTE
       {
         val base =
-          """WITH tk AS (
-            |  SELECT doc_id, list_filter(
-            |    string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS w
-            |  FROM documents),
-            |t0 AS (
-            |  SELECT doc_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS tok
-            |  FROM tk),
-            |cooc AS (
-            |  SELECT LEAST(a.tok, b.tok) AS t1, GREATEST(a.tok, b.tok) AS t2
-            |  FROM t0 a JOIN t0 b
-            |    ON a.doc_id = b.doc_id AND b.i > a.i AND b.i <= a.i + 2
-            |  GROUP BY 1, 2 HAVING COUNT(*) >= 5),
+          s"""WITH $CooccurCtes,
             |e0 AS MATERIALIZED (SELECT DISTINCT t1 AS u, t2 AS v
             |       FROM cooc WHERE t1 <> t2)""".stripMargin
         // MATERIALIZED: each round references the previous edge CTE
@@ -176,18 +171,7 @@ object GraphQueries {
       // label) — the same deterministic tiebreak as the Spark window
       {
         val base =
-          """WITH tk AS (
-            |  SELECT doc_id, list_filter(
-            |    string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS w
-            |  FROM documents),
-            |t0 AS (
-            |  SELECT doc_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS tok
-            |  FROM tk),
-            |cooc AS (
-            |  SELECT LEAST(a.tok, b.tok) AS t1, GREATEST(a.tok, b.tok) AS t2
-            |  FROM t0 a JOIN t0 b
-            |    ON a.doc_id = b.doc_id AND b.i > a.i AND b.i <= a.i + 2
-            |  GROUP BY 1, 2 HAVING COUNT(*) >= 5),
+          s"""WITH $CooccurCtes,
             |e0 AS MATERIALIZED (SELECT DISTINCT t1 AS u, t2 AS v
             |       FROM cooc WHERE t1 <> t2),
             |adj AS MATERIALIZED (

@@ -563,14 +563,23 @@ object JoinQueries {
           |  id // 2 AS record_key, entity_id
           |FROM cl""".stripMargin)),
 
+    // every customer has orders in the synthetic tables, so the orders
+    // side drops custkeys divisible by 10: those customers survive
     Query("j_anti", "anti join (§2.3 note: QC parity)",
       (s, dir) => {
-        val withOrders = t(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
+        val withOrders = t(s, dir, "orders")
+          .filter(col("o_custkey") % 10 =!= 0)
+          .select(col("o_custkey").as("c_custkey"))
         Joins.anti(t(s, dir, "customer"), withOrders, Seq("c_custkey"))
           .select("c_custkey", "c_name")
       },
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)""".stripMargin),
+      // NOT EXISTS is left_anti's semantics; NOT IN would return no row
+      // once the subquery yields a NULL
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_custkey % 10 <> 0)"""
+        .stripMargin),
 
     Query("j6_regex_vocab", "§2.3 J6 regex theta-join (vocab word-boundary match)",
       (s, dir) => {

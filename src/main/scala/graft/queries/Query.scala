@@ -18,6 +18,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - DuckDB `regexp_replace` needs the 'g' flag to match Spark's
   *    replace-all semantics;
   *  - window orderings always carry a unique tiebreak column.
+  *
+  * One spelling per oracle replay: a SQL chain that two or more oracles
+  * replay is one `private` (or `private[queries]`) fragment in the
+  * family that owns the operator, interpolated where it is used
+  * (`s"""WITH $Frag, ..."""`). A fragment takes a parameter only where
+  * its copies differ in a CTE name or a literal, and must be defined
+  * above every val that uses it (object vals initialize in order).
+  * CatalogSpec fails when 15 consecutive non-blank lines recur in two
+  * literals. Margin hazard: the outer literal's `stripMargin` runs
+  * over the interpolated text again, so a fragment line that begins
+  * with `|` after its indentation (a leading SQL `||`) would lose it;
+  * concatenate such a fragment instead. A literal with a backslash
+  * (`'\s+'`) interpolates with `raw`, which keeps escapes as written.
   */
 final case class Query(name: String, concept: String,
                        build: (SparkSession, String) => DataFrame,

@@ -9,7 +9,8 @@ import graft.text.Dedup
 
 import Fixtures._
 import TextQueries.duckStripSql
-import WindowQueries.{FunnelOracle, HoltOracle, RateLimitOracle, RollingMadOracle, ZscoreOracle}
+import WindowQueries.{CusumOracle, EwmaOracle, FunnelOracle, HoltOracle,
+  RateLimitOracle, RollingMadOracle, ZscoreOracle}
 
 /** Storage and streaming queries (prefix s): sink/scan roundtrips, merges
   * and snapshots, crawl-format scans, and bounded `AvailableNow` stream
@@ -267,6 +268,72 @@ object StorageQueries {
       graft.streaming.EventStreams.dedupStream(stream, Seq("event_id"))
         .select("event_id", "user_id", "event_type"),
       queryName = s"tt_${System.nanoTime()}", checkpoint = s"$ckpt/ckpt")
+  }
+
+  /** Every user's sessions by gaps-and-islands on second-truncated
+    * event time (30-min gap): the batch answer both sessionize streams
+    * must reproduce. */
+  private val SessionsOracle: String =
+    """WITH e AS (
+      |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
+      |  FROM events),
+      |d AS (
+      |  SELECT user_id, sec,
+      |    CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800
+      |         THEN 1 ELSE 0 END AS brk
+      |  FROM e),
+      |s AS (
+      |  SELECT user_id, sec,
+      |    SUM(brk) OVER (PARTITION BY user_id ORDER BY sec
+      |                   ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM d),
+      |g AS (
+      |  SELECT user_id, sid, MIN(sec) AS start_sec, MAX(sec) AS end_sec,
+      |    COUNT(*) AS n
+      |  FROM s GROUP BY user_id, sid)
+      |SELECT user_id,
+      |  make_timestamp(start_sec * 1000000) AS session_start,
+      |  make_timestamp(end_sec * 1000000) AS session_end,
+      |  CAST(n AS INT) AS n_events
+      |FROM g""".stripMargin
+
+  /** The streamed drift monitors' batch replay up to CTE `cnt`: the
+    * frozen reference (first-half deciles `q`, per-bin reference share
+    * `num / den` pivoted into `rsp`) and each day window's per-bin
+    * counts n1..n10 with their total `tot`. */
+  private def driftWindowCtes(num: String, den: String): String = {
+    val qs = (1 to 9).map(i =>
+      s"quantile_cont(v, 0.$i) AS q$i").mkString(",\n  ")
+    val binExpr = "1 " +
+      (1 to 9).map(i => s"+ CAST(v > q$i AS INT)").mkString(" ")
+    val ns = (1 to 10).map(i =>
+      s"SUM(CASE WHEN bin = $i THEN 1 ELSE 0 END) AS n$i")
+      .mkString(",\n  ")
+    val rsp = (1 to 10).map(i =>
+      s"MAX(CASE WHEN bin = $i THEN r END) AS r$i").mkString(",\n  ")
+    s"""WITH r0 AS (
+       |  SELECT CAST(value AS DOUBLE) AS v FROM events
+       |  WHERE value IS NOT NULL AND day(ts) <= 15),
+       |q AS (SELECT
+       |  $qs
+       |  FROM r0),
+       |rb AS (SELECT $binExpr AS bin FROM r0, q),
+       |r AS (SELECT bin, COUNT(*) AS ref_n FROM rb GROUP BY 1),
+       |tr AS (SELECT CAST(SUM(ref_n) AS BIGINT) AS tr FROM r),
+       |rs AS (SELECT i AS bin,
+       |         $num /
+       |           $den AS r
+       |       FROM range(1, 11) t(i) LEFT JOIN r ON r.bin = i, tr),
+       |rsp AS (SELECT
+       |  $rsp
+       |  FROM rs),
+       |a0 AS (SELECT CAST(value AS DOUBLE) AS v,
+       |         CAST(date_trunc('day', ts) AS TIMESTAMP) AS d
+       |       FROM events WHERE value IS NOT NULL),
+       |ab AS (SELECT d, $binExpr AS bin FROM a0, q),
+       |cnt AS (SELECT d,
+       |  $ns,
+       |  COUNT(*) AS tot FROM ab GROUP BY 1)""".stripMargin
   }
 
   val queries: Seq[Query] = Seq(
@@ -717,43 +784,13 @@ object StorageQueries {
       // per-term round-6 + fixed left-assoc bin fold; unrolled over the
       // 10 bins programmatically for readability
       {
-        val qs = (1 to 9).map(i =>
-          s"quantile_cont(v, 0.$i) AS q$i").mkString(",\n  ")
-        val binExpr = "1 " +
-          (1 to 9).map(i => s"+ CAST(v > q$i AS INT)").mkString(" ")
-        val ns = (1 to 10).map(i =>
-          s"SUM(CASE WHEN bin = $i THEN 1 ELSE 0 END) AS n$i")
-          .mkString(",\n  ")
-        val rsp = (1 to 10).map(i =>
-          s"MAX(CASE WHEN bin = $i THEN r END) AS r$i").mkString(",\n  ")
         def share(i: Int) =
           s"(n$i + CAST(0.5 AS DOUBLE)) / (tot + CAST(5.0 AS DOUBLE))"
         val terms = (1 to 10).map(i =>
           s"ROUND((${share(i)} - r$i) * ln((${share(i)}) / r$i), 6)")
           .mkString("\n  + ")
-        s"""WITH r0 AS (
-           |  SELECT CAST(value AS DOUBLE) AS v FROM events
-           |  WHERE value IS NOT NULL AND day(ts) <= 15),
-           |q AS (SELECT
-           |  $qs
-           |  FROM r0),
-           |rb AS (SELECT $binExpr AS bin FROM r0, q),
-           |r AS (SELECT bin, COUNT(*) AS ref_n FROM rb GROUP BY 1),
-           |tr AS (SELECT CAST(SUM(ref_n) AS BIGINT) AS tr FROM r),
-           |rs AS (SELECT i AS bin,
-           |         (COALESCE(ref_n, 0) + CAST(0.5 AS DOUBLE)) /
-           |           (tr + CAST(5.0 AS DOUBLE)) AS r
-           |       FROM range(1, 11) t(i) LEFT JOIN r ON r.bin = i, tr),
-           |rsp AS (SELECT
-           |  $rsp
-           |  FROM rs),
-           |a0 AS (SELECT CAST(value AS DOUBLE) AS v,
-           |         CAST(date_trunc('day', ts) AS TIMESTAMP) AS d
-           |       FROM events WHERE value IS NOT NULL),
-           |ab AS (SELECT d, $binExpr AS bin FROM a0, q),
-           |cnt AS (SELECT d,
-           |  $ns,
-           |  COUNT(*) AS tot FROM ab GROUP BY 1)
+        s"""${driftWindowCtes("(COALESCE(ref_n, 0) + CAST(0.5 AS DOUBLE))",
+             "(tr + CAST(5.0 AS DOUBLE))")}
            |SELECT d AS window_start, CAST(tot AS BIGINT) AS n_events,
            |  ROUND($terms, 6) AS psi
            |FROM cnt, rsp""".stripMargin
@@ -804,42 +841,12 @@ object StorageQueries {
       // the frozen reference (plain shares) + per-window bins replayed;
       // per-bin sqrt(q·r) rounded once, BC an exact decimal fold
       {
-        val qs = (1 to 9).map(i =>
-          s"quantile_cont(v, 0.$i) AS q$i").mkString(",\n  ")
-        val binExpr = "1 " +
-          (1 to 9).map(i => s"+ CAST(v > q$i AS INT)").mkString(" ")
-        val ns = (1 to 10).map(i =>
-          s"SUM(CASE WHEN bin = $i THEN 1 ELSE 0 END) AS n$i")
-          .mkString(",\n  ")
-        val rsp = (1 to 10).map(i =>
-          s"MAX(CASE WHEN bin = $i THEN r END) AS r$i").mkString(",\n  ")
         val terms = (1 to 10).map(i =>
           s"""CAST(ROUND(sqrt(CAST(n$i AS DOUBLE) / CAST(tot AS DOUBLE)
              |    * r$i), 6) AS DECIMAL(18,6))""".stripMargin)
           .mkString("\n  + ")
-        s"""WITH r0 AS (
-           |  SELECT CAST(value AS DOUBLE) AS v FROM events
-           |  WHERE value IS NOT NULL AND day(ts) <= 15),
-           |q AS (SELECT
-           |  $qs
-           |  FROM r0),
-           |rb AS (SELECT $binExpr AS bin FROM r0, q),
-           |r AS (SELECT bin, COUNT(*) AS ref_n FROM rb GROUP BY 1),
-           |tr AS (SELECT CAST(SUM(ref_n) AS BIGINT) AS tr FROM r),
-           |rs AS (SELECT i AS bin,
-           |         CAST(COALESCE(ref_n, 0) AS DOUBLE) /
-           |           CAST(tr AS DOUBLE) AS r
-           |       FROM range(1, 11) t(i) LEFT JOIN r ON r.bin = i, tr),
-           |rsp AS (SELECT
-           |  $rsp
-           |  FROM rs),
-           |a0 AS (SELECT CAST(value AS DOUBLE) AS v,
-           |         CAST(date_trunc('day', ts) AS TIMESTAMP) AS d
-           |       FROM events WHERE value IS NOT NULL),
-           |ab AS (SELECT d, $binExpr AS bin FROM a0, q),
-           |cnt AS (SELECT d,
-           |  $ns,
-           |  COUNT(*) AS tot FROM ab GROUP BY 1),
+        s"""${driftWindowCtes("CAST(COALESCE(ref_n, 0) AS DOUBLE)",
+             "CAST(tr AS DOUBLE)")},
            |fold AS (SELECT d, tot,
            |  CAST($terms AS DECIMAL(28,6)) AS bcd
            |  FROM cnt, rsp)
@@ -942,21 +949,7 @@ object StorageQueries {
       },
       // a full stream replay must reproduce the batch LSH+verify answer:
       // the brute-force exact-jaccard ground truth (same as t_minhash_lsh)
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) >= 0.5""".stripMargin),
+      TextQueries.NearDupPairsOracle),
 
     // ---- streaming + batch: the TWO-TIER dedup composition (r3
     // verdict #6) — the end-to-end proof of the contract documented on
@@ -1010,28 +1003,7 @@ object StorageQueries {
       },
       // gaps-and-islands on second-truncated event time; keep each
       // user's last session (the one the stream's final state holds)
-      """WITH e AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-        |  FROM events),
-        |d AS (
-        |  SELECT user_id, sec,
-        |    CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e),
-        |s AS (
-        |  SELECT user_id, sec,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY sec
-        |                   ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d),
-        |g AS (
-        |  SELECT user_id, sid, MIN(sec) AS start_sec, MAX(sec) AS end_sec,
-        |    COUNT(*) AS n
-        |  FROM s GROUP BY user_id, sid)
-        |SELECT user_id,
-        |  make_timestamp(start_sec * 1000000) AS session_start,
-        |  make_timestamp(end_sec * 1000000) AS session_end,
-        |  CAST(n AS INT) AS n_events
-        |FROM g
+      s"""$SessionsOracle
         |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) = 1""".stripMargin),
 
     // ---- streaming EWMA — the stateful recurrence replayed as FOUR
@@ -1046,22 +1018,7 @@ object StorageQueries {
         graft.streaming.EventStreams.ewmaStream(_, alpha = 0.3).toDF()),
       // the chunked streaming replay must reproduce the batch decimal
       // recurrence exactly — same recursive CTE as w16_ewma
-      """WITH RECURSIVE v AS (
-        |  SELECT user_id, event_id,
-        |    CAST(ROUND(CAST(value AS DOUBLE), 6) AS DECIMAL(18,6)) AS v,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |                       ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |e AS (
-        |  SELECT user_id, event_id, rn, v AS s FROM v WHERE rn = 1
-        |  UNION ALL
-        |  SELECT v.user_id, v.event_id, v.rn,
-        |    CAST(ROUND(CAST(0.3 AS DECIMAL(10,8)) * v.v +
-        |               CAST(0.7 AS DECIMAL(10,8)) * e.s, 6)
-        |         AS DECIMAL(18,6))
-        |  FROM v JOIN e ON v.user_id = e.user_id AND v.rn = e.rn + 1)
-        |SELECT user_id, event_id, CAST(s AS DOUBLE) AS ewma
-        |FROM e""".stripMargin),
+      EwmaOracle),
 
     // ---- streaming CUSUM — the online drift detector on the same
     // chassis: four in-order time-range micro-batches, ONE scale-6
@@ -1075,28 +1032,7 @@ object StorageQueries {
           target = 50.0, slack = 10.0, threshold = 300.0).toDF()),
       // the chunked streaming replay must reproduce the batch decimal
       // recurrence exactly — same recursive CTE as w20_cusum
-      """WITH RECURSIVE v AS (
-        |  SELECT user_id, event_id,
-        |    CAST(ROUND(CAST(value AS DOUBLE), 6) AS DECIMAL(18,6)) AS v,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |                       ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |e AS (
-        |  SELECT user_id, event_id, rn,
-        |    CAST(greatest(CAST(0 AS DECIMAL(18,6)),
-        |                  CAST(0 AS DECIMAL(18,6)) + v -
-        |                  CAST(60.0 AS DECIMAL(18,6))) AS DECIMAL(18,6))
-        |      AS s
-        |  FROM v WHERE rn = 1
-        |  UNION ALL
-        |  SELECT v.user_id, v.event_id, v.rn,
-        |    CAST(greatest(CAST(0 AS DECIMAL(18,6)),
-        |                  e.s + v.v - CAST(60.0 AS DECIMAL(18,6)))
-        |         AS DECIMAL(18,6))
-        |  FROM v JOIN e ON v.user_id = e.user_id AND v.rn = e.rn + 1)
-        |SELECT user_id, event_id, CAST(s AS DOUBLE) AS cusum,
-        |  s > CAST(300.0 AS DECIMAL(18,6)) AS alarm
-        |FROM e""".stripMargin),
+      CusumOracle),
 
     // ---- streaming funnel — per-user stage reaches emitted the
     // moment they happen (the greedy cascade is naturally online);
@@ -1214,28 +1150,7 @@ object StorageQueries {
       // ALL sessions (not just the last): the retained-events stream
       // must reproduce the complete batch gaps-and-islands answer even
       // though its input arrived out of event-time order
-      """WITH e AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-        |  FROM events),
-        |d AS (
-        |  SELECT user_id, sec,
-        |    CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e),
-        |s AS (
-        |  SELECT user_id, sec,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY sec
-        |                   ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d),
-        |g AS (
-        |  SELECT user_id, sid, MIN(sec) AS start_sec, MAX(sec) AS end_sec,
-        |    COUNT(*) AS n
-        |  FROM s GROUP BY user_id, sid)
-        |SELECT user_id,
-        |  make_timestamp(start_sec * 1000000) AS session_start,
-        |  make_timestamp(end_sec * 1000000) AS session_end,
-        |  CAST(n AS INT) AS n_events
-        |FROM g""".stripMargin),
+      SessionsOracle),
 
     // ---- streaming: stream–STATIC broadcast enrichment — each event
     // micro-batch joined to a batch dimension (stateless, no

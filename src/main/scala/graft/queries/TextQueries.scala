@@ -205,6 +205,202 @@ object TextQueries {
       s"chr(10)), b -> len(string_split(b, ' ')) >= $minTok OR " +
       "regexp_matches(b, '[.!?]$')), chr(10))"
 
+  /** BPE merge learning replayed, shared by t_bpe_merges and t_bpe_encode:
+    * three UNROLLED rounds, each the argmax pair (count desc, pair text
+    * asc) in CTE `m<k>` and a greedy non-overlapping rewrite into `t<k>`.
+    * Candidate runs (only possible when l = r) keep alternating members
+    * (gaps-and-islands parity), which equals the engine's left-to-right
+    * fold exactly. */
+  private val BpeMergeCtes: String =
+    """t0 AS (
+      |  SELECT doc_id AS id, unnest(range(1, len(tk) + 1)) AS i,
+      |    unnest(tk) AS tok
+      |  FROM (SELECT doc_id, list_filter(
+      |      string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tk
+      |    FROM documents)),
+      |m1 AS (
+      |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
+      |  FROM t0 a JOIN t0 b ON a.id = b.id AND b.i = a.i + 1
+      |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1),
+      |t1_cand AS (
+      |  SELECT a.id, a.i,
+      |    a.i - ROW_NUMBER() OVER (PARTITION BY a.id ORDER BY a.i) AS grp
+      |  FROM t0 a JOIN t0 b ON a.id = b.id AND b.i = a.i + 1, m1 m
+      |  WHERE a.tok = m.l AND b.tok = m.r),
+      |t1_keep AS (
+      |  SELECT id, i FROM (
+      |    SELECT id, i,
+      |      ROW_NUMBER() OVER (PARTITION BY id, grp ORDER BY i) - 1 AS off
+      |    FROM t1_cand)
+      |  WHERE off % 2 = 0),
+      |t1 AS (
+      |  SELECT t.id,
+      |    ROW_NUMBER() OVER (PARTITION BY t.id ORDER BY t.i) AS i,
+      |    CASE WHEN k.i IS NOT NULL THEN t.tok || ' ' || nx.tok
+      |         ELSE t.tok END AS tok
+      |  FROM t0 t
+      |  LEFT JOIN t1_keep k ON t.id = k.id AND t.i = k.i
+      |  LEFT JOIN t0 nx ON t.id = nx.id AND nx.i = t.i + 1
+      |  LEFT JOIN t1_keep kp ON t.id = kp.id AND t.i = kp.i + 1
+      |  WHERE kp.i IS NULL),
+      |m2 AS (
+      |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
+      |  FROM t1 a JOIN t1 b ON a.id = b.id AND b.i = a.i + 1
+      |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1),
+      |t2_cand AS (
+      |  SELECT a.id, a.i,
+      |    a.i - ROW_NUMBER() OVER (PARTITION BY a.id ORDER BY a.i) AS grp
+      |  FROM t1 a JOIN t1 b ON a.id = b.id AND b.i = a.i + 1, m2 m
+      |  WHERE a.tok = m.l AND b.tok = m.r),
+      |t2_keep AS (
+      |  SELECT id, i FROM (
+      |    SELECT id, i,
+      |      ROW_NUMBER() OVER (PARTITION BY id, grp ORDER BY i) - 1 AS off
+      |    FROM t2_cand)
+      |  WHERE off % 2 = 0),
+      |t2 AS (
+      |  SELECT t.id,
+      |    ROW_NUMBER() OVER (PARTITION BY t.id ORDER BY t.i) AS i,
+      |    CASE WHEN k.i IS NOT NULL THEN t.tok || ' ' || nx.tok
+      |         ELSE t.tok END AS tok
+      |  FROM t1 t
+      |  LEFT JOIN t2_keep k ON t.id = k.id AND t.i = k.i
+      |  LEFT JOIN t1 nx ON t.id = nx.id AND nx.i = t.i + 1
+      |  LEFT JOIN t2_keep kp ON t.id = kp.id AND t.i = kp.i + 1
+      |  WHERE kp.i IS NULL),
+      |m3 AS (
+      |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
+      |  FROM t2 a JOIN t2 b ON a.id = b.id AND b.i = a.i + 1
+      |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1)""".stripMargin
+
+  /** Brute-force near-dup components over CTE `toks` (doc_id, token list
+    * tk): word-3-gram shingle sets, verified pairs at round-6 jaccard
+    * >= 0.5, and the recursive reachability CTE `reach(id, r)` over the
+    * symmetric edges. */
+  private val NearDupReachCtes: String =
+    """sh AS (
+      |  SELECT doc_id,
+      |    list_distinct([array_to_string(tk[i:i+2], ' ')
+      |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
+      |  FROM toks),
+      |pairs AS (
+      |  SELECT a.doc_id AS id1, b.doc_id AS id2
+      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      |  WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+      |      / len(list_distinct(a.sh || b.sh)), 6) >= 0.5),
+      |edges AS (
+      |  SELECT id1, id2 FROM pairs UNION ALL SELECT id2, id1 FROM pairs),
+      |reach(id, r) AS (
+      |  SELECT DISTINCT id1, id1 FROM edges
+      |  UNION
+      |  SELECT e.id1, reach.r FROM edges e JOIN reach ON e.id2 = reach.id)""".stripMargin
+
+  /** Oracle fragment: each doc's whitespace tokens (CTE `toks`) and its
+    * distinct word-3-gram shingle set (CTE `sh`). */
+  private val ShingleSetCtes: String =
+    """toks AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
+      |  FROM documents),
+      |sh AS (
+      |  SELECT doc_id,
+      |    list_distinct([array_to_string(tk[i:i+2], ' ')
+      |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
+      |  FROM toks)""".stripMargin
+
+  /** The train/eval decontamination brute force (even doc_ids train,
+    * odd eval; word-3-gram jaccard >= 0.5), shared by t_decontaminate
+    * and its bloom-pruned twin: the prune must not change the answer. */
+  private val DecontaminateOracle: String =
+    s"""WITH $ShingleSetCtes
+      |SELECT a.doc_id AS left_id, b.doc_id AS right_id,
+      |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+      |    / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
+      |FROM sh a JOIN sh b ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
+      |WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+      |    / len(list_distinct(a.sh || b.sh)), 6) >= 0.5""".stripMargin
+
+  /** The brute-force near-dup ground truth: every doc pair whose
+    * word-3-gram jaccard is >= 0.5, with its exact round-6 jaccard.
+    * Shared by t_minhash_lsh and the streaming near-dup replay. */
+  private[queries] val NearDupPairsOracle: String =
+    s"""WITH $ShingleSetCtes
+      |SELECT a.doc_id AS id1, b.doc_id AS id2,
+      |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+      |    / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
+      |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      |WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+      |    / len(list_distinct(a.sh || b.sh)), 6) >= 0.5""".stripMargin
+
+  /** The BM25 replay's term statistics for the fixed bag spark/join/
+    * filter/window: per-doc tokens, corpus size and average length (CTE
+    * `stats`), per-doc term frequencies `tf` and document frequencies
+    * `dfreq`. */
+  private val Bm25TermStatsCtes: String =
+    """q AS (
+      |  SELECT unnest(['spark', 'join', 'filter', 'window']) AS term),
+      |d AS (
+      |  SELECT doc_id, list_filter(
+      |    string_split_regex(trim(text), '\s+'), x -> x <> '') AS w
+      |  FROM documents),
+      |stats AS (
+      |  SELECT COUNT(*) AS n,
+      |    CAST(SUM(len(w)) AS DOUBLE) / COUNT(*) AS avgdl
+      |  FROM d),
+      |tf AS (
+      |  SELECT doc_id, len(w) AS dl, u.tok AS term, COUNT(*) AS tf
+      |  FROM d, UNNEST(w) AS u(tok) JOIN q ON u.tok = q.term
+      |  GROUP BY 1, 2, 3),
+      |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1)""".stripMargin
+
+  /** The t_curate quality score q per doc (length band, alphabetic share,
+    * stopword presence) over tokens `tk` and lower-cased tokens `tl`
+    * (CTE `toks`). Ends inside CTE `quality`, so a caller may add columns
+    * before closing it. */
+  private val CurationQualityHead: String =
+    """toks AS (
+      |  SELECT doc_id, text,
+      |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk,
+      |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tl
+      |  FROM documents),
+      |quality AS (
+      |  SELECT doc_id,
+      |    ROUND(
+      |      0.4 * (CASE WHEN len(tk) BETWEEN 20 AND 100000 THEN 1.0
+      |                  WHEN len(tk) >= 5 THEN 0.5 ELSE 0.0 END)
+      |      + 0.4 * (CASE WHEN length(text) = 0 THEN 0.0 ELSE
+      |          CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text) END)
+      |      + 0.2 * (CASE WHEN len(tl) > 0 AND
+      |          CAST(len(list_filter(tl, x -> x IN ('the','a','an','and','or','of','to','in','is','are','was','for','on','with','as','by','at','it','this','that'))) AS DOUBLE) / len(tl) > 0.01
+      |          THEN 1.0 ELSE 0.0 END), 6) AS q""".stripMargin
+
+  /** The BLEU/ROUGE oracles' gram frame: candidate `ca` (every 7th
+    * 1-based token dropped) and reference `ra` token lists per doc
+    * (CTE `d`), then per-doc n-gram counts of orders 1 until `nEnd`
+    * for both (CTEs `cg` and `rg`). */
+  private def candRefGramCtes(nEnd: Int): String =
+    raw"""d AS MATERIALIZED (
+      |  SELECT doc_id,
+      |    list_filter(list_filter(string_split_regex(trim(text), '\s+'),
+      |      x -> x <> ''), (x, i) -> i % 7 <> 0) AS ca,
+      |    list_filter(string_split_regex(trim(text), '\s+'),
+      |      x -> x <> '') AS ra
+      |  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
+      |cg AS MATERIALIZED (
+      |  SELECT doc_id, n, gram, COUNT(*) AS cc FROM (
+      |    SELECT doc_id, n, unnest(list_transform(
+      |      range(1, len(ca) - n + 2),
+      |      i -> array_to_string(ca[i:i+n-1], ' '))) AS gram
+      |    FROM d, range(1, $nEnd) t(n))
+      |  GROUP BY 1, 2, 3),
+      |rg AS MATERIALIZED (
+      |  SELECT doc_id, n, gram, COUNT(*) AS rc FROM (
+      |    SELECT doc_id, n, unnest(list_transform(
+      |      range(1, len(ra) - n + 2),
+      |      i -> array_to_string(ra[i:i+n-1], ' '))) AS gram
+      |    FROM d, range(1, $nEnd) t(n))
+      |  GROUP BY 1, 2, 3)""".stripMargin
+
   val queries: Seq[Query] = Seq(
     Query("t_token_stats", "token stats",
       (s, dir) =>
@@ -289,27 +485,7 @@ object TextQueries {
       // clipped matches as exact BIGINTs, ln/exp geometric mean with
       // the ENGINE's left-fold association ((a1+a2)+a3)+a4 spelled in
       // explicit parens (double addition is not associative)
-      """WITH d AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_filter(list_filter(string_split_regex(trim(text), '\s+'),
-        |      x -> x <> ''), (x, i) -> i % 7 <> 0) AS ca,
-        |    list_filter(string_split_regex(trim(text), '\s+'),
-        |      x -> x <> '') AS ra
-        |  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
-        |cg AS MATERIALIZED (
-        |  SELECT doc_id, n, gram, COUNT(*) AS cc FROM (
-        |    SELECT doc_id, n, unnest(list_transform(
-        |      range(1, len(ca) - n + 2),
-        |      i -> array_to_string(ca[i:i+n-1], ' '))) AS gram
-        |    FROM d, range(1, 5) t(n))
-        |  GROUP BY 1, 2, 3),
-        |rg AS MATERIALIZED (
-        |  SELECT doc_id, n, gram, COUNT(*) AS rc FROM (
-        |    SELECT doc_id, n, unnest(list_transform(
-        |      range(1, len(ra) - n + 2),
-        |      i -> array_to_string(ra[i:i+n-1], ' '))) AS gram
-        |    FROM d, range(1, 5) t(n))
-        |  GROUP BY 1, 2, 3),
+      s"""WITH ${candRefGramCtes(5)},
         |po AS (
         |  SELECT cg.n,
         |    CAST(SUM(LEAST(cg.cc, COALESCE(rg.rc, 0))) AS BIGINT) AS m,
@@ -364,27 +540,7 @@ object TextQueries {
       // per-doc ROUGE-1/2: rows defined by the candidate gram frame
       // (identical construction both engines); F1 is the exact fraction
       // 2m/(ct+rt) — algebraically 2PR/(P+R), one rounding
-      """WITH d AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_filter(list_filter(string_split_regex(trim(text), '\s+'),
-        |      x -> x <> ''), (x, i) -> i % 7 <> 0) AS ca,
-        |    list_filter(string_split_regex(trim(text), '\s+'),
-        |      x -> x <> '') AS ra
-        |  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
-        |cg AS MATERIALIZED (
-        |  SELECT doc_id, n, gram, COUNT(*) AS cc FROM (
-        |    SELECT doc_id, n, unnest(list_transform(
-        |      range(1, len(ca) - n + 2),
-        |      i -> array_to_string(ca[i:i+n-1], ' '))) AS gram
-        |    FROM d, range(1, 3) t(n))
-        |  GROUP BY 1, 2, 3),
-        |rg AS MATERIALIZED (
-        |  SELECT doc_id, n, gram, COUNT(*) AS rc FROM (
-        |    SELECT doc_id, n, unnest(list_transform(
-        |      range(1, len(ra) - n + 2),
-        |      i -> array_to_string(ra[i:i+n-1], ' '))) AS gram
-        |    FROM d, range(1, 3) t(n))
-        |  GROUP BY 1, 2, 3),
+      s"""WITH ${candRefGramCtes(3)},
         |rt AS (
         |  SELECT doc_id, n, CAST(SUM(rc) AS BIGINT) AS n_ref
         |  FROM rg GROUP BY 1, 2),
@@ -1104,66 +1260,7 @@ object TextQueries {
         TextOps.applyBpeMerges(docs, "doc_id", "text",
           TextOps.learnBpeMerges(docs, "doc_id", "text", 3))
       },
-      """WITH t0 AS (
-        |  SELECT doc_id AS id, unnest(range(1, len(tk) + 1)) AS i,
-        |    unnest(tk) AS tok
-        |  FROM (SELECT doc_id, list_filter(
-        |      string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tk
-        |    FROM documents)),
-        |m1 AS (
-        |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
-        |  FROM t0 a JOIN t0 b ON a.id = b.id AND b.i = a.i + 1
-        |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1),
-        |t1_cand AS (
-        |  SELECT a.id, a.i,
-        |    a.i - ROW_NUMBER() OVER (PARTITION BY a.id ORDER BY a.i) AS grp
-        |  FROM t0 a JOIN t0 b ON a.id = b.id AND b.i = a.i + 1, m1 m
-        |  WHERE a.tok = m.l AND b.tok = m.r),
-        |t1_keep AS (
-        |  SELECT id, i FROM (
-        |    SELECT id, i,
-        |      ROW_NUMBER() OVER (PARTITION BY id, grp ORDER BY i) - 1 AS off
-        |    FROM t1_cand)
-        |  WHERE off % 2 = 0),
-        |t1 AS (
-        |  SELECT t.id,
-        |    ROW_NUMBER() OVER (PARTITION BY t.id ORDER BY t.i) AS i,
-        |    CASE WHEN k.i IS NOT NULL THEN t.tok || ' ' || nx.tok
-        |         ELSE t.tok END AS tok
-        |  FROM t0 t
-        |  LEFT JOIN t1_keep k ON t.id = k.id AND t.i = k.i
-        |  LEFT JOIN t0 nx ON t.id = nx.id AND nx.i = t.i + 1
-        |  LEFT JOIN t1_keep kp ON t.id = kp.id AND t.i = kp.i + 1
-        |  WHERE kp.i IS NULL),
-        |m2 AS (
-        |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
-        |  FROM t1 a JOIN t1 b ON a.id = b.id AND b.i = a.i + 1
-        |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1),
-        |t2_cand AS (
-        |  SELECT a.id, a.i,
-        |    a.i - ROW_NUMBER() OVER (PARTITION BY a.id ORDER BY a.i) AS grp
-        |  FROM t1 a JOIN t1 b ON a.id = b.id AND b.i = a.i + 1, m2 m
-        |  WHERE a.tok = m.l AND b.tok = m.r),
-        |t2_keep AS (
-        |  SELECT id, i FROM (
-        |    SELECT id, i,
-        |      ROW_NUMBER() OVER (PARTITION BY id, grp ORDER BY i) - 1 AS off
-        |    FROM t2_cand)
-        |  WHERE off % 2 = 0),
-        |t2 AS (
-        |  SELECT t.id,
-        |    ROW_NUMBER() OVER (PARTITION BY t.id ORDER BY t.i) AS i,
-        |    CASE WHEN k.i IS NOT NULL THEN t.tok || ' ' || nx.tok
-        |         ELSE t.tok END AS tok
-        |  FROM t1 t
-        |  LEFT JOIN t2_keep k ON t.id = k.id AND t.i = k.i
-        |  LEFT JOIN t1 nx ON t.id = nx.id AND nx.i = t.i + 1
-        |  LEFT JOIN t2_keep kp ON t.id = kp.id AND t.i = kp.i + 1
-        |  WHERE kp.i IS NULL),
-        |m3 AS (
-        |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
-        |  FROM t2 a JOIN t2 b ON a.id = b.id AND b.i = a.i + 1
-        |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1),
+      s"""WITH $BpeMergeCtes,
         |t3_cand AS (
         |  SELECT a.id, a.i,
         |    a.i - ROW_NUMBER() OVER (PARTITION BY a.id ORDER BY a.i) AS grp
@@ -1737,21 +1834,7 @@ object TextQueries {
       (s, dir) =>
         TextOps.bm25(t(s, dir, "documents"), "doc_id", "text",
           terms = Seq("spark", "join", "filter", "window")),
-      """WITH q AS (
-        |  SELECT unnest(['spark', 'join', 'filter', 'window']) AS term),
-        |d AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(trim(text), '\s+'), x -> x <> '') AS w
-        |  FROM documents),
-        |stats AS (
-        |  SELECT COUNT(*) AS n,
-        |    CAST(SUM(len(w)) AS DOUBLE) / COUNT(*) AS avgdl
-        |  FROM d),
-        |tf AS (
-        |  SELECT doc_id, len(w) AS dl, u.tok AS term, COUNT(*) AS tf
-        |  FROM d, UNNEST(w) AS u(tok) JOIN q ON u.tok = q.term
-        |  GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1)
+      s"""WITH $Bm25TermStatsCtes
         |SELECT tf.doc_id,
         |  CAST(SUM(CAST(ROUND(
         |    ln((n - df + 0.5) / (df + 0.5) + 1) * tf
@@ -1782,21 +1865,7 @@ object TextQueries {
       },
       // both arms replayed (bm25 + brute cosine), ranked with id
       // tiebreaks, contributions 1/(60+rank) rounded 6, decimal-summed
-      """WITH q AS (
-        |  SELECT unnest(['spark', 'join', 'filter', 'window']) AS term),
-        |d AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(trim(text), '\s+'), x -> x <> '') AS w
-        |  FROM documents),
-        |stats AS (
-        |  SELECT COUNT(*) AS n,
-        |    CAST(SUM(len(w)) AS DOUBLE) / COUNT(*) AS avgdl
-        |  FROM d),
-        |tf AS (
-        |  SELECT doc_id, len(w) AS dl, u.tok AS term, COUNT(*) AS tf
-        |  FROM d, UNNEST(w) AS u(tok) JOIN q ON u.tok = q.term
-        |  GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+      s"""WITH $Bm25TermStatsCtes,
         |lex AS (
         |  SELECT tf.doc_id,
         |    CAST(SUM(CAST(ROUND(
@@ -2035,71 +2104,8 @@ object TextQueries {
       (s, dir) =>
         TextOps.learnBpeMerges(t(s, dir, "documents"), "doc_id", "text",
           numMerges = 3),
-      // BPE merges: three UNROLLED iterations — per round, the argmax
-      // pair (count desc, pair text asc) and a greedy non-overlapping
-      // rewrite: candidate runs (only possible when l = r) keep
-      // alternating members (gaps-and-islands parity), which equals the
-      // engine's left-to-right fold exactly
-      """WITH t0 AS (
-        |  SELECT doc_id AS id, unnest(range(1, len(tk) + 1)) AS i,
-        |    unnest(tk) AS tok
-        |  FROM (SELECT doc_id, list_filter(
-        |      string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tk
-        |    FROM documents)),
-        |m1 AS (
-        |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
-        |  FROM t0 a JOIN t0 b ON a.id = b.id AND b.i = a.i + 1
-        |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1),
-        |t1_cand AS (
-        |  SELECT a.id, a.i,
-        |    a.i - ROW_NUMBER() OVER (PARTITION BY a.id ORDER BY a.i) AS grp
-        |  FROM t0 a JOIN t0 b ON a.id = b.id AND b.i = a.i + 1, m1 m
-        |  WHERE a.tok = m.l AND b.tok = m.r),
-        |t1_keep AS (
-        |  SELECT id, i FROM (
-        |    SELECT id, i,
-        |      ROW_NUMBER() OVER (PARTITION BY id, grp ORDER BY i) - 1 AS off
-        |    FROM t1_cand)
-        |  WHERE off % 2 = 0),
-        |t1 AS (
-        |  SELECT t.id,
-        |    ROW_NUMBER() OVER (PARTITION BY t.id ORDER BY t.i) AS i,
-        |    CASE WHEN k.i IS NOT NULL THEN t.tok || ' ' || nx.tok
-        |         ELSE t.tok END AS tok
-        |  FROM t0 t
-        |  LEFT JOIN t1_keep k ON t.id = k.id AND t.i = k.i
-        |  LEFT JOIN t0 nx ON t.id = nx.id AND nx.i = t.i + 1
-        |  LEFT JOIN t1_keep kp ON t.id = kp.id AND t.i = kp.i + 1
-        |  WHERE kp.i IS NULL),
-        |m2 AS (
-        |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
-        |  FROM t1 a JOIN t1 b ON a.id = b.id AND b.i = a.i + 1
-        |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1),
-        |t2_cand AS (
-        |  SELECT a.id, a.i,
-        |    a.i - ROW_NUMBER() OVER (PARTITION BY a.id ORDER BY a.i) AS grp
-        |  FROM t1 a JOIN t1 b ON a.id = b.id AND b.i = a.i + 1, m2 m
-        |  WHERE a.tok = m.l AND b.tok = m.r),
-        |t2_keep AS (
-        |  SELECT id, i FROM (
-        |    SELECT id, i,
-        |      ROW_NUMBER() OVER (PARTITION BY id, grp ORDER BY i) - 1 AS off
-        |    FROM t2_cand)
-        |  WHERE off % 2 = 0),
-        |t2 AS (
-        |  SELECT t.id,
-        |    ROW_NUMBER() OVER (PARTITION BY t.id ORDER BY t.i) AS i,
-        |    CASE WHEN k.i IS NOT NULL THEN t.tok || ' ' || nx.tok
-        |         ELSE t.tok END AS tok
-        |  FROM t1 t
-        |  LEFT JOIN t2_keep k ON t.id = k.id AND t.i = k.i
-        |  LEFT JOIN t1 nx ON t.id = nx.id AND nx.i = t.i + 1
-        |  LEFT JOIN t2_keep kp ON t.id = kp.id AND t.i = kp.i + 1
-        |  WHERE kp.i IS NULL),
-        |m3 AS (
-        |  SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
-        |  FROM t2 a JOIN t2 b ON a.id = b.id AND b.i = a.i + 1
-        |  GROUP BY 1, 2 ORDER BY n DESC, l, r LIMIT 1)
+      // the three learned merges, one row per round's argmax pair
+      s"""WITH $BpeMergeCtes
         |SELECT CAST(1 AS INT) AS rank, l AS "left", r AS "right",
         |  n AS pair_count FROM m1
         |UNION ALL SELECT CAST(2 AS INT), l, r, n FROM m2
@@ -2242,42 +2248,13 @@ object TextQueries {
           .join(dropDups, Seq("doc_id"), "left_anti")
           .select("doc_id")
       },
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tl
-        |  FROM documents),
-        |quality AS (
-        |  SELECT doc_id,
-        |    ROUND(
-        |      0.4 * (CASE WHEN len(tk) BETWEEN 20 AND 100000 THEN 1.0
-        |                  WHEN len(tk) >= 5 THEN 0.5 ELSE 0.0 END)
-        |      + 0.4 * (CASE WHEN length(text) = 0 THEN 0.0 ELSE
-        |          CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |      + 0.2 * (CASE WHEN len(tl) > 0 AND
-        |          CAST(len(list_filter(tl, x -> x IN ('the','a','an','and','or','of','to','in','is','are','was','for','on','with','as','by','at','it','this','that'))) AS DOUBLE) / len(tl) > 0.01
-        |          THEN 1.0 ELSE 0.0 END), 6) AS q,
+      s"""WITH RECURSIVE $CurationQualityHead,
         |    CAST(len(list_filter(tl, x -> x IN ('the','and','of','to','a','in','is'))) AS BIGINT) AS s_en,
         |    CAST(len(list_filter(tl, x -> x IN ('el','la','de','que','y','en','los'))) AS BIGINT) AS s_es,
         |    CAST(len(list_filter(tl, x -> x IN ('le','la','de','et','un','les','des'))) AS BIGINT) AS s_fr,
         |    CAST(len(list_filter(tl, x -> x IN ('der','die','und','das','ein','ist','nicht'))) AS BIGINT) AS s_de
         |  FROM toks),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / len(list_distinct(a.sh || b.sh)), 6) >= 0.5),
-        |edges AS (
-        |  SELECT id1, id2 FROM pairs UNION ALL SELECT id2, id1 FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT id1, id1 FROM edges
-        |  UNION
-        |  SELECT e.id1, reach.r FROM edges e JOIN reach ON e.id2 = reach.id),
+        |$NearDupReachCtes,
         |clusters AS (
         |  SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id)
         |SELECT doc_id FROM quality
@@ -2584,21 +2561,7 @@ object TextQueries {
       (s, dir) =>
         Dedup.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
           threshold = 0.5, shingleN = 3, numHashes = 32, bands = 16),
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) >= 0.5""".stripMargin),
+      NearDupPairsOracle),
 
     // ---- training-data ops: contrastive triplets for embedding
     // training — (anchor, positive) = verified near-dup pairs;
@@ -2634,15 +2597,7 @@ object TextQueries {
       },
       // Brute-force near-dup pairs (t_minhash_lsh's oracle) + the same
       // double-hash bucket arithmetic for the deterministic negative.
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks),
+      s"""WITH $ShingleSetCtes,
         |pairs AS (
         |  SELECT a.doc_id AS anchor_id, b.doc_id AS positive_id
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -2681,15 +2636,7 @@ object TextQueries {
       // threshold compare is on the UNROUNDED ratio on both sides
       // (rounding only in the projected column) so the boundary can't
       // diverge between engines.
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks)
+      s"""WITH $ShingleSetCtes
         |SELECT a.doc_id AS id1, b.doc_id AS id2,
         |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
         |    / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
@@ -2741,21 +2688,7 @@ object TextQueries {
           "doc_id", "text", threshold = 0.5, shingleN = 3,
           numHashes = 32, bands = 16)
       },
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks)
-        |SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-        |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) >= 0.5""".stripMargin),
+      DecontaminateOracle),
 
     // ---- training-data ops: decontamination with a BLOOM pre-prune —
     // same answer as t_decontaminate (the oracle is the same brute
@@ -2773,21 +2706,7 @@ object TextQueries {
           numHashes = 32, bands = 16) // bloom auto-sized from eval
       },
       // identical brute force: the bloom prune must not change the answer
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks)
-        |SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-        |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(a.sh || b.sh)), 6) >= 0.5""".stripMargin),
+      DecontaminateOracle),
 
     // ---- training-data ops: EXACT 13-gram containment contamination
     // (the GPT-3-style sweep) — catches an eval passage quoted inside
@@ -3045,38 +2964,9 @@ object TextQueries {
       },
       // t_dedup_clusters' brute-force clustering + t_curate's quality
       // formula, canonicalized per cluster by (quality desc, id).
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tl
-        |  FROM documents),
-        |quality AS (
-        |  SELECT doc_id,
-        |    ROUND(
-        |      0.4 * (CASE WHEN len(tk) BETWEEN 20 AND 100000 THEN 1.0
-        |                  WHEN len(tk) >= 5 THEN 0.5 ELSE 0.0 END)
-        |      + 0.4 * (CASE WHEN length(text) = 0 THEN 0.0 ELSE
-        |          CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |      + 0.2 * (CASE WHEN len(tl) > 0 AND
-        |          CAST(len(list_filter(tl, x -> x IN ('the','a','an','and','or','of','to','in','is','are','was','for','on','with','as','by','at','it','this','that'))) AS DOUBLE) / len(tl) > 0.01
-        |          THEN 1.0 ELSE 0.0 END), 6) AS q
+      s"""WITH RECURSIVE $CurationQualityHead
         |  FROM toks),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(tk[i:i+2], ' ')
-        |                   FOR i IN range(1, greatest(len(tk)-2, 1)+1)]) AS sh
-        |  FROM toks),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / len(list_distinct(a.sh || b.sh)), 6) >= 0.5),
-        |edges AS (
-        |  SELECT id1, id2 FROM pairs UNION ALL SELECT id2, id1 FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT id1, id1 FROM edges
-        |  UNION
-        |  SELECT e.id1, reach.r FROM edges e JOIN reach ON e.id2 = reach.id),
+        |$NearDupReachCtes,
         |clusters AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
         |assigned AS (
         |  SELECT q.doc_id, q.q, COALESCE(c.cluster_id, q.doc_id) AS cluster_id
@@ -3608,8 +3498,12 @@ object TextQueries {
         val p = d.select(url.as("url"),
           concat(lit("<html><head><title>t</title>"), tag,
             lit("</head><body><p>body</p></body></html>")).as("html"))
-        val href = HtmlOps.canonicalHref(col("html"))
-        p.withColumn("canon_url",
+        // href in its own column: resolveUrl references it many times,
+        // and inlining canonicalHref's regexps into each use outgrows
+        // the 64 KB codegen method limit
+        val href = col("href")
+        p.withColumn("href", HtmlOps.canonicalHref(col("html")))
+          .withColumn("canon_url",
             when(href === "", col("url"))
               .otherwise(UrlOps.resolveUrl(col("url"), href)))
           .groupBy("canon_url")

@@ -126,11 +126,10 @@ object WindowQueries {
       |         > CAST(3.0 AS DOUBLE) END, FALSE) AS anomaly
       |FROM s""".stripMargin
 
-  /** w11's funnel roll-up replay (shared with the streaming twin
-    * s_stream_funnel, whose post-stream aggregation produces the
-    * identical shape). */
-  private[queries] val FunnelOracle: String =
-    """WITH s1 AS (
+  /** The view → click → purchase cascade: each stage's first qualifying
+    * epoch per user at or after the previous stage's (CTEs `s1`..`s3`). */
+  private val FunnelStageCtes: String =
+    """s1 AS (
       |  SELECT user_id, MIN(epoch(ts)) AS t FROM events
       |  WHERE event_type = 'view' GROUP BY user_id),
       |s2 AS (
@@ -142,8 +141,12 @@ object WindowQueries {
       |  SELECT e.user_id, MIN(epoch(e.ts)) AS t
       |  FROM events e JOIN s2 USING (user_id)
       |  WHERE e.event_type = 'purchase' AND epoch(e.ts) >= s2.t
-      |  GROUP BY e.user_id),
-      |c AS (SELECT (SELECT COUNT(*) FROM s1) AS c1,
+      |  GROUP BY e.user_id)""".stripMargin
+
+  /** The funnel roll-up over stage CTEs `s1`..`s3`: users per stage and
+    * conversion against stage 1, one row per stage. */
+  private val FunnelRollup: String =
+    """c AS (SELECT (SELECT COUNT(*) FROM s1) AS c1,
       |             (SELECT COUNT(*) FROM s2) AS c2,
       |             (SELECT COUNT(*) FROM s3) AS c3)
       |SELECT CAST(1 AS INT) AS stage_idx, 'view' AS stage, c1 AS users,
@@ -155,6 +158,13 @@ object WindowQueries {
       |UNION ALL SELECT CAST(3 AS INT), 'purchase', c3,
       |  CASE WHEN c1 > 0 THEN ROUND(CAST(c3 AS DOUBLE) / c1, 6) END
       |  FROM c""".stripMargin
+
+  /** w11's funnel roll-up replay (shared with the streaming twin
+    * s_stream_funnel, whose post-stream aggregation produces the
+    * identical shape). */
+  private[queries] val FunnelOracle: String =
+    s"""WITH $FunnelStageCtes,
+      |$FunnelRollup""".stripMargin
 
   private[queries] val RollingMadOracle: String =
     """WITH v AS (
@@ -209,6 +219,95 @@ object WindowQueries {
       |  CAST(b AS DOUBLE) AS trend,
       |  CAST(l + b AS DOUBLE) AS forecast
       |FROM e""".stripMargin
+
+  /** w16's EWMA replay (shared with its streaming twin s_stream_ewma):
+    * rn=1 seeds, each next step joins the previous — EXACT decimal
+    * steps (one input round on the double, then decimal state),
+    * engine-free. */
+  private[queries] val EwmaOracle: String =
+    """WITH RECURSIVE v AS (
+      |  SELECT user_id, event_id,
+      |    CAST(ROUND(CAST(value AS DOUBLE), 6) AS DECIMAL(18,6)) AS v,
+      |    ROW_NUMBER() OVER (PARTITION BY user_id
+      |                       ORDER BY ts, event_id) AS rn
+      |  FROM events),
+      |e AS (
+      |  SELECT user_id, event_id, rn, v AS s FROM v WHERE rn = 1
+      |  UNION ALL
+      |  SELECT v.user_id, v.event_id, v.rn,
+      |    CAST(ROUND(CAST(0.3 AS DECIMAL(10,8)) * v.v +
+      |               CAST(0.7 AS DECIMAL(10,8)) * e.s, 6)
+      |         AS DECIMAL(18,6))
+      |  FROM v JOIN e ON v.user_id = e.user_id AND v.rn = e.rn + 1)
+      |SELECT user_id, event_id, CAST(s AS DOUBLE) AS ewma
+      |FROM e""".stripMargin
+
+  /** w20's one-sided CUSUM replay (shared with its streaming twin
+    * s_stream_cusum): seed s_1 = max(0, 0 + v - 60), each step joins
+    * the previous — pure decimal arithmetic, engine-free. */
+  private[queries] val CusumOracle: String =
+    """WITH RECURSIVE v AS (
+      |  SELECT user_id, event_id,
+      |    CAST(ROUND(CAST(value AS DOUBLE), 6) AS DECIMAL(18,6)) AS v,
+      |    ROW_NUMBER() OVER (PARTITION BY user_id
+      |                       ORDER BY ts, event_id) AS rn
+      |  FROM events),
+      |e AS (
+      |  SELECT user_id, event_id, rn,
+      |    CAST(greatest(CAST(0 AS DECIMAL(18,6)),
+      |                  CAST(0 AS DECIMAL(18,6)) + v -
+      |                  CAST(60.0 AS DECIMAL(18,6))) AS DECIMAL(18,6))
+      |      AS s
+      |  FROM v WHERE rn = 1
+      |  UNION ALL
+      |  SELECT v.user_id, v.event_id, v.rn,
+      |    CAST(greatest(CAST(0 AS DECIMAL(18,6)),
+      |                  e.s + v.v - CAST(60.0 AS DECIMAL(18,6)))
+      |         AS DECIMAL(18,6))
+      |  FROM v JOIN e ON v.user_id = e.user_id AND v.rn = e.rn + 1)
+      |SELECT user_id, event_id, CAST(s AS DOUBLE) AS cusum,
+      |  s > CAST(300.0 AS DECIMAL(18,6)) AS alarm
+      |FROM e""".stripMargin
+
+  /** The w21 survival cohort's risk sets, shared by the KM, RMST and
+    * Nelson–Aalen oracles: time from first event to first purchase,
+    * right-censored at corpus end (CTE `subj`), then per distinct time the
+    * event count d and the subjects `before` it (CTE `steps`); `n` holds
+    * the cohort size. */
+  private val RiskSetCtes: String =
+    """per AS (
+      |  SELECT user_id, MIN(epoch_us(ts)) AS first_us,
+      |    MIN(CASE WHEN event_type = 'purchase'
+      |             THEN epoch_us(ts) END) AS p_us
+      |  FROM events GROUP BY 1),
+      |cns AS (SELECT MAX(epoch_us(ts)) AS end_us FROM events),
+      |subj AS (
+      |  SELECT CASE WHEN p_us IS NOT NULL THEN p_us - first_us
+      |              ELSE end_us - first_us END AS dur,
+      |    p_us IS NOT NULL AS obs
+      |  FROM per, cns),
+      |perT AS (
+      |  SELECT dur AS t, COUNT(CASE WHEN obs THEN 1 END) AS d,
+      |    COUNT(*) AS m
+      |  FROM subj GROUP BY 1),
+      |n AS (SELECT COUNT(*) AS nn FROM subj),
+      |steps AS (
+      |  SELECT t, d,
+      |    COALESCE(SUM(m) OVER (ORDER BY t
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS before
+      |  FROM perT)""".stripMargin
+
+  /** CTE `e`: the KM product-limit factor 1 − d/n_risk (round-6) per
+    * event time, numbered rn for the recursive survival product. */
+  private val KmFactorCte: String =
+    """e AS (
+      |  SELECT t, (SELECT nn FROM n) - before AS n_risk, d AS n_events,
+      |    ROUND(CAST(1 AS DOUBLE) - CAST(d AS DOUBLE) /
+      |          CAST((SELECT nn FROM n) - before AS DOUBLE), 6)
+      |      AS factor,
+      |    ROW_NUMBER() OVER (ORDER BY t) AS rn
+      |  FROM steps WHERE d > 0)""".stripMargin
 
   val queries: Seq[Query] = Seq(
     // ---- W8: ratio-to-report — each line's share of its group total
@@ -463,25 +562,7 @@ object WindowQueries {
       (s, dir) =>
         WindowOps.ewma(t(s, dir, "events"), Seq("user_id"), "ts",
           "event_id", "value", alpha = 0.3),
-      // the identical recurrence replayed sequentially: rn=1 seeds, each
-      // next step joins the previous — EXACT decimal steps (one input
-      // round on the double, then decimal state), engine-free
-      """WITH RECURSIVE v AS (
-        |  SELECT user_id, event_id,
-        |    CAST(ROUND(CAST(value AS DOUBLE), 6) AS DECIMAL(18,6)) AS v,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |                       ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |e AS (
-        |  SELECT user_id, event_id, rn, v AS s FROM v WHERE rn = 1
-        |  UNION ALL
-        |  SELECT v.user_id, v.event_id, v.rn,
-        |    CAST(ROUND(CAST(0.3 AS DECIMAL(10,8)) * v.v +
-        |               CAST(0.7 AS DECIMAL(10,8)) * e.s, 6)
-        |         AS DECIMAL(18,6))
-        |  FROM v JOIN e ON v.user_id = e.user_id AND v.rn = e.rn + 1)
-        |SELECT user_id, event_id, CAST(s AS DOUBLE) AS ewma
-        |FROM e""".stripMargin),
+      EwmaOracle),
 
     // ---- W17: multi-touch attribution — every purchase credits its
     // same-user clicks in the 24h lookback: linear (1/n each) and
@@ -538,35 +619,8 @@ object WindowQueries {
           tau = 604800000000L),
       // the w21 KM recursion + the τ-clipped segment fold: exact
       // decimal (1−S)·Δt products, rmst = τ − Σ, one frac division
-      """WITH RECURSIVE per AS (
-        |  SELECT user_id, MIN(epoch_us(ts)) AS first_us,
-        |    MIN(CASE WHEN event_type = 'purchase'
-        |             THEN epoch_us(ts) END) AS p_us
-        |  FROM events GROUP BY 1),
-        |cns AS (SELECT MAX(epoch_us(ts)) AS end_us FROM events),
-        |subj AS (
-        |  SELECT CASE WHEN p_us IS NOT NULL THEN p_us - first_us
-        |              ELSE end_us - first_us END AS dur,
-        |    p_us IS NOT NULL AS obs
-        |  FROM per, cns),
-        |perT AS (
-        |  SELECT dur AS t, COUNT(CASE WHEN obs THEN 1 END) AS d,
-        |    COUNT(*) AS m
-        |  FROM subj GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS nn FROM subj),
-        |steps AS (
-        |  SELECT t, d,
-        |    COALESCE(SUM(m) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS before
-        |  FROM perT),
-        |e AS (
-        |  SELECT t, (SELECT nn FROM n) - before AS n_risk, d AS n_events,
-        |    ROUND(CAST(1 AS DOUBLE) - CAST(d AS DOUBLE) /
-        |          CAST((SELECT nn FROM n) - before AS DOUBLE), 6)
-        |      AS factor,
-        |    ROW_NUMBER() OVER (ORDER BY t) AS rn
-        |  FROM steps WHERE d > 0),
+      s"""WITH RECURSIVE $RiskSetCtes,
+        |$KmFactorCte,
         |km AS (
         |  SELECT t, rn,
         |    CAST(ROUND(CAST(1 AS DECIMAL(18,6)) *
@@ -762,35 +816,10 @@ object WindowQueries {
       (s, dir) =>
         Analytics.kaplanMeier(survivalSubjects(s, dir), "dur",
           "observed"),
-      """WITH RECURSIVE per AS (
-        |  SELECT user_id, MIN(epoch_us(ts)) AS first_us,
-        |    MIN(CASE WHEN event_type = 'purchase'
-        |             THEN epoch_us(ts) END) AS p_us
-        |  FROM events GROUP BY 1),
-        |cns AS (SELECT MAX(epoch_us(ts)) AS end_us FROM events),
-        |subj AS (
-        |  SELECT CASE WHEN p_us IS NOT NULL THEN p_us - first_us
-        |              ELSE end_us - first_us END AS dur,
-        |    p_us IS NOT NULL AS obs
-        |  FROM per, cns),
-        |perT AS (
-        |  SELECT dur AS t, COUNT(CASE WHEN obs THEN 1 END) AS d,
-        |    COUNT(*) AS m
-        |  FROM subj GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS nn FROM subj),
-        |steps AS (
-        |  SELECT t, d,
-        |    COALESCE(SUM(m) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS before
-        |  FROM perT),
-        |e AS (
-        |  SELECT t, (SELECT nn FROM n) - before AS n_risk, d AS n_events,
-        |    ROUND(CAST(1 AS DOUBLE) - CAST(d AS DOUBLE) /
-        |          CAST((SELECT nn FROM n) - before AS DOUBLE), 6)
-        |      AS factor,
-        |    ROW_NUMBER() OVER (ORDER BY t) AS rn
-        |  FROM steps WHERE d > 0),
+      // per-time risk sets from the cumulative window; the product-limit
+      // curve replayed as a recursive decimal recurrence
+      s"""WITH RECURSIVE $RiskSetCtes,
+        |$KmFactorCte,
         |km AS (
         |  SELECT t, n_risk, n_events, rn,
         |    CAST(ROUND(CAST(1 AS DECIMAL(18,6)) *
@@ -813,32 +842,9 @@ object WindowQueries {
       (s, dir) =>
         Analytics.nelsonAalen(survivalSubjects(s, dir), "dur",
           "observed"),
-      // per-time risk sets from the cumulative window; the product-limit
-      // curve replayed as a recursive decimal recurrence
       // same risk-set CTEs as w21 with a cumulative-sum hazard instead
       // of the recursive survival product
-      """WITH per AS (
-        |  SELECT user_id, MIN(epoch_us(ts)) AS first_us,
-        |    MIN(CASE WHEN event_type = 'purchase'
-        |             THEN epoch_us(ts) END) AS p_us
-        |  FROM events GROUP BY 1),
-        |cns AS (SELECT MAX(epoch_us(ts)) AS end_us FROM events),
-        |subj AS (
-        |  SELECT CASE WHEN p_us IS NOT NULL THEN p_us - first_us
-        |              ELSE end_us - first_us END AS dur,
-        |    p_us IS NOT NULL AS obs
-        |  FROM per, cns),
-        |perT AS (
-        |  SELECT dur AS t, COUNT(CASE WHEN obs THEN 1 END) AS d,
-        |    COUNT(*) AS m
-        |  FROM subj GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS nn FROM subj),
-        |steps AS (
-        |  SELECT t, d,
-        |    COALESCE(SUM(m) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS before
-        |  FROM perT),
+      s"""WITH $RiskSetCtes,
         |e AS (
         |  SELECT t, CAST((SELECT nn FROM n) - before AS BIGINT)
         |    AS n_risk, d AS n_events
@@ -1164,30 +1170,7 @@ object WindowQueries {
         WindowOps.cusum(t(s, dir, "events"), Seq("user_id"), "ts",
           "event_id", "value", target = 50.0, slack = 10.0,
           threshold = 300.0),
-      // seed s_1 = max(0, 0 + v - 60); each step joins the previous —
-      // pure decimal arithmetic, engine-free
-      """WITH RECURSIVE v AS (
-        |  SELECT user_id, event_id,
-        |    CAST(ROUND(CAST(value AS DOUBLE), 6) AS DECIMAL(18,6)) AS v,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |                       ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |e AS (
-        |  SELECT user_id, event_id, rn,
-        |    CAST(greatest(CAST(0 AS DECIMAL(18,6)),
-        |                  CAST(0 AS DECIMAL(18,6)) + v -
-        |                  CAST(60.0 AS DECIMAL(18,6))) AS DECIMAL(18,6))
-        |      AS s
-        |  FROM v WHERE rn = 1
-        |  UNION ALL
-        |  SELECT v.user_id, v.event_id, v.rn,
-        |    CAST(greatest(CAST(0 AS DECIMAL(18,6)),
-        |                  e.s + v.v - CAST(60.0 AS DECIMAL(18,6)))
-        |         AS DECIMAL(18,6))
-        |  FROM v JOIN e ON v.user_id = e.user_id AND v.rn = e.rn + 1)
-        |SELECT user_id, event_id, CAST(s AS DOUBLE) AS cusum,
-        |  s > CAST(300.0 AS DECIMAL(18,6)) AS alarm
-        |FROM e""".stripMargin),
+      CusumOracle),
 
     // ---- W24: per-user value-sequence autocorrelation at lags 1..3 —
     // the persistence/seasonality screen; ONE key exchange (mean,
@@ -1556,19 +1539,7 @@ object WindowQueries {
       },
       // funnel latency: the same cascade, quantile_cont over the exact
       // double-epoch gaps — Spark percentile's interpolation twin
-      """WITH s1 AS (
-        |  SELECT user_id, MIN(epoch(ts)) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (
-        |  SELECT e.user_id, MIN(epoch(e.ts)) AS t
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND epoch(e.ts) >= s1.t
-        |  GROUP BY e.user_id),
-        |s3 AS (
-        |  SELECT e.user_id, MIN(epoch(e.ts)) AS t
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND epoch(e.ts) >= s2.t
-        |  GROUP BY e.user_id),
+      s"""WITH $FunnelStageCtes,
         |conv AS (
         |  SELECT s3.user_id, s1.t AS t1, s2.t AS t2, s3.t AS t3
         |  FROM s3 JOIN s2 USING (user_id) JOIN s1 USING (user_id))
@@ -1590,7 +1561,7 @@ object WindowQueries {
           horizonSeconds = Some(86400L)),
       // windowed funnel: the cascade plus the stage-1 anchor bound —
       // double epoch arithmetic identical on both engines
-      """WITH s1 AS (
+      s"""WITH s1 AS (
         |  SELECT user_id, MIN(epoch(ts)) AS t FROM events
         |  WHERE event_type = 'view' GROUP BY user_id),
         |s2 AS (
@@ -1605,17 +1576,6 @@ object WindowQueries {
         |  WHERE e.event_type = 'purchase' AND epoch(e.ts) >= s2.t
         |    AND epoch(e.ts) <= s1.t + 86400
         |  GROUP BY e.user_id),
-        |c AS (SELECT (SELECT COUNT(*) FROM s1) AS c1,
-        |             (SELECT COUNT(*) FROM s2) AS c2,
-        |             (SELECT COUNT(*) FROM s3) AS c3)
-        |SELECT CAST(1 AS INT) AS stage_idx, 'view' AS stage, c1 AS users,
-        |  CASE WHEN c1 > 0 THEN ROUND(CAST(c1 AS DOUBLE) / c1, 6) END
-        |    AS conversion FROM c
-        |UNION ALL SELECT CAST(2 AS INT), 'click', c2,
-        |  CASE WHEN c1 > 0 THEN ROUND(CAST(c2 AS DOUBLE) / c1, 6) END
-        |  FROM c
-        |UNION ALL SELECT CAST(3 AS INT), 'purchase', c3,
-        |  CASE WHEN c1 > 0 THEN ROUND(CAST(c3 AS DOUBLE) / c1, 6) END
-        |  FROM c""".stripMargin)
+        |$FunnelRollup""".stripMargin)
   )
 }

@@ -114,26 +114,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Watermarked per-window exact DISTINCT-user count — the metric a
-    * plain streaming aggregation cannot express (COUNT(DISTINCT) is
-    * unsupported in streaming aggs): two CHAINED stateful operators
-    * (Spark ≥ 3.4 multi-stateful support) — a streaming dedup on
-    * (window, user) whose state is bounded by the live windows'
-    * distinct keys, feeding a windowed count of the survivors. Both
-    * states evict at the watermark. Append mode: a window's count
-    * emits once, when the watermark closes it — drain the tail with
-    * [[stageDrainBatches]] + [[drainTail]] like every stateful op. */
-  /** Streaming per-window HLL distinct-user ESTIMATE — the sketch
-    * twin of [[windowedDistinctUsers]], and the 100 TB contrast to
-    * it: exact windowed distinct carries O(users-per-window) dedup
-    * state, the sketch carries 64 registers per live window FOREVER
-    * regardless of traffic. Two chained stateful aggs (register max
-    * per (window, idx) → per-window fold), Append mode — the
-    * s_stream_distinct chassis with registers instead of users. The
-    * register/estimate arithmetic is
-    * [[graft.ops.Sketches.hllDistinct]]'s exactly (shared column
-    * helpers, exact scaled-integer Z), so the chunked replay is
-    * bit-equal to the batch sketch per window. */
   /** Streaming per-window dataset fingerprint — the live twin of
     * [[graft.ops.Quality.datasetFingerprint]]: each window's rows
     * fold into the pair of portable 31-poly hash sums mod 2⁶¹−1.
@@ -203,6 +183,17 @@ object EventStreams {
           col("n_rows").cast("double") / lit(1e12), 6).as("brier"))
   }
 
+  /** Streaming per-window HLL distinct-user ESTIMATE — the sketch
+    * twin of [[windowedDistinctUsers]], and the 100 TB contrast to
+    * it: exact windowed distinct carries O(users-per-window) dedup
+    * state, the sketch carries 64 registers per live window FOREVER
+    * regardless of traffic. Two chained stateful aggs (register max
+    * per (window, idx) → per-window fold), Append mode — the
+    * s_stream_distinct chassis with registers instead of users. The
+    * register/estimate arithmetic is
+    * [[graft.ops.Sketches.hllDistinct]]'s exactly (shared column
+    * helpers, exact scaled-integer Z), so the chunked replay is
+    * bit-equal to the batch sketch per window. */
   def hllDistinctStream(events: DataFrame,
                         windowLen: String = "1 hour",
                         watermark: String = "2 hours"): DataFrame = {
@@ -322,6 +313,15 @@ object EventStreams {
         expr("(__pos * 1000000) div n").as("acc_micros"))
   }
 
+  /** Watermarked per-window exact DISTINCT-user count — the metric a
+    * plain streaming aggregation cannot express (COUNT(DISTINCT) is
+    * unsupported in streaming aggs): two CHAINED stateful operators
+    * (Spark ≥ 3.4 multi-stateful support) — a streaming dedup on
+    * (window, user) whose state is bounded by the live windows'
+    * distinct keys, feeding a windowed count of the survivors. Both
+    * states evict at the watermark. Append mode: a window's count
+    * emits once, when the watermark closes it — drain the tail with
+    * [[stageDrainBatches]] + [[drainTail]] like every stateful op. */
   def windowedDistinctUsers(events: DataFrame,
                             windowLen: String = "1 hour",
                             watermark: String = "2 hours"): DataFrame =

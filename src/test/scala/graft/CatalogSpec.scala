@@ -109,4 +109,34 @@ class CatalogSpec extends AnyFunSuite {
     assert(outside.isEmpty,
       s"setLastModified outside stageDrainBatches at offsets $outside")
   }
+
+  test("no run of 15 consecutive non-blank lines appears in two " +
+    "triple-quoted literals under graft/queries (a chain two oracles " +
+    "replay is one shared fragment)") {
+    val run = 15
+    val queriesDir = mainRoot.resolve("graft/queries")
+    // each literal's non-blank lines, margin-stripped and trimmed
+    val literals = mainFiles.filter(_.startsWith(queriesDir)).sorted
+      .flatMap { f =>
+        val src = java.nio.file.Files.readString(f)
+        "(?s)\"\"\"(.*?)\"\"\"".r.findAllMatchIn(src).map { m =>
+          val line = src.substring(0, m.start).count(_ == '\n') + 1
+          s"${f.getFileName}:$line" -> m.group(1).split("\n").toSeq
+            .map(_.trim.stripPrefix("|").trim).filter(_.nonEmpty)
+        }
+      }
+    assert(literals.size > 300, s"literal scan drifted: ${literals.size}")
+    val firstSeen = scala.collection.mutable.HashMap.empty[Seq[String], String]
+    // (first literal, later literal) -> the first line they share
+    val shared = literals.flatMap { case (at, lines) =>
+      lines.sliding(run).filter(_.size == run).toSeq.distinct.flatMap { w =>
+        firstSeen.get(w) match {
+          case Some(other) => Some((other, at) -> w.head)
+          case None => firstSeen(w) = at; None
+        }
+      }
+    }.distinctBy(_._1)
+    assert(shared.isEmpty,
+      "factor the repeated chain into one fragment (see Query's scaladoc)")
+  }
 }

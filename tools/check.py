@@ -7,6 +7,8 @@ Reads each <name>/ parquet written by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the same sf tables,
 canonicalizes both sides (columns sorted by name, rows sorted by all
 columns, values stringified), and reports row/schema/value match.
+A query whose result and oracle are both empty FAILS: empty == empty
+checks nothing.
 """
 import sys, os, json, glob
 import duckdb
@@ -59,6 +61,10 @@ def main():
         if tmism:
             print(f"FAIL  {name}: dtype-kind mismatch "
                   f"{[(c, ka[c], kb[c]) for c in tmism]}")
+            n_fail += 1; continue
+        if len(spark_df) == 0 and len(oracle_df) == 0:
+            # two empty results agree on nothing: the query checks nothing
+            print(f"FAIL  {name}: both sides empty (vacuous oracle)")
             n_fail += 1; continue
         a, b = canon(spark_df), canon(oracle_df)
         if list(a.columns) != list(b.columns):
