@@ -62,18 +62,20 @@ object EmbeddingQueries {
       |    DESC, ic.cell
       |  LIMIT 4)""".stripMargin
 
-  /** The PQ codebook training replay, shared by every PQ oracle:
-    * portable-hash init slices, one Lloyd round (round-6 L2 argmin,
-    * lowest code ties; exact-decimal per-dim means narrowed to REAL),
-    * then CTE `a2`, every vector's codes against the trained books
-    * `cb1`. */
-  private val PqTrainCtes: String =
-    """init AS (
+  /** The PQ codebook training replay over the vectors `vec` of
+    * `relation` (read as `alias` where a CTE joins it): portable-hash
+    * init slices, one Lloyd round (round-6 L2 argmin, lowest code ties;
+    * exact-decimal per-dim means narrowed to REAL), then CTE `a2`, every
+    * vector's codes against the trained books `cb1`. */
+  private def pqTrainCtes(relation: String, alias: String,
+                          vec: String): String = {
+    val from = if (alias == relation) relation else s"$relation $alias"
+    s"""init AS (
       |  SELECT row_number() OVER (
       |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
       |        vec_id) - 1 AS code,
-      |    embedding AS e
-      |  FROM embeddings
+      |    $vec AS e
+      |  FROM $relation
       |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
       |  LIMIT 8),
       |subs AS (SELECT unnest(range(4)) AS sub),
@@ -82,21 +84,21 @@ object EmbeddingQueries {
       |    init.e[subs.sub*16 + 1 : subs.sub*16 + 16] AS ce
       |  FROM init, subs),
       |a1 AS (
-      |  SELECT e.vec_id, s.sub,
+      |  SELECT $alias.vec_id, s.sub,
       |    (SELECT code FROM cb0 WHERE cb0.sub = s.sub
       |     ORDER BY ROUND(list_sum(list_transform(
-      |         list_zip(cb0.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
+      |         list_zip(cb0.ce, $alias.$vec[s.sub*16+1 : s.sub*16+16]),
       |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
       |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
       |       code
       |     LIMIT 1) AS code
-      |  FROM embeddings e, subs s),
+      |  FROM $from, subs s),
       |m1 AS (
       |  SELECT a.sub, a.code, d.sd,
       |    CAST(CAST(SUM(CAST(ROUND(
-      |        CAST(e.embedding[a.sub*16 + d.sd + 1] AS DOUBLE), 6)
+      |        CAST($alias.$vec[a.sub*16 + d.sd + 1] AS DOUBLE), 6)
       |        AS DECIMAL(20,6))) AS DOUBLE) / COUNT(*) AS REAL) AS mn
-      |  FROM a1 a JOIN embeddings e USING (vec_id),
+      |  FROM a1 a JOIN $from USING (vec_id),
       |    (SELECT unnest(range(16)) AS sd) d
       |  GROUP BY 1, 2, 3),
       |cb1 AS (
@@ -106,15 +108,21 @@ object EmbeddingQueries {
       |    FROM m1 GROUP BY 1, 2) l
       |  USING (sub, code)),
       |a2 AS (
-      |  SELECT e.vec_id, s.sub,
+      |  SELECT $alias.vec_id, s.sub,
       |    (SELECT code FROM cb1 WHERE cb1.sub = s.sub
       |     ORDER BY ROUND(list_sum(list_transform(
-      |         list_zip(cb1.ce, e.embedding[s.sub*16+1 : s.sub*16+16]),
+      |         list_zip(cb1.ce, $alias.$vec[s.sub*16+1 : s.sub*16+16]),
       |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
       |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
       |       code
       |     LIMIT 1) AS code
-      |  FROM embeddings e, subs s)""".stripMargin
+      |  FROM $from, subs s)""".stripMargin
+  }
+
+  /** [[pqTrainCtes]] over the raw `embeddings` table, shared by every
+    * non-residual PQ oracle. */
+  private val PqTrainCtes: String =
+    pqTrainCtes("embeddings", "e", "embedding")
 
   /** The full PQ train+encode+ADC replay (shared by e_pq_topk,
     * e_pq_indexed and the e_pq_recall audit, which embeds it as a
@@ -1307,53 +1315,7 @@ FROM proj"""
         |  FROM embeddings e
         |  JOIN cells c ON c.vec_id = e.vec_id
         |  JOIN ic ON ic.cell = c.cell),
-        |init AS (
-        |  SELECT row_number() OVER (
-        |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
-        |        vec_id) - 1 AS code,
-        |    res AS e
-        |  FROM r
-        |  ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647, vec_id
-        |  LIMIT 8),
-        |subs AS (SELECT unnest(range(4)) AS sub),
-        |cb0 AS (
-        |  SELECT subs.sub, init.code,
-        |    init.e[subs.sub*16 + 1 : subs.sub*16 + 16] AS ce
-        |  FROM init, subs),
-        |a1 AS (
-        |  SELECT r.vec_id, s.sub,
-        |    (SELECT code FROM cb0 WHERE cb0.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb0.ce, r.res[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM r, subs s),
-        |m1 AS (
-        |  SELECT a.sub, a.code, d.sd,
-        |    CAST(CAST(SUM(CAST(ROUND(
-        |        CAST(r.res[a.sub*16 + d.sd + 1] AS DOUBLE), 6)
-        |        AS DECIMAL(20,6))) AS DOUBLE) / COUNT(*) AS REAL) AS mn
-        |  FROM a1 a JOIN r USING (vec_id),
-        |    (SELECT unnest(range(16)) AS sd) d
-        |  GROUP BY 1, 2, 3),
-        |cb1 AS (
-        |  SELECT cb0.sub, cb0.code, COALESCE(l.ml, cb0.ce) AS ce
-        |  FROM cb0 LEFT JOIN (
-        |    SELECT sub, code, list(mn ORDER BY sd) AS ml
-        |    FROM m1 GROUP BY 1, 2) l
-        |  USING (sub, code)),
-        |a2 AS (
-        |  SELECT r.vec_id, s.sub,
-        |    (SELECT code FROM cb1 WHERE cb1.sub = s.sub
-        |     ORDER BY ROUND(list_sum(list_transform(
-        |         list_zip(cb1.ce, r.res[s.sub*16+1 : s.sub*16+16]),
-        |         x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-        |            * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6),
-        |       code
-        |     LIMIT 1) AS code
-        |  FROM r, subs s),
+        |${pqTrainCtes("r", "r", "res")},
         |$IvfProbedCte,
         |qres AS (
         |  SELECT ic.cell,

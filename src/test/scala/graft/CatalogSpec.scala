@@ -110,6 +110,25 @@ class CatalogSpec extends AnyFunSuite {
       s"setLastModified outside stageDrainBatches at offsets $outside")
   }
 
+  test("ClifEtl holds the only thread pool in src/main/scala, sized from " +
+    "the session's cores (one bounded overlap of the ETL's tables)") {
+    val pool = """Executors\s*\.\s*new\w+|ThreadPoolExecutor|ForkJoinPool|""" +
+      """ExecutionContext\s*\.\s*from"""
+    val offenders = usedOutside(pool, "graft/clif/ClifEtl.scala")
+    assert(offenders.isEmpty,
+      s"overlap work through ClifEtl's pool: ${offenders.mkString(", ")}")
+    val src = java.nio.file.Files.readString(
+      mainRoot.resolve("graft/clif/ClifEtl.scala"))
+    val sizes = """newFixedThreadPool\(\s*(\w+)""".r.findAllMatchIn(src)
+      .map(_.group(1)).toSeq
+    assert(sizes == Seq("threads"), s"one pool, sized by a parameter: $sizes")
+    assert(src.contains("run(spark, inDir, outDir, poolSize(spark),"),
+      "the public run must size its pool with poolSize")
+    val sizeDef = """(?s)def poolSize\(.*?\n\n""".r.findFirstIn(src)
+    assert(sizeDef.exists(_.contains("sparkContext.defaultParallelism")),
+      s"poolSize must derive from the session's cores: $sizeDef")
+  }
+
   test("no run of 15 consecutive non-blank lines appears in two " +
     "triple-quoted literals under graft/queries (a chain two oracles " +
     "replay is one shared fragment)") {

@@ -1,13 +1,23 @@
 package graft.clif
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, raise_error}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+
 import graft.SparkSpec
 import graft.queries.Fixtures.tempDir
 
 /** End-to-end drive of the ETL entry point over a generated raw extract:
   * every contract table is produced, contract-conform, and non-empty
   * where the fixture feeds it. This is the test that would have caught
-  * round 1's missing medication_admin_intermittent output.
+  * round 1's missing medication_admin_intermittent output. Both runs
+  * here overlap two tables at a time (the test session has 2 cores, so
+  * `run` itself would take them one at a time).
   */
 class ClifEtlSpec extends SparkSpec {
 
@@ -97,9 +107,18 @@ class ClifEtlSpec extends SparkSpec {
     dir
   }
 
+  private def runOverlapped(outDir: String,
+      tamper: (String, DataFrame) => DataFrame = (_, df) => df) =
+    ClifEtl.run(spark, inDir.toString, outDir, threads = 2, tamper)
+
+  private def poolThreads: Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName == "clif-etl")
+
   test("ClifEtl produces all 15 contract tables, contract-ok, expected rows") {
+    assert(ClifEtl.poolSize(spark) == 1) // local[2]: cores / 2
     val outDir = tempDir("graft_etl_out")
-    val results = ClifEtl.run(spark, inDir.toString, outDir)
+    val results = runOverlapped(outDir)
     val byName = results.map(r => r._1 -> ((r._2, r._3))).toMap
 
     val expectedNonEmpty = Seq("vitals", "respiratory_support", "scores",
@@ -107,7 +126,7 @@ class ClifEtlSpec extends SparkSpec {
       "limited_identifiers", "encounter_demographics_dispo", "disposition",
       "admission_diagnosis", "dialysis", "medication_admin_continuous",
       "medication_admin_intermittent", "medication_orders")
-    assert(byName.keySet == expectedNonEmpty.toSet)
+    assert(results.map(_._1) == expectedNonEmpty) // the declared order
     expectedNonEmpty.foreach { n =>
       assert(byName(n)._2 == "contract-ok", s"$n: ${byName(n)._2}")
       assert(byName(n)._1 > 0, s"$n rows")
@@ -161,5 +180,29 @@ class ClifEtlSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"), plan.take(1200))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("a failing table fails the run, naming it, and leaves no running " +
+    "job, cached intermediate or pool thread behind") {
+    val outDir = tempDir("graft_etl_fail")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "a suite before this one left cached data")
+    // a runtime failure in vitals' first job, while respiratory_support
+    // runs beside it; the other 13 tables are still queued
+    val boom = raise_error(lit("injected")).cast("string")
+    val e = SparkSpec.withExpectedTaskFailures(intercept[RuntimeException](
+      runOverlapped(outDir, (name, df) =>
+        if (name == "vitals") df.withColumn("boom", boom) else df)))
+    assert(e.getMessage.contains("table vitals failed"), e.getMessage)
+    assert(!Files.exists(Paths.get(outDir, "medication_orders.parquet")),
+      "a queued table started after the failure")
+    // job ends reach the status store through the async listener bus
+    eventually(timeout(Span(10, Seconds))) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    }
+    assert(cache.isEmpty, "the run left its med intermediates cached")
+    poolThreads.foreach(_.join(10000))
+    assert(poolThreads.isEmpty, poolThreads)
   }
 }

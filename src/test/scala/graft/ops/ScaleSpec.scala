@@ -126,6 +126,7 @@ class ScaleSpec extends SparkSpec {
     val back = spark.read.parquet(s"$base/z")
     assert(back.count() == 20000)
     assert(df.except(back).count() == 0 && back.except(df).count() == 0)
+    df.unpersist() // the session is shared: leave its cache as found
   }
 
   test("zorderWrite: empty input / all-null layout column fails with a " +
