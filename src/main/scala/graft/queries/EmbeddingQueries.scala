@@ -24,7 +24,7 @@ object EmbeddingQueries {
     * nlist 16), query 17 (`qv`) and every vector's round-6 cosine
     * argmax cell (`cells`). */
   private val IvfCellCtes: String =
-    """ic AS (
+    s"""ic AS (
       |  SELECT row_number() OVER (
       |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
       |        vec_id) - 1 AS cell,
@@ -35,30 +35,15 @@ object EmbeddingQueries {
       |qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 17),
       |cells AS (
       |  SELECT e.vec_id,
-      |    (SELECT cell FROM ic
-      |     ORDER BY ROUND(
-      |       list_sum(list_transform(list_zip(ic.ce, e.embedding),
-      |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |       / (sqrt(list_sum(list_transform(ic.ce,
-      |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |        * sqrt(list_sum(list_transform(e.embedding,
-      |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-      |       DESC, cell
-      |     LIMIT 1) AS cell
+      |    ${nearestCell("ic", "e.embedding")} AS cell
       |  FROM embeddings e)""".stripMargin
 
   /** IVF oracle fragment: CTE `probed`, the nprobe = 4 cells nearest
     * query 17. */
   private val IvfProbedCte: String =
-    """probed AS (
+    s"""probed AS (
       |  SELECT ic.cell FROM ic, qv
-      |  ORDER BY ROUND(
-      |      list_sum(list_transform(list_zip(ic.ce, qv.qe),
-      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(ic.ce,
-      |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |       * sqrt(list_sum(list_transform(qv.qe,
-      |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
+      |  ORDER BY ${cos("ic.ce", "qv.qe")}
       |    DESC, ic.cell
       |  LIMIT 4)""".stripMargin
 
@@ -148,7 +133,7 @@ object EmbeddingQueries {
   /** The full two-round Lloyd replay ending in per-vector cluster
     * assignment — shared by e_kmeans and e_cluster_purity. */
   private val KmeansAssignOracle: String =
-    """WITH c0 AS (
+    s"""WITH c0 AS (
         |  SELECT row_number() OVER (
         |      ORDER BY ((vec_id % 2147483647) * 2654435761) % 2147483647,
         |        vec_id) - 1 AS cell,
@@ -158,16 +143,7 @@ object EmbeddingQueries {
         |  LIMIT 8),
         |a1 AS (
         |  SELECT e.vec_id, e.embedding,
-        |    (SELECT cell FROM c0
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(c0.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(c0.ce,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
+        |    ${nearestCell("c0", "e.embedding")} AS cell
         |  FROM embeddings e),
         |dims AS (SELECT unnest(range(0, (SELECT MAX(len(embedding))
         |                                 FROM embeddings))) AS dim),
@@ -184,16 +160,7 @@ object EmbeddingQueries {
         |  USING (cell)),
         |a2 AS (
         |  SELECT e.vec_id, e.embedding,
-        |    (SELECT cell FROM c1
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(c1.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(c1.ce,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
+        |    ${nearestCell("c1", "e.embedding")} AS cell
         |  FROM embeddings e),
         |m2 AS (
         |  SELECT a.cell, d.dim,
@@ -207,16 +174,7 @@ object EmbeddingQueries {
         |    SELECT cell, list(m ORDER BY dim) AS ml FROM m2 GROUP BY cell) l
         |  USING (cell))
         |SELECT e.vec_id,
-        |  CAST((SELECT cell FROM c2
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(c2.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(c2.ce,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS INT) AS cluster
+        |  CAST(${nearestCell("c2", "e.embedding")} AS INT) AS cluster
         |  FROM embeddings e""".stripMargin
 
   /** Shared CTE prefix for the PCA oracles: covariance base + k
@@ -352,32 +310,18 @@ cov${c + 1} AS MATERIALIZED (
       |probed AS (
       |  SELECT query_id, cell FROM (
       |    SELECT q.query_id, cents.cell,
-      |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-      |        list_sum(list_transform(list_zip(ce, qe),
-      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |      row_number() OVER (PARTITION BY q.query_id
+      |        ORDER BY ${cos("ce", "qe")}
       |        DESC, cents.cell) AS pr
       |    FROM cents, q)
       |  WHERE pr <= 8),
       |assign AS (
       |  SELECT e.vec_id, e.embedding,
-      |    (SELECT cell FROM cents
-      |     ORDER BY ROUND(
-      |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
-      |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-      |       DESC, cell
-      |     LIMIT 1) AS cell
+      |    ${nearestCell("cents", "e.embedding")} AS cell
       |  FROM $assignFrom),
       |scored AS (
       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-      |    ROUND(
-      |      list_sum(list_transform(list_zip(a.embedding, q.qe),
-      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |       * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |    ${cos("a.embedding", "q.qe")}
       |      AS cos_sim
       |  FROM probed p JOIN assign a USING (cell) JOIN q USING (query_id)
       |  WHERE a.vec_id <> p.query_id)
@@ -431,30 +375,15 @@ cov${c + 1} AS MATERIALIZED (
       |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
       |probed AS (
       |  SELECT cell FROM cents, q
-      |  ORDER BY ROUND(
-      |    list_sum(list_transform(list_zip(ce, qe),
-      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |    / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |     * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |  ORDER BY ${cos("ce", "qe")}
       |    DESC, cell
       |  LIMIT $nprobe),
       |assign AS (
       |  SELECT e.vec_id, e.embedding,
-      |    (SELECT cell FROM cents
-      |     ORDER BY ROUND(
-      |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
-      |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-      |       DESC, cell
-      |     LIMIT 1) AS cell
+      |    ${nearestCell("cents", "e.embedding")} AS cell
       |  FROM embeddings e WHERE e.vec_id <> 0)
       |SELECT a.vec_id AS neighbor_id,
-      |  ROUND(
-      |    list_sum(list_transform(list_zip(a.embedding, q.qe),
-      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |     * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |  ${cos("a.embedding", "q.qe")}
       |    AS cos_sim
       |FROM assign a, q
       |WHERE a.cell IN (SELECT cell FROM probed)
@@ -494,7 +423,7 @@ cov${c + 1} AS MATERIALIZED (
     * vector a query (CTE `q`), its exact round-6 cosine top-10 with id
     * tiebreak in CTE `brute` (query_id, neighbor_id, rank ra). */
   private val BruteKnnCtes: String =
-    """src AS MATERIALIZED (
+    s"""src AS MATERIALIZED (
       |  SELECT vec_id, embedding FROM embeddings
       |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
       |q AS MATERIALIZED (
@@ -503,13 +432,8 @@ cov${c + 1} AS MATERIALIZED (
       |brute AS MATERIALIZED (
       |  SELECT query_id, neighbor_id, ra FROM (
       |    SELECT q.query_id, e.vec_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-      |        list_sum(list_transform(list_zip(e.embedding, q.qe),
-      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(e.embedding,
-      |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(q.qe,
-      |             x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |      row_number() OVER (PARTITION BY q.query_id
+      |        ORDER BY ${cos("e.embedding", "q.qe")}
       |        DESC, e.vec_id) AS ra
       |    FROM q, src e WHERE e.vec_id <> q.query_id)
       |  WHERE ra <= 10)""".stripMargin
@@ -529,11 +453,8 @@ cov${c + 1} AS MATERIALIZED (
       |  WHERE cell < (SELECT ns FROM nsup)),
       |so0 AS (
       |  SELECT c.cell, s.cell AS sup,
-      |    row_number() OVER (PARTITION BY c.cell ORDER BY ROUND(
-      |      list_sum(list_transform(list_zip(c.ce, s.ce),
-      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |       * sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |    row_number() OVER (PARTITION BY c.cell
+      |      ORDER BY ${cos("c.ce", "s.ce")}
       |      DESC, s.cell) AS pr
       |  FROM cents c, sup s),
       |superof AS MATERIALIZED (
@@ -543,22 +464,16 @@ cov${c + 1} AS MATERIALIZED (
       |a1 AS MATERIALIZED (
       |  SELECT vec_id, embedding, $carry, sup FROM (
       |    SELECT e.vec_id, e.embedding, e.$carry, s.cell AS sup,
-      |      row_number() OVER (PARTITION BY e.vec_id ORDER BY ROUND(
-      |        list_sum(list_transform(list_zip(s.ce, e.embedding),
-      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(s.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |      row_number() OVER (PARTITION BY e.vec_id
+      |        ORDER BY ${cos("s.ce", "e.embedding")}
       |        DESC, s.cell) AS pr
       |    FROM src e, sup s)
       |  WHERE pr = 1),
       |assign AS MATERIALIZED (
       |  SELECT vec_id, embedding, $carry, cell FROM (
       |    SELECT a.vec_id, a.embedding, a.$carry, so.cell,
-      |      row_number() OVER (PARTITION BY a.vec_id ORDER BY ROUND(
-      |        list_sum(list_transform(list_zip(c.ce, a.embedding),
-      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(c.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      |      row_number() OVER (PARTITION BY a.vec_id
+      |        ORDER BY ${cos("c.ce", "a.embedding")}
       |        DESC, so.cell) AS rn
       |    FROM a1 a JOIN superof so ON so.sup = a.sup
       |      JOIN cents c ON c.cell = so.cell)
@@ -574,6 +489,14 @@ cov${c + 1} AS MATERIALIZED (
        |   * sqrt(list_sum(list_transform($b,
        |       x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)"""
       .stripMargin
+
+  /** Oracle fragment: scalar subquery for the cell of relation `cents`
+    * (columns `cell`, `ce`) nearest to list expression `vec` by
+    * [[cos]], ties to the lowest cell — `IvfCell`'s argmax. */
+  private def nearestCell(cents: String, vec: String): String =
+    s"""(SELECT cell FROM $cents
+       |  ORDER BY ${cos(s"$cents.ce", vec)} DESC, cell
+       |  LIMIT 1)""".stripMargin
 
   val queries: Seq[Query] = Seq(
     // ---- E: margin-scored mutual k-NN matching across labels 0/1 —
@@ -598,13 +521,7 @@ cov${c + 1} AS MATERIALIZED (
         |    AND embedding IS NOT NULL),
         |p AS (
         |  SELECT a_id, b_id,
-        |    CAST(ROUND(
-        |      list_sum(list_transform(list_zip(va, vb),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(va,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(vb,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
+        |    CAST(${cos("va", "vb")}
         |      AS DECIMAL(18,6)) AS cos
         |  FROM a, b),
         |$MarginTail""".stripMargin),
@@ -754,7 +671,7 @@ cov${c + 1} AS MATERIALIZED (
       // SemDeDup from scratch: centroids = first-64 in portable-hash
       // order over the SAME union, cells = round(cos,6) argmax with
       // ties to the lowest cell, kept = no earlier cell-mate at >= 0.8.
-      """WITH inj AS (
+      s"""WITH inj AS (
         |  SELECT CAST(1000000 + i AS BIGINT) AS vec_id,
         |    list_transform(range(0, 64), d ->
         |      CAST(CAST((d*7) % 16 - 8 AS DOUBLE)/16.0
@@ -772,23 +689,12 @@ cov${c + 1} AS MATERIALIZED (
         |  LIMIT 64),
         |assign AS (
         |  SELECT v.vec_id, v.embedding,
-        |    (SELECT cell FROM cents
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(cents.ce, v.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(v.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
+        |    ${nearestCell("cents", "v.embedding")} AS cell
         |  FROM allv v)
         |SELECT b.vec_id AS id, CAST(b.cell AS BIGINT) AS cell,
         |  NOT EXISTS (SELECT 1 FROM assign a
         |    WHERE a.cell = b.cell AND a.vec_id < b.vec_id
-        |      AND ROUND(
-        |        list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+        |      AND ${cos("a.embedding", "b.embedding")}
         |        >= 0.8) AS kept
         |FROM assign b""".stripMargin),
 
@@ -1153,12 +1059,7 @@ FROM proj"""
            |  FROM sums GROUP BY own),
            |dd AS (
            |  SELECT p.vec_id, p.own, c.c,
-           |    ROUND(list_sum(list_transform(list_zip(c.cv, p.embedding),
-           |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-           |      / (sqrt(list_sum(list_transform(c.cv,
-           |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           |       * sqrt(list_sum(list_transform(p.embedding,
-           |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
+           |    ${cos("c.cv", "p.embedding")}
            |      AS cos
            |  FROM pts p CROSS JOIN cv c),
            |pp AS (
@@ -1449,13 +1350,7 @@ FROM proj"""
         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 17),
         |exact AS (
         |  SELECT e.vec_id,
-        |    ROUND(
-        |      list_sum(list_transform(list_zip(e.embedding, q.qe),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |           x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(q.qe,
-        |           x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+        |    ${cos("e.embedding", "q.qe")}
         |      AS c
         |  FROM embeddings e, q WHERE e.vec_id <> 17
         |  ORDER BY c DESC, e.vec_id LIMIT 10)
@@ -1486,13 +1381,7 @@ FROM proj"""
         |      WHERE vec_id = 17),
         |rr AS (
         |  SELECT e.vec_id,
-        |    ROUND(
-        |      list_sum(list_transform(list_zip(e.embedding, q.qe),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(q.qe,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
+        |    ${cos("e.embedding", "q.qe")}
         |      AS cos_sim
         |  FROM embeddings e JOIN short USING (vec_id), q),
         |top AS (
@@ -1621,33 +1510,20 @@ FROM n, vxy, vxx, vyy"""
         |probed AS MATERIALIZED (
         |  SELECT query_id, cell FROM (
         |    SELECT q.query_id, cents.cell,
-        |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(ce, qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+        |      row_number() OVER (PARTITION BY q.query_id
+        |        ORDER BY ${cos("ce", "qe")}
         |        DESC, cents.cell) AS pr
         |    FROM cents, q)
         |  WHERE pr <= 8),
         |assign AS MATERIALIZED (
         |  SELECT e.vec_id, e.embedding,
-        |    (SELECT cell FROM cents
-        |     ORDER BY ROUND(
-        |       list_sum(list_transform(list_zip(cents.ce, e.embedding),
-        |         x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |       / (sqrt(list_sum(list_transform(cents.ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
-        |       DESC, cell
-        |     LIMIT 1) AS cell
+        |    ${nearestCell("cents", "e.embedding")} AS cell
         |  FROM src e),
         |ivf AS MATERIALIZED (
         |  SELECT query_id, neighbor_id, rb FROM (
         |    SELECT p.query_id, a.vec_id AS neighbor_id,
-        |      row_number() OVER (PARTITION BY p.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(a.embedding, q.qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+        |      row_number() OVER (PARTITION BY p.query_id
+        |        ORDER BY ${cos("a.embedding", "q.qe")}
         |        DESC, a.vec_id) AS rb
         |    FROM probed p JOIN assign a USING (cell) JOIN q USING (query_id)
         |    WHERE a.vec_id <> p.query_id)
@@ -1755,11 +1631,8 @@ FROM n, vxy, vxx, vyy"""
         |probed AS MATERIALIZED (
         |  SELECT query_id, cell FROM (
         |    SELECT q.query_id, cents.cell,
-        |      row_number() OVER (PARTITION BY q.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(ce, qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+        |      row_number() OVER (PARTITION BY q.query_id
+        |        ORDER BY ${cos("ce", "qe")}
         |        DESC, cents.cell) AS pr
         |    FROM cents, q)
         |  WHERE pr <= 8),
@@ -1767,11 +1640,8 @@ FROM n, vxy, vxx, vyy"""
         |ivf AS MATERIALIZED (
         |  SELECT query_id, ql, nl, rb FROM (
         |    SELECT p.query_id, q.ql, a.label AS nl,
-        |      row_number() OVER (PARTITION BY p.query_id ORDER BY ROUND(
-        |        list_sum(list_transform(list_zip(a.embedding, q.qe),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+        |      row_number() OVER (PARTITION BY p.query_id
+        |        ORDER BY ${cos("a.embedding", "q.qe")}
         |        DESC, a.vec_id) AS rb
         |    FROM probed p JOIN assign a USING (cell) JOIN q USING (query_id)
         |    WHERE a.vec_id <> p.query_id)
@@ -1876,20 +1746,12 @@ FROM n, vxy, vxx, vyy"""
       (s, dir) =>
         Similarity.thresholdPairsByLabel(t(s, dir, "embeddings"),
           "vec_id", "embedding", "label", threshold = 0.3),
-      """SELECT a.label AS lbl, a.vec_id AS id1, b.vec_id AS id2,
-        |  ROUND(
-        |    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+      s"""SELECT a.label AS lbl, a.vec_id AS id1, b.vec_id AS id2,
+        |  ${cos("a.embedding", "b.embedding")}
         |    AS cos_sim
         |FROM embeddings a JOIN embeddings b
         |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE ROUND(
-        |    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6) >= 0.3""".stripMargin),
+        |WHERE ${cos("a.embedding", "b.embedding")} >= 0.3""".stripMargin),
 
     // ---- similarity: embedding-cosine near-dup (multi-table SRP
     // candidates + exact verify). The synthetic corpus's max pairwise
@@ -1916,7 +1778,7 @@ FROM n, vxy, vxx, vyy"""
         Similarity.semanticNearDup(emb.unionByName(inj),
           "vec_id", "embedding", threshold = 0.8, nPlanes = 12, tables = 4)
       },
-      """WITH inj AS (
+      s"""WITH inj AS (
         |  SELECT CAST(1000000 + i AS BIGINT) AS vec_id,
         |    list_transform(range(0, 64), d ->
         |      CAST(CAST((d*7) % 16 - 8 AS DOUBLE)/16.0
@@ -1926,17 +1788,9 @@ FROM n, vxy, vxx, vyy"""
         |  SELECT vec_id, embedding FROM embeddings
         |  UNION ALL SELECT vec_id, embedding FROM inj)
         |SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |  ROUND(
-        |    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6)
+        |  ${cos("a.embedding", "b.embedding")}
         |    AS cos_sim
         |FROM allv a JOIN allv b ON a.vec_id < b.vec_id
-        |WHERE ROUND(
-        |    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))), 6) >= 0.8""".stripMargin)
+        |WHERE ${cos("a.embedding", "b.embedding")} >= 0.8""".stripMargin)
   )
 }

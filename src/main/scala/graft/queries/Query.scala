@@ -25,12 +25,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`s"""WITH $Frag, ..."""`). A fragment takes a parameter only where
   * its copies differ in a CTE name or a literal, and must be defined
   * above every val that uses it (object vals initialize in order).
-  * CatalogSpec fails when 15 consecutive non-blank lines recur in two
-  * literals. Margin hazard: the outer literal's `stripMargin` runs
-  * over the interpolated text again, so a fragment line that begins
-  * with `|` after its indentation (a leading SQL `||`) would lose it;
-  * concatenate such a fragment instead. A literal with a backslash
-  * (`'\s+'`) interpolates with `raw`, which keeps escapes as written.
+  * Moving a chain into a fragment may change an oracle's SQL only in
+  * whitespace (line breaks, indentation, spaces between tokens): the
+  * refactoring gate dumps `SparkEntry.oracleSql` before and after and
+  * compares each entry with all whitespace removed, so a fragment
+  * matches its copies token for token. CatalogSpec fails when 15
+  * consecutive non-blank lines recur in two literals, and when a
+  * literal spells out the round-6 cosine chain that
+  * `EmbeddingQueries.cos` holds. Margin hazard: the outer literal's
+  * `stripMargin` runs over the interpolated text again, so a fragment
+  * line that begins with `|` after its indentation (a leading SQL
+  * `||`) would lose it; concatenate such a fragment instead. A
+  * literal with a backslash (`'\s+'`) interpolates with `raw`, which
+  * keeps escapes as written.
   */
 final case class Query(name: String, concept: String,
                        build: (SparkSession, String) => DataFrame,

@@ -44,26 +44,31 @@ object StorageQueries {
       e.filter(dayofmonth(col("ts")) >= lo && dayofmonth(col("ts")) < hi)
     }
 
-  /** Chunked replay of the seven ordered per-key folds: the events
-    * table as FOUR day-range chunks IN event-time order (the folds'
-    * ordering contract), staged once per (JVM, sf dir) — every replay
-    * only reads it — and drained through one stateful operator `op`
-    * with a fresh checkpoint per run. */
-  private def dayReplay(s: SparkSession, dir: String, name: String)(
+  /** Drains the stateful operator `op` over the staged stream input
+    * dir `in`, one file per trigger, with a fresh checkpoint per run;
+    * `name` tags the checkpoint dir and the query. */
+  private def replay(s: SparkSession, in: String, name: String)(
       op: DataFrame => DataFrame): DataFrame = {
-    val in = stagedDayChunksDir.getOrElseUpdate(dir, {
-      val in = tempDir("graft_days") + "/in"
-      graft.streaming.EventStreams.stageDrainBatches(in,
-        dayChunks(t(s, dir, "events"),
-          Seq((1, 8), (8, 15), (15, 22), (22, 32))))
-      in
-    })
     val ckpt = ckptDir(s"graft_${name}_ck")
     val stream = graft.streaming.EventStreams.readStream(s, in,
       options = Map("maxFilesPerTrigger" -> "1"))
     runDrain(op(stream), queryName = s"${name}_${System.nanoTime()}",
       checkpoint = s"$ckpt/ckpt")
   }
+
+  /** Chunked replay of the seven ordered per-key folds: the events
+    * table as FOUR day-range chunks IN event-time order (the folds'
+    * ordering contract), staged once per (JVM, sf dir) — every replay
+    * only reads it — and drained through `op` by [[replay]]. */
+  private def dayReplay(s: SparkSession, dir: String, name: String)(
+      op: DataFrame => DataFrame): DataFrame =
+    replay(s, stagedDayChunksDir.getOrElseUpdate(dir, {
+      val in = tempDir("graft_days") + "/in"
+      graft.streaming.EventStreams.stageDrainBatches(in,
+        dayChunks(t(s, dir, "events"),
+          Seq((1, 8), (8, 15), (15, 22), (22, 32))))
+      in
+    }), name)(op)
 
   /** Max event time of `e` in epoch ms. `ts` may surface as
     * java.sql.Timestamp (LTZ) or LocalDateTime (NTZ) depending on the
@@ -126,15 +131,36 @@ object StorageQueries {
   private val stagedDistinctEventsDir =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Per-JVM cache of the s_stream_psi reference profile (decile
-    * bounds, Laplace-guarded shares) — round-10 ADVICE: the profile's
-    * two driver-side collects re-ran on every invocation even though
-    * the staged input was already cached per dir. */
-  private val stagedPsiProfile = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Double], Seq[Double])]
+  /** Per-JVM cache of the frozen reference profile per dir (see
+    * [[driftProfile]]) — round-10 ADVICE: the profile's two
+    * driver-side collects re-ran on every invocation even though the
+    * staged input was already cached per dir. */
+  private val stagedDriftProfile = scala.collection.concurrent.TrieMap
+    .empty[String, (Seq[Double], Seq[Long])]
 
-  private val stagedHellingerProfile = scala.collection.concurrent
-    .TrieMap.empty[String, (Seq[Double], Seq[Double])]
+  /** The reference profile s_stream_psi and s_stream_hellinger score
+    * each day against: the nine decile bounds of the first half of the
+    * month's event values, and the reference count of each of the ten
+    * bins they cut. Each query derives its own shares from the counts. */
+  private def driftProfile(s: SparkSession, dir: String)
+      : (Seq[Double], Seq[Long]) =
+    stagedDriftProfile.getOrElseUpdate(dir, {
+      val refV = t(s, dir, "events").filter(col("value").isNotNull &&
+          dayofmonth(col("ts")) <= 15)
+        .select(col("value").cast("double").as("v"))
+      val qRow = refV.agg(
+        call_function("percentile", col("v"), lit(0.1)).as("q1"),
+        (2 to 9).map(i => call_function("percentile", col("v"),
+          lit(i / 10.0)).as(s"q$i")): _*).head()
+      val bs = (0 until 9).map(qRow.getDouble)
+      val binOf = bs.foldLeft(lit(1)) { (acc, b) =>
+        acc + when(col("v") > lit(b), 1).otherwise(0)
+      }
+      val refCounts = refV.select(binOf.as("bin")).groupBy(col("bin"))
+        .agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      (bs, (1 to 10).map(i => refCounts.getOrElse(i, 0L)))
+    })
 
   /** Shared staging for the sentinel-drained chunked events replays
     * (s_stream_distinct and s_stream_psi — round-10 ADVICE: the ~25
@@ -160,6 +186,16 @@ object StorageQueries {
         Seq(e, sentinel(30), sentinel(31)))
       inDir
     })
+
+  /** [[replay]] of the windowed operator `op` over
+    * [[sentinelEventsInput]], minus the sentinel windows (from
+    * 2024-02-15 on). */
+  private def sentinelReplay(s: SparkSession, dir: String, name: String)(
+      op: DataFrame => DataFrame): DataFrame =
+    graft.streaming.EventStreams.drainTail(
+      replay(s, sentinelEventsInput(s, dir), name)(op),
+      col("window_start") >=
+        lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
 
   private val stagedOuterEventsDir =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -261,13 +297,8 @@ object StorageQueries {
         shifted(e.orderBy(col("ts"), col("event_id")).limit(200), 3600L)))
       inDir
     })
-    val ckpt = ckptDir("graft_tt_ck")
-    val stream = graft.streaming.EventStreams.readStream(s, in,
-      options = Map("maxFilesPerTrigger" -> "1"))
-    runDrain(
-      graft.streaming.EventStreams.dedupStream(stream, Seq("event_id"))
-        .select("event_id", "user_id", "event_type"),
-      queryName = s"tt_${System.nanoTime()}", checkpoint = s"$ckpt/ckpt")
+    replay(s, in, "tt")(graft.streaming.EventStreams.dedupStream(_,
+      Seq("event_id")).select("event_id", "user_id", "event_type"))
   }
 
   /** Every user's sessions by gaps-and-islands on second-truncated
@@ -485,21 +516,9 @@ object StorageQueries {
     // count), Append mode, tail drained by the two-sentinel batches;
     // oracle is the batch distinct count per hour. ----
     Query("s_stream_distinct", "streaming exact COUNT(DISTINCT) per hour window",
-      (s, dir) => {
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_sdc_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.windowedDistinctUsers(stream,
-            "1 hour", "2 hours"),
-          queryName = s"sdc_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
-      },
+      (s, dir) =>
+        sentinelReplay(s, dir, "sdc")(graft.streaming.EventStreams
+          .windowedDistinctUsers(_, "1 hour", "2 hours")),
       // streaming exact distinct == batch distinct per closed window
       """SELECT date_trunc('hour', ts) AS window_start,
         |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS distinct_users
@@ -513,22 +532,11 @@ object StorageQueries {
     // quality monitor: one exact (count, pos, HUGEINT squared-error)
     // partial per window, bit-equal to the batch arithmetic. ----
     Query("s_stream_brier", "per-window Brier score",
-      (s, dir) => {
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_sbr_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.brierStream(stream,
+      (s, dir) =>
+        sentinelReplay(s, dir, "sbr")(graft.streaming.EventStreams
+          .brierStream(_,
             least(greatest(col("value") / lit(100.0), lit(0.0)), lit(1.0)),
-            col("event_type") === "purchase", "1 hour", "2 hours"),
-          queryName = s"sbr_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
-      },
+            col("event_type") === "purchase", "1 hour", "2 hours")),
       // per-window replay of the a65 micro arithmetic
       """WITH s AS (
         |  SELECT date_trunc('hour', ts) AS ws,
@@ -551,21 +559,10 @@ object StorageQueries {
     // forever; window fingerprints modular-ADD to the whole-corpus
     // fingerprint (the reconcile-without-rereading property). ----
     Query("s_stream_fingerprint", "per-window dataset fingerprint",
-      (s, dir) => {
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_sfp_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.fingerprintStream(stream,
-            Seq("event_id", "event_type"), "1 hour", "2 hours"),
-          queryName = s"sfp_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
-      },
+      (s, dir) =>
+        sentinelReplay(s, dir, "sfp")(graft.streaming.EventStreams
+          .fingerprintStream(_, Seq("event_id", "event_type"), "1 hour",
+            "2 hours")),
       // per-window replay of the a60 fold over the identical canonical
       """WITH s AS (
         |  SELECT date_trunc('hour', ts) AS ws,
@@ -589,21 +586,9 @@ object StorageQueries {
         |FROM h GROUP BY ws""".stripMargin),
 
     Query("s_stream_hll", "streaming sliding-window HyperLogLog distinct users",
-      (s, dir) => {
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_shll_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.hllDistinctStream(stream,
-            "1 hour", "2 hours"),
-          queryName = s"shll_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
-      },
+      (s, dir) =>
+        sentinelReplay(s, dir, "shll")(graft.streaming.EventStreams
+          .hllDistinctStream(_, "1 hour", "2 hours")),
       """WITH h AS (
         |  SELECT date_trunc('hour', ts) AS ws,
         |    (((user_id % 2147483648) + 2147483648) % 2147483648)
@@ -648,20 +633,9 @@ object StorageQueries {
     // sets are order-independent, so the chunked replay is bit-equal
     // to the batch sketch per window, threshold included. ----
     Query("s_stream_kmv", "per-window KMV distinct sketch",
-      (s, dir) => {
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_skmv_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.kmvDistinctStream(stream).toDF(),
-          queryName = s"skmv_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
-      },
+      (s, dir) =>
+        sentinelReplay(s, dir, "skmv")(stream =>
+          graft.streaming.EventStreams.kmvDistinctStream(stream).toDF()),
       // the batch HLL replay per hour window (the a37 register
       // arithmetic grouped by window)
       // the batch KMV replay per hour window (the a51 mixer fold +
@@ -697,22 +671,11 @@ object StorageQueries {
     // micro-unit arithmetic identical to the batch op, so the
     // chunked replay is bit-equal per window. ----
     Query("s_stream_calibration", "per-window calibration bins",
-      (s, dir) => {
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_scal_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.calibrationStream(stream,
+      (s, dir) =>
+        sentinelReplay(s, dir, "scal")(graft.streaming.EventStreams
+          .calibrationStream(_,
             least(greatest(col("value") / lit(100.0), lit(0.0)), lit(1.0)),
-            col("event_type") === "purchase"),
-          queryName = s"scal_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
-      },
+            col("event_type") === "purchase")),
       // the a41 bin arithmetic per hour window; sentinel windows are
       // beyond the corpus end, so the plain-events replay matches
       """WITH s AS (
@@ -743,40 +706,10 @@ object StorageQueries {
     // drain as s_stream_distinct. ----
     Query("s_stream_psi", "per-day PSI drift monitor",
       (s, dir) => {
-        // profile cached per dir alongside the staged input (round-10
-        // ADVICE: the two collects re-ran on every invocation)
-        val (bounds, refShares) = stagedPsiProfile.getOrElseUpdate(dir, {
-          val refV = t(s, dir, "events").filter(col("value").isNotNull &&
-              dayofmonth(col("ts")) <= 15)
-            .select(col("value").cast("double").as("v"))
-          val qRow = refV.agg(
-            call_function("percentile", col("v"), lit(0.1)).as("q1"),
-            (2 to 9).map(i => call_function("percentile", col("v"),
-              lit(i / 10.0)).as(s"q$i")): _*).head()
-          val bs = (0 until 9).map(qRow.getDouble)
-          val binOf = bs.foldLeft(lit(1)) { (acc, b) =>
-            acc + when(col("v") > lit(b), 1).otherwise(0)
-          }
-          val refCounts = refV.select(binOf.as("bin")).groupBy(col("bin"))
-            .agg(count(lit(1)).as("n")).collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-          val refTot = refCounts.values.sum
-          (bs, (1 to 10).map(i =>
-            (refCounts.getOrElse(i, 0L) + 0.5) / (refTot + 5.0)))
-        })
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_spsi_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.psiStream(stream, "value",
-            bounds, refShares, "1 day", "2 days"),
-          queryName = s"spsi_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
+        val (bounds, refCounts) = driftProfile(s, dir)
+        val refShares = refCounts.map(n => (n + 0.5) / (refCounts.sum + 5.0))
+        sentinelReplay(s, dir, "spsi")(graft.streaming.EventStreams
+          .psiStream(_, "value", bounds, refShares, "1 day", "2 days"))
           .orderBy("window_start")
       },
       // batch recomputation of the streamed per-day PSI: same reference
@@ -802,40 +735,10 @@ object StorageQueries {
     // state = bins longs forever, BC an exact decimal fold. ----
     Query("s_stream_hellinger", "streaming Hellinger drift",
       (s, dir) => {
-        val (bounds, refShares) =
-          stagedHellingerProfile.getOrElseUpdate(dir, {
-            val refV = t(s, dir, "events")
-              .filter(col("value").isNotNull &&
-                dayofmonth(col("ts")) <= 15)
-              .select(col("value").cast("double").as("v"))
-            val qRow = refV.agg(
-              call_function("percentile", col("v"), lit(0.1)).as("q1"),
-              (2 to 9).map(i => call_function("percentile", col("v"),
-                lit(i / 10.0)).as(s"q$i")): _*).head()
-            val bs = (0 until 9).map(qRow.getDouble)
-            val binOf = bs.foldLeft(lit(1)) { (acc, b) =>
-              acc + when(col("v") > lit(b), 1).otherwise(0)
-            }
-            val refCounts = refV.select(binOf.as("bin"))
-              .groupBy(col("bin")).agg(count(lit(1)).as("n")).collect()
-              .map(r => r.getInt(0) -> r.getLong(1)).toMap
-            val refTot = refCounts.values.sum
-            (bs, (1 to 10).map(i =>
-              refCounts.getOrElse(i, 0L).toDouble / refTot))
-          })
-        val in = sentinelEventsInput(s, dir)
-        val ckpt = ckptDir("graft_shel_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        val sink = runDrain(
-          graft.streaming.EventStreams.hellingerStream(stream, "value",
-            bounds, refShares, "1 day", "2 days"),
-          queryName = s"shel_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
-        graft.streaming.EventStreams.drainTail(sink,
-          col("window_start") >=
-            lit(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")))
+        val (bounds, refCounts) = driftProfile(s, dir)
+        val refShares = refCounts.map(_.toDouble / refCounts.sum)
+        sentinelReplay(s, dir, "shel")(graft.streaming.EventStreams
+          .hellingerStream(_, "value", bounds, refShares, "1 day", "2 days"))
           .orderBy("window_start")
       },
       // the frozen reference (plain shares) + per-window bins replayed;
@@ -1137,15 +1040,8 @@ object StorageQueries {
               lit(java.sql.Timestamp.valueOf("2024-06-01 00:00:00")).as("ts"),
               lit(-1L).as("user_id"), lit("flush").as("event_type"),
               lit(0.0).as("value"), lit("{}").as("props")))
-        val ckpt = ckptDir("graft_sso_ck")
-        val stream = graft.streaming.EventStreams.readStream(s, in,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        runDrain(
-          graft.streaming.EventStreams.sessionizeRetained(stream,
-            gapSeconds = 1800, watermarkDelay = "40 days").toDF(),
-          queryName = s"sso_${System.nanoTime()}",
-          checkpoint = s"$ckpt/ckpt",
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
+        replay(s, in, "sso")(graft.streaming.EventStreams.sessionizeRetained(
+          _, gapSeconds = 1800, watermarkDelay = "40 days").toDF())
       },
       // ALL sessions (not just the last): the retained-events stream
       // must reproduce the complete batch gaps-and-islands answer even

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.AnnKernel
 import graft.ops.Iterate
 
 /** Similarity search over embedding columns (`array<float>`).
@@ -769,32 +770,26 @@ object Similarity {
     * TakeOrdered top-k, (distance, id) tiebreak. */
   def pqTopKFromCodes(codes: DataFrame, idCol: String,
                       cbs: Array[Array[Array[Float]]],
-                      query: Array[Float], topK: Int): DataFrame = {
-    val m = cbs.length
-    val k = cbs(0).length
-    val sub = cbs(0)(0).length
-    val tbl: Seq[Seq[Double]] = (0 until m).map { s =>
-      (0 until k).map { c =>
-        val cv = cbs(s)(c)
-        var d2 = 0.0
-        var j = 0
-        while (j < sub) {
-          val d = query(s * sub + j).toDouble - cv(j).toDouble
-          d2 += d * d
-          j += 1
-        }
-        java.math.BigDecimal.valueOf(d2)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      }
-    }
-    val tblLit = typedLit(tbl)
-    val score = (0 until m).map(s =>
-        tblLit.getItem(s).getItem(col("codes").getItem(s))
-          .cast("decimal(18,6)"))
-      .reduce(_ + _)
-    codes.select(col(idCol), score.cast("double").as("adc_dist"))
+                      query: Array[Float], topK: Int): DataFrame =
+    codes.select(col(idCol),
+        adcScore(query, cbs).cast("double").as("adc_dist"))
       .orderBy(col("adc_dist"), col(idCol))
       .limit(topK)
+
+  /** The ADC distance of column `codes` to `query`: the m×k table of
+    * round-6 squared L2 from each query subspace to each codeword (a
+    * driver-side literal), summed over the row's codes in exact
+    * decimal(18,6). */
+  private def adcScore(query: Array[Float],
+                       cbs: Array[Array[Array[Float]]]): Column = {
+    val q = query.map(_.toDouble)
+    val sub = cbs(0)(0).length
+    val tbl: Seq[Seq[Double]] =
+      cbs.indices.map(s => AnnKernel.sqL2(q, s * sub, cbs(s)).toSeq)
+    cbs.indices.map(s =>
+        typedLit(tbl).getItem(s).getItem(col("codes").getItem(s))
+          .cast("decimal(18,6)"))
+      .reduce(_ + _)
   }
 
   /** Persist a PQ index: trains codebooks, writes them as a (sub,
@@ -1043,8 +1038,7 @@ object Similarity {
                 m: Int, k: Int, iters: Int = 1): DataFrame = {
     val spark = emb.sparkSession
     val cents = ivfCentroids(emb, idCol, vecCol, nlist)
-    val bcCents = spark.sparkContext.broadcast(
-      cents.map(_.toArray): Array[Array[Float]])
+    val bcCents = broadcastCentroids(cents, spark)
     val cbs = pqCodebooks(emb, idCol, vecCol, m, k, iters)
     val bcCbs = spark.sparkContext.broadcast(cbs)
     val qRow = emb.filter(col(idCol) === queryId)
@@ -1063,12 +1057,6 @@ object Similarity {
     pqTopKFromCodes(celled.select(col(idCol), col("codes")), idCol,
       cbs, q, topK)
   }
-
-  private def adcScore(tbl: Seq[Seq[Double]], m: Int): Column =
-    (0 until m).map(s =>
-        typedLit(tbl).getItem(s).getItem(col("codes").getItem(s))
-          .cast("decimal(18,6)"))
-      .reduce(_ + _)
 
   /** RESIDUAL IVF-PQ (the full Jégou et al. IVFADC architecture): PQ
     * codebooks are trained on the residuals x − centroid(cell(x)) —
@@ -1098,8 +1086,7 @@ object Similarity {
                         iters: Int = 1): DataFrame = {
     val spark = emb.sparkSession
     val cents = ivfCentroids(emb, idCol, vecCol, nlist)
-    val bcCents = spark.sparkContext.broadcast(
-      cents.map(_.toArray): Array[Array[Float]])
+    val bcCents = broadcastCentroids(cents, spark)
     val centsLit = typedLit(cents.map(_.toSeq))
     val withRes = emb.select(col(idCol), col(vecCol),
         graft.functions.NativeExpressions.ivf_cell(col(vecCol), bcCents)
@@ -1109,7 +1096,6 @@ object Similarity {
     val cbs = pqCodebooks(withRes.select(col(idCol), col("res")),
       idCol, "res", m, k, iters)
     val bcCbs = spark.sparkContext.broadcast(cbs)
-    val sub = cbs(0)(0).length
     val codes = withRes.select(col(idCol), col("cell"),
       graft.functions.NativeExpressions.pq_encode(col("res"), bcCbs)
         .as("codes"))
@@ -1120,30 +1106,14 @@ object Similarity {
       .collect()(0)
     val q = qRow.getSeq[Float](0).toArray
     val probed = qRow.getSeq[Int](1)
-    def tblFor(cell: Int): Seq[Seq[Double]] = {
+    def scoreIn(cell: Int): Column = {
       val c = cents(cell)
-      val qr: Array[Float] =
-        Array.tabulate(q.length)(i => q(i) - c(i)) // exact float diff
-      (0 until m).map { s =>
-        (0 until k).map { cd =>
-          val cv = cbs(s)(cd)
-          var d2 = 0.0
-          var j = 0
-          while (j < sub) {
-            val d = qr(s * sub + j).toDouble - cv(j).toDouble
-            d2 += d * d
-            j += 1
-          }
-          java.math.BigDecimal.valueOf(d2)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-        }
-      }
+      // the query's residual: an exact float difference
+      adcScore(Array.tabulate(q.length)(i => q(i) - c(i)), cbs)
     }
     val score = probed.tail.foldLeft(
-        when(col("cell") === probed.head,
-          adcScore(tblFor(probed.head), m))) {
-      case (acc, cell) => acc.when(col("cell") === cell,
-        adcScore(tblFor(cell), m))
+        when(col("cell") === probed.head, scoreIn(probed.head))) {
+      case (acc, cell) => acc.when(col("cell") === cell, scoreIn(cell))
     }
     codes.filter(col("cell").isin(probed: _*))
       .select(col(idCol), score.cast("double").as("adc_dist"))
@@ -1327,11 +1297,17 @@ object Similarity {
     * [[ivfCellCols]] is the pure-Column twin, proven output-identical
     * in SimilaritySpec. */
   def ivfCell(vec: Column, centroids: Array[Seq[Float]],
-              spark: org.apache.spark.sql.SparkSession): Column = {
+              spark: org.apache.spark.sql.SparkSession): Column =
+    graft.functions.NativeExpressions.ivf_cell(vec,
+      broadcastCentroids(centroids, spark))
+
+  /** The centroid matrix as the broadcast the native IVF expressions
+    * read; at least one centroid. */
+  private def broadcastCentroids(centroids: Array[Seq[Float]],
+                                 spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.broadcast.Broadcast[Array[Array[Float]]] = {
     require(centroids.nonEmpty, "need at least one centroid")
-    val bcast = spark.sparkContext.broadcast(
-      centroids.map(_.toArray): Array[Array[Float]])
-    graft.functions.NativeExpressions.ivf_cell(vec, bcast)
+    spark.sparkContext.broadcast(centroids.map(_.toArray))
   }
 
   /** Two-level coarse-quantizer twin of [[ivfCell]] — O(√nlist × dim)
@@ -1347,12 +1323,9 @@ object Similarity {
     * rules, so the two-level walk replays in SQL (e_ndcg_ivf's
     * oracle). Native: NativeExpressions.IvfCellHier. */
   def ivfCellHier(vec: Column, centroids: Array[Seq[Float]],
-                  spark: org.apache.spark.sql.SparkSession): Column = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val bcast = spark.sparkContext.broadcast(
-      centroids.map(_.toArray): Array[Array[Float]])
-    graft.functions.NativeExpressions.ivf_cell_hier(vec, bcast)
-  }
+                  spark: org.apache.spark.sql.SparkSession): Column =
+    graft.functions.NativeExpressions.ivf_cell_hier(vec,
+      broadcastCentroids(centroids, spark))
 
   /** Pure-Column twin of [[ivfCell]] — the executable spec of the cell
     * arithmetic (round(cosine, 6) per centroid literal, greatest,
@@ -1378,23 +1351,9 @@ object Similarity {
     * portable across engines. */
   def probeCells(query: Seq[Float], centroids: Array[Seq[Float]],
                  nprobe: Int): Seq[Int] = {
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0) 0.0 else dot / d
-    }
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, round6(cos(query, c))) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(math.max(1, nprobe)).map(_._1).toSeq
+    val cents = new AnnKernel.Centroids(centroids.map(_.toArray))
+    AnnKernel.topN(cents.cosines(query.map(_.toDouble).toArray, cents.all),
+      nprobe).toSeq
   }
 
   /** IVF top-k for ONE query vector over an UN-indexed corpus: score
@@ -1426,12 +1385,9 @@ object Similarity {
     * expression so probing a million queries is one narrow pass, not a
     * million driver loops. [[ivfProbeCols]] is the pure-Column twin. */
   def ivfProbe(vec: Column, centroids: Array[Seq[Float]], nprobe: Int,
-               spark: org.apache.spark.sql.SparkSession): Column = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val bcast = spark.sparkContext.broadcast(
-      centroids.map(_.toArray): Array[Array[Float]])
-    graft.functions.NativeExpressions.ivf_probe(vec, bcast, nprobe)
-  }
+               spark: org.apache.spark.sql.SparkSession): Column =
+    graft.functions.NativeExpressions.ivf_probe(vec,
+      broadcastCentroids(centroids, spark), nprobe)
 
   /** Pure-Column twin of [[ivfProbe]] — executable spec of the probe
     * arithmetic (round(cosine, 6) per centroid literal, sort by
@@ -1824,7 +1780,7 @@ object Similarity {
       si <- sums.get(i)
       sj <- sums.get(j)
       spD = new java.math.BigDecimal(sp.bigInteger, 6).doubleValue()
-      r6 = pcaRound6((spD - si.doubleValue() * sj.doubleValue() /
+      r6 = AnnKernel.r6((spD - si.doubleValue() * sj.doubleValue() /
         n.toDouble) / (n.toDouble - 1.0))
       if !r6.isNaN && !r6.isInfinite
     } yield pcaMicro(r6)
@@ -1848,15 +1804,10 @@ object Similarity {
   // operation bit-for-bit so the unrolled DuckDB oracles keep
   // matching: decimal(38,0)→double is BigDecimal.doubleValue (the
   // one correctly-rounded conversion both engines share);
-  // round(x, 6) is Spark's RoundBase double branch — HALF_UP on the
-  // SHORTEST decimal repr (BigDecimal.valueOf), NaN/Inf passed
-  // through; micro-quantization is the pcaMu cast chain.
+  // round(x, 6) is Spark's RoundBase double branch, AnnKernel.r6;
+  // micro-quantization is the pcaMu cast chain.
   private def pcaBigD(b: BigInt): Double =
     new java.math.BigDecimal(b.bigInteger).doubleValue()
-  private def pcaRound6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
   private def pcaMicro(r6: Double): BigInt =
     BigInt(java.math.BigDecimal.valueOf(r6)
       .setScale(6, java.math.RoundingMode.HALF_UP)
@@ -1894,7 +1845,7 @@ object Similarity {
       val m2 = w.iterator.map(x => x * x).sum
       if (m2.signum == 0) return None
       val nrm = math.sqrt(pcaBigD(m2))
-      vec = w.map(wp => pcaMicro(pcaRound6(pcaBigD(wp) / nrm)))
+      vec = w.map(wp => pcaMicro(AnnKernel.r6(pcaBigD(wp) / nrm)))
     }
     // Rayleigh quotient on the final iterate: v.Cv / v.v, integer
     // numerator/denominator, one double division chain; the
@@ -1903,7 +1854,7 @@ object Similarity {
     val num = (0 until d).iterator.map(i => vec(i) * wF(i)).sum
     val den = vec.iterator.map(x => x * x).sum
     if (den.signum == 0) return None
-    val lmu = pcaMicro(pcaRound6(
+    val lmu = pcaMicro(AnnKernel.r6(
       pcaBigD(num) / pcaBigD(den) / 1000000.0))
     Some((vec, lmu))
   }
@@ -2014,7 +1965,7 @@ object Similarity {
       fxx <- frob(0, dx); fyy <- frob(dx, dz)
       if fxx.signum > 0 && fyy.signum > 0
       f <- fxy
-    } yield pcaRound6(pcaBigD(f) /
+    } yield AnnKernel.r6(pcaBigD(f) /
       (math.sqrt(pcaBigD(fxx)) * math.sqrt(pcaBigD(fyy))))).orNull
     result(Seq(org.apache.spark.sql.Row(n, dx, dy, cka)))
   }
@@ -2097,7 +2048,7 @@ object Similarity {
       val it = if (degenerate) None else pcaIterateLocal(cov, d, iters)
       it match {
         case Some((vmu, lmu)) =>
-          val eig = pcaRound6(pcaBigD(lmu) / 1000000.0)
+          val eig = AnnKernel.r6(pcaBigD(lmu) / 1000000.0)
           for (j <- 0 until d) rows += org.apache.spark.sql.Row(
             c, j,
             if (supported(j)) pcaBigD(vmu(j)) / 1000000.0 else null,

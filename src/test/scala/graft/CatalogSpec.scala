@@ -158,4 +158,33 @@ class CatalogSpec extends AnyFunSuite {
     assert(shared.isEmpty,
       "factor the repeated chain into one fragment (see Query's scaladoc)")
   }
+
+  test("the round-6 cosine chain is spelled in graft/queries only in " +
+    "EmbeddingQueries.cos (one oracle fragment for the ANN scoring rule)") {
+    val queriesDir = mainRoot.resolve("graft/queries")
+    // the chain with all whitespace removed; `a` and `b` are captured
+    // and must recur in the two norms
+    val norm = """,x->CAST\(xASDOUBLE\)\*CAST\(xASDOUBLE\)\)\)\)"""
+    val chain = ("""ROUND\(list_sum\(list_transform\(list_zip\(([^,]+),""" +
+      """([^)]+)\),x->CAST\(x\[1\]ASDOUBLE\)\*CAST\(x\[2\]ASDOUBLE\)""" +
+      """\)\)/\(sqrt\(list_sum\(list_transform\(\1""" + norm +
+      """\*sqrt\(list_sum\(list_transform\(\2""" + norm + """\),6\)""").r
+    val hits = mainFiles.filter(_.startsWith(queriesDir)).sorted
+      .flatMap { f =>
+        val src = java.nio.file.Files.readString(f)
+        "(?s)\"\"\"(.*?)\"\"\"".r.findAllMatchIn(src).flatMap { m =>
+          val line = src.substring(0, m.start).count(_ == '\n') + 1
+          val body = m.group(1).split("\n")
+            .map(_.trim.stripPrefix("|")).mkString.replaceAll("\\s", "")
+          chain.findAllMatchIn(body)
+            .map(c => (s"${f.getFileName}:$line", c.group(1), c.group(2)))
+        }
+      }
+    val (fragment, inline) = hits.partition { case (at, a, b) =>
+      at.startsWith("EmbeddingQueries.scala:") && a == "$a" && b == "$b"
+    }
+    assert(fragment.size == 1, s"chain scan drifted: $hits")
+    assert(inline.isEmpty,
+      s"interpolate EmbeddingQueries.cos instead: ${inline.mkString(", ")}")
+  }
 }

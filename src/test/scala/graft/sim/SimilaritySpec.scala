@@ -312,6 +312,84 @@ class SimilaritySpec extends SparkSpec {
       .select(Similarity.ivfProbe(col("embedding"), tcents, 3, spark))
       .as[Seq[Int]].head()
     assert(probedTie == Seq(1, 2, 0))
+    // the driver-side probe is the same ranking, query by query
+    Seq(1, 4, 16).foreach { np =>
+      val probed = df.select(col("vec_id"),
+          Similarity.ivfProbe(col("embedding"), cents, np, spark))
+        .as[(Long, Seq[Int])].collect().toMap
+      corpus.foreach { case (id, v) =>
+        assert(Similarity.probeCells(v, cents, np) == probed(id),
+          s"nprobe=$np vec_id=$id")
+      }
+    }
+  }
+
+  test("ragged vectors: native ivfCell/ivfProbe == Column twins on " +
+    "vectors shorter and longer than the centroids") {
+    val rnd = new scala.util.Random(5)
+    val cents = Array.fill(8)(Seq.fill(16)(rnd.nextGaussian().toFloat))
+    val df = (0 until 24).map(i =>
+        (i.toLong, Seq.fill(if (i % 2 == 0) 12 else 20)(
+          rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    assert(df.filter(
+      Similarity.ivfCell(col("embedding"), cents, spark) =!=
+        Similarity.ivfCellCols(col("embedding"), cents)).count() == 0)
+    Seq(1, 3, 8).foreach { np =>
+      assert(df.filter(
+        Similarity.ivfProbe(col("embedding"), cents, np, spark) =!=
+          Similarity.ivfProbeCols(col("embedding"), cents, np))
+        .count() == 0, s"nprobe=$np")
+    }
+  }
+
+  test("NaN and infinite elements: the native IVF and PQ expressions " +
+    "rank like the Column twins (NaN above every number, ties to the " +
+    "lowest id) instead of throwing") {
+    val cents = Similarity.ivfCentroids(
+      clustered.toDF("vec_id", "embedding"), "vec_id", "embedding", 8)
+    val nan = Seq.tabulate(16)(d => if (d == 3) Float.NaN else 1.0f)
+    val inf = Seq.tabulate(16)(d =>
+      if (d == 5) Float.PositiveInfinity else 0.5f)
+    val df = (Seq((100L, nan), (101L, inf)) ++ clustered.take(2))
+      .toDF("vec_id", "embedding")
+    val cells = df.select(col("vec_id"),
+        Similarity.ivfCell(col("embedding"), cents, spark),
+        Similarity.ivfCellCols(col("embedding"), cents),
+        element_at(Similarity.ivfProbe(col("embedding"), cents, 4, spark), 1),
+        Similarity.ivfCellHier(col("embedding"), cents, spark))
+      .as[(Long, Int, Int, Int, Int)].collect()
+    cells.foreach { case (id, cell, twin, probeHead, _) =>
+      assert(cell == twin && probeHead == cell, s"vec_id=$id: $cells")
+    }
+    // every cosine of either row is NaN: all cells tie at the top
+    assert(cells.filter(_._1 >= 100L).forall(r => r._2 == 0 && r._5 == 0),
+      cells.toSeq.toString)
+    assert(df.filter(
+      Similarity.ivfProbe(col("embedding"), cents, 4, spark) =!=
+        Similarity.ivfProbeCols(col("embedding"), cents, 4)).count() == 0)
+    assert(Similarity.probeCells(nan, cents, 3) == Seq(0, 1, 2))
+
+    // PQ: a NaN (or +Inf) element makes every distance of its subspace
+    // NaN (or +Inf), so that subspace codes to 0; the other is unaffected
+    val pq = (0 until 8).map(i => (i.toLong,
+      Seq.tabulate(8)(d => (if ((i + d / 4) % 2 == 0) 1f else 9f) + i * 0.01f)))
+      .toDF("vec_id", "embedding")
+    val cbs = Similarity.pqCodebooks(pq, "vec_id", "embedding",
+      m = 2, k = 2, iters = 1)
+    val bad = Seq(
+        (0L, Seq(9f, Float.NaN, 9f, 9f, 1f, 1f, 1f, 1f)),
+        (1L, Seq(9f, 9f, 9f, 9f, 1f, Float.PositiveInfinity, 1f, 1f)),
+        (2L, Seq(9f, 9f, 9f, 9f, 1f, 1f, 1f, 1f)))
+      .toDF("vec_id", "embedding")
+    val nat = Similarity.pqEncode(bad, "vec_id", "embedding", cbs)
+      .as[(Long, Seq[Int])].collect().toMap
+    val twin = bad.select(col("vec_id"),
+        Similarity.pqEncodeCols(col("embedding"), cbs).as("codes"))
+      .as[(Long, Seq[Int])].collect().toMap
+    assert(nat == twin, s"native=$nat twin=$twin")
+    assert(nat(0L) == Seq(0, nat(2L)(1)) && nat(1L) == Seq(nat(2L)(0), 0),
+      nat.toString)
   }
 
   test("ivfKnnJoin: full probe == bruteKnnJoin; partial probe stays " +
