@@ -10,6 +10,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ANSI off (SURVEY.md §7.4). AQE stays on for runtime shuffle coalescing
   * and skew-join handling — at 100 TB the static partition count is always
   * wrong somewhere, so let the runtime re-plan.
+  *
+  * Sessions share one class loader (`spark.sql.artifact.isolation.enabled`
+  * off). `CodeGenerator.compile` caches a generated class by (thread
+  * context class loader, source). With isolation on, Spark's default,
+  * every session's jobs carry its own session UUID and the executor
+  * builds one class loader per UUID. Every AvailableNow drain runs in a
+  * cloned session with a fresh UUID, so each drain compiled again, and
+  * the JIT compiled again, classes whose source matched the previous
+  * drain's byte for byte. Measured on a 4-core host, one warm pass of
+  * clifbench's `blocked_dataset` workload made 187–195 Janino compiles
+  * with isolation on and 57–60 with it off. Isolation only separates the
+  * jars, files and REPL classes a session adds as artifacts; nothing in
+  * the engine adds any (no `addArtifact` or `addJar` under src/main), so
+  * one shared loader loses nothing.
   */
 object GraftSession {
 
@@ -17,6 +31,9 @@ object GraftSession {
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
     c.set("spark.sql.ansi.enabled", "false")
+    // Read lazily by each session's ArtifactManager, and copied into the
+    // cloned session of every streaming query started after this.
+    c.set(Isolation, "false")
     c.set("spark.sql.session.timeZone", "UTC")
     c.set("spark.sql.adaptive.enabled", "true")
     c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -44,12 +61,18 @@ object GraftSession {
     spark
   }
 
+  /** Per-session artifact isolation, off in every engine session. */
+  private val Isolation = "spark.sql.artifact.isolation.enabled"
+
   /** The tuned local session every main runs under (the only
     * `SparkSession.builder` in src/main; CatalogSpec keeps it so), on
     * `cores` cores, `SPARK_GRAFT_CPUS` by default (4 when unset).
     * GraftExtensions makes the native SQL functions part of every
     * session derived from this one (Thrift per-connection sessions
-    * build fresh state; tune()'s registerAll only covers the host). */
+    * build fresh state; tune()'s registerAll only covers the host).
+    * Isolation is off from the session's creation, as Spark's doc for
+    * the flag asks, and `newSession()` sessions inherit it through the
+    * SparkConf. */
   def local(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       : SparkSession = {
     val spark = SparkSession
@@ -59,6 +82,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(Isolation, "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.streaming.Drain
 import graft.text.TextOps
 
 /** Incremental maintenance of the capstone blocked dataset — the
@@ -112,14 +113,15 @@ object BlockedDatasetIncremental {
     require(buckets >= 1, "buckets must be >= 1")
     pinBuckets(spark, workDir, buckets)
     val stream = spark.readStream.schema(schema).parquet(inDir)
+    val checkpoint = s"$workDir/_checkpoints/grid"
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch, batchId, workDir, params, buckets)
       }
-      .option("checkpointLocation", s"$workDir/_checkpoints/grid")
+      .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    Drain.availableNow(q, checkpoint)
   }
 
   /** Whole-file UTF-8 read of a small stamp through the store's own

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.GraftSession
+import graft.streaming.Drain
 
 /** Incremental CLIF ETL: the batch vitals pipeline run as a Structured
   * Streaming job with `Trigger.AvailableNow` — new raw extract files
@@ -42,14 +43,15 @@ object ClifEtlIncremental {
       .option("header", true).option("delimiter", "|")
       .csv(s"$inDir/C19_FLOW_LDS")
     val out = s"$outDir/vitals_incremental.parquet"
+    val checkpoint = s"$outDir/_checkpoints/vitals"
     val q = Pipelines.vitalsCore(raw, Vocabularies.vitalsVocab(spark))
       .writeStream
       .format("parquet")
       .option("path", out)
-      .option("checkpointLocation", s"$outDir/_checkpoints/vitals")
+      .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    Drain.availableNow(q, checkpoint)
     spark.read.parquet(out).count()
   }
 }

@@ -574,14 +574,8 @@ cov${c + 1} AS MATERIALIZED (
         |  SELECT vec_id, ina, qe, cell FROM (
         |    SELECT s.vec_id, s.ina, s.embedding AS qe, c.cell,
         |      row_number() OVER (PARTITION BY s.vec_id
-        |        ORDER BY ROUND(
-        |          list_sum(list_transform(list_zip(c.ce, s.embedding),
-        |            z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-        |          / (sqrt(list_sum(list_transform(c.ce,
-        |               v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(s.embedding,
-        |               v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))),
-        |          6) DESC, c.cell) AS pr
+        |        ORDER BY ${cos("c.ce", "s.embedding")}
+        |        DESC, c.cell) AS pr
         |    FROM src s, cents c)
         |  WHERE pr <= 4),
         |sl AS MATERIALIZED (
@@ -591,14 +585,8 @@ cov${c + 1} AS MATERIALIZED (
         |        ORDER BY cos DESC, nid) AS rk
         |    FROM (
         |      SELECT p.vec_id AS qid, a.vec_id AS nid, p.ina,
-        |        CAST(ROUND(
-        |          list_sum(list_transform(list_zip(a.embedding, p.qe),
-        |            z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-        |          / (sqrt(list_sum(list_transform(a.embedding,
-        |               v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(p.qe,
-        |               v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))),
-        |          6) AS DECIMAL(18,6)) AS cos
+        |        CAST(${cos("a.embedding", "p.qe")}
+        |          AS DECIMAL(18,6)) AS cos
         |      FROM probed p JOIN assign a USING (cell)
         |      WHERE a.ina <> p.ina))
         |  WHERE rk <= 8),

@@ -74,6 +74,22 @@ class CatalogSpec extends AnyFunSuite {
       s"pin through graft.ops.Iterate.pin instead: ${offenders.mkString(", ")}")
   }
 
+  test("an argument-less awaitTermination() in src/main/scala only " +
+    "directly follows a stop() on the same query (one bounded drain wait)") {
+    val waits = mainFiles.sorted.flatMap { f =>
+      val src = java.nio.file.Files.readString(f)
+      """(\w+)\s*\.\s*awaitTermination\(\s*\)""".r.findAllMatchIn(src).map { m =>
+        val upTo = src.substring(0, m.start)
+        (s"${f.getFileName}:${upTo.count(_ == '\n') + 1}",
+          upTo.replaceAll("""[\s;]+$""", "").endsWith(s"${m.group(1)}.stop()"))
+      }
+    }
+    assert(waits.exists(_._2), s"wait scan drifted: $waits")
+    val offenders = waits.filterNot(_._2).map(_._1)
+    assert(offenders.isEmpty,
+      s"wait through graft.streaming.Drain.availableNow: ${offenders.mkString(", ")}")
+  }
+
   test("SparkSession.builder appears in src/main/scala only in " +
     "graft/GraftSession.scala (one session builder for every main)") {
     val offenders =
@@ -163,12 +179,14 @@ class CatalogSpec extends AnyFunSuite {
     "EmbeddingQueries.cos (one oracle fragment for the ANN scoring rule)") {
     val queriesDir = mainRoot.resolve("graft/queries")
     // the chain with all whitespace removed; `a` and `b` are captured
-    // and must recur in the two norms
-    val norm = """,x->CAST\(xASDOUBLE\)\*CAST\(xASDOUBLE\)\)\)\)"""
+    // and must recur in the two norms; each lambda's variable may have
+    // any name, and must recur in its own body
+    def norm(v: Int) =
+      raw""",(\w+)->CAST\(\${v}ASDOUBLE\)\*CAST\(\${v}ASDOUBLE\)\)\)\)"""
     val chain = ("""ROUND\(list_sum\(list_transform\(list_zip\(([^,]+),""" +
-      """([^)]+)\),x->CAST\(x\[1\]ASDOUBLE\)\*CAST\(x\[2\]ASDOUBLE\)""" +
-      """\)\)/\(sqrt\(list_sum\(list_transform\(\1""" + norm +
-      """\*sqrt\(list_sum\(list_transform\(\2""" + norm + """\),6\)""").r
+      """([^)]+)\),(\w+)->CAST\(\3\[1\]ASDOUBLE\)\*CAST\(\3\[2\]ASDOUBLE\)""" +
+      """\)\)/\(sqrt\(list_sum\(list_transform\(\1""" + norm(4) +
+      """\*sqrt\(list_sum\(list_transform\(\2""" + norm(5) + """\),6\)""").r
     val hits = mainFiles.filter(_.startsWith(queriesDir)).sorted
       .flatMap { f =>
         val src = java.nio.file.Files.readString(f)
