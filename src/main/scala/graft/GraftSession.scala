@@ -11,19 +11,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and skew-join handling — at 100 TB the static partition count is always
   * wrong somewhere, so let the runtime re-plan.
   *
-  * Sessions share one class loader (`spark.sql.artifact.isolation.enabled`
-  * off). `CodeGenerator.compile` caches a generated class by (thread
-  * context class loader, source). With isolation on, Spark's default,
-  * every session's jobs carry its own session UUID and the executor
-  * builds one class loader per UUID. Every AvailableNow drain runs in a
-  * cloned session with a fresh UUID, so each drain compiled again, and
-  * the JIT compiled again, classes whose source matched the previous
-  * drain's byte for byte. Measured on a 4-core host, one warm pass of
-  * clifbench's `blocked_dataset` workload made 187–195 Janino compiles
-  * with isolation on and 57–60 with it off. Isolation only separates the
-  * jars, files and REPL classes a session adds as artifacts; nothing in
-  * the engine adds any (no `addArtifact` or `addJar` under src/main), so
-  * one shared loader loses nothing.
+  * The engine's sessions share one class loader: tune turns
+  * `spark.sql.artifact.isolation.enabled` off. `CodeGenerator.compile`
+  * caches a generated class by (thread context class loader, source).
+  * With isolation on, Spark's default, every session's jobs carry its
+  * own session UUID and the executor builds one class loader per UUID.
+  * Every AvailableNow drain runs in a cloned session with a fresh UUID,
+  * so each drain compiled again, and the JIT compiled again, classes
+  * whose source matched the previous drain's byte for byte. Measured on
+  * a 4-core host, one warm pass of clifbench's `blocked_dataset`
+  * workload made 187–195 Janino compiles with isolation on and 57–60
+  * with it off. Isolation only separates the jars, files and REPL
+  * classes a session adds as artifacts; the engine adds none (no
+  * `addArtifact` or `addJar` under src/main), so its sessions lose
+  * nothing by sharing the loader.
+  *
+  * Sessions that clients drive keep isolation on: `local()`'s builder
+  * does not set the flag, so a `newSession()` (JdbcServer's session for
+  * each Thrift connection) starts with Spark's default. A jar one
+  * connection adds with `ADD JAR` then reaches that connection's tasks
+  * and not another connection's, as before. Spark also adds such a jar
+  * to the SparkContext, so the tuned sessions' shared loader sees it
+  * too, as the driver's jar class loader and `LIST JARS` already did;
+  * executor classes load parent-first, so it cannot replace an engine
+  * class. GraftSessionSpec pins both halves.
   */
 object GraftSession {
 
@@ -31,9 +42,10 @@ object GraftSession {
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
     c.set("spark.sql.ansi.enabled", "false")
-    // Read lazily by each session's ArtifactManager, and copied into the
-    // cloned session of every streaming query started after this.
-    c.set(Isolation, "false")
+    // Read lazily by the session's ArtifactManager, so this takes effect
+    // before the first query; copied into the cloned session of every
+    // streaming query started after this.
+    c.set("spark.sql.artifact.isolation.enabled", "false")
     c.set("spark.sql.session.timeZone", "UTC")
     c.set("spark.sql.adaptive.enabled", "true")
     c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -61,18 +73,12 @@ object GraftSession {
     spark
   }
 
-  /** Per-session artifact isolation, off in every engine session. */
-  private val Isolation = "spark.sql.artifact.isolation.enabled"
-
   /** The tuned local session every main runs under (the only
     * `SparkSession.builder` in src/main; CatalogSpec keeps it so), on
     * `cores` cores, `SPARK_GRAFT_CPUS` by default (4 when unset).
     * GraftExtensions makes the native SQL functions part of every
     * session derived from this one (Thrift per-connection sessions
-    * build fresh state; tune()'s registerAll only covers the host).
-    * Isolation is off from the session's creation, as Spark's doc for
-    * the flag asks, and `newSession()` sessions inherit it through the
-    * SparkConf. */
+    * build fresh state; tune()'s registerAll only covers the host). */
   def local(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       : SparkSession = {
     val spark = SparkSession
@@ -82,7 +88,6 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      .config(Isolation, "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

@@ -1112,7 +1112,8 @@ object EventStreams {
     * also flush the data batches out of the `recentProgress` ring) —
     * use [[runBoundedWithTimeouts]], which polls progress and stops the
     * query explicitly, instead of [[runAvailableNow]], whose
-    * [[Drain.availableNow]] wait would fail at its deadline. */
+    * [[Drain.availableNow]] wait never ends: each no-data batch is
+    * progress, not a stall. */
   def nearDupCandidatesStream(docs: DataFrame, idCol: String,
                               textCol: String, shingleN: Int = 3,
                               numHashes: Int = 32, bands: Int = 16,
@@ -1242,7 +1243,7 @@ object EventStreams {
     *
     * A short drain fails loudly: if the query terminates on its own
     * before `expectDataBatches` data batches, or the poll outlives
-    * [[Drain]]'s deadline, this stops the query and throws an
+    * [[BoundedDrainTimeoutMs]], this stops the query and throws an
     * IllegalStateException naming it and the batch counts it saw.
     *
     * Returns (numInputRows, stateRows) per observed batch in batchId
@@ -1266,7 +1267,7 @@ object EventStreams {
           (p.numInputRows, p.stateOperators(0).numRowsTotal)
     }
     def dataBatches = byBatch.valuesIterator.count(_._1 > 0)
-    val deadline = System.currentTimeMillis() + Drain.DeadlineMs
+    val deadline = System.currentTimeMillis() + BoundedDrainTimeoutMs
     var terminated = false
     var stopped = false
     while (!terminated && !stopped &&
@@ -1282,7 +1283,7 @@ object EventStreams {
     if (!stopped && (!terminated || dataBatches < expectDataBatches)) {
       val why =
         if (terminated) "terminated before its expected data batches"
-        else s"did not finish within ${Drain.DeadlineMs} ms"
+        else s"did not finish within $BoundedDrainTimeoutMs ms"
       throw new IllegalStateException(
         s"runBoundedWithTimeouts: query ${Option(q.name).getOrElse(q.id)} " +
           s"$why: saw $dataBatches of $expectDataBatches data batches " +
@@ -1290,6 +1291,9 @@ object EventStreams {
     }
     byBatch.values.toSeq
   }
+
+  /** How long [[runBoundedWithTimeouts]] polls before it fails. */
+  private val BoundedDrainTimeoutMs = 180000L
 
   /** Run a streaming transform over a static directory incrementally and
     * collect the result into a memory table (AvailableNow: process what
@@ -1338,9 +1342,10 @@ object EventStreams {
     * pinned starts on the same session are correct under the lock;
     * callers that also PLAN unrelated queries concurrently on that
     * session should pass a dedicated `spark.newSession()`, put through
-    * [[graft.GraftSession.tune]]: a new session built outside
-    * `GraftSession.local` gets its own class loader again, and every
-    * drain in it recompiles the generated classes (see GraftSession). */
+    * [[graft.GraftSession.tune]]: a new session starts with Spark's
+    * per-session artifact isolation on, so without tune it gets its own
+    * class loader again, and every drain in it recompiles the generated
+    * classes (see GraftSession). */
   private def withStatePartitions[T](spark: SparkSession,
                                      n: Option[Int])(start: => T): T =
     n match {

@@ -76,12 +76,30 @@ class CatalogSpec extends AnyFunSuite {
 
   test("an argument-less awaitTermination() in src/main/scala only " +
     "directly follows a stop() on the same query (one bounded drain wait)") {
-    val waits = mainFiles.sorted.flatMap { f =>
-      val src = java.nio.file.Files.readString(f)
-      """(\w+)\s*\.\s*awaitTermination\(\s*\)""".r.findAllMatchIn(src).map { m =>
+    // any receiver: chained, wrapped or plain; awaitAnyTermination()
+    // never qualifies. Returns (line, directly after a stop()) per wait.
+    val wait = """\.\s*awaitTermination\(\s*\)|\bawaitAnyTermination\(\s*\)""".r
+    val plain = """(?<![\w.])(\w+)\s*$""".r
+    def scan(src: String): Seq[(Int, Boolean)] =
+      wait.findAllMatchIn(src).map { m =>
         val upTo = src.substring(0, m.start)
-        (s"${f.getFileName}:${upTo.count(_ == '\n') + 1}",
-          upTo.replaceAll("""[\s;]+$""", "").endsWith(s"${m.group(1)}.stop()"))
+        val tail = upTo.takeRight(400)
+        val afterStop = m.matched.startsWith(".") &&
+          plain.findFirstMatchIn(tail).exists { r =>
+            val q = java.util.regex.Pattern.quote(r.group(1))
+            raw"(?<![\w.])$q\s*\.\s*stop\(\s*\)[\s;]*$$".r
+              .findFirstIn(tail.substring(0, r.start)).nonEmpty
+          }
+        (upTo.count(_ == '\n') + 1, afterStop)
+      }.toSeq
+    assert(scan("q.stop(); q.awaitTermination()") == Seq((1, true)))
+    Seq("q.awaitTermination()", "w.start().awaitTermination()",
+      "q.get.stop(); q.get.awaitTermination()", "p.stop(); q.awaitTermination()",
+      "x.q.stop(); q.awaitTermination()", "spark.streams.awaitAnyTermination()")
+      .foreach(s => assert(scan(s) == Seq((1, false)), s))
+    val waits = mainFiles.sorted.flatMap { f =>
+      scan(java.nio.file.Files.readString(f)).map { case (line, ok) =>
+        (s"${f.getFileName}:$line", ok)
       }
     }
     assert(waits.exists(_._2), s"wait scan drifted: $waits")

@@ -9,7 +9,8 @@ import graft.queries.Fixtures.tempDir
 import graft.streaming.{Drain, EventStreams}
 
 /** The engine's sessions share one class loader, so a streaming
-  * query's cloned session reuses the classes earlier drains compiled. */
+  * query's cloned session reuses the classes earlier drains compiled;
+  * a client's `newSession()` keeps the jars it adds to itself. */
 class GraftSessionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -55,5 +56,31 @@ class GraftSessionSpec extends SparkSpec {
       "the second drain recompiled generated classes")
     assert(first == second &&
       first == Set(("view", 2L, 5.0), ("click", 1L, 2.0)))
+  }
+
+  test("a newSession(), like a Thrift connection's, keeps isolation on: " +
+    "a jar it adds reaches its own tasks and the tuned sessions', not " +
+    "another connection's") {
+    val resource = "graft_session_spec_probe.txt"
+    val jar = s"${tempDir("graft_addjar")}/probe.jar"
+    val out = new java.util.jar.JarOutputStream(
+      new java.io.FileOutputStream(jar))
+    try {
+      out.putNextEntry(new java.util.jar.JarEntry(resource))
+      out.write(Array[Byte](1))
+      out.closeEntry()
+    } finally out.close()
+    def taskSees(s: SparkSession): Boolean = {
+      import s.implicits._
+      s.range(1).map(_ => Thread.currentThread.getContextClassLoader
+        .getResource(resource) != null).collect().head
+    }
+    val (a, b) = (spark.newSession(), spark.newSession())
+    assert(a.conf.get(isolation) == "true" && b.conf.get(isolation) == "true")
+    assert(!taskSees(a) && !taskSees(b) && !taskSees(spark))
+    a.sql(s"ADD JAR $jar")
+    assert(taskSees(a), "the adding connection's tasks miss its jar")
+    assert(!taskSees(b), "another connection's tasks see the jar")
+    assert(taskSees(spark), "the tuned host's tasks miss the SparkContext jar")
   }
 }
